@@ -35,8 +35,7 @@ object BpeProbe {
   /** The pre-r11 loop: full pair recount per merge. */
   def oldDistributedBpe(docs: DataFrame, nMerges: Int): Seq[(Int, String, String, Long)] = {
     val spark = docs.sparkSession
-    val ck = Checkpoints.truncator(spark, None)
-    val wc = ck(docs
+    val wc = Checkpoints.materialize(docs
       .select(explode(split(lower(col("text")), "[^a-z]+")).as("w"))
       .where(length(col("w")) >= 2)
       .groupBy("w").agg(count(lit(1)).as("c")))
@@ -65,7 +64,7 @@ object BpeProbe {
         val row = top.head
         val (l, r, cnt) = (row.getString(0), row.getString(1), row.getLong(2))
         merges += ((rank, l, r, cnt))
-        vocab = ck(vocab.select(col("w"),
+        vocab = Checkpoints.materialize(vocab.select(col("w"),
           expr(s"replace(replace(replace(s, ' ', '  '), ' $l  $r ', ' $l$r '), '  ', ' ')")
             .as("s"), col("c")))
         rank += 1
@@ -108,7 +107,7 @@ object BpeProbe {
       // restartEvery = window: commit once per window (resume points
       // at the boundaries the probe resumes at), so the curve reads
       // merge cost, not per-merge checkpoint churn
-      val _ = LangModel.bpeLoop(docs, done + step, "text", None, 0L,
+      val _ = LangModel.bpeLoop(docs, done + step, "text", 0L,
         restartDir = Some(restartDir),
         restartEvery = window)
       done += step
@@ -144,7 +143,7 @@ object BpeProbe {
     }
     // incremental (shipped): driverCutoff=0 forces the distributed path
     val (inc, tInc) = timed {
-      LangModel.bpeLoop(docs, nMerges, "text", None, 0L)._2
+      LangModel.bpeLoop(docs, nMerges, "text", 0L)._2
         .collect().map(r => (r.getInt(0), r.getString(1), r.getString(2),
           r.getLong(4))).toSeq
     }

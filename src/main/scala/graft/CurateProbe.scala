@@ -22,33 +22,34 @@ object CurateProbe {
       .getOrElse("/tmp/graft-sf10-docs/documents.parquet")
     val docs = spark.read.parquet(path)
     // the ExtractProbe page shape: markup-heavy, entity-bearing
-    val pages = docs.selectExpr("doc_id",
+    val pages = Checkpoints.materialize(docs.selectExpr("doc_id",
       """concat('<html><head><title>d', doc_id,
           '</title><style>a{}</style><script>if(1<2){x("&")}</script>',
           '</head><body><div class="nav">Home</div><p>', text,
           '</p><footer>caf&eacute; &mdash; r&#xE9;sum&#233; ',
           '&#8217;curly&#8217; &amp;#66; &unknown; 2026</footer>',
-          '</body></html>') AS html""").localCheckpoint(true)
+          '</body></html>') AS html"""))
     val bytes = pages.select(sum(length(col("html")))).head().getLong(0)
     val gb = bytes / 1e9
     println(f"corpus: ${pages.count()} docs, $gb%.2f GB of markup")
     def wall(f: => Any): Double = {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
     }
-    val ck = Checkpoints.truncator(spark, None)
     var extracted: DataFrame = null
-    val tEx = wall { extracted = ck(pages.select(col("doc_id"),
+    val tEx = wall { extracted = Checkpoints.materialize(pages.select(col("doc_id"),
       Extract.mainText(col("html")).as("text"))) }
     println(f"extract:                 $tEx%7.1f s  (${tEx / gb}%.1f s/GB)")
     var cleaned: DataFrame = null
-    val tSeg = wall { cleaned = ck(Dedup.segmentDedup(extracted)
+    val tSeg = wall { cleaned = Checkpoints.materialize(Dedup.segmentDedup(extracted)
       .where(length(col("clean_text")) > 0)
       .select(col("doc_id"), col("clean_text").as("text"))) }
     println(f"segment dedup:           $tSeg%7.1f s")
-    val tCur = wall { ck(Curation.curate(cleaned)).count() }
+    val tCur = wall { Checkpoints.materialize(Curation.curate(cleaned)).count() }
     println(f"curate (exact+LSH+gate): $tCur%7.1f s")
     var scored: DataFrame = null
-    val tLm = wall { scored = ck(LangModel.bigramInterpolatedScore(cleaned)) }
+    val tLm = wall {
+      scored = Checkpoints.materialize(LangModel.bigramInterpolatedScore(cleaned))
+    }
     println(f"bigram LM score:         $tLm%7.1f s")
     val tBk = wall { LangModel.perplexityBuckets(scored)
       .groupBy("ppl_bucket").count().collect() }
@@ -56,7 +57,7 @@ object CurateProbe {
     val tLang = wall {
       val lang = TextStats.statsFor(cleaned)
         .select(col("doc_id"), col("lang_pred"))
-      val sl = ck(scored.join(lang, Seq("doc_id")))
+      val sl = Checkpoints.materialize(scored.join(lang, Seq("doc_id")))
       LangModel.perplexityBuckets(sl, partitionCols = Seq("lang_pred"))
         .groupBy("ppl_bucket").count().collect()
     }

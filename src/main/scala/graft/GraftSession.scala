@@ -46,9 +46,10 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // keep catalog-table data (bucketed writes) out of the repo cwd
       .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
-      // reliable checkpoints (Checkpoints.truncator with Some(dir)) are
-      // orphaned on DFS unless the ContextCleaner reaps them with their
-      // RDDs; read once at context startup, so it must live here
+      // reliable checkpoints (Checkpoints.materialize once the context
+      // has a checkpoint dir) are orphaned on DFS unless the
+      // ContextCleaner reaps them with their RDDs; read once at context
+      // startup, so it must live here
       .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
       // see CodegenCacheEntries
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries)

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * timed with the noop sink where it is a plain relation, or by the
   * operator's own construction where it materializes eagerly.
   * Usage: `dev/run.sh graft.R18Probe <sfDir> <probe>` with probe one
-  * of: q89, q72, q123, q113. */
+  * of: q89, q72, q121. */
 object R18Probe {
   def main(args: Array[String]): Unit = {
     val spark = GraftSession.local("r18-probe")
@@ -56,7 +56,7 @@ object R18Probe {
           var curated: org.apache.spark.sql.DataFrame = null
           wall("curate (lazy)") { curated = graft.ops.Curation.curate(docs) }
           wall("pool ck") {
-            pool = graft.ops.Checkpoints.truncator(spark, None)(
+            pool = graft.ops.Checkpoints.materialize(
               docs.select("doc_id", "text", "source")
                 .join(curated.select("doc_id", "lang_pred"), Seq("doc_id")))
           }
@@ -68,7 +68,7 @@ object R18Probe {
           var model: graft.ops.LangModel.BpeModel = null
           wall("trainBpeModel") { model = LangModel.trainBpeModel(docs, nMerges = 4) }
           wall("sel ck") {
-            sel = graft.ops.Checkpoints.truncator(spark, None)(
+            sel = graft.ops.Checkpoints.materialize(
               docs.join(selected.select("doc_id"), Seq("doc_id")))
           }
           wall("bpeEncodeWithModel+pack noop") {

@@ -372,7 +372,7 @@ object SparkEntry {
       val docs = t(s, dir, "documents")
       val model = LangModel.trainBpeModel(docs, nMerges = 4)
       def enc(part: org.apache.spark.sql.DataFrame) =
-        graft.ops.Checkpoints.truncator(s, None)(
+        graft.ops.Checkpoints.materialize(
           LangModel.bpeEncodeWithModel(part, model))
       graft.ops.Packer.writeTokenShardStore(
         enc(docs.where(col("doc_id") < 250)), d,
@@ -1798,7 +1798,7 @@ object SparkEntry {
       // materialized (the perplexityBuckets contract)
       "q156_ppl_buckets_by_lang" -> q { (s, dir) =>
         val docs = t(s, dir, "documents")
-        val scored = graft.ops.Checkpoints.truncator(s, None)(
+        val scored = graft.ops.Checkpoints.materialize(
           LangModel.bigramInterpolatedScore(docs)
             .join(TextStats.statsFor(docs).select("doc_id", "lang_pred"),
               "doc_id"))
@@ -1850,10 +1850,10 @@ object SparkEntry {
         // the curation chain references text many times (fingerprint,
         // 8 minhashes, shingle verify, quality stats) — materialize
         // the extracted relation ONCE or the 12-step regex chain
-        // re-runs per reference (the q121 truncator lesson; measured
+        // re-runs per reference (the q121 materialize lesson; measured
         // 10.2 → ~2.5 s at sf0.1). At 100 TB this is the persisted
         // extracted-corpus table between crawl and curation stages.
-        val extracted = graft.ops.Checkpoints.truncator(s, None)(
+        val extracted = graft.ops.Checkpoints.materialize(
           docs.select(col("doc_id"),
             graft.ops.Extract.mainText(plantedHtml).as("text")))
         graft.ops.Curation.curate(extracted)
@@ -1931,7 +1931,7 @@ object SparkEntry {
         // it twice (token placement + the doc→bin map) and an inline
         // bpeEncode chain would otherwise derive twice (the operator's
         // documented contract; at scale `enc` IS a persisted table)
-        val enc = graft.ops.Checkpoints.truncator(s, None)(
+        val enc = graft.ops.Checkpoints.materialize(
           LangModel.bpeEncode(t(s, dir, "documents"), nMerges = 4))
         graft.ops.Packer.materializeTokenShards(enc,
             capacityTokens = 32, numGroups = 8)
@@ -1946,7 +1946,7 @@ object SparkEntry {
       // (attention must not cross doc boundaries inside a packed
       // sequence); spans exploded to rows for the oracle compare
       "q128_doc_spans" -> q { (s, dir) =>
-        val enc = graft.ops.Checkpoints.truncator(s, None)(
+        val enc = graft.ops.Checkpoints.materialize(
           LangModel.bpeEncode(t(s, dir, "documents"), nMerges = 4))
         graft.ops.Packer.materializeTokenShards(enc, capacityTokens = 32,
             numGroups = 8, docSpans = true)
@@ -1963,7 +1963,7 @@ object SparkEntry {
       // that curriculum). Sequence-level rows: the token contents are
       // q123's, already verified
       "q126_shuffled_shards" -> q { (s, dir) =>
-        val enc = graft.ops.Checkpoints.truncator(s, None)(
+        val enc = graft.ops.Checkpoints.materialize(
           LangModel.bpeEncode(t(s, dir, "documents"), nMerges = 4))
         val seqs = graft.ops.Packer.materializeTokenShards(enc,
           capacityTokens = 32, numGroups = 8)
@@ -2050,7 +2050,7 @@ object SparkEntry {
         // sf0.1). At 100 TB this is a persisted intermediate table
         // between pipeline stages, exactly as data_preparation jobs
         // stage their curated corpus before selection.
-        val pool = graft.ops.Checkpoints.truncator(s, None)(
+        val pool = graft.ops.Checkpoints.materialize(
           docs.select("doc_id", "text", "source")
             .join(curated.select("doc_id", "lang_pred"), Seq("doc_id")))
         val selected = graft.ops.Dsir.selectTopFractionWithin(pool,
@@ -2059,7 +2059,7 @@ object SparkEntry {
         // the selected corpus is read twice inside bpeEncodeWithModel
         // (vocabulary segmentation + the word explode) — stage it so
         // the DSIR selection chain doesn't re-derive per reference
-        val sel = graft.ops.Checkpoints.truncator(s, None)(
+        val sel = graft.ops.Checkpoints.materialize(
           docs.join(selected.select("doc_id"), Seq("doc_id")))
         val enc = LangModel.bpeEncodeWithModel(sel, model)
         graft.ops.Packer.packTokenized(enc.select("doc_id", "n_tokens"),

@@ -327,5 +327,9 @@ class WarcRecordReader extends RecordReader[LongWritable, Text] {
       if (fileLen == 0) 1f else math.min(1f, pos.toFloat / fileLen)
     else if (end == start) 1f
     else math.min(1f, (pos - start).toFloat / (end - start))
-  override def close(): Unit = if (stream != null) stream.close()
+  /** Idempotent: a streaming caller closes on drain AND at task end. */
+  override def close(): Unit = if (stream != null) {
+    stream.close()
+    stream = null
+  }
 }

@@ -1,13 +1,15 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
-/** Lineage truncation for iterative operators (PageRank, connected
-  * components, BPE training).
+/** The one way a graft operator materializes a stage: iterative loop
+  * carriers (PageRank, connected components, BPE training) truncate
+  * their lineage each round, and multi-consumer operators compute a
+  * shared relation once instead of re-scanning the corpus per consumer.
   *
   * Iterative loops MUST truncate lineage each round — without it round k
   * replans rounds 1..k-1 and the plan grows quadratically. The two ways
-  * to truncate differ in failure semantics, not in results:
+  * to materialize differ in failure semantics, not in results:
   *
   *  - `localCheckpoint` stores blocks on the executors that computed
   *    them. Fast (no DFS write), but blocks die with their executor — on
@@ -17,109 +19,56 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    (HDFS/S3 on a cluster) and recomputes lost partitions from there.
   *    The 100 TB path.
   *
-  * Operators take `checkpointDir: Option[String]`: `Some(dir)` installs
-  * the dir on the context and every truncation becomes a reliable
-  * `checkpoint()`; `None` keeps the localCheckpoint default. Both are
-  * eager — the iterative loops want the materialization barrier so each
-  * round is costed once.
+  * POLICY: the choice is the deployment's, made once. [[materialize]]
+  * checkpoints reliably exactly when the SparkContext has a checkpoint
+  * directory — `spark.checkpoint.dir` at context start, or
+  * `sc.setCheckpointDir` later — and uses `localCheckpoint` otherwise.
+  * No operator takes a dir or sets one, so every stage of a run shares
+  * one failure policy. Reliable-path housekeeping: checkpoint files are
+  * orphaned on DFS unless the ContextCleaner reaps them —
+  * `spark.cleaner.referenceTracking.cleanCheckpoints` is read ONCE at
+  * SparkContext startup, so [[graft.GraftSession]] sets it in the
+  * builder; a session built elsewhere must set it at context-creation
+  * time or accept one orphaned directory per checkpointed relation.
   *
   * EAGERNESS CAVEAT for operator callers: any operator built on this
-  * truncator (set-similarity/containment joins, span dedup, the LSH
-  * collapse, naive Bayes, PageRank) runs its materialization jobs AT
-  * DATAFRAME-CONSTRUCTION TIME, not at first action — calling the
-  * builder just to `.explain()` or inspect a schema pays the corpus
-  * passes and registers blocks. Build these plans when you intend to
-  * run them, and release blocks afterwards (`ContextCleaner` reaps them
-  * once unreachable; `graft.Bench`/`Verify` unpersist between queries).
+  * (set-similarity/containment joins, span dedup, the LSH collapse,
+  * naive Bayes, PageRank, TF-IDF, the quality gate, …) runs its
+  * materialization jobs AT DATAFRAME-CONSTRUCTION TIME, not at first
+  * action — calling the builder just to `.explain()` or inspect a schema
+  * pays the corpus passes and registers blocks. Build these plans when
+  * you intend to run them, and release blocks afterwards
+  * (`ContextCleaner` reaps them once unreachable;
+  * `graft.Bench`/`Verify` unpersist between queries).
   */
 object Checkpoints {
 
-  /** An eager lineage-truncation function for `spark`: reliable when
-    * `dir` is given, local otherwise.
+  /** Materialize `df` under the session's failure policy (see the object
+    * doc): a reliable `checkpoint` when the SparkContext has a checkpoint
+    * dir, a `localCheckpoint` otherwise.
     *
-    * Reliable-path housekeeping: (a) checkpoint files are orphaned on
-    * DFS unless the ContextCleaner is told to reap them —
-    * `spark.cleaner.referenceTracking.cleanCheckpoints` is read ONCE at
-    * SparkContext startup, so [[graft.GraftSession]] sets it in the
-    * builder; a session built elsewhere must set it at context-creation
-    * time or accept one orphaned directory per checkpointed relation,
-    * unbounded over a long-lived session; (b) the checkpoint dir is
-    * SESSION-GLOBAL state. Because every truncation here is EAGER,
-    * sequential operators may each install their own dir safely (all of
-    * op A's checkpoints land before op B resets the dir) — but two
-    * operators built CONCURRENTLY with different dirs race, and the
-    * last-set dir silently receives both operators' files. The switch
-    * is therefore allowed but logged loudly; concurrent builders must
-    * share one dir. */
-  def truncator(spark: SparkSession, dir: Option[String]): DataFrame => DataFrame = {
-    installDir(spark, dir)
-    df =>
-      if (dir.isDefined) df.checkpoint(eager = true)
-      else df.localCheckpoint(eager = true)
-  }
-
-  /** The LAZY variant: truncates the LOGICAL plan immediately (the
-    * result is a LogicalRDD over a checkpoint-marked RDD) but runs no
-    * job — materialization happens inside the consumer's first action,
-    * and later references reuse the stored blocks.
+    * `eager = true` (the default) runs the materialization job now — the
+    * barrier iterative loops want so each round is costed once.
     *
-    * This is the truncation for LOOP CARRIERS whose rounds are cheap
-    * but numerous (the distributed BPE schedule: one top-1 action per
-    * merge wants to pay one job per merge, not three). A Dataset-level
-    * `persist()` is NOT a substitute there: persist leaves the logical
-    * plan nested, and any CacheManager operation on a later round
-    * (lookup, uncache) normalizes the plan through alias inlining
-    * (`AliasHelper.trimAliases`) — a carrier whose per-round projection
-    * references its input column c times inlines to a c^k-node
-    * expression tree at round k (observed: the BPE vocab map references
-    * `s` 3× per merge; 3^64 hung the driver inside `unpersist`).
-    * Aggregates/joins between rounds block the inlining, which is why
-    * [[graft.ops.Graph.pageRank]] can carry a lazy persist while a
-    * projection chain cannot.
-    *
-    * Failure semantics per the class doc: local blocks die with their
-    * executor (single-node / restartDir-covered loops), reliable ones
-    * recompute from DFS — note the reliable flavor re-executes each
-    * carrier once more at checkpoint-write time (standard Spark
+    * `eager = false` truncates the LOGICAL plan immediately (the result
+    * is a LogicalRDD over a checkpoint-marked RDD) but runs no job —
+    * materialization happens inside the consumer's first action, and
+    * later references reuse the stored blocks. This is the form for
+    * LOOP CARRIERS whose rounds are cheap but numerous (the distributed
+    * BPE schedule: one top-1 action per merge wants to pay one job per
+    * merge, not three). A Dataset-level `persist()` is NOT a substitute
+    * there: persist leaves the logical plan nested, and any CacheManager
+    * operation on a later round (lookup, uncache) normalizes the plan
+    * through alias inlining (`AliasHelper.trimAliases`) — a carrier whose
+    * per-round projection references its input column c times inlines to
+    * a c^k-node expression tree at round k (observed: the BPE vocab map
+    * references `s` 3× per merge; 3^64 hung the driver inside
+    * `unpersist`). Aggregates/joins between rounds block the inlining,
+    * which is why [[graft.ops.Graph.pageRank]] can carry a lazy persist
+    * while a projection chain cannot. The reliable flavor re-executes a
+    * lazy carrier once more at checkpoint-write time (standard Spark
     * checkpoint behavior), the price of executor-loss recovery. */
-  def lazyTruncator(spark: SparkSession, dir: Option[String]): DataFrame => DataFrame = {
-    installDir(spark, dir)
-    df =>
-      if (dir.isDefined) df.checkpoint(eager = false)
-      else df.localCheckpoint(eager = false)
-  }
-
-  private def installDir(spark: SparkSession, dir: Option[String]): Unit = {
-    dir.foreach { d =>
-      // normalize through the FULL URI — scheme + authority + path:
-      // getCheckpointDir returns a scheme-qualified URI (file:/...,
-      // hdfs://nn/...) while callers pass raw paths, so raw-string
-      // comparison would treat EVERY re-request as a switch; but a
-      // path-only comparison would treat hdfs://nn/ckpt and file:/ckpt
-      // as the SAME dir and silently skip a genuine filesystem switch,
-      // losing the reliable-checkpoint guarantee. Scheme-less paths
-      // resolve against the session's default FS (fs.defaultFS), same
-      // as setCheckpointDir itself does.
-      def norm(s: String): String = {
-        val p  = new org.apache.hadoop.fs.Path(s)
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val u  = fs.makeQualified(p).toUri
-        val auth = Option(u.getAuthority).getOrElse("")
-        s"${u.getScheme}://$auth${u.getPath.stripSuffix("/")}"
-      }
-      val existing = spark.sparkContext.getCheckpointDir.map(norm)
-      // setCheckpointDir creates a random subdir under d — compare
-      // against the parent we were asked for, not the generated leaf;
-      // the boundary slash keeps /tmp/abc from matching a request for
-      // /tmp/a (a bare startsWith would silently skip the switch)
-      val samePrefix = existing.exists(_.startsWith(norm(d) + "/"))
-      if (existing.isDefined && !samePrefix)
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"switching session checkpoint dir ${existing.get} -> $d; " +
-            "operators built CONCURRENTLY with different dirs would " +
-            "interleave checkpoints under the last-set dir — share one " +
-            "dir across concurrent builds")
-      if (!samePrefix) spark.sparkContext.setCheckpointDir(d)
-    }
-  }
+  def materialize(df: DataFrame, eager: Boolean = true): DataFrame =
+    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(eager)
+    else df.localCheckpoint(eager)
 }

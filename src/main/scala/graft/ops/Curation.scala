@@ -36,7 +36,7 @@ object Curation {
     // with the full fingerprint subtree. Ids are checkpoint-sized;
     // each downstream reference now pays a plain column-pruned text
     // scan gated by a hash semi-join, no re-hash.
-    val keepIds = Checkpoints.truncator(docs.sparkSession, None)(
+    val keepIds = Checkpoints.materialize(
       Dedup.exactDuplicates(docs).select(col("keep_doc_id").as("doc_id")))
     nearDupAndQuality(docs.join(keepIds, Seq("doc_id"), "left_semi"), params)
   }
@@ -92,20 +92,18 @@ object Curation {
     * the quality gate reads. */
   def crawlCurate(pages: DataFrame, idCol: String = "doc_id",
                   htmlCol: String = "html", params: Params = Params(),
-                  checkpointDir: Option[String] = None,
                   perLanguageBuckets: Boolean = false): DataFrame = {
-    val ck = Checkpoints.truncator(pages.sparkSession, checkpointDir)
-    val extracted = ck(pages.select(col(idCol),
+    val extracted = Checkpoints.materialize(pages.select(col(idCol),
       Extract.mainText(col(htmlCol)).as("text")))
-    val cleaned = ck(Dedup.segmentDedup(extracted, idCol = idCol,
-        checkpointDir = checkpointDir)
+    val cleaned = Checkpoints.materialize(Dedup.segmentDedup(extracted, idCol = idCol)
       .where(length(col("clean_text")) > 0)
       .select(col(idCol), col("clean_text").as("text")))
     // the scored relation feeds perplexityBuckets THREE ways (the
     // histogram, the population count, the bucket projection) —
     // materialize it or the whole bigram-LM chain re-runs per
     // reference (the q121 lesson; measured 13.4 → ~7 s at sf0.1)
-    val scored = ck(LangModel.bigramInterpolatedScore(cleaned, idCol = idCol))
+    val scored = Checkpoints.materialize(
+      LangModel.bigramInterpolatedScore(cleaned, idCol = idCol))
     val (curated, buckets) =
       if (!perLanguageBuckets)
         (curate(cleaned, params),
@@ -120,12 +118,12 @@ object Curation {
         // the gate becomes a semi-join of the materialized stats
         // against the surviving ids — row-identical to statsFor over
         // the surviving rows themselves.
-        val stats = ck(TextStats.statsFor(cleaned).select(col(idCol),
-          col("n_chars"), col("n_tokens"), col("quality_score"),
-          col("lang_pred")))
+        val stats = Checkpoints.materialize(TextStats.statsFor(cleaned)
+          .select(col(idCol), col("n_chars"), col("n_tokens"),
+            col("quality_score"), col("lang_pred")))
         // keeper IDs materialized once, as in curate() (the keeper
         // relation is referenced by the LSH chain and the anti-join)
-        val keepIds = ck(Dedup.exactDuplicates(cleaned)
+        val keepIds = Checkpoints.materialize(Dedup.exactDuplicates(cleaned)
           .select(col("keep_doc_id").as(idCol)))
         val keepers = cleaned.join(keepIds, Seq(idCol), "left_semi")
         val losers = Dedup.nearDuplicates(keepers,
@@ -141,7 +139,8 @@ object Curation {
           .select(idCol, "n_chars", "n_tokens", "quality_score", "lang_pred")
         val lang = stats.select(col(idCol), col("lang_pred"))
         (curatedStats,
-          LangModel.perplexityBuckets(ck(scored.join(lang, Seq(idCol))),
+          LangModel.perplexityBuckets(
+            Checkpoints.materialize(scored.join(lang, Seq(idCol))),
             idCol = idCol, partitionCols = Seq("lang_pred"))
             .drop("lang_pred")) // curated carries the same label
       }

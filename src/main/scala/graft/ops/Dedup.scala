@@ -227,10 +227,9 @@ object Dedup {
     * intra self-join and both cross-expansion joins. */
   def nearDuplicates(docs: DataFrame, textCol: String = "text",
                      numHashes: Int = 8, rowsPerBand: Int = 2,
-                     shingleSize: Int = 3, threshold: Double = 0.5,
-                     checkpointDir: Option[String] = None): DataFrame = {
+                     shingleSize: Int = 3, threshold: Double = 0.5): DataFrame = {
     val (m, repPairs) = collapsedRepPairs(docs, textCol, numHashes,
-      rowsPerBand, shingleSize, threshold, checkpointDir)
+      rowsPerBand, shingleSize, threshold)
     // ---- expansion: intra-group pairs (identical token streams,
     // jaccard exactly 1.0) plus cross-group pairs inheriting their
     // representatives' verified jaccard. Quadratic only in the OUTPUT,
@@ -306,7 +305,6 @@ object Dedup {
     * duplicated scan is cheaper than the fixed eager-checkpoint job.
     * [[crossNearDuplicates]] decides per side automatically. */
   private[ops] def tokenStreamCollapse(docs: DataFrame, textCol: String,
-                                       checkpointDir: Option[String] = None,
                                        materialize: Boolean = true)
       : (DataFrame, DataFrame, DataFrame) = {
     // digest relation materialized once (the SetSimilarity lesson:
@@ -321,19 +319,20 @@ object Dedup {
     // corpus — pre-r18 the member gate in [[collapsedRepPairs]] paid a
     // full text scan + minhash evaluation PER REFERENCE (4 of the 8
     // parquet scans in the q102 plan).
+    // a null text counts -1 tokens: size(null) is -1 under legacy
+    // sizeOfNull and null otherwise, so the coalesce pins one value
+    // for either setting
     val keyedPlan = docs
       .select(col("doc_id"), tokenStreamKey(col(textCol)).as("__tk"),
-        size(TextStats.tokens(col(textCol))).as("__nt"))
+        coalesce(size(TextStats.tokens(col(textCol))), lit(-1)).as("__nt"))
     val keyed =
-      if (materialize)
-        Checkpoints.truncator(docs.sparkSession, checkpointDir)(
-          keyedPlan.repartition(col("__tk")))
+      if (materialize) Checkpoints.materialize(keyedPlan.repartition(col("__tk")))
       else keyedPlan
-    // __nt is constant within a group (same token stream); max() over
-    // the group picks it while ignoring the null of a null-text row
-    // grouped with empty-text rows (both tokenize to the empty stream)
+    // __nt is constant within a group (same token stream) except that a
+    // null text (-1) shares the empty stream's key with empty texts (0);
+    // taking the rep's own count keeps __nt the rep's token count
     val reps = keyed.groupBy("__tk")
-      .agg(min("doc_id").as("__rep"), max("__nt").as("__nt"))
+      .agg(min("doc_id").as("__rep"), min_by(col("__nt"), col("doc_id")).as("__nt"))
     val members = keyed.join(reps.select("__tk", "__rep"), "__tk")
       .select(col("doc_id"), col("__rep"))
     val repDocs = docs.join(reps.select(col("__rep").as("doc_id")),
@@ -357,11 +356,10 @@ object Dedup {
     * which both expansion joins and the intra self-join reuse. */
   private def collapsedRepPairs(docs: DataFrame, textCol: String,
                                 numHashes: Int, rowsPerBand: Int,
-                                shingleSize: Int, threshold: Double,
-                                checkpointDir: Option[String])
+                                shingleSize: Int, threshold: Double)
       : (DataFrame, DataFrame) = {
     val (members, repDocs, repNt) =
-      tokenStreamCollapse(docs, textCol, checkpointDir)
+      tokenStreamCollapse(docs, textCol)
     val sigs = minHashSignatures(repDocs, textCol, numHashes, shingleSize)
     val repPairs = jaccardVerify(repDocs,
       candidatePairs(lshBands(sigs, numHashes, rowsPerBand)),
@@ -386,11 +384,10 @@ object Dedup {
   def nearDupComponents(docs: DataFrame, textCol: String = "text",
                         numHashes: Int = 8, rowsPerBand: Int = 2,
                         shingleSize: Int = 3, threshold: Double = 0.5,
-                        maxIter: Int = 20,
-                        checkpointDir: Option[String] = None): DataFrame = {
+                        maxIter: Int = 20): DataFrame = {
     val (m, repPairs) = collapsedRepPairs(docs, textCol, numHashes,
-      rowsPerBand, shingleSize, threshold, checkpointDir)
-    componentsFromCollapsed(m, repPairs, maxIter, checkpointDir)
+      rowsPerBand, shingleSize, threshold)
+    componentsFromCollapsed(m, repPairs, maxIter)
   }
 
   /** [[nearDupComponents]]'s closure + member-attach tail, callable
@@ -400,10 +397,9 @@ object Dedup {
     * and the within-batch component pass without re-implementing (and
     * silently drifting from) these semantics. */
   private[ops] def componentsFromCollapsed(m: DataFrame, repPairs: DataFrame,
-                                           maxIter: Int = 20,
-                                           checkpointDir: Option[String] = None)
+                                           maxIter: Int = 20)
       : DataFrame = {
-    val covered = connectedComponents(repPairs, maxIter, checkpointDir = checkpointDir)
+    val covered = connectedComponents(repPairs, maxIter)
       .select(col("doc_id").as("__rep"), col("component_id"))
     // multi-member groups untouched by any cross-group pair form their
     // own component, labeled (like everywhere else) by the group min
@@ -439,8 +435,7 @@ object Dedup {
   def crossNearDuplicates(corpus: DataFrame, bench: DataFrame,
                           textCol: String = "text",
                           numHashes: Int = 8, rowsPerBand: Int = 2,
-                          shingleSize: Int = 3, threshold: Double = 0.5,
-                          checkpointDir: Option[String] = None): DataFrame = {
+                          shingleSize: Int = 3, threshold: Double = 0.5): DataFrame = {
     // tiny escape: the exact-collapse (reps + member expansion) earns
     // its keep on dup-dense volume (135×→7× at the 100× probe) but is
     // pure fixed cost on small inputs — the disclosed +0.4-0.6 s at
@@ -465,9 +460,9 @@ object Dedup {
       return jaccardVerifyAcross(corpus, bench, cand, "doc_id", "bench_doc_id",
         textCol, shingleSize, threshold)
     }
-    val (membersC, repC, _) = tokenStreamCollapse(corpus, textCol, checkpointDir,
+    val (membersC, repC, _) = tokenStreamCollapse(corpus, textCol,
       materialize = !tinyC)
-    val (membersB, repB, _) = tokenStreamCollapse(bench, textCol, checkpointDir,
+    val (membersB, repB, _) = tokenStreamCollapse(bench, textCol,
       materialize = !tinyB)
     val bandsC = lshBands(minHashSignatures(repC, textCol, numHashes, shingleSize),
       numHashes, rowsPerBand)
@@ -506,8 +501,8 @@ object Dedup {
     * neighbor list (no collect_set — a 10M-member duplicate cluster at
     * corpus scale would kill any per-node list). Each round is
     * checkpointed to truncate the iterative lineage — localCheckpoint
-    * by default; pass `checkpointDir` (HDFS/S3 on a cluster, see
-    * [[Checkpoints]]) so a lost executor replays from the reliable
+    * by default; with a session checkpoint dir (HDFS/S3 on a cluster,
+    * see [[Checkpoints]]) a lost executor replays from the reliable
     * checkpoint instead of killing the job at round k. Convergence is
     * an exact set-equality check costing ONE driver action per round:
     * a single left-join aggregate yields |next| and |next ∩ edges|
@@ -528,12 +523,10 @@ object Dedup {
     * `pairs` is operator error). */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 20,
                           smallCutoff: Long = 1L << 17,
-                          checkpointDir: Option[String] = None,
                           restartDir: Option[String] = None,
                           restartEvery: Int = 1): DataFrame = {
     require(restartEvery >= 1, s"restartEvery $restartEvery must be >= 1")
     val spark = pairs.sparkSession
-    val ck = Checkpoints.truncator(spark, checkpointDir)
     // atMost = maxIter, like pageRank / bpeTrain: a rerun with a
     // smaller budget over a dir holding later rounds must resume AT
     // OR BELOW its own maxIter (resuming past it would throw the
@@ -543,7 +536,7 @@ object Dedup {
     // edge set REPLACES the initial build (and the small-graph fast
     // path below is skipped — saved state means the distributed loop
     // was already the chosen path).
-    var edges = ck(resumed.map(_._2).getOrElse(pairs
+    var edges = Checkpoints.materialize(resumed.map(_._2).getOrElse(pairs
       .select(greatest(col("doc_a"), col("doc_b")).as("u"),
         least(col("doc_a"), col("doc_b")).as("v"))
       .where(col("u") =!= col("v")).distinct()))
@@ -596,7 +589,7 @@ object Dedup {
     // work on an already-converged edge set, never a different result.
     val resumedRound = resumed.map(_._1)
     while (!converged && (i < maxIter || resumedRound.contains(i))) {
-      val next = ck(smallStar(largeStar(edges)))
+      val next = Checkpoints.materialize(smallStar(largeStar(edges)))
       val row = next
         .join(edges.select(col("u"), col("v"), lit(1).as("__in")),
           Seq("u", "v"), "left")
@@ -672,10 +665,9 @@ object Dedup {
     * when small and falls back to a hash join when it isn't. */
   def keepBestDedup(docs: DataFrame, textCol: String = "text",
                     numHashes: Int = 8, rowsPerBand: Int = 2,
-                    shingleSize: Int = 3, threshold: Double = 0.5,
-                    checkpointDir: Option[String] = None): DataFrame = {
+                    shingleSize: Int = 3, threshold: Double = 0.5): DataFrame = {
     val comps = nearDupComponents(docs, textCol, numHashes, rowsPerBand,
-      shingleSize, threshold, checkpointDir = checkpointDir)
+      shingleSize, threshold)
     val scored = docs.select(col("doc_id"),
       TextStats.tokenCount(col(textCol)).as("n_tokens"))
     val winners = comps.join(scored, "doc_id")
@@ -733,8 +725,7 @@ object Dedup {
     * per-doc-partitioned window, not a self-join; the final reassembly
     * reuses the window's doc_id exchange. */
   def spanDedup(docs: DataFrame, k: Int = 5,
-                textCol: String = "text",
-                checkpointDir: Option[String] = None): DataFrame = {
+                textCol: String = "text"): DataFrame = {
     require(k >= 2, s"spanDedup: k ($k) must be >= 2")
     // exact-text collapse (see nearDuplicates): the gram explode, the
     // cover window, and the reassembly are pure functions of the token
@@ -745,7 +736,7 @@ object Dedup {
     // digest relation materialized once (two consumers: the group
     // aggregate and the final member join) — (doc_id, 16-byte digest)
     // rows, one corpus text pass instead of two
-    val keyed = Checkpoints.truncator(docs.sparkSession, checkpointDir)(
+    val keyed = Checkpoints.materialize(
       docs.select(col("doc_id"), tokenStreamKey(col(textCol)).as("__tk")))
     val reps = keyed.groupBy("__tk").agg(min("doc_id").as("__rep"),
       count(lit(1)).cast("long").as("__n"))
@@ -758,7 +749,7 @@ object Dedup {
     // position over the whole corpus. Disk-backed blocks of
     // (key, pos, tok, 16-byte digest) per token — the same volume the
     // two consumers each shuffle anyway.
-    val pt = Checkpoints.truncator(docs.sparkSession, checkpointDir)(repDocs
+    val pt = Checkpoints.materialize(repDocs
       .select(tokenStreamKey(col(textCol)).as("__tk"),
         TextStats.tokens(col(textCol)).as("ts"))
       .where(size(col("ts")) > 0)
@@ -860,9 +851,8 @@ object Dedup {
     * treats all-null keys as one value). */
   def segmentDedup(docs: DataFrame, minDocFreq: Int = 2,
                    wordsPerSegment: Int = 10, delim: Option[String] = None,
-                   idCol: String = "doc_id", textCol: String = "text",
-                   checkpointDir: Option[String] = None): DataFrame = {
-    val seg = Checkpoints.truncator(docs.sparkSession, checkpointDir)(
+                   idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+    val seg = Checkpoints.materialize(
       segments(docs, wordsPerSegment, delim, idCol, textCol)
         .withColumn("h", xxhash64(col("segment"))))
     val common =
@@ -928,14 +918,18 @@ object Dedup {
     * (ShingleHashes — never gram strings); cross-doc occurrence is
     * min(doc)≠max(doc) on one digest-keyed aggregation (the spanDedup
     * trick — no count-distinct); the flag joins back on the same digest
-    * key and the per-doc reduce is a map-side-combining count. */
+    * key and the per-doc reduce is a map-side-combining count.
+    *
+    * EAGER: building the DataFrame runs the job that materializes the
+    * exploded gram relation ([[Checkpoints.materialize]]), so build it
+    * only to run it. */
   def dupGramStats(docs: DataFrame, shingleSize: Int = 3,
                    idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     // the exploded gram relation feeds BOTH the cross-doc aggregate and
     // the flag join — materialized once (r18; the segmentDedup lesson:
     // two references re-ran the tokenize + shingle-md5 corpus pass,
     // 2 text scans in the q79 plan)
-    val grams = Checkpoints.truncator(docs.sparkSession, None)(
+    val grams = Checkpoints.materialize(
       docs.select(col(idCol),
         explode(graft.functions.TextExpressions.shingle_hashes(
           TextStats.tokens(col(textCol)), shingleSize)).as("g")))

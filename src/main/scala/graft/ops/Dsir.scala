@@ -70,9 +70,8 @@ object Dsir {
     * `target`: (idCol, n_feats, logw_micros). Featureless documents
     * (empty text) score (0, 0) rather than dropping out. */
   def logWeights(raw: DataFrame, target: DataFrame, buckets: Int = 1024,
-                 idCol: String = "doc_id", textCol: String = "text",
-                 checkpointDir: Option[String] = None): DataFrame =
-    logWeightsImpl(raw, Right(target), buckets, idCol, textCol, checkpointDir)
+                 idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+    logWeightsImpl(raw, Right(target), buckets, idCol, textCol)
 
   /** [[logWeights]] for the in-pool target case — the target corpus is
     * the subset of `raw` satisfying `targetPred` (the common "select
@@ -88,15 +87,12 @@ object Dsir {
     * target documents' features. */
   def logWeightsWithin(raw: DataFrame, targetPred: Column,
                        buckets: Int = 1024, idCol: String = "doc_id",
-                       textCol: String = "text",
-                       checkpointDir: Option[String] = None): DataFrame =
-    logWeightsImpl(raw, Left(targetPred), buckets, idCol, textCol,
-      checkpointDir)
+                       textCol: String = "text"): DataFrame =
+    logWeightsImpl(raw, Left(targetPred), buckets, idCol, textCol)
 
   private def logWeightsImpl(raw: DataFrame,
                              target: Either[Column, DataFrame],
-                             buckets: Int, idCol: String, textCol: String,
-                             checkpointDir: Option[String]): DataFrame = {
+                             buckets: Int, idCol: String, textCol: String): DataFrame = {
     require(buckets > 0, s"Dsir.logWeights: buckets must be positive, got $buckets")
     // the raw pool featurizes ONCE: the per-doc (id, bucket, k)
     // relation is structurally materialized (ReuseExchange does not
@@ -104,10 +100,9 @@ object Dsir {
     // bucket model FOLDS it; an in-pool target (Left) rides the same
     // pass as a per-doc flag, an external target corpus (Right) gets
     // its own featurize pass
-    val ck = Checkpoints.truncator(raw.sparkSession, checkpointDir)
     val tgtFlag = target.left.toOption
       .map(p => coalesce(p, lit(false))).getOrElse(lit(false))
-    val docFeats = ck(raw
+    val docFeats = Checkpoints.materialize(raw
       .select(col(idCol), tgtFlag.as("__tgt"),
         explode_outer(featureArray(col(textCol))).as("f"))
       .select(col(idCol), col("__tgt"), bucketOf(col("f"), buckets))
@@ -190,7 +185,7 @@ object Dsir {
                                     textCol: String): DataFrame = {
     require(fractionPpm >= 0 && fractionPpm <= 1000000L,
       s"Dsir.selectTopFraction: fractionPpm $fractionPpm out of [0, 1e6]")
-    val w = logWeightsImpl(raw, target, buckets, idCol, textCol, None)
+    val w = logWeightsImpl(raw, target, buckets, idCol, textCol)
       .join(raw.select(col(idCol), col(stratumCol)), Seq(idCol))
     // quotas from the RAW relation: logWeights emits exactly one row
     // per raw doc, so the per-stratum counts are identical — counting

@@ -49,10 +49,10 @@ object Graph {
     * two-carrier retention window (see the loop) — never eagerly
     * materialized mid-loop.
     *
-    * `checkpointDir`: see [[Checkpoints]] — pass an HDFS/S3 dir on a
-    * real cluster so a lost executor at round k replays from the
-    * checkpoint instead of killing the job; default localCheckpoint is
-    * the single-node path.
+    * Failure policy: see [[Checkpoints]] — with a session checkpoint
+    * dir (HDFS/S3 on a real cluster) a lost executor at round k replays
+    * from the checkpoint instead of killing the job; without one,
+    * localCheckpoint is the single-node path.
     *
     * `edgesMaterialized`: set true when `edges0` is already a scan of
     * materialized blocks (e.g. [[coPurchaseEdges]]'s checkpointed
@@ -69,12 +69,10 @@ object Graph {
     * damping) — resuming over a different edge set is operator
     * error. */
   def pageRank(edges0: DataFrame, iters: Int = 5,
-               checkpointDir: Option[String] = None,
                edgesMaterialized: Boolean = false,
                restartDir: Option[String] = None,
                restartEvery: Int = 1): DataFrame = {
     require(restartEvery >= 1, s"restartEvery $restartEvery must be >= 1")
-    val ck = Checkpoints.truncator(edges0.sparkSession, checkpointDir)
     // WEIGHTED mode rides a `w` column on the edge relation (see
     // [[weightedHostRank]]); the unweighted loop scan stays two
     // columns wide — the weight only widens it when it exists
@@ -83,13 +81,13 @@ object Graph {
       else Seq("src", "dst")
     val edges =
       if (edgesMaterialized) edges0.select(edgeCols.map(col): _*)
-      else ck(edges0.select(edgeCols.map(col): _*))
+      else Checkpoints.materialize(edges0.select(edgeCols.map(col): _*))
     // node-sized (≤ |nodes| rows): rides the broadcast side every round
     // — annotating the EDGE relation with outdeg instead costs a second
     // full edge materialization plus a 50% wider loop scan (measured
     // ~25% of the whole query at 10×). In weighted mode `outdeg` is
     // the src's TOTAL outgoing weight (the vote denominator).
-    val outdeg = ck(
+    val outdeg = Checkpoints.materialize(
       if (edgeCols.contains("w"))
         edges.groupBy("src").agg(sum("w").cast("long").as("outdeg"))
       else edges.groupBy("src").agg(count(lit(1)).as("outdeg")))
@@ -103,12 +101,13 @@ object Graph {
     val nodesDeg = {
       val nodes = edges.select(col("src").as("node"))
         .union(edges.select(col("dst").as("node"))).distinct()
-      ck(nodes.join(outdeg, nodes("node") === outdeg("src"), "left")
-        .select(col("node"), col("outdeg")))
+      Checkpoints.materialize(
+        nodes.join(outdeg, nodes("node") === outdeg("src"), "left")
+          .select(col("node"), col("outdeg")))
     }
     val dangling = nodesDeg.where(col("outdeg").isNull).select("node")
     val danglingExists = !dangling.isEmpty
-    val danglingB = if (danglingExists) ck(dangling) else dangling
+    val danglingB = if (danglingExists) Checkpoints.materialize(dangling) else dangling
     val nNodes = if (danglingExists) nodesDeg.count() else 0L
 
     // Loop carrier: per-round LAZY persist, never a mid-loop eager cut.
@@ -160,7 +159,7 @@ object Graph {
       keep = ranks :: keep
       keep.drop(2).foreach(_.unpersist(blocking = false))
       keep = keep.take(2)
-      if (i % cutEvery == 0 && i < iters) ranks = ck(ranks)
+      if (i % cutEvery == 0 && i < iters) ranks = Checkpoints.materialize(ranks)
       // the save's write action materializes THROUGH the lazy persist,
       // so the next round's broadcast reuses the cached carrier — one
       // extra action per committed round, no recompute. `restartEvery`
@@ -177,7 +176,8 @@ object Graph {
     // per invocation, plus keep the edge checkpoint reachable. The
     // cut costs one |nodes|-row job and the result references nothing
     // from the loop.
-    val out = ck(ranks.select(col("node"), col("rank").as("rank_micro")))
+    val out = Checkpoints.materialize(
+      ranks.select(col("node"), col("rank").as("rank_micro")))
     keep.foreach(_.unpersist(blocking = false))
     out
   }
@@ -250,8 +250,7 @@ object Graph {
     * unordered edges), so emitting one orientation halves both the join
     * output and the distinct's shuffle, and the mirror union doubles
     * only the already-deduped edge set, exchange-free. */
-  def coPurchaseEdges(lineitem: DataFrame,
-                      checkpointDir: Option[String] = None): DataFrame = {
+  def coPurchaseEdges(lineitem: DataFrame): DataFrame = {
     // both `li` (the self-join's two sides) and `half` (the mirror
     // union's two branches) have two consumers; relying on
     // ReuseExchange to dedupe them proved planner-mood-dependent at
@@ -259,12 +258,11 @@ object Graph {
     // the miss re-runs the 18M-pair join + distinct for the mirror), so
     // both are structurally materialized (see [[Checkpoints]]): li is
     // (okey, part) longs, half the deduped unordered edge set.
-    val ck = Checkpoints.truncator(lineitem.sparkSession, checkpointDir)
-    val li = ck(lineitem
+    val li = Checkpoints.materialize(lineitem
       .select(col("l_orderkey").as("okey"), col("l_partkey").as("part"))
       .repartition(col("okey"))
       .dropDuplicates("okey", "part"))
-    val half = ck(li.alias("a")
+    val half = Checkpoints.materialize(li.alias("a")
       .join(li.alias("b"),
         col("a.okey") === col("b.okey") && col("a.part") < col("b.part"))
       .select(col("a.part").as("src"), col("b.part").as("dst"))
@@ -277,9 +275,8 @@ object Graph {
   /** PageRank over the co-purchase graph: (part_id, rank_micro). The
     * graph is symmetric by construction, so the dangling path is
     * detected as empty and skipped. */
-  def partRank(lineitem: DataFrame, iters: Int = 5,
-               checkpointDir: Option[String] = None): DataFrame =
-    pageRank(coPurchaseEdges(lineitem, checkpointDir), iters, checkpointDir,
+  def partRank(lineitem: DataFrame, iters: Int = 5): DataFrame =
+    pageRank(coPurchaseEdges(lineitem), iters,
       edgesMaterialized = true)
       .select(col("node").as("part_id"), col("rank_micro"))
 
@@ -307,10 +304,9 @@ object Graph {
     * variants). Output: (domain, rank_micro), the same integer-micro
     * determinism contract as [[partRank]]. */
   def hostRank(pages: DataFrame, srcDomainCol: String = "src_domain",
-               htmlCol: String = "html", iters: Int = 5,
-               checkpointDir: Option[String] = None): DataFrame =
+               htmlCol: String = "html", iters: Int = 5): DataFrame =
     pageRank(hostLinkEdges(pages, srcDomainCol, htmlCol)
-        .select("src", "dst"), iters, checkpointDir)
+        .select("src", "dst"), iters)
       .select(col("node").as("domain"), col("rank_micro"))
 
   /** [[hostRank]] with link MULTIPLICITY as the vote weight (a host
@@ -321,10 +317,9 @@ object Graph {
     * documented at the iterate() site. Output: (domain, rank_micro). */
   def weightedHostRank(pages: DataFrame,
                        srcDomainCol: String = "src_domain",
-                       htmlCol: String = "html", iters: Int = 5,
-                       checkpointDir: Option[String] = None): DataFrame =
+                       htmlCol: String = "html", iters: Int = 5): DataFrame =
     pageRank(hostLinkEdges(pages, srcDomainCol, htmlCol)
         .select(col("src"), col("dst"), col("n_links").as("w")),
-      iters, checkpointDir)
+      iters)
       .select(col("node").as("domain"), col("rank_micro"))
 }

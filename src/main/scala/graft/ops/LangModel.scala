@@ -50,12 +50,16 @@ object LangModel {
     * digest pass plus two digest joins cost more than the explode they
     * save (measured 0.63→3.97 s at sf0.1); on a 90%-exact-dup corpus
     * the collapse wins — flip it when upstream exact dedup has NOT
-    * already run. */
+    * already run.
+    *
+    * EAGER: building the DataFrame runs the jobs that materialize the
+    * per-doc term frequencies (the digest and per-stream relations with
+    * `collapseExact`) via [[Checkpoints.materialize]], so build it only
+    * to run it. */
   def unigramScore(docs: DataFrame, idCol: String = "doc_id",
                    textCol: String = "text",
-                   collapseExact: Boolean = false,
-                   checkpointDir: Option[String] = None): DataFrame =
-    if (collapseExact) unigramScoreCollapsed(docs, idCol, textCol, checkpointDir)
+                   collapseExact: Boolean = false): DataFrame =
+    if (collapseExact) unigramScoreCollapsed(docs, idCol, textCol)
     else unigramScoreDirect(docs, idCol, textCol)
 
   private def unigramScoreDirect(docs: DataFrame, idCol: String,
@@ -65,7 +69,7 @@ object LangModel {
     // canonicalization that was meant to make ReuseExchange serve all
     // three from one exchange lost under full-suite AQE state and the
     // q61 plan re-scanned + re-tokenized the corpus 3×
-    val tf = Checkpoints.truncator(docs.sparkSession, None)(docs
+    val tf = Checkpoints.materialize(docs
       .select(col(idCol), explode(TextStats.tokens(col(textCol))).as("tok"))
       .where(col("tok").isNotNull)
       .groupBy(col(idCol), col("tok"))
@@ -90,21 +94,19 @@ object LangModel {
     * for digests, once for the rep explode via a doc_id semi-join),
     * never exchanged. */
   private def unigramScoreCollapsed(docs: DataFrame, idCol: String,
-                                    textCol: String,
-                                    checkpointDir: Option[String]): DataFrame = {
+                                    textCol: String): DataFrame = {
     // both corpus-sized relations materialize once (the naiveBayes
     // treatment): the digest pass feeds the group aggregate and the
     // final member join; the per-stream tf feeds the corpus counts,
     // the total, and the scoring join — three consumers that would
     // otherwise each re-run the token explode
-    val ck = Checkpoints.truncator(docs.sparkSession, checkpointDir)
-    val keyed = ck(docs.select(col(idCol),
+    val keyed = Checkpoints.materialize(docs.select(col(idCol),
       Dedup.tokenStreamKey(col(textCol)).as("__tk")))
     val reps = keyed.groupBy("__tk")
       .agg(min(idCol).as("__rep"), count(lit(1)).cast("long").as("__n"))
     val repDocs = docs.join(reps.select(col("__rep").as(idCol)),
       Seq(idCol), "left_semi")
-    val gtf = ck(repDocs
+    val gtf = Checkpoints.materialize(repDocs
       .select(Dedup.tokenStreamKey(col(textCol)).as("__tk"),
         explode(TextStats.tokens(col(textCol))).as("tok"))
       .where(col("tok").isNotNull)
@@ -165,12 +167,10 @@ object LangModel {
   def crossUnigramScore(train: DataFrame, eval: DataFrame,
                         idCol: String = "doc_id",
                         textCol: String = "text",
-                        collapseExact: Boolean = false,
-                        checkpointDir: Option[String] = None): DataFrame = {
-    val ck = Checkpoints.truncator(train.sparkSession, checkpointDir)
+                        collapseExact: Boolean = false): DataFrame = {
     val trainTf =
       if (collapseExact) {
-        val keyed = ck(train.select(col(idCol),
+        val keyed = Checkpoints.materialize(train.select(col(idCol),
           Dedup.tokenStreamKey(col(textCol)).as("__tk")))
         val reps = keyed.groupBy("__tk")
           .agg(min(idCol).as("__rep"), count(lit(1)).cast("long").as("__n"))
@@ -181,14 +181,14 @@ object LangModel {
             explode(TextStats.tokens(col(textCol))).as("tok"))
           .where(col("tok").isNotNull)
           .groupBy("__tk", "tok").agg(count(lit(1)).as("tf"))
-        ck(gtf.join(reps.select("__tk", "__n"), "__tk")
+        Checkpoints.materialize(gtf.join(reps.select("__tk", "__n"), "__tk")
           .groupBy("tok").agg(sum(col("tf") * col("__n")).cast("long").as("cnt")))
-      } else ck(train
+      } else Checkpoints.materialize(train
         .select(explode(TextStats.tokens(col(textCol))).as("tok"))
         .groupBy("tok").agg(count(lit(1)).as("cnt")))
     val total = trainTf.agg(sum("cnt").cast("long").as("total_tokens"))
     if (collapseExact)
-      return crossScoreCollapsedEval(eval, trainTf, total, idCol, textCol, ck)
+      return crossScoreCollapsedEval(eval, trainTf, total, idCol, textCol)
     val evalTf = eval
       .select(col(idCol), explode(TextStats.tokens(col(textCol))).as("tok"))
       .groupBy(col(idCol), col("tok"))
@@ -215,9 +215,8 @@ object LangModel {
     * text never shuffles) and members join by digest. */
   private def crossScoreCollapsedEval(eval: DataFrame, trainTf: DataFrame,
                                       total: DataFrame, idCol: String,
-                                      textCol: String,
-                                      ck: DataFrame => DataFrame): DataFrame = {
-    val keyed = ck(eval.select(col(idCol),
+                                      textCol: String): DataFrame = {
+    val keyed = Checkpoints.materialize(eval.select(col(idCol),
       Dedup.tokenStreamKey(col(textCol)).as("__tk")))
     val reps = keyed.groupBy("__tk").agg(min(idCol).as("__rep"))
     val repDocs = eval.join(reps.select(col("__rep").as(idCol)),
@@ -319,16 +318,14 @@ object LangModel {
     * tokens surface with (0, null) via explode_outer, never dropped. */
   def bigramInterpolatedScore(docs: DataFrame, lambda: Double = 0.7,
                               idCol: String = "doc_id",
-                              textCol: String = "text",
-                              checkpointDir: Option[String] = None): DataFrame = {
+                              textCol: String = "text"): DataFrame = {
     // both corpus-derived relations are STRUCTURALLY materialized (the
     // crossUnigramScore treatment): tf feeds the corpus bigram counts
     // AND the scoring join, uni feeds the unigram model AND the token
     // total — relying on ReuseExchange re-ran the tokenize scan per
     // consumer (column pruning de-canonicalizes the subtrees; observed
     // 5-scan plan), so the corpus now tokenizes exactly twice
-    val ck = Checkpoints.truncator(docs.sparkSession, checkpointDir)
-    val tf = ck(docs
+    val tf = Checkpoints.materialize(docs
       .select(col(idCol), TextStats.tokens(col(textCol)).as("ts"))
       .select(col(idCol), explode_outer(bigramStructs(col("ts"))).as("b"))
       .select(col(idCol), col("b.w1").as("w1"), col("b.w2").as("w2"))
@@ -340,7 +337,7 @@ object LangModel {
     val bc = tf.where(col("k") > 0)
       .groupBy("w1", "w2").agg(sum("k").cast("long").as("c2"))
     val ctx = bc.groupBy("w1").agg(sum("c2").cast("long").as("c1l"))
-    val uni = ck(docs
+    val uni = Checkpoints.materialize(docs
       .select(explode(TextStats.tokens(col(textCol))).as("w2"))
       .groupBy("w2").agg(count(lit(1)).cast("long").as("c1r")))
     val tot = uni.agg(coalesce(sum("c1r"), lit(0L)).cast("long").as("t"))
@@ -406,7 +403,7 @@ object LangModel {
     * `scored` is referenced THREE times (histogram twice — coarse pass
     * and boundary-bucket resolution — plus the bucket projection) —
     * pass a materialized relation (a table scan or a
-    * [[graft.ops.Checkpoints.truncator]] output, as
+    * [[graft.ops.Checkpoints.materialize]] output, as
     * [[graft.ops.Curation.crawlCurate]] does) when the scoring chain
     * upstream is expensive, or it re-runs per reference. */
   def perplexityBuckets(scored: DataFrame, idCol: String = "doc_id",
@@ -521,20 +518,17 @@ object LangModel {
   def naiveBayes(docs: DataFrame, labelCol: String = "source",
                  vocabK: Int = 10000, idCol: String = "doc_id",
                  textCol: String = "text",
-                 collapseExact: Boolean = false,
-                 checkpointDir: Option[String] = None): DataFrame =
+                 collapseExact: Boolean = false): DataFrame =
     if (collapseExact)
-      naiveBayesCollapsed(docs, labelCol, vocabK, idCol, textCol, checkpointDir)
-    else naiveBayesDirect(docs, labelCol, vocabK, idCol, textCol, checkpointDir)
+      naiveBayesCollapsed(docs, labelCol, vocabK, idCol, textCol)
+    else naiveBayesDirect(docs, labelCol, vocabK, idCol, textCol)
 
   private def naiveBayesDirect(docs: DataFrame, labelCol: String,
                                vocabK: Int, idCol: String,
-                               textCol: String,
-                               checkpointDir: Option[String]): DataFrame = {
-    val ck = Checkpoints.truncator(docs.sparkSession, checkpointDir)
+                               textCol: String): DataFrame = {
     // the one corpus-sized token pass, materialized once: vocabulary,
     // class totals, count matrix, and the scoring join all scan this
-    val tf = ck(docs
+    val tf = Checkpoints.materialize(docs
       .select(col(idCol), col(labelCol).as("cls"),
         explode(TextStats.tokens(col(textCol))).as("tok"))
       .where(col("tok").isNotNull)
@@ -591,9 +585,7 @@ object LangModel {
     * when it fits), so corpus text is scanned, never exchanged. */
   private def naiveBayesCollapsed(docs: DataFrame, labelCol: String,
                                   vocabK: Int, idCol: String,
-                                  textCol: String,
-                                  checkpointDir: Option[String]): DataFrame = {
-    val ck = Checkpoints.truncator(docs.sparkSession, checkpointDir)
+                                  textCol: String): DataFrame = {
     val keyed = docs.select(col(idCol), col(labelCol).as("cls"),
       Dedup.tokenStreamKey(col(textCol)).as("__tk"))
     val reps = keyed.groupBy("__tk").agg(min(idCol).as("__rep"))
@@ -605,7 +597,7 @@ object LangModel {
       .agg(count(lit(1)).cast("long").as("n"))
     // per-stream term frequencies (the only token explode),
     // materialized once — same structural sharing as the direct path
-    val gtf = ck(streams
+    val gtf = Checkpoints.materialize(streams
       .select(col("__tk"), explode(TextStats.tokens(col("__text"))).as("tok"))
       .where(col("tok").isNotNull)
       .groupBy("__tk", "tok")
@@ -750,7 +742,6 @@ object LangModel {
     * to any engine (the DuckDB oracle runs the identical chain). */
   def bpeTrain(docs: DataFrame, nMerges: Int = 4,
                textCol: String = "text",
-               checkpointDir: Option[String] = None,
                driverCutoff: Long = BpeDriverCutoff,
                restartDir: Option[String] = None,
                restartEvery: Int = 1,
@@ -758,7 +749,7 @@ object LangModel {
     // cutFinalVocab=false: only the driver-local merge table is
     // returned, so the loop must not pay a vocab-sized handoff job for
     // a relation nobody reads
-    bpeLoop(docs, nMerges, textCol, checkpointDir, driverCutoff, restartDir,
+    bpeLoop(docs, nMerges, textCol, driverCutoff, restartDir,
       restartEvery, cutFinalVocab = false, strategy = strategy)._2
 
   /** Distributed-schedule strategies for [[bpeTrain]] — byte-identical
@@ -805,9 +796,8 @@ object LangModel {
   def bpeTokenCounts(docs: DataFrame, nMerges: Int = 4,
                      idCol: String = "doc_id",
                      textCol: String = "text",
-                     checkpointDir: Option[String] = None,
                      driverCutoff: Long = BpeDriverCutoff): DataFrame = {
-    val vocab = bpeLoop(docs, nMerges, textCol, checkpointDir, driverCutoff)._1
+    val vocab = bpeLoop(docs, nMerges, textCol, driverCutoff)._1
     tokenCountsOver(docs, vocab.select(col("w"),
       size(split(trim(col("s")), " ")).cast("long").as("n_sym")),
       idCol, textCol)
@@ -876,10 +866,9 @@ object LangModel {
     * merge table is nMerges rows — a bounded collect by construction). */
   def trainBpeModel(docs: DataFrame, nMerges: Int = 4,
                     textCol: String = "text",
-                    checkpointDir: Option[String] = None,
                     driverCutoff: Long = BpeDriverCutoff): BpeModel =
     BpeModel(collectMerges(
-      bpeTrain(docs, nMerges, textCol, checkpointDir, driverCutoff)))
+      bpeTrain(docs, nMerges, textCol, driverCutoff)))
 
   /** Persist a [[BpeModel]]: `dir/merges` (the table) + `dir/params`
     * (n_merges) — the [[graft.ops.LshIndex]] meta convention, so a
@@ -928,10 +917,9 @@ object LangModel {
     * per-doc assembly is one sort_array over that doc's tokens. */
   def bpeEncode(docs: DataFrame, nMerges: Int = 4,
                 idCol: String = "doc_id", textCol: String = "text",
-                checkpointDir: Option[String] = None,
                 driverCutoff: Long = BpeDriverCutoff): DataFrame = {
     val (vocab, mergesDf) =
-      bpeLoop(docs, nMerges, textCol, checkpointDir, driverCutoff)
+      bpeLoop(docs, nMerges, textCol, driverCutoff)
     encodeTokens(docs,
       vocab.select(col("w"), split(trim(col("s")), " ").as("syms")),
       BpeModel(collectMerges(mergesDf)), idCol, textCol)
@@ -1011,7 +999,6 @@ object LangModel {
     * (w, s, c), merge table). See [[bpeTrain]] for the algorithm,
     * the driver/distributed split, and the portability contract. */
   private[graft] def bpeLoop(docs: DataFrame, nMerges: Int, textCol: String,
-                             checkpointDir: Option[String] = None,
                              driverCutoff: Long = BpeDriverCutoff,
                              restartDir: Option[String] = None,
                              restartEvery: Int = 1,
@@ -1023,7 +1010,6 @@ object LangModel {
       s"bpeTrain strategy '$strategy' not in {$BpeIncremental, $BpeRecount}")
     val spark = docs.sparkSession
     import spark.implicits._
-    val ck = Checkpoints.truncator(spark, checkpointDir)
     // `restartDir` (opt-in, distributed path only): each merge round
     // commits (vocab, merges-so-far) via [[Restart]] — one job per
     // merge makes this the longest-lived loop in the engine, so a
@@ -1044,13 +1030,13 @@ object LangModel {
       case Some((_, saved)) =>
         // resume replaces BOTH the corpus pass and the cutoff probe:
         // saved state exists only on the distributed path
-        vocab = ck(saved)
+        vocab = Checkpoints.materialize(saved)
       case None =>
         // the one corpus-sized pass, materialized once: the
         // vocabulary-size probe, the driver collect / distributed loop,
         // and (via the returned vocab) bpeTokenCounts' broadcast all
         // derive from it
-        val wc = ck(docs
+        val wc = Checkpoints.materialize(docs
           .select(explode(split(lower(col(textCol)), "[^a-z]+")).as("w"))
           .where(length(col("w")) >= 2)
           .groupBy("w").agg(count(lit(1)).as("c")))
@@ -1119,7 +1105,7 @@ object LangModel {
     // recount mode never materializes the maintained relation — each
     // round re-aggregates from the current vocab (see [[BpeRecount]])
     var pc: DataFrame =
-      if (strategy == BpeIncremental) ck(pairCounts(vocab)) else null
+      if (strategy == BpeIncremental) Checkpoints.materialize(pairCounts(vocab)) else null
     // Loop carriers (pc, vocab) are truncated LAZILY per round, never
     // eagerly cut: each round's ONE driver action (the top-1 collect)
     // materializes the previous round's delta fold and vocab map
@@ -1132,12 +1118,11 @@ object LangModel {
     // projection chain referencing `s` three times per round, and
     // CacheManager plan normalization inlines stacked projections —
     // 3^k expression nodes by round k (3^64 hung the driver inside
-    // unpersist); see [[Checkpoints.lazyTruncator]]. The LogicalRDD
+    // unpersist); see [[Checkpoints.materialize]]. The LogicalRDD
     // the lazy truncation leaves behind keeps every round's ANALYZED
     // plan depth constant too, so no mid-loop eager cut is needed at
     // any schedule length. Superseded blocks are reaped by the
     // ContextCleaner once their round's RDD becomes unreachable.
-    val ckLazy = Checkpoints.lazyTruncator(spark, checkpointDir)
     while (rank <= nMerges) {
       val top = (if (strategy == BpeIncremental) pc else pairCounts(vocab))
         .orderBy(col("cnt").desc, col("l"), col("r"))
@@ -1169,12 +1154,13 @@ object LangModel {
             .select(explode(expr(
               s"concat(${signedPairs("sn", "c")}, ${signedPairs("so", "-c")})")).as("p"))
             .select(col("p.l").as("l"), col("p.r").as("r"), col("p.d").as("cnt"))
-          pc = ckLazy(pc.unionByName(delta)
+          pc = Checkpoints.materialize(pc.unionByName(delta)
             .groupBy("l", "r").agg(sum("cnt").as("cnt"))
-            .where(col("cnt") =!= 0))
+            .where(col("cnt") =!= 0), eager = false)
         }
-        vocab = ckLazy(vocab.select(col("w"),
-          expr(s"CASE WHEN $hit THEN $mergeS ELSE s END").as("s"), col("c")))
+        vocab = Checkpoints.materialize(vocab.select(col("w"),
+          expr(s"CASE WHEN $hit THEN $mergeS ELSE s END").as("s"), col("c")),
+          eager = false)
         // `restartEvery`: commit every k-th round — a long schedule on a
         // big vocab trades at most k-1 replayed merges on resume for
         // k× fewer vocab-sized parquet writes. Cadence 1 (the default)
@@ -1196,7 +1182,7 @@ object LangModel {
     // Callers that discard the vocab (bpeTrain returns only the merge
     // table) skip the cut — a vocab-sized job for an unread relation
     val out =
-      if (cutFinalVocab) ck(vocab.select("w", "s", "c"))
+      if (cutFinalVocab) Checkpoints.materialize(vocab.select("w", "s", "c"))
       else vocab.select("w", "s", "c")
     (out,
       merges.toSeq.toDF("rank", "left", "right", "merged", "pair_count"))

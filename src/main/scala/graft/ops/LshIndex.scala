@@ -281,13 +281,12 @@ object LshIndex {
       else df.where(!col("shard").isin(excludeShards: _*))
     val xBands = shardFilter(spark.read.parquet(s"$root/bands"))
     val xSh = shardFilter(spark.read.parquet(s"$root/shingles"))
-    val ck = Checkpoints.truncator(spark, None)
     val (members, repDocs) = collapsed(batch, textCol)
-    val sigs = ck(Dedup.minHashSignatures(repDocs, textCol,
+    val sigs = Checkpoints.materialize(Dedup.minHashSignatures(repDocs, textCol,
       p.numHashes, p.shingleSize))
     val qBands = Dedup.lshBands(sigs, p.numHashes, p.rowsPerBand)
       .withColumnRenamed("doc_id", "rep")
-    val qSh = ck(shinglesOf(repDocs, textCol, p))
+    val qSh = Checkpoints.materialize(shinglesOf(repDocs, textCol, p))
     // history: rep-level candidates vs the index, verified once per rep
     val dupReps = qBands.alias("q")
       .join(xBands.alias("x"),

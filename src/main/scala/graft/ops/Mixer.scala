@@ -56,8 +56,7 @@ object Mixer {
     // bucket-totals aggregation and the row window read these blocks,
     // so the corpus is scanned and tokenized exactly once (see the
     // object doc: ReuseExchange does not survive column pruning)
-    val ck = Checkpoints.truncator(docs.sparkSession, None)
-    val base = ck(withPriority(docs, idCol, sourceCol, textCol)
+    val base = Checkpoints.materialize(withPriority(docs, idCol, sourceCol, textCol)
       .withColumn("bucket", shiftright(col("priority"), BucketShift).cast("int")))
       .repartition(col(sourceCol), col("bucket"))
     val byBucket = Window.partitionBy(sourceCol).orderBy("bucket")

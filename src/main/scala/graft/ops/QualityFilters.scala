@@ -34,14 +34,18 @@ object QualityFilters {
     * Scale: NOT a window over lang partitions (a handful of huge
     * partitions = maximal skew at corpus scale). The per-language
     * quantile is a tiny groupBy aggregate (|languages| rows) broadcast
-    * back onto the scan — the corpus never shuffles. */
+    * back onto the scan — the corpus never shuffles.
+    *
+    * EAGER: building the DataFrame runs the job that materializes the
+    * per-doc stats ([[Checkpoints.materialize]]), so build it only to
+    * run it. */
   def relativeQualityGate(docs: DataFrame, quantile: Double = 0.5,
                           textCol: String = "text"): DataFrame = {
     require(quantile > 0 && quantile <= 1, s"quantile $quantile out of (0, 1]")
     // stats feeds the per-language cutoffs AND the gate join —
     // materialized once (r18; statsFor re-ran per reference: 2 corpus
     // text scans in the q57 plan)
-    val stats = Checkpoints.truncator(docs.sparkSession, None)(
+    val stats = Checkpoints.materialize(
       TextStats.statsFor(docs, textCol)
         .select("doc_id", "lang_pred", "quality_score"))
     val cutoffs = stats.groupBy("lang_pred")
@@ -65,7 +69,11 @@ object QualityFilters {
     * the corpus): lengths first collapse to a value histogram (rows =
     * distinct lengths, bounded by the max document length), the
     * cumulative walk runs over that tiny relation, and the 9 cutoffs
-    * broadcast back onto the scan as one CASE-sum projection. */
+    * broadcast back onto the scan as one CASE-sum projection.
+    *
+    * EAGER: building the DataFrame runs the job that materializes the
+    * slim stats relation ([[Checkpoints.materialize]]), so build it only
+    * to run it. */
   def curriculumBuckets(docs: DataFrame, nBuckets: Int = 10,
                         textCol: String = "text"): DataFrame = {
     require(nBuckets >= 2, s"nBuckets ($nBuckets) must be >= 2")
@@ -73,7 +81,7 @@ object QualityFilters {
     // projection — materialized once (r18; statsFor's fingerprint +
     // token-stats pass re-ran per reference: 2 corpus text scans in
     // the q99 plan, 3 with the histogram total before its fold)
-    val stats = Checkpoints.truncator(docs.sparkSession, None)(
+    val stats = Checkpoints.materialize(
       TextStats.statsFor(docs, textCol)
         .select(col("doc_id"), col("n_chars"), col("quality_score")))
     val hist = stats.groupBy("n_chars").agg(count(lit(1)).as("c"))

@@ -84,7 +84,7 @@ object Sampling {
     * decision pass (column-pruned at the scan) and the row pass that
     * moves the payloads once. Over a parquet scan the decision pass is
     * the cheap small-rows pass; over an EXPENSIVE unmaterialized
-    * subtree, pass a materialized relation (a [[Checkpoints.truncator]]
+    * subtree, pass a materialized relation (a [[Checkpoints.materialize]]
     * output, as [[Urls.urlFront]]/[[Urls.crawlFrontier]] do) — the
     * [[LangModel.perplexityBuckets]] contract. */
   def capPerKey(df: DataFrame, key: Column, id: Column, maxPerKey: Int,

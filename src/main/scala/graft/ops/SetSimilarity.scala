@@ -53,18 +53,16 @@ object SetSimilarity {
     * row_number window (partitioned by doc — no global sort); the
     * candidate join shuffles only (id, n, hash) triples.
     *
-    * `checkpointDir`: see [[Checkpoints]] — the shared prefix relation
-    * is materialized once (both self-join sides scan it); pass an
-    * HDFS/S3 dir on a real cluster so those blocks survive executor
-    * loss (reliable checkpoint), else the single-node localCheckpoint
-    * is used. Blocks are reclaimed by the ContextCleaner once the
+    * The shared prefix relation is materialized once (both self-join
+    * sides scan it) via [[Checkpoints.materialize]]: reliable when the
+    * session has a checkpoint dir, so those blocks survive executor
+    * loss, else the single-node localCheckpoint. Blocks are reclaimed by the ContextCleaner once the
     * returned plan is unreachable (or by an explicit
     * `spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist())`
     * between queries, as graft.Bench does). */
   def setSimilarityJoin(docs: DataFrame, thresholdPct: Int = 70,
                         shingleSize: Int = 3, idCol: String = "doc_id",
-                        textCol: String = "text",
-                        checkpointDir: Option[String] = None): DataFrame = {
+                        textCol: String = "text"): DataFrame = {
     require(thresholdPct > 0 && thresholdPct <= 100,
       s"thresholdPct must be in (0, 100], got $thresholdPct")
     // EXACT-TEXT COLLAPSE (the spanDedup move, unconditional here): a
@@ -79,15 +77,14 @@ object SetSimilarity {
     // the stream-digest relation (one md5-of-token-stream per doc) has
     // two consumers (the group aggregate and the member map) — one
     // corpus text pass, materialized (the exploded-relation move)
-    val ck = Checkpoints.truncator(docs.sparkSession, checkpointDir)
-    val keyed = ck(docs.select(col(idCol).as("id"),
+    val keyed = Checkpoints.materialize(docs.select(col(idCol).as("id"),
       Dedup.tokenStreamKey(col(textCol)).as("__tk")))
     val groups = keyed.groupBy("__tk")
       .agg(min("id").as("rep"), count(lit(1)).as("cnt"))
     val repDocs = docs.join(groups.select(col("rep").as(idCol)),
       Seq(idCol), "left_semi")
     val (repPairs0, eP) = repSimilarityPairs(repDocs, thresholdPct,
-      shingleSize, idCol, textCol, checkpointDir)
+      shingleSize, idCol, textCol)
     val repPairs = repPairs0
       .withColumnRenamed("doc_a", "rep_a").withColumnRenamed("doc_b", "rep_b")
     val mem = keyed.join(groups.select("__tk", "rep"), "__tk")
@@ -134,27 +131,24 @@ object SetSimilarity {
     *  - exact-dup collapse expands DIRECTED member pairs (both
     *    directions within an identical-stream group).
     * Docs with no shingles are absent from both roles.
-    * `checkpointDir`: as in [[setSimilarityJoin]] — the exploded
-    * relation feeds five consumers here (frequency aggregate, prefix
+    * As in [[setSimilarityJoin]], the exploded relation feeds five consumers here (frequency aggregate, prefix
     * window, the container-side full index, both verification joins),
     * so it is materialized once via [[Checkpoints]]. */
   def containmentJoin(docs: DataFrame, thresholdPct: Int = 80,
                       shingleSize: Int = 3, idCol: String = "doc_id",
-                      textCol: String = "text",
-                      checkpointDir: Option[String] = None): DataFrame = {
+                      textCol: String = "text"): DataFrame = {
     require(thresholdPct > 0 && thresholdPct <= 100,
       s"thresholdPct must be in (0, 100], got $thresholdPct")
     // one materialized corpus text pass for the digest relation, as in
     // [[setSimilarityJoin]]
-    val ck = Checkpoints.truncator(docs.sparkSession, checkpointDir)
-    val keyed = ck(docs.select(col(idCol).as("id"),
+    val keyed = Checkpoints.materialize(docs.select(col(idCol).as("id"),
       Dedup.tokenStreamKey(col(textCol)).as("__tk")))
     val groups = keyed.groupBy("__tk")
       .agg(min("id").as("rep"), count(lit(1)).as("cnt"))
     val repDocs = docs.join(groups.select(col("rep").as(idCol)),
       Seq(idCol), "left_semi")
     val (repPairs, eP) = repContainmentPairs(repDocs, thresholdPct,
-      shingleSize, idCol, textCol, checkpointDir)
+      shingleSize, idCol, textCol)
     val mem = keyed.join(groups.select("__tk", "rep"), "__tk")
     // directed cross-group expansion: direction rides the rep pair
     val cross = repPairs
@@ -207,12 +201,10 @@ object SetSimilarity {
     * already known to be one row per distinct token stream. */
   private def repContainmentPairs(docs: DataFrame, thresholdPct: Int,
                                   shingleSize: Int, idCol: String,
-                                  textCol: String,
-                                  checkpointDir: Option[String])
+                                  textCol: String)
       : (DataFrame, DataFrame) = {
     val pct = lit(thresholdPct.toLong)
-    val ck = Checkpoints.truncator(docs.sparkSession, checkpointDir)
-    val e = ck(explodedSets(docs, shingleSize, idCol, textCol))
+    val e = Checkpoints.materialize(explodedSets(docs, shingleSize, idCol, textCol))
     val prefix = rarestFirstPrefix(e, thresholdPct)
     // contained-side prefix probes the container-side FULL index; the
     // size gate n_container ≥ ⌈t·n_doc⌉ (⇔ 100·n_out ≥ pct·n_in over
@@ -244,8 +236,7 @@ object SetSimilarity {
     * without a fresh corpus tokenize. */
   private def repSimilarityPairs(docs: DataFrame, thresholdPct: Int,
                                  shingleSize: Int, idCol: String,
-                                 textCol: String,
-                                 checkpointDir: Option[String])
+                                 textCol: String)
       : (DataFrame, DataFrame) = {
     val pct = lit(thresholdPct.toLong)
     val e = explodedSets(docs, shingleSize, idCol, textCol)
@@ -255,10 +246,10 @@ object SetSimilarity {
     // ReuseExchange to dedupe two identical subplans proved fragile
     // (AQE stage-cache misses under suite/bench JVM state re-ran the
     // pipeline twice, 2.8× on q106), so the sharing is structural:
-    // the truncator computes it exactly once and both sides scan the
-    // materialized blocks — reliable checkpoint when `checkpointDir`
-    // is given (the 100 TB fault-tolerance path), localCheckpoint on
-    // a single node. Bounded: the prefix keeps ⌈(1−t)·n⌉+1 rows
+    // materialize computes it exactly once and both sides scan the
+    // materialized blocks — reliable checkpoint when the session has a
+    // checkpoint dir (the 100 TB fault-tolerance path), localCheckpoint
+    // on a single node. Bounded: the prefix keeps ⌈(1−t)·n⌉+1 rows
     // of three longs per doc — (1−t)· the exploded relation, a small
     // slice of the corpus, partition-distributed (never driver-side).
     //
@@ -269,9 +260,9 @@ object SetSimilarity {
     // of q106 at the 10× stress). Three longs per token occurrence,
     // partition-distributed, disk-backed past memory — the cheapest
     // representation of the corpus this operator ever holds.
-    val ck = Checkpoints.truncator(docs.sparkSession, checkpointDir)
-    val eP = ck(e)
-    val prefixP = ck(rarestFirstPrefix(eP, thresholdPct).repartition(col("g")))
+    val eP = Checkpoints.materialize(e)
+    val prefixP = Checkpoints.materialize(
+      rarestFirstPrefix(eP, thresholdPct).repartition(col("g")))
     val cand = prefixP.alias("a")
       .join(prefixP.alias("b"), col("a.g") === col("b.g"))
       .where(col("a.id") < col("b.id"))

@@ -1186,19 +1186,18 @@ object Similarity {
   def semDedup(corpus: DataFrame, threshold: Double = 0.4, nlist: Int = 0,
                idCol: String = "vec_id", vecCol: String = "embedding",
                maxIter: Int = 5, maxTrain: Int = 4096,
-               checkpointDir: Option[String] = None,
                collapseExact: Boolean = false): DataFrame = {
     val k = if (nlist > 0) nlist
             else semDedupNlist(corpus.count(), maxTrain = maxTrain)
     val cent = trainedCentroids(corpus, k, maxIter, maxTrain, idCol, vecCol)
-    val ck = Checkpoints.truncator(corpus.sparkSession, checkpointDir)
     if (collapseExact)
-      return semDedupCollapsed(corpus, threshold, cent, idCol, vecCol, ck)
+      return semDedupCollapsed(corpus, threshold, cent, idCol, vecCol)
     // the cell assignment (corpus scan + a k·dim argmax per row) feeds
     // THREE consumers — both pair-join sides and the final keep
     // anti-join — so it materializes once (see [[Checkpoints]]) instead
     // of re-scanning and re-scoring the corpus per consumer
-    val assigned = ck(corpus.select(col(idCol), col(vecCol).as("v"),
+    val assigned = Checkpoints.materialize(corpus.select(col(idCol),
+      col(vecCol).as("v"),
       VectorExpressions.nearest_cell(col(vecCol), cent.map(_.toSeq).toSeq).as("cell")))
     val losers = cellPairLosers(assigned, idCol, threshold)
       .select(col("doc_id").as(idCol))
@@ -1223,7 +1222,7 @@ object Similarity {
     // materialized once, same as semDedup's own assignment: the
     // relation feeds both pair-join sides, and betting on ReuseExchange
     // to dedupe the twin scan+argmax subtrees is planner-mood-dependent
-    val assigned = Checkpoints.truncator(batch.sparkSession, None)(
+    val assigned = Checkpoints.materialize(
       batch.select(col(idCol), col(vecCol).as("v"),
         VectorExpressions.nearest_cell(col(vecCol), cent.toSeq).as("cell")))
     cellPairLosers(assigned, idCol, threshold)
@@ -1266,8 +1265,7 @@ object Similarity {
     * it. */
   private def semDedupCollapsed(corpus: DataFrame, threshold: Double,
                                 cent: Array[Array[Double]], idCol: String,
-                                vecCol: String,
-                                ck: DataFrame => DataFrame): DataFrame = {
+                                vecCol: String): DataFrame = {
     // null elements must stay distinguishable in the digest: concat_ws
     // silently DROPS nulls, so [1,null,2] and [1,2] would collapse to
     // one group and members would inherit a keep/drop fate the direct
@@ -1277,11 +1275,12 @@ object Similarity {
     val vkey = md5(to_binary(concat_ws(",",
       expr(s"transform($vecCol, x -> coalesce(CAST(x AS STRING), 'null'))")),
       lit("utf-8")))
-    val keyed = ck(corpus.select(col(idCol), vkey.as("__vk")))
+    val keyed = Checkpoints.materialize(corpus.select(col(idCol), vkey.as("__vk")))
     val reps = keyed.groupBy("__vk").agg(min(idCol).as("__rep"))
     val repVecs = corpus.join(reps.select(col("__rep").as(idCol)),
       Seq(idCol), "left_semi")
-    val assigned = ck(repVecs.select(col(idCol).as("__rep"), col(vecCol).as("v"),
+    val assigned = Checkpoints.materialize(repVecs.select(col(idCol).as("__rep"),
+      col(vecCol).as("v"),
       VectorExpressions.nearest_cell(col(vecCol), cent.map(_.toSeq).toSeq).as("cell")))
     val repLosers = cellPairLosers(assigned, "__rep", threshold)
       .select(col("doc_id").as("__rep"))

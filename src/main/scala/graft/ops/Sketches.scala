@@ -21,14 +21,18 @@ object Sketches {
 
   /** Top-`k` tokens by exact count with their count-min estimate:
     * (tok, cnt, est_cnt). est_cnt ≥ cnt always; equality whenever no
-    * heavier token collides in all `d` rows. */
+    * heavier token collides in all `d` rows.
+    *
+    * EAGER: building the DataFrame runs the job that materializes the
+    * (tok, cnt) relation ([[Checkpoints.materialize]]), so build it only
+    * to run it. */
   def cmsFrequency(docs: DataFrame, d: Int = 4, w: Int = 32, k: Int = 20,
                    textCol: String = "text"): DataFrame = {
     // the aggregated (tok, cnt) relation feeds the sketch aggregate AND
     // the exact top-k — materialized once (r18; vocabulary-sized; the
     // lost ReuseExchange bet re-ran the corpus explode per consumer:
     // 2 text scans in the q75 plan)
-    val toks = graft.ops.Checkpoints.truncator(docs.sparkSession, None)(docs
+    val toks = graft.ops.Checkpoints.materialize(docs
       .select(explode(TextStats.tokens(col(textCol))).as("tok"))
       .where(col("tok").isNotNull)
       .groupBy("tok").agg(count(lit(1)).cast("long").as("cnt")))

@@ -132,11 +132,15 @@ object TextStats {
     * (co-partition and hope) lost to AQE's broadcast conversion, so
     * BOTH sides re-ran the corpus tokenize AND the vocabulary's own
     * two-exchange top-k (4 corpus text scans in the q88 plan). The
-    * final cut is a bounded TakeOrdered. */
+    * final cut is a bounded TakeOrdered.
+    *
+    * EAGER: building the DataFrame runs the job that materializes the
+    * pruned (doc_id, term) relation ([[Checkpoints.materialize]]), so
+    * build it only to run it. */
   def cooccurrence(docs: DataFrame, vocabK: Int = 30, topPairs: Int = 100,
                    textCol: String = "text"): DataFrame = {
     val vocab = vocabulary(docs, vocabK, textCol).select("term")
-    val dt = Checkpoints.truncator(docs.sparkSession, None)(docs
+    val dt = Checkpoints.materialize(docs
       .select(col("doc_id"), explode(array_distinct(tokens(col(textCol)))).as("term"))
       .join(broadcast(vocab), Seq("term")))
     dt.alias("a")

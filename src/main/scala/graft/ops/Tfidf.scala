@@ -31,6 +31,10 @@ import org.apache.spark.sql.functions._
   */
 object Tfidf {
 
+  /** Top-`k` terms per document by TF-IDF and BM25 (see the object doc).
+    * EAGER: building the DataFrame runs the job that materializes the
+    * term-frequency relation ([[Checkpoints.materialize]]), so build it
+    * only to run it. */
   def topTerms(docs: DataFrame, textCol: String = "text", k: Int = 5,
                k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     // the term-frequency relation feeds THREE consumers (doc-length
@@ -42,7 +46,7 @@ object Tfidf {
     // the corpus 3× (the SetSimilarity lesson: never bet a corpus pass
     // on planner mood). The isNotNull is kept for row-identical output
     // under any tokens() change.
-    val tf = Checkpoints.truncator(docs.sparkSession, None)(docs
+    val tf = Checkpoints.materialize(docs
       .select(col("doc_id"), explode(TextStats.tokens(col(textCol))).as("term"))
       .where(col("term").isNotNull)
       .groupBy("doc_id", "term")

@@ -189,8 +189,7 @@ object Urls {
     // re-deriving the dedup join per pass would double the gate's cost
     // (the r7/r8 structural-materialization rule; same contract as
     // [[graft.ops.Curation.crawlCurate]]'s stage tables)
-    val ck = Checkpoints.truncator(df.sparkSession, None)
-    val deduped = ck(urlDedup(gated, urlCol, idCol)
+    val deduped = Checkpoints.materialize(urlDedup(gated, urlCol, idCol)
       .withColumn("url_norm", normalize(col(urlCol)))
       .withColumn("domain", domain(col(urlCol))))
     if (capPerRegistrable) {
@@ -238,8 +237,7 @@ object Urls {
     // materialized ONCE — the two-phase cap's two passes would
     // otherwise each re-run the blocklist→robots→dedup subtree (the
     // r7/r8 structural-materialization rule)
-    val ck = Checkpoints.truncator(df.sparkSession, None)
-    val deduped = ck(urlDedup(gated, urlCol, idCol)
+    val deduped = Checkpoints.materialize(urlDedup(gated, urlCol, idCol)
       .withColumn("url_norm", normalize(col(urlCol)))
       .withColumn("domain", domain(col(urlCol))))
     // cap + politeness sequence via the two-phase per-key order

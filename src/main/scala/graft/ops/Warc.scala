@@ -182,9 +182,12 @@ object Warc {
         val rr = new graft.io.WarcRecordReader
         rr.initializeSequential(in)
         // close the reader (and its gzip Inflater's native buffer) the
-        // moment the last record is consumed — the iterator has no
-        // other close path, and leaving it to GC finalization builds up
-        // native memory in long-running streams over many .gz segments
+        // moment the last record is consumed, and again at task end for
+        // a consumer that stops early (a LIMIT) — leaving it to GC
+        // finalization builds up native memory in long-running streams
+        // over many .gz segments
+        Option(org.apache.spark.TaskContext.get())
+          .foreach(_.addTaskCompletionListener[Unit](_ => rr.close()))
         new Iterator[String] {
           private def advance(): Boolean = {
             val more = rr.nextKeyValue()

@@ -92,8 +92,7 @@ object CrawlIngest {
     * inside foreachBatch the batch is small, but extraction is the
     * expensive projection). */
   private def extractGate(recs: DataFrame, minQuality: Double): DataFrame = {
-    val spark = recs.sparkSession
-    val pages = Checkpoints.truncator(spark, None)(
+    val pages = Checkpoints.materialize(
       recs.select(col("uri").as("doc_id"),
         Extract.mainText(col("payload")).as("text"))
         .where(length(col("text")) > 0))

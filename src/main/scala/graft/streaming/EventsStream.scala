@@ -367,10 +367,10 @@ object EventsStream {
       org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     log.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
       val spark = batch.sparkSession
-      val latest = graft.ops.Cdc.applyChangelog(batch, keys, col(seqCol),
-        col(opCol)).localCheckpoint(true)
-      val deletes = graft.ops.Cdc.deletedKeys(batch, keys, col(seqCol),
-        col(opCol)).localCheckpoint(true)
+      val latest = graft.ops.Checkpoints.materialize(
+        graft.ops.Cdc.applyChangelog(batch, keys, col(seqCol), col(opCol)))
+      val deletes = graft.ops.Checkpoints.materialize(
+        graft.ops.Cdc.deletedKeys(batch, keys, col(seqCol), col(opCol)))
       val fs = new org.apache.hadoop.fs.Path(snapshotDir)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       val cur = new org.apache.hadoop.fs.Path(snapshotDir)

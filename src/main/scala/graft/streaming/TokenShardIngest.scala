@@ -60,7 +60,7 @@ object TokenShardIngest {
     // unstaged lineage would re-tokenize the batch per action — the
     // materializeTokenShards staging contract, enforced here because
     // a streaming sink pays it every micro-batch
-    val enc = graft.ops.Checkpoints.truncator(spark, None)(
+    val enc = graft.ops.Checkpoints.materialize(
       LangModel.bpeEncodeWithModel(batch, model, textCol = textCol))
     Packer.appendToTokenShardStore(enc, storeDir, batchId = s"b$id",
       prevBatch = if (id == 0) "base" else s"b${id - 1}")

@@ -14,4 +14,14 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.sparkContext.setLogLevel("ERROR")
     super.beforeAll()
   }
+
+  /** Run `body` with `dir` as the SparkContext's checkpoint dir, so
+    * every [[graft.ops.Checkpoints.materialize]] inside it checkpoints
+    * reliably. The dir is always unset afterwards (`null` stores `None`
+    * in local mode): all suites share one context, and a dir left set
+    * would switch every later suite to reliable checkpoints. */
+  def withCheckpointDir[T](dir: String)(body: => T): T = {
+    spark.sparkContext.setCheckpointDir(dir)
+    try body finally spark.sparkContext.setCheckpointDir(null)
+  }
 }

@@ -1,61 +1,95 @@
 package graft.ops
 
+import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
+
 import graft.SparkSpec
 
 class CheckpointsSpec extends SparkSpec {
   import spark.implicits._
 
-  test("reliable truncator installs, reuses, and switches the checkpoint dir correctly") {
-    val base = java.nio.file.Files.createTempDirectory("graft-ckspec")
-    val dirA = s"$base/a"
-    val dirB = s"$base/a-sibling"   // shares dirA as a STRING prefix
-    // install A and checkpoint through it
-    val ckA = Checkpoints.truncator(spark, Some(dirA))
-    ckA(Seq((1L, "x")).toDF("id", "v")).collect()
-    def pathOf(s: String) =
-      new org.apache.hadoop.fs.Path(s).toUri.getPath
-    val setA = spark.sparkContext.getCheckpointDir.get
-    assert(pathOf(setA).startsWith(dirA + "/"),
-      s"checkpoint dir $setA not under requested $dirA")
-    // re-requesting A must NOT reset (same parent ⇒ keep the leaf)
-    Checkpoints.truncator(spark, Some(dirA))
-    assert(spark.sparkContext.getCheckpointDir.get === setA)
-    // requesting the string-prefix SIBLING must actually switch — a
-    // bare startsWith comparison would wrongly treat a-sibling's
-    // request as already satisfied by a/ (or vice versa)
-    val ckB = Checkpoints.truncator(spark, Some(dirB))
-    val setB = spark.sparkContext.getCheckpointDir.get
-    assert(pathOf(setB).startsWith(dirB + "/"),
-      s"checkpoint dir $setB not switched under $dirB")
-    assert(setB !== setA)
-    // and the new dir receives the checkpoints
-    ckB(Seq((2L, "y")).toDF("id", "v")).collect()
-    assert(java.nio.file.Files.list(java.nio.file.Paths.get(dirB))
-      .findAny().isPresent, "no checkpoint data under the switched dir")
+  /** the RDD a materialized plan scans: its LogicalRDD leaf */
+  private def stored(df: DataFrame): RDD[_] = {
+    val rdds = df.queryExecution.logical.collect { case r: LogicalRDD => r.rdd }
+    assert(rdds.size === 1, s"expected one LogicalRDD leaf, got ${rdds.size}")
+    rdds.head
   }
 
-  test("truncator compares the full URI: same path, explicit scheme is no switch; different scheme is") {
-    val base = java.nio.file.Files.createTempDirectory("graft-ckuri")
-    val raw = s"$base/c"
-    Checkpoints.truncator(spark, Some(raw))(Seq((1L, "x")).toDF("id", "v")).collect()
-    val set = spark.sparkContext.getCheckpointDir.get
-    // re-requesting the SAME dir scheme-qualified (file:) must resolve
-    // equal to the scheme-less request — local paths default to the
-    // session FS — and keep the installed leaf
-    Checkpoints.truncator(spark, Some(s"file:$raw"))
-    assert(spark.sparkContext.getCheckpointDir.get === set)
-    // a SAME-PATH request on a different scheme+authority must NOT be
-    // treated as already satisfied: a path-only comparison would
-    // silently keep checkpoints on the wrong filesystem. (hdfs://
-    // isn't reachable here, so assert on norm-inequality via the
-    // warning path: the switch attempt itself would fail to connect —
-    // use a second LOCAL authority-less scheme spelling that IS
-    // reachable but distinct in path to prove switches still happen.)
-    val other = s"$base/d"
-    Checkpoints.truncator(spark, Some(s"file:$other"))
-    val switched = spark.sparkContext.getCheckpointDir.get
-    assert(switched !== set)
-    assert(new org.apache.hadoop.fs.Path(switched).toUri.getPath
-      .startsWith(other + "/"))
+  test("materialize checkpoints reliably under the session checkpoint dir") {
+    val dir = Files.createTempDirectory("graft-ck-reliable")
+    withCheckpointDir(dir.toString) {
+      val m = Checkpoints.materialize(Seq((1L, "x"), (2L, "y")).toDF("id", "v"))
+      val file = stored(m).getCheckpointFile
+      assert(file.isDefined, "no reliable checkpoint file")
+      assert(new org.apache.hadoop.fs.Path(file.get).toUri.getPath
+        .startsWith(dir.toString + "/"),
+        s"checkpoint ${file.get} not under $dir")
+      assert(m.as[(Long, String)].collect().toSet === Set((1L, "x"), (2L, "y")))
+    }
+  }
+
+  test("materialize stores a local checkpoint when the session has no dir") {
+    assert(spark.sparkContext.getCheckpointDir.isEmpty)
+    val m = Checkpoints.materialize(Seq((1L, "x")).toDF("id", "v"))
+    val rdd = stored(m)
+    assert(rdd.isCheckpointed, "eager materialize left the plan unmaterialized")
+    assert(rdd.getCheckpointFile.isEmpty, "local checkpoint wrote a file")
+    assert(spark.sparkContext.getPersistentRDDs.contains(rdd.id),
+      "local checkpoint blocks not registered with the block manager")
+  }
+
+  test("materialize(eager = false) runs no job before the first action") {
+    import org.apache.spark.grafttest.ListenerBusHelper.waitUntilListenerBusEmpty
+    val jobs = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    val df = spark.range(0, 1000, 1, 4).selectExpr("id", "id * 2 AS twice")
+    waitUntilListenerBusEmpty(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val m = Checkpoints.materialize(df, eager = false)
+      waitUntilListenerBusEmpty(spark.sparkContext)
+      assert(jobs.get() === 0, "lazy materialize ran a job at construction")
+      assert(!stored(m).isCheckpointed)
+      assert(m.count() === 1000L)
+      waitUntilListenerBusEmpty(spark.sparkContext)
+      assert(jobs.get() > 0)
+      assert(stored(m).isCheckpointed, "first action did not materialize the stage")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("withCheckpointDir leaves the session dir unset, even when the body throws") {
+    val dir = Files.createTempDirectory("graft-ck-scope").toString
+    withCheckpointDir(dir) { assert(spark.sparkContext.getCheckpointDir.isDefined) }
+    assert(spark.sparkContext.getCheckpointDir.isEmpty)
+    intercept[IllegalStateException] {
+      withCheckpointDir(dir) { throw new IllegalStateException("boom") }
+    }
+    assert(spark.sparkContext.getCheckpointDir.isEmpty)
+  }
+
+  test("library code materializes only through Checkpoints.materialize") {
+    val root = Paths.get("src/main/scala/graft")
+    val dirs = Seq("ops", "streaming", "functions", "io", "parse", "etl",
+      "quality", "analytics", "sql").map(root.resolve)
+    val files: Seq[Path] = root.resolve("SparkEntry.scala") +:
+      dirs.flatMap(d => Files.walk(d).iterator().asScala
+        .filter(_.toString.endsWith(".scala")).toSeq)
+    assert(files.size > 50, s"scanned only ${files.size} files from ${root.toAbsolutePath}")
+    val banned = Seq("localCheckpoint(", ".checkpoint(", "setCheckpointDir")
+    val hits = for {
+      f <- files if f.getFileName.toString != "Checkpoints.scala"
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      b <- banned if line.contains(b)
+    } yield s"$f:${i + 1}: $b"
+    assert(hits.isEmpty, hits.mkString("direct materialization outside Checkpoints:\n", "\n", ""))
   }
 }

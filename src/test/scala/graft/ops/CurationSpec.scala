@@ -22,6 +22,29 @@ class CurationSpec extends SparkSpec {
     assert(out === Set(0L, 4L))
   }
 
+  test("crawlCurate with a reliable checkpoint dir is row-identical to local") {
+    // every crawlCurate stage (extract, segment dedup, curate's keeper
+    // ids, the LM scores, per-language stats) materializes through the
+    // session policy, so the reliable path must not change a row
+    val body = "the data engine reads the table and runs the query " * 4
+    val pages = Seq(
+      (0L, s"<html><body><p>$body</p></body></html>"),
+      (1L, s"<html><body><p>$body</p></body></html>"),   // exact dup
+      (2L, s"<html><body><p>${body}with a tail</p></body></html>"),
+      (3L, "<html><body><p>short</p></body></html>"),
+      (4L, "<html><body><p>" + "another reasonable document about " +
+        "the storage layer of the big table system " * 4 + "</p></body></html>")
+    ).toDF("doc_id", "html")
+    val dir = java.nio.file.Files.createTempDirectory("graft-ck-curate").toString
+    for (perLang <- Seq(false, true)) {
+      def run() = Curation.crawlCurate(pages, perLanguageBuckets = perLang)
+        .collect().map(_.toSeq).toSet
+      val local = run()
+      assert(local.nonEmpty)
+      assert(withCheckpointDir(dir)(run()) === local, s"perLanguageBuckets=$perLang")
+    }
+  }
+
   test("splitLeakage reports exactly the near-dup pairs that straddle splits") {
     val dup = "the data engine reads the table and runs the query " * 5
     // 40 docs: 20 near-identical (ids 0..19), 20 unique

@@ -20,14 +20,16 @@ class DedupSpec extends SparkSpec {
   test("reliable checkpoint dir yields identical span-dedup and keep-best output") {
     val dir = java.nio.file.Files.createTempDirectory("graft-ck-dd").toString
     val localSpan = Dedup.spanDedup(docs, k = 3).collect().map(_.toSeq).toSet
-    val reliableSpan = Dedup.spanDedup(docs, k = 3, checkpointDir = Some(dir))
-      .collect().map(_.toSeq).toSet
+    val reliableSpan = withCheckpointDir(dir) {
+      Dedup.spanDedup(docs, k = 3).collect().map(_.toSeq).toSet
+    }
     assert(reliableSpan === localSpan)
     val localKb = Dedup.keepBestDedup(docs, shingleSize = 2, threshold = 0.35)
       .collect().map(_.getAs[Long]("doc_id")).toSet
-    val reliableKb = Dedup.keepBestDedup(docs, shingleSize = 2,
-      threshold = 0.35, checkpointDir = Some(dir))
-      .collect().map(_.getAs[Long]("doc_id")).toSet
+    val reliableKb = withCheckpointDir(dir) {
+      Dedup.keepBestDedup(docs, shingleSize = 2, threshold = 0.35)
+        .collect().map(_.getAs[Long]("doc_id")).toSet
+    }
     assert(reliableKb === localKb)
   }
 
@@ -106,8 +108,11 @@ class DedupSpec extends SparkSpec {
   test("tokenStreamCollapse tiny escape: non-materialized path is output-identical; estimate gate") {
     // the materialize=false shape duplicates the scan instead of
     // betting on ReuseExchange — output must be identical either way
-    val (mT, rT, ntT) = Dedup.tokenStreamCollapse(docs, "text", materialize = true)
-    val (mF, rF, ntF) = Dedup.tokenStreamCollapse(docs, "text", materialize = false)
+    // a null-text rep (-1) groups with the empty-text doc 6: both
+    // tokenize to the empty stream
+    val withNull = docs.union(Seq[(Long, String)]((-1L, null)).toDF("doc_id", "text"))
+    val (mT, rT, ntT) = Dedup.tokenStreamCollapse(withNull, "text", materialize = true)
+    val (mF, rF, ntF) = Dedup.tokenStreamCollapse(withNull, "text", materialize = false)
     assert(mT.collect().map(r => (r.getLong(0), r.getLong(1))).toSet ===
       mF.collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
     assert(rT.select("doc_id").collect().map(_.getLong(0)).toSet ===
@@ -120,6 +125,8 @@ class DedupSpec extends SparkSpec {
         size(graft.ops.TextStats.tokens(col("text"))).as("n"))
       .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
     assert(ntSet === direct)
+    assert(ntSet.contains((-1L, -1)) && mT.where(col("doc_id") === 6L)
+      .collect().map(_.getLong(1)).toSeq === Seq(-1L))
     // the gate follows the planner's broadcast standard: a local tiny
     // relation qualifies; with broadcasts disabled nothing does
     assert(Dedup.tinyByEstimate(docs))
@@ -280,9 +287,10 @@ class DedupSpec extends SparkSpec {
     val path = (0L until 11L).map(i => (i, i + 1))
     val pairs = path.toDF("doc_a", "doc_b")
     val dir = java.nio.file.Files.createTempDirectory("graft-cc-ck").toString
-    val viaReliable = Dedup.connectedComponents(pairs, smallCutoff = 0L,
-      checkpointDir = Some(dir)).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val viaReliable = withCheckpointDir(dir) {
+      Dedup.connectedComponents(pairs, smallCutoff = 0L).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
     val viaLocal = Dedup.connectedComponents(pairs, smallCutoff = 0L).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(viaReliable === viaLocal)

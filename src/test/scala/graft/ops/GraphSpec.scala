@@ -55,8 +55,9 @@ class GraphSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-ck").toString
     val local = Graph.pageRank(edges.toDF("src", "dst"))
       .as[(Long, Long)].collect().toMap
-    val reliable = Graph.pageRank(edges.toDF("src", "dst"),
-      checkpointDir = Some(dir)).as[(Long, Long)].collect().toMap
+    val reliable = withCheckpointDir(dir) {
+      Graph.pageRank(edges.toDF("src", "dst")).as[(Long, Long)].collect().toMap
+    }
     assert(reliable === local)
   }
 
@@ -136,14 +137,15 @@ class GraphSpec extends SparkSpec {
   }
 
   test("partRank with a reliable checkpoint dir is bit-equal to local") {
-    // the dir threads through BOTH the co-purchase pair materialization
-    // and the PageRank loop (r8) — the cluster fault-tolerance path must
-    // not change a single rank
+    // the session dir covers BOTH the co-purchase pair materialization
+    // and the PageRank loop — the cluster fault-tolerance path must not
+    // change a single rank
     val li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
     val dir = java.nio.file.Files.createTempDirectory("graft-ck-pr").toString
     val local = Graph.partRank(li).as[(Long, Long)].collect().toMap
-    val reliable = Graph.partRank(li, checkpointDir = Some(dir))
-      .as[(Long, Long)].collect().toMap
+    val reliable = withCheckpointDir(dir) {
+      Graph.partRank(li).as[(Long, Long)].collect().toMap
+    }
     assert(reliable === local)
   }
 }

@@ -337,8 +337,8 @@ class LangModelSpec extends SparkSpec {
       (5L, "ab")                         // exhausts after one merge
     ).toDF("doc_id", "text")
     for (n <- Seq(1, 3, 8, 64)) {
-      val drv = LangModel.bpeLoop(docs, n, "text", None, Long.MaxValue)
-      val dst = LangModel.bpeLoop(docs, n, "text", None, 0L)
+      val drv = LangModel.bpeLoop(docs, n, "text", Long.MaxValue)
+      val dst = LangModel.bpeLoop(docs, n, "text", 0L)
       assert(drv._2.collect().map(_.toSeq).toSeq ===
         dst._2.collect().map(_.toSeq).toSeq, s"merge table, nMerges=$n")
       assert(drv._1.collect().map(_.toSeq).toSet ===
@@ -356,8 +356,8 @@ class LangModelSpec extends SparkSpec {
       (5L, "ab")
     ).toDF("doc_id", "text")
     for (n <- Seq(1, 8, 64)) {
-      val inc = LangModel.bpeLoop(docs, n, "text", None, 0L)
-      val rec = LangModel.bpeLoop(docs, n, "text", None, 0L,
+      val inc = LangModel.bpeLoop(docs, n, "text", 0L)
+      val rec = LangModel.bpeLoop(docs, n, "text", 0L,
         strategy = LangModel.BpeRecount)
       assert(inc._2.collect().map(_.toSeq).toSeq ===
         rec._2.collect().map(_.toSeq).toSeq, s"merge table, nMerges=$n")
@@ -384,8 +384,8 @@ class LangModelSpec extends SparkSpec {
         .zipWithIndex.map { case (w, i) => (i.toLong, w) }
         .toDF("doc_id", "text")
       val n = 1 + rnd.nextInt(12)
-      val drv = LangModel.bpeLoop(docs, n, "text", None, Long.MaxValue)
-      val dst = LangModel.bpeLoop(docs, n, "text", None, 0L)
+      val drv = LangModel.bpeLoop(docs, n, "text", Long.MaxValue)
+      val dst = LangModel.bpeLoop(docs, n, "text", 0L)
       assert(drv._2.collect().map(_.toSeq).toSeq ===
         dst._2.collect().map(_.toSeq).toSeq, s"trial $trial merges, n=$n")
       assert(drv._1.collect().map(_.toSeq).toSet ===
@@ -436,13 +436,13 @@ class LangModelSpec extends SparkSpec {
     }
     spark.sparkContext.addSparkListener(listener)
     val dst = try {
-      val out = LangModel.bpeLoop(docs, 128, "text", None, 0L)
+      val out = LangModel.bpeLoop(docs, 128, "text", 0L)
       val m = out._2.collect().map(_.toSeq).toSeq
       val v = out._1.collect().map(_.toSeq).toSet
       Thread.sleep(500)
       (m, v)
     } finally spark.sparkContext.removeSparkListener(listener)
-    val drv = LangModel.bpeLoop(docs, 128, "text", None, Long.MaxValue)
+    val drv = LangModel.bpeLoop(docs, 128, "text", Long.MaxValue)
     assert(dst._1 === drv._2.collect().map(_.toSeq).toSeq, "merge table")
     assert(dst._2 === drv._1.collect().map(_.toSeq).toSet, "segmented vocab")
     assert(dst._1.size >= 100, "corpus must actually sustain a long schedule")
