@@ -275,6 +275,12 @@ object CapstoneEtl {
   /** Full pipeline: build → write (fact_immigration partitioned by
     * year/month, K2) → quality gates (matrix from dag_immigration.py:337-348).
     *
+    * The gate reads the 10 checked tables back from `outputPath`, never
+    * the in-memory frames, with each read's schema set to the checked
+    * column's field (no inference job), and measures all of them in one
+    * [[DataQuality.checkAll]] aggregation; the first failure in matrix
+    * order throws.
+    *
     * The 13 output writes are independent (the reference fans them out as
     * 11 parallel Airflow loads, dag_immigration.py:355-386); submitting
     * them concurrently lets Spark overlap their jobs and keep all cores
@@ -305,17 +311,21 @@ object CapstoneEtl {
       failures.tail.foreach(first.addSuppressed)
       throw first
     }
-    val read = (n: String) => spark.read.parquet(s"$outputPath/$n.parquet")
+    // read back what was written, naming the checked column's type from
+    // the frame that wrote it: no schema-inference job per table
+    val written = (t: String, c: String) =>
+      (spark.read.schema(StructType(Seq(out.tables(t).schema(c))))
+        .parquet(s"$outputPath/$t.parquet"), t, c)
     DataQuality.checkAll(Seq(
-      (read("fact_immigration"), "fact_immigration", "id"),
-      (read("fact_temperature"), "fact_temperature", "id"),
-      (read("fact_us_population"), "fact_us_population", "id"),
-      (read("fact_us_race"), "fact_us_race", "id"),
-      (read("dim_countries"), "dim_countries", "country_key"),
-      (read("dim_airlines"), "dim_airlines", "airline_key"),
-      (read("dim_date"), "dim_date", "date_key"),
-      (read("dim_port_of_entry"), "dim_port_of_entry", "port_of_entry_key"),
-      (read("dim_travel_modes"), "dim_travel_modes", "travel_mode_key"),
-      (read("dim_visa_categories"), "dim_visa_categories", "visa_category_key")))
+      written("fact_immigration", "id"),
+      written("fact_temperature", "id"),
+      written("fact_us_population", "id"),
+      written("fact_us_race", "id"),
+      written("dim_countries", "country_key"),
+      written("dim_airlines", "airline_key"),
+      written("dim_date", "date_key"),
+      written("dim_port_of_entry", "port_of_entry_key"),
+      written("dim_travel_modes", "travel_mode_key"),
+      written("dim_visa_categories", "visa_category_key")))
   }
 }

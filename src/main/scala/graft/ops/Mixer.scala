@@ -39,8 +39,8 @@ object Mixer {
   // 63-bit priority → top 10 bits form the ordered bucket id
   private val BucketShift = 53
 
-  private def withPriority(docs: DataFrame, idCol: String, sourceCol: String,
-                           textCol: String): DataFrame =
+  private[ops] def withPriority(docs: DataFrame, idCol: String,
+                                sourceCol: String, textCol: String): DataFrame =
     docs.select(col(idCol), col(sourceCol),
       TextStats.tokenCount(col(textCol)).as("n_tokens"),
       graft.functions.TextExpressions.md5_lower64(
@@ -101,20 +101,5 @@ object Mixer {
       .withColumn("weight",
         round(col("msqrt").cast("double") / sum("msqrt").over(all).cast("double"), 6))
       .select(col(sourceCol), col("n_tokens"), col("weight"))
-  }
-
-  /** Reference formulation: one running-sum window per source. Identical
-    * output; serializes each source through a single task at scale —
-    * exists as the spec's equivalence oracle and the small-data path. */
-  def tokenBudgetMixNaive(docs: DataFrame, budget: Long,
-                          idCol: String = "doc_id", sourceCol: String = "source",
-                          textCol: String = "text"): DataFrame = {
-    val byPriority = Window.partitionBy(sourceCol)
-      .orderBy(col("priority"), col(idCol))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    withPriority(docs, idCol, sourceCol, textCol)
-      .withColumn("cum", sum("n_tokens").over(byPriority))
-      .where(col("cum") <= budget)
-      .select(col(idCol), col(sourceCol), col("n_tokens"))
   }
 }

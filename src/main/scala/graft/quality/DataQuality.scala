@@ -9,9 +9,12 @@ import org.apache.spark.sql.functions._
   * (plugins/operators/data_quality.py:21-38): for each {table, column} —
   * fail if the column contains any NULL; fail if the table is empty.
   *
-  * Scale note: both predicates for a table are computed in ONE aggregation
-  * pass (`count(*)` + `count(col)`), not two full scans like the
-  * reference's two SQL round-trips.
+  * Scale note: the whole matrix is measured by ONE aggregation job
+  * (plus its AQE shuffle stage), one read per table: each check's frame
+  * becomes (check index, is-null flag), the frames are unioned, and a
+  * single `groupBy(index)` yields every table's row and null counts —
+  * not the reference's two SQL round-trips per table, one table after
+  * another.
   */
 object DataQuality {
 
@@ -20,30 +23,36 @@ object DataQuality {
     def passed: Boolean = rows > 0 && nulls == 0
   }
 
-  /** Single-pass row/null counts for one column. */
-  def measure(df: DataFrame, table: String, column: String): CheckResult = {
-    val Row(rows: Long, nonNull: Long) =
-      df.agg(count(lit(1)), count(col(column))).head()
-    CheckResult(table, column, rows, rows - nonNull)
-  }
+  /** Throwing form of a one-entry [[checkAll]]. */
+  def check(df: DataFrame, table: String, column: String): CheckResult =
+    checkAll(Seq((df, table, column))).head
 
-  /** Throwing form — mirrors the reference's ValueError-on-violation
-    * (data_quality.py:29,38). */
-  def check(df: DataFrame, table: String, column: String): CheckResult = {
-    val r = measure(df, table, column)
-    if (r.rows == 0)
+  /** Run the full matrix (reference: dags/dag_immigration.py:337-348).
+    * Every table is measured before any verdict; the first failure in
+    * matrix order then throws, mirroring the reference's
+    * ValueError-on-violation (data_quality.py:29,38). Results come back
+    * in input order. */
+  def checkAll(checks: Seq[(DataFrame, String, String)]): Seq[CheckResult] = {
+    val tagged = checks.zipWithIndex.map { case ((df, _, c), i) =>
+      df.select(lit(i).as("i"), col(c).isNull.cast("long").as("n"))
+    }
+    val counts: Map[Int, (Long, Long)] =
+      if (tagged.isEmpty) Map.empty
+      else tagged.reduce(_ union _).groupBy("i").agg(count(lit(1)), sum("n"))
+        .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
+    // an empty frame has no group at all: a missing index means 0 rows
+    val results = checks.zipWithIndex.map { case ((_, t, c), i) =>
+      val (rows, nulls) = counts.getOrElse(i, (0L, 0L))
+      CheckResult(t, c, rows, nulls)
+    }
+    results.find(!_.passed).foreach { r =>
       throw new IllegalStateException(
-        s"Data quality check failed. ${r.table} returned no results")
-    if (r.nulls > 0)
-      throw new IllegalStateException(
-        s"Data quality check failed. ${r.table} column ${r.column} " +
+        if (r.rows == 0) s"Data quality check failed. ${r.table} returned no results"
+        else s"Data quality check failed. ${r.table} column ${r.column} " +
           s"contains ${r.nulls} null values")
-    r
+    }
+    results
   }
-
-  /** Run the full matrix (reference: dags/dag_immigration.py:337-348). */
-  def checkAll(checks: Seq[(DataFrame, String, String)]): Seq[CheckResult] =
-    checks.map { case (df, t, c) => check(df, t, c) }
 
   /** Engine extras beyond the reference's two gates. */
 

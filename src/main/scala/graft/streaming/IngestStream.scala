@@ -91,38 +91,16 @@ object IngestStream {
       shardId = s"batch-$id", textCol = textCol)
   }
 
-  /** The embedding twin of [[ingestDedupStream]]: semantic ingest dedup
-    * against a persisted [[Similarity.buildIvfIndex]] directory. Per
-    * micro-batch: vectors with an indexed semantic duplicate (cosine >=
-    * `threshold` in their `nprobe` closest cells) drop; within-batch
+  /** One semantic ingest cycle against a persisted
+    * [[Similarity.buildIvfIndex]] directory, the embedding twin of
+    * [[ingestBatch]]: vectors with an indexed semantic duplicate (cosine
+    * >= `threshold` in their `nprobe` closest cells) drop; within-batch
     * semantic-dup components — searched under the index's FROZEN
-    * centroids, the same cell geometry as the history probe — keep
-    * their minimum vec_id; survivors land in `sinkDir/batch=<id>` and
-    * append to the index as `shard=batch-<id>` (frozen-centroid
-    * assignment, [[Similarity.appendToIvfIndex]]), so later batches
-    * dedupe against earlier ones. Replay-safe by the same two pieces
-    * as the text flow: batch-keyed overwrites everywhere, and the
-    * history probe excludes the batch's own shard. Recall is the IVF
-    * family's (an unprobed cell hides its dups; `nprobe = nlist` is
-    * exact). */
-  def ingestEmbeddingDedupStream(vectors: DataFrame, indexDir: String,
-                                 sinkDir: String, threshold: Double = 0.9,
-                                 nprobe: Int = 4,
-                                 compactEvery: Int = 0): DataStreamWriter[Row] = {
-    val fn: (Dataset[Row], Long) => Unit = (batch, id) => {
-      ingestEmbeddingBatch(batch.toDF(), id, indexDir, sinkDir, threshold,
-        nprobe)
-      // same cadence contract as the text flow: requires
-      // buildIvfIndexVersioned; the in-flight batch's shard survives
-      // under its own id so a post-compaction replay stays excludable
-      if (compactEvery > 0 && (id + 1) % compactEvery == 0)
-        Similarity.compactIvfIndexInPlace(batch.sparkSession, indexDir,
-          keepShards = Seq(s"batch-$id"))
-    }
-    vectors.writeStream.foreachBatch(fn)
-  }
-
-  /** One semantic ingest cycle, callable directly for batch backfill. */
+    * centroids — keep their minimum vec_id; survivors land in
+    * `sinkDir/batch=<id>` and append to the index as `shard=batch-<id>`
+    * ([[Similarity.appendToIvfIndex]]). Replay-safe like the text flow:
+    * batch-keyed overwrites, and the history probe excludes the batch's
+    * own shard. Recall is the IVF family's (`nprobe = nlist` is exact). */
   def ingestEmbeddingBatch(batch: DataFrame, id: Long, indexDir: String,
                            sinkDir: String, threshold: Double = 0.9,
                            nprobe: Int = 4): Unit = {
