@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.analytics.StarAnalytics
+import graft.io.Io
 import graft.ops.{Contamination, Dedup, Events, LangModel, LshIndex, Multimodal, Sampling, Similarity, TextStats}
 
 /** Driver contract — the engine's declared query surface.
@@ -17,18 +18,21 @@ import graft.ops.{Contamination, Dedup, Events, LangModel, LshIndex, Multimodal,
 object SparkEntry {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    Io.readParquet(s, s"$dir/$name.parquet")
 
-  /** Process-lifetime memo of (dir, table) row counts. The ANN entries
-    * derive index sizing from corpus cardinality; the sf dirs are
-    * immutable snapshots, so the count job runs once per table per
-    * process instead of once per call — the serving path then carries
-    * no sizing probe (the r10 q29 fixed cost). */
+  /** Process-lifetime memo of table row counts, keyed on the table path
+    * and the digest of its file listing ([[Io.listingDigest]], the key
+    * [[Io.readParquet]] checks its schema against). The ANN entries
+    * derive index sizing from corpus cardinality, so the count job runs
+    * once per table version per process instead of once per call — the
+    * serving path then carries no sizing probe (the r10 q29 fixed cost)
+    * — and a table rewritten in the same process is counted again. */
   private val tableCounts =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-  private def countOnce(s: SparkSession, dir: String, name: String): Long =
-    tableCounts.computeIfAbsent(s"$dir/$name",
-      _ => t(s, dir, name).count())
+    new java.util.concurrent.ConcurrentHashMap[(String, Option[String]), java.lang.Long]()
+  private[graft] def countOnce(s: SparkSession, dir: String, name: String): Long = {
+    val df = t(s, dir, name)
+    tableCounts.computeIfAbsent((s"$dir/$name", Io.listingDigest(df)), _ => df.count())
+  }
 
   /** Process-lifetime memo of built LSH index dirs (sf-dir-keyed, like
     * `tableCounts`): [[LshIndex]] is build-once/probe-many, so repeated
@@ -2133,12 +2137,12 @@ object SparkEntry {
       // generation time (DuckDB cannot decode an image). Corrupt
       // payloads must be dropped, not failed — the fixture plants two.
       "q110_image_decode" -> q { (s, _) =>
-        Multimodal.imageFeaturesExpr(s.read.parquet(Multimodal.ImageFixture))
+        Multimodal.imageFeaturesExpr(Io.readParquet(s, Multimodal.ImageFixture))
       },
       // REAL audio decode (javax.sound.sampled) — same golden-fixture
       // contract as q110, over WAV containers (MakeAudioFixtures)
       "q111_audio_decode" -> q { (s, _) =>
-        Multimodal.audioFeaturesExpr(s.read.parquet(Multimodal.AudioFixture))
+        Multimodal.audioFeaturesExpr(Io.readParquet(s, Multimodal.AudioFixture))
       },
       "q35_approx_distinct" -> q { (s, dir) =>
         // HLL sketch — the estimate itself is engine-specific, so the
@@ -2996,7 +3000,7 @@ object SparkEntry {
   }
 
   def ivfOracleSql(spark: SparkSession, sfDir: String): String = {
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val emb = Io.readParquet(spark, s"$sfDir/embeddings.parquet")
     // identical corpus-scaled cluster count as the query side (nlist=0
     // default in ivfTopK) — the cell partition shapes the probed set,
     // so both engines must derive the same nlist from the same corpus
@@ -3032,7 +3036,7 @@ object SparkEntry {
     * is exact and symmetric, so the orders agree bit-for-bit), exact
     * cosine re-rank over the probed cells. */
   def imiOracleSql(spark: SparkSession, sfDir: String): String = {
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val emb = Io.readParquet(spark, s"$sfDir/embeddings.parquet")
     val (c1, c2) = graft.ops.Similarity.trainedImiCentroids(emb, kPerHalf = 4)
     val kk = c1.length
     val h = c1.head.length
@@ -3088,7 +3092,7 @@ object SparkEntry {
 
   private def imiPqOracleSqlImpl(spark: SparkSession, sfDir: String,
                                  candidateFilter: Option[String]): String = {
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val emb = Io.readParquet(spark, s"$sfDir/embeddings.parquet")
     val (c1, c2) = graft.ops.Similarity.trainedImiCentroids(emb, kPerHalf = 4)
     val cb = graft.ops.Pq.trainCodebooks(emb, m = 8, ks = 16)
     val kk = c1.length
@@ -3160,7 +3164,7 @@ object SparkEntry {
 
   private def imiPqResidualOracle(spark: SparkSession, sfDir: String,
                                   opq: Boolean): String = {
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val emb = Io.readParquet(spark, s"$sfDir/embeddings.parquet")
     val (c1, c2) = graft.ops.Similarity.trainedImiCentroids(emb, kPerHalf = 4)
     val (rotOpt, cb) =
       if (opq) {
@@ -3286,7 +3290,7 @@ object SparkEntry {
     * contract (unrounded threshold compare, 1e-4-rounded output, q38's
     * proven pattern). */
   def imiNearDupOracleSql(spark: SparkSession, sfDir: String): String = {
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val emb = Io.readParquet(spark, s"$sfDir/embeddings.parquet")
     val (c1, c2) = graft.ops.Similarity.trainedImiCentroids(emb, kPerHalf = 4)
     val kk = c1.length
     val h = c1.head.length
@@ -3326,7 +3330,7 @@ object SparkEntry {
     * transitive closure via recursive CTE (the q42 mirror), keep the
     * component minimum. */
   def semDedupOracleSql(spark: SparkSession, sfDir: String): String = {
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val emb = Io.readParquet(spark, s"$sfDir/embeddings.parquet")
     // identical corpus-scaled cluster count as the query side (nlist=0
     // default in semDedup) — cells are part of the declared output
     val cent = graft.ops.Similarity.trainedCentroids(
@@ -3357,7 +3361,7 @@ object SparkEntry {
     * 6-dp round. */
   def pcaOracleSql(spark: SparkSession, sfDir: String): String = {
     val (mu, v) = graft.ops.Similarity.trainedPc(
-      spark.read.parquet(s"$sfDir/embeddings.parquet"))
+      Io.readParquet(spark, s"$sfDir/embeddings.parquet"))
     val proj = v.indices.map(i => s"(e[${i + 1}] - ${mu(i)}) * ${v(i)}")
       .mkString(" + ")
     s"""SELECT vec_id, round($proj, 6) AS pc1
@@ -3421,7 +3425,7 @@ object SparkEntry {
     * Lloyd), embedded as literals; codes + ADC re-derived in SQL. */
   def pqOracleSql(spark: SparkSession, sfDir: String): String = {
     val cb = graft.ops.Pq.trainCodebooks(
-      spark.read.parquet(s"$sfDir/embeddings.parquet"), m = 8, ks = 16)
+      Io.readParquet(spark, s"$sfDir/embeddings.parquet"), m = 8, ks = 16)
     s"""
       WITH ${duckPqCtes(cb)},
       ${duckAdcCte(cb.length)}
@@ -3437,7 +3441,7 @@ object SparkEntry {
     * q29-style list_dot_product formulation over only shortlist rows. */
   def pqRefineOracleSql(spark: SparkSession, sfDir: String): String = {
     val cb = graft.ops.Pq.trainCodebooks(
-      spark.read.parquet(s"$sfDir/embeddings.parquet"), m = 8, ks = 16)
+      Io.readParquet(spark, s"$sfDir/embeddings.parquet"), m = 8, ks = 16)
     s"""
       WITH ${duckPqCtes(cb)},
       ${duckAdcCte(cb.length)},
@@ -3481,7 +3485,7 @@ object SparkEntry {
 
   private def ivfPqOracleSqlImpl(spark: SparkSession, sfDir: String,
                                  candidateFilter: Option[String]): String = {
-    val em = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val em = Io.readParquet(spark, s"$sfDir/embeddings.parquet")
     val cent = graft.ops.Similarity.trainedCentroids(em, nlist = 8)
     val cb = graft.ops.Pq.trainCodebooks(em, m = 8, ks = 16)
     val m = cb.length
@@ -3639,7 +3643,7 @@ object SparkEntry {
     * literal multiply-accumulate chains. */
   private def ivfPqResidualChain(spark: SparkSession, sfDir: String,
                                  opq: Boolean = false): String = {
-    val em = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val em = Io.readParquet(spark, s"$sfDir/embeddings.parquet")
     val cent = graft.ops.Similarity.trainedCentroids(em, nlist = 8)
     val (rotOpt, cb) =
       if (opq) {
@@ -3915,7 +3919,7 @@ object SparkEntry {
     * sample; routing cells are what need the whole corpus). Generated
     * at Verify time for the codebook constants. */
   def imiPqCorpusTrainedOracleSql(spark: SparkSession, sfDir: String): String = {
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val emb = Io.readParquet(spark, s"$sfDir/embeddings.parquet")
     val cb = graft.ops.Pq.trainCodebooks(emb, m = 8, ks = 16)
     val kPerHalf = 4
     val m = cb.length

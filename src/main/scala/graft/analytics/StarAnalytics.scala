@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.io.Io
+
 /** The four analytical questions the reference warehouse is modeled for
   * (README.md:8-11) — never implemented as code in the reference — run
   * over the harness star schema (orders/lineitem ≈ fact, customer/nation/
@@ -24,7 +26,7 @@ object StarAnalytics {
   /** "Visitations for a selected year" → order counts + exact revenue
     * cents per order-year. */
   def visitsByYear(spark: SparkSession, dir: String): DataFrame = {
-    val orders = spark.read.parquet(p(dir, "orders"))
+    val orders = Io.readParquet(spark, p(dir, "orders"))
     orders
       .groupBy(year(col("o_orderdate")).cast("long").as("order_year"))
       .agg(
@@ -36,11 +38,11 @@ object StarAnalytics {
   /** "Visit count by world region" → fact ⨝ customer ⨝ nation ⨝ region
     * with broadcast dims. */
   def visitsByRegion(spark: SparkSession, dir: String): DataFrame = {
-    val orders = spark.read.parquet(p(dir, "orders"))
-    val customer = spark.read.parquet(p(dir, "customer"))
+    val orders = Io.readParquet(spark, p(dir, "orders"))
+    val customer = Io.readParquet(spark, p(dir, "customer"))
       .select("c_custkey", "c_nationkey")
-    val nation = spark.read.parquet(p(dir, "nation"))
-    val region = spark.read.parquet(p(dir, "region"))
+    val nation = Io.readParquet(spark, p(dir, "nation"))
+    val region = Io.readParquet(spark, p(dir, "region"))
     orders
       .join(customer, col("o_custkey") === col("c_custkey"))
       .join(broadcast(nation), col("c_nationkey") === col("n_nationkey"))
@@ -53,11 +55,11 @@ object StarAnalytics {
   /** "Top-5 countries YTD" → global orderBy + limit (TakeOrderedAndProject:
     * no full sort materialization, per-partition top-k then merge). */
   def top5NationsYtd(spark: SparkSession, dir: String, yr: Int = 1995): DataFrame = {
-    val orders = spark.read.parquet(p(dir, "orders"))
+    val orders = Io.readParquet(spark, p(dir, "orders"))
       .where(year(col("o_orderdate")) === yr)
-    val customer = spark.read.parquet(p(dir, "customer"))
+    val customer = Io.readParquet(spark, p(dir, "customer"))
       .select("c_custkey", "c_nationkey")
-    val nation = spark.read.parquet(p(dir, "nation"))
+    val nation = Io.readParquet(spark, p(dir, "nation"))
     orders
       .join(customer, col("o_custkey") === col("c_custkey"))
       .join(broadcast(nation), col("c_nationkey") === col("n_nationkey"))
@@ -71,11 +73,11 @@ object StarAnalytics {
     * (the only window the reference implies; SURVEY.md §2.7). Deterministic
     * tie-break on nation_name. */
   def top5NationsPerMonth(spark: SparkSession, dir: String, yr: Int = 1995): DataFrame = {
-    val orders = spark.read.parquet(p(dir, "orders"))
+    val orders = Io.readParquet(spark, p(dir, "orders"))
       .where(year(col("o_orderdate")) === yr)
-    val customer = spark.read.parquet(p(dir, "customer"))
+    val customer = Io.readParquet(spark, p(dir, "customer"))
       .select("c_custkey", "c_nationkey")
-    val nation = spark.read.parquet(p(dir, "nation"))
+    val nation = Io.readParquet(spark, p(dir, "nation"))
     val monthly = orders
       .join(customer, col("o_custkey") === col("c_custkey"))
       .join(broadcast(nation), col("c_nationkey") === col("n_nationkey"))

@@ -4,6 +4,8 @@ import java.sql.Date
 
 import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
 
+import graft.io.Io
+
 /** Typed `Dataset[T]` facade over the star schema (SURVEY.md §1.1's
   * per-table upgrade): compile-time column names/types for the tables a
   * downstream Scala consumer touches most. The ETL itself stays
@@ -54,11 +56,11 @@ object TypedTables {
 
   /** Typed views over a written ETL output directory. */
   def factImmigration(spark: SparkSession, outDir: String): Dataset[FactImmigration] =
-    spark.read.parquet(s"$outDir/fact_immigration.parquet").as[FactImmigration]
+    Io.readParquet(spark, s"$outDir/fact_immigration.parquet").as[FactImmigration]
 
   def dimCountries(spark: SparkSession, outDir: String): Dataset[DimCountry] =
-    spark.read.parquet(s"$outDir/dim_countries.parquet").as[DimCountry]
+    Io.readParquet(spark, s"$outDir/dim_countries.parquet").as[DimCountry]
 
   def dimDate(spark: SparkSession, outDir: String): Dataset[DimDate] =
-    spark.read.parquet(s"$outDir/dim_date.parquet").as[DimDate]
+    Io.readParquet(spark, s"$outDir/dim_date.parquet").as[DimDate]
 }

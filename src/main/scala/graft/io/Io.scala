@@ -1,6 +1,10 @@
 package graft.io
 
+import java.nio.charset.StandardCharsets.UTF_8
+import java.security.MessageDigest
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
 import org.apache.spark.sql.types.StructType
 
 /** Source/sink operators (SURVEY.md §2.1 S1-S5, §2.2 K1-K2).
@@ -22,13 +26,87 @@ object Io {
               sep: String = ","): DataFrame =
     spark.read.schema(schema).option("header", "true").option("sep", sep).csv(path)
 
-  /** S3 — CSV header-only: every column lands as string, cast later. */
+  /** S3 — CSV header-only: every column lands as string, cast later.
+    * The header is read once per file listing, as [[readParquet]] reads
+    * the footer once (keyed on the `spark.sql.csv.*` confs). */
   def readCsvUntyped(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("header", "true").csv(path)
+    inferOnce(spark, "csv", Map("header" -> "true"), path,
+      "spark.sql.csv." +: InferenceConf)
 
-  /** S4 — parquet scan (glob ok), schema from footer. */
+  /** S4 — parquet scan (glob ok), schema from footer, inferred once per
+    * table. The engine's one way to read an existing parquet table.
+    *
+    * A plain `spark.read.parquet` runs one Spark job per call just to
+    * read a footer. Here the first read of a path infers as usual and
+    * keeps the schema with [[listingDigest]] of the table's files. A
+    * later read passes the kept schema and takes the digest from the new
+    * relation's own file index: when it matches, that frame is returned
+    * and no job runs; otherwise the path is re-read with inference and
+    * the entry replaced. So a read runs no footer job while the table's
+    * file listing is unchanged. The kept schema only applies under the
+    * same explicitly set `spark.sql.parquet.*`,
+    * `spark.sql.legacy.parquet.*`, `spark.sql.caseSensitive` and
+    * partition-type-inference confs (`nanosAsLong`, for one, turns
+    * `events.ts` into a long).
+    *
+    * Spark writers always create new uuid-named part files, so any Spark
+    * rewrite of the table misses. A rewrite by another tool that keeps
+    * every file's name, length and mtime is not seen. */
   def readParquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    inferOnce(spark, "parquet", Map.empty, path,
+      Seq("spark.sql.parquet.", "spark.sql.legacy.parquet.") ++ InferenceConf)
+
+  /** Conf prefixes that change any file format's inferred schema. */
+  private val InferenceConf =
+    Seq("spark.sql.caseSensitive", "spark.sql.sources.partitionColumnTypeInference.")
+
+  /** What inference returned for one path: for which format, under
+    * which confs, over which file listing. */
+  private final case class Inferred(format: String, conf: Map[String, String],
+                                    listing: String, schema: StructType)
+
+  /** One entry per path, a miss replaces it. Bounded, so a stream that
+    * reads a new batch dir per trigger does not grow it forever. */
+  private val inferred = new java.util.LinkedHashMap[String, Inferred](64, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[String, Inferred]): Boolean =
+      size() > 1024
+  }
+
+  private def inferOnce(spark: SparkSession, format: String, options: Map[String, String],
+                        path: String, confPrefixes: Seq[String]): DataFrame = {
+    def read(schema: Option[StructType]): DataFrame = {
+      val r = spark.read.format(format).options(options)
+      schema.fold(r)(s => r.schema(s)).load(path)
+    }
+    val conf = spark.conf.getAll.filter { case (k, _) => confPrefixes.exists(k.startsWith) }
+    val kept = inferred.synchronized(Option(inferred.get(path)))
+      .filter(k => k.format == format && k.conf == conf)
+    kept.flatMap { k =>
+      val df = read(Some(k.schema))
+      if (listingDigest(df).contains(k.listing)) Some(df) else None
+    }.getOrElse {
+      val df = read(None)
+      listingDigest(df).foreach { d =>
+        inferred.synchronized(inferred.put(path, Inferred(format, conf, d, df.schema)))
+      }
+      df
+    }
+  }
+
+  /** SHA-256 of the sorted (path, length, mtime) of every leaf file the
+    * frame's file relation listed; None when `df` is not a plain scan of
+    * a file table. Keys anything derived from a table's current files. */
+  private[graft] def listingDigest(df: DataFrame): Option[String] =
+    df.queryExecution.analyzed match {
+      case LogicalRelation(
+          HadoopFsRelation(index: PartitioningAwareFileIndex, _, _, _, _, _), _, _, _, _) =>
+        val md = MessageDigest.getInstance("SHA-256")
+        index.allFiles()
+          .map(f => s"${f.getPath}\u0000${f.getLen}\u0000${f.getModificationTime}\n")
+          .sorted.foreach(line => md.update(line.getBytes(UTF_8)))
+        Some(java.util.HexFormat.of().formatHex(md.digest()))
+      case _ => None
+    }
 
   /** K1 — full-refresh parquet write. */
   def writeParquet(df: DataFrame, path: String): Unit =

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.io.Io
+
 /** Corpus-trained unigram language-model scoring: each document gets the
   * average negative log-probability of its tokens under the corpus's own
   * unigram distribution — the classic cheap "perplexity" quality signal
@@ -891,12 +893,12 @@ object LangModel {
     * always checked. */
   def loadBpeModel(spark: SparkSession, dir: String,
                    expectMerges: Int = -1): BpeModel = {
-    val n = spark.read.parquet(s"$dir/params").select("n_merges")
+    val n = Io.readParquet(spark, s"$dir/params").select("n_merges")
       .head().getInt(0)
     require(expectMerges < 0 || expectMerges == n,
       s"loadBpeModel: artifact at $dir was trained with $n merges, " +
         s"caller expects $expectMerges — refusing a mismatched tokenizer")
-    val merges = collectMerges(spark.read.parquet(s"$dir/merges"))
+    val merges = collectMerges(Io.readParquet(spark, s"$dir/merges"))
     require(merges.size == n,
       s"loadBpeModel: params claim $n merges but the table holds " +
         s"${merges.size} — corrupted artifact")

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.io.Io
+
 /** Build-once / probe-many MinHash-LSH near-duplicate index — the text
   * analogue of [[Similarity.buildIvfIndex]], and the serving shape a
   * 100 TB corpus actually uses for ingest dedup and decontamination.
@@ -108,7 +110,7 @@ object LshIndex {
     val root = Generations.root(spark, dir)
     writeMeta(spark, s"$dir/$next", params(spark, dir))
     def rewrite(rel: String): Unit = {
-      val all = spark.read.parquet(s"$root/$rel")
+      val all = Io.readParquet(spark, s"$root/$rel")
       val base = all.where(!col("shard").isin(keepShards: _*)).drop("shard")
       val (df, opts) =
         if (pointLayout)
@@ -206,7 +208,7 @@ object LshIndex {
 
   /** The parameters an index was built with. */
   def params(spark: SparkSession, dir: String): Params = {
-    val r = spark.read.parquet(s"${Generations.root(spark, dir)}/meta").head()
+    val r = Io.readParquet(spark, s"${Generations.root(spark, dir)}/meta").head()
     Params(r.getAs[Int]("num_hashes"), r.getAs[Int]("rows_per_band"),
       r.getAs[Int]("shingle_size"))
   }
@@ -279,8 +281,8 @@ object LshIndex {
     def shardFilter(df: DataFrame): DataFrame =
       if (excludeShards.isEmpty) df
       else df.where(!col("shard").isin(excludeShards: _*))
-    val xBands = shardFilter(spark.read.parquet(s"$root/bands"))
-    val xSh = shardFilter(spark.read.parquet(s"$root/shingles"))
+    val xBands = shardFilter(Io.readParquet(spark, s"$root/bands"))
+    val xSh = shardFilter(Io.readParquet(spark, s"$root/shingles"))
     val (members, repDocs) = collapsed(batch, textCol)
     val sigs = Checkpoints.materialize(Dedup.minHashSignatures(repDocs, textCol,
       p.numHashes, p.shingleSize))
@@ -384,7 +386,7 @@ object LshIndex {
       return mProbe.select(col("doc_id"), col("doc_id").as("index_doc_id"),
         lit(0.0).as("jaccard")).where(lit(false))
     // phase 1→2 synchronization: candidate reps, via the pruned scan
-    val xBands = shardFilter(spark.read.parquet(s"$root/bands"))
+    val xBands = shardFilter(Io.readParquet(spark, s"$root/bands"))
       .where(pushedIsin(col("band_hash"), hashes))
     val cand = qBands.alias("q")
       .join(xBands.alias("x"),
@@ -404,7 +406,7 @@ object LshIndex {
       .toSeq.toDF("__rq", "__rx")
     // phase 2: verification + expansion over point-filtered scans —
     // the nearDuplicates join shapes and arithmetic, verbatim
-    val xSh = shardFilter(spark.read.parquet(s"$root/shingles"))
+    val xSh = shardFilter(Io.readParquet(spark, s"$root/shingles"))
       .where(pushedIsin(col("rep"), rxs))
     val repPairs = candDf
       .join(shinglesOf(repProbe, textCol, p)
@@ -414,7 +416,7 @@ object LshIndex {
         graft.functions.TextExpressions.array_jaccard(col("sh_q"), col("sh_x")))
       .where(col("jaccard") >= threshold)
       .select(col("__rq"), col("__rx"), round(col("jaccard"), 4).as("jaccard"))
-    val xMembers = shardFilter(spark.read.parquet(s"$root/members"))
+    val xMembers = shardFilter(Io.readParquet(spark, s"$root/members"))
       .where(pushedIsin(col("rep"), rxs))
     mProbe.select(col("doc_id"), col("__rep").as("__rq"))
       .join(repPairs, "__rq")
@@ -445,7 +447,7 @@ object LshIndex {
     writeMeta(spark, newDir, params(spark, dir))
     val root = Generations.root(spark, dir)
     def rewrite(rel: String): Unit = {
-      val base = spark.read.parquet(s"$root/$rel").drop("shard")
+      val base = Io.readParquet(spark, s"$root/$rel").drop("shard")
       val (df, opts) =
         if (pointLayout)
           (rangeSorted(base, PointLayoutKeys(rel), sortedFiles),
@@ -504,9 +506,9 @@ object LshIndex {
     def shardFilter(df: DataFrame): DataFrame =
       if (excludeShards.isEmpty) df
       else df.where(!col("shard").isin(excludeShards: _*))
-    val xBands0 = shardFilter(spark.read.parquet(s"$root/bands"))
-    val xSh = shardFilter(spark.read.parquet(s"$root/shingles"))
-    val xMembers = shardFilter(spark.read.parquet(s"$root/members"))
+    val xBands0 = shardFilter(Io.readParquet(spark, s"$root/bands"))
+    val xSh = shardFilter(Io.readParquet(spark, s"$root/shingles"))
+    val xMembers = shardFilter(Io.readParquet(spark, s"$root/members"))
     val (mProbe, repProbe) = collapsed(probe, textCol)
     val qBands = bandsOf(repProbe, textCol, p)
     val xBands =

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.io.Io
+
 /** Deterministic sequence packing: assign documents to fixed-capacity
   * training bins (the "pack documents into 2k/4k-token sequences" step
   * of an LLM data pipeline) by running token count.
@@ -322,7 +324,7 @@ object Packer {
       if (!hasParquetFiles(spark, path))
         Seq.empty[(Long, Long, Long)].toDF("shard", "n_sequences", "n_tokens")
       else
-        spark.read.parquet(path)
+        Io.readParquet(spark, path)
           .groupBy(col("shard").cast("long").as("shard"))
           .agg(count(lit(1)).as("n_sequences"),
             sum("n_tokens").cast("long").as("n_tokens"))
@@ -370,7 +372,7 @@ object Packer {
 
   private def readStoreParams(spark: org.apache.spark.sql.SparkSession,
                               dir: String) = {
-    val pdf = spark.read.parquet(s"$dir/params")
+    val pdf = Io.readParquet(spark, s"$dir/params")
     // loud format refusal, not an unresolved-column AnalysisException:
     // a store written by the pre-lifecycle format (no num_groups in
     // params, no skey/batch in shards, no carry) cannot be read or
@@ -406,7 +408,7 @@ object Packer {
         s"caller expects $expectShards — refusing a mismatched shard store")
     val w = Window.partitionBy("shard")
       .orderBy(col("skey"), col("pack_group"), col("seq_id"))
-    spark.read.parquet(s"$dir/shards")
+    Io.readParquet(spark, s"$dir/shards")
       .withColumn("shard", col("shard").cast("long"))
       .withColumn("shard_pos", row_number().over(w).cast("long") - 1)
   }
@@ -505,7 +507,7 @@ object Packer {
         // so ≤1M-ppm mixtures are byte-identical to what they always
         // produced; later passes salt the draw with the pass index
         val drawSalt = if (r == 0) s"|mix|$i|" else s"|mix|$i|$r|"
-        val raw = spark.read.parquet(s"$d/shards")
+        val raw = Io.readParquet(spark, s"$d/shards")
         require(!withSpans || raw.columns.contains("doc_spans"),
           s"readTokenShardStoreMix(withSpans): store at $d has no " +
             "doc_spans column — written with docSpans = false")
@@ -616,7 +618,7 @@ object Packer {
           "would re-place a tail a later batch already completed, " +
           "corrupting the store")
     }
-    val carry = spark.read.parquet(s"$dir/carry/batch=$prevBatch")
+    val carry = Io.readParquet(spark, s"$dir/carry/batch=$prevBatch")
     val grouped = enc.select(col("doc_id"), col("token_ids"),
         col("n_tokens").cast("long").as("n_tokens"))
       .withColumn("pack_group",
@@ -731,7 +733,7 @@ object Packer {
       s"reshuffleTokenShardStore: outDir must differ from dir ($dir) — " +
         "the reshuffle reads the store it would be overwriting")
     val p = readStoreParams(spark, dir)
-    val seqs = spark.read.parquet(s"$dir/shards")
+    val seqs = Io.readParquet(spark, s"$dir/shards")
       .drop("shard", "skey", "batch")
     writeShardBatch(seqs, outDir, "base", newSeed, p.getInt(2))
     // the carry travels — but ONLY the lineage TIP: the shards just
@@ -745,7 +747,7 @@ object Packer {
       val tip = readText(spark, s"$dir/carry/CURRENT").getOrElse(
         sys.error(s"reshuffleTokenShardStore: carry at $dir has no " +
           "CURRENT pointer — not a writeTokenShardStore artifact"))
-      spark.read.parquet(s"$dir/carry/batch=$tip")
+      Io.readParquet(spark, s"$dir/carry/batch=$tip")
         .coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/carry/batch=base")
       writeText(spark, s"$outDir/carry/CURRENT", "base")

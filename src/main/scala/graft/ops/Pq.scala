@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.PqExpressions
+import graft.io.Io
 
 /** Product quantization (Jégou, Douze, Schmid — TPAMI 2011): the lossy
   * vector compression an ANN serving layer runs on once the corpus no
@@ -228,7 +229,7 @@ object Pq {
 
   /** Read a persisted codebook cube back as exact doubles. */
   def readCodebooks(spark: SparkSession, dir: String): Array[Array[Array[Double]]] = {
-    val rows = spark.read.parquet(s"$dir/codebooks")
+    val rows = Io.readParquet(spark, s"$dir/codebooks")
       .orderBy("s", "j").collect()
     val m = rows.map(_.getInt(0)).max + 1
     Array.tabulate(m) { s =>
@@ -246,7 +247,7 @@ object Pq {
     val spark = queries.sparkSession
     val root = Generations.root(spark, dir)
     val cb = readCodebooks(spark, root)
-    adcRank(queries, spark.read.parquet(s"$root/codes")
+    adcRank(queries, Io.readParquet(spark, s"$root/codes")
       .select(col("id").as(idCol), col("codes")), cb, k, idCol, vecCol,
       packed = true, excludeSelf = excludeSelf)
   }
@@ -543,7 +544,7 @@ object Pq {
     val p = new org.apache.hadoop.fs.Path(s"$root/rotation")
     if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) None
     else {
-      val rows = spark.read.parquet(s"$root/rotation")
+      val rows = Io.readParquet(spark, s"$root/rotation")
         .select(col("r").cast("int").as("r"), col("vec"))
         .orderBy("r").collect()
       rows.zipWithIndex.foreach { case (row, i) =>
@@ -595,7 +596,7 @@ object Pq {
     val p = new org.apache.hadoop.fs.Path(s"$root/params")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.exists(p) &&
-      spark.read.parquet(s"$root/params").select("residual")
+      Io.readParquet(spark, s"$root/params").select("residual")
         .head().getBoolean(0)
   }
 
@@ -609,7 +610,7 @@ object Pq {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) false
     else {
-      val params = spark.read.parquet(s"$root/params")
+      val params = Io.readParquet(spark, s"$root/params")
       params.columns.contains(colName) &&
         params.select(colName).head().getBoolean(0)
     }
@@ -625,7 +626,7 @@ object Pq {
     * partitions; (flag, files-per-shard). */
   private[ops] def readPointLayout(spark: SparkSession, root: String): (Boolean, Int) =
     if (!readBoolParam(spark, root, "point_layout")) (false, 0)
-    else (true, spark.read.parquet(s"$root/params")
+    else (true, Io.readParquet(spark, s"$root/params")
       .select("point_layout_files").head().getInt(0))
 
   /** Append a shard to a [[buildIvfPqIndex]] directory under the frozen
@@ -643,7 +644,7 @@ object Pq {
       s"shardId '$shardId' must be a non-'base' [A-Za-z0-9_-]+ token")
     val spark = shard.sparkSession
     val root = Generations.root(spark, dir)
-    val cent = collectCentroidTable(spark.read.parquet(s"$root/centroids"))
+    val cent = collectCentroidTable(Io.readParquet(spark, s"$root/centroids"))
     val (pl, plFiles) = readPointLayout(spark, root)
     writeIvfPqShard(shard, root, cent, readCodebooks(spark, root), shardId,
       idCol, vecCol, readResidualFlag(spark, root), readRotation(spark, root),
@@ -742,7 +743,7 @@ object Pq {
     val spark = queries.sparkSession
     val root = Generations.root(spark, dir)
     val cb = readCodebooks(spark, root)
-    val centroids = spark.read.parquet(s"$root/centroids")
+    val centroids = Io.readParquet(spark, s"$root/centroids")
     val corpus = shardFiltered(spark, root, excludeShards)
     val q = widthGuarded(
       queries.select(col(idCol).as("query_id"), col(vecCol).as("qv")),
@@ -754,7 +755,7 @@ object Pq {
 
   private def shardFiltered(spark: SparkSession, root: String,
                             excludeShards: Seq[String]): DataFrame = {
-    val corpus0 = spark.read.parquet(s"$root/corpus")
+    val corpus0 = Io.readParquet(spark, s"$root/corpus")
     if (excludeShards.isEmpty) corpus0
     else corpus0.where(!col("shard").isin(excludeShards: _*))
   }
@@ -888,7 +889,7 @@ object Pq {
     val spark = queries.sparkSession
     val root = Generations.root(spark, dir)
     val cb = readCodebooks(spark, root)
-    val centroids = spark.read.parquet(s"$root/centroids")
+    val centroids = Io.readParquet(spark, s"$root/centroids")
     val q = widthGuarded(
       queries.select(col(idCol).as("query_id"), col(vecCol).as("qv")),
       "qv", cb)
@@ -1008,7 +1009,7 @@ object Pq {
       s"shardId '$shardId' must be a non-'base' [A-Za-z0-9_-]+ token")
     val spark = shard.sparkSession
     def half(p: String) =
-      collectCentroidTable(spark.read.parquet(s"$dir/$p"))
+      collectCentroidTable(Io.readParquet(spark, s"$dir/$p"))
     val (pl, plFiles) = readPointLayout(spark, dir)
     writeImiPqShard(shard, dir, half("centroids_h1"), half("centroids_h2"),
       readCodebooks(spark, dir), shardId, idCol, vecCol,
@@ -1129,8 +1130,8 @@ object Pq {
                 filter: Option[DataFrame] = None): DataFrame = {
     val spark = queries.sparkSession
     val cb = readCodebooks(spark, dir)
-    val c1 = spark.read.parquet(s"$dir/centroids_h1")
-    val c2 = spark.read.parquet(s"$dir/centroids_h2")
+    val c1 = Io.readParquet(spark, s"$dir/centroids_h1")
+    val c2 = Io.readParquet(spark, s"$dir/centroids_h2")
     val q = widthGuarded(queries.select(col(idCol).as("query_id"),
       col(vecCol).as("qv")), "qv", cb)
     val probed = Similarity.imiRoutedCells(q, c1, c2, nprobe)
@@ -1180,8 +1181,8 @@ object Pq {
                      maxProbedPairs: Int = 1024): DataFrame = {
     val spark = queries.sparkSession
     val cb = readCodebooks(spark, dir)
-    val c1 = spark.read.parquet(s"$dir/centroids_h1")
-    val c2 = spark.read.parquet(s"$dir/centroids_h2")
+    val c1 = Io.readParquet(spark, s"$dir/centroids_h1")
+    val c2 = Io.readParquet(spark, s"$dir/centroids_h2")
     val q = widthGuarded(queries.select(col(idCol).as("query_id"),
       col(vecCol).as("qv")), "qv", cb)
     val routing = Similarity.imiRoutedCells(q, c1, c2, nprobe)
@@ -1232,19 +1233,19 @@ object Pq {
     val next = Generations.nextGen(spark, dir,
       "build with buildIvfPqIndexVersioned for in-place compaction")
     val root = Generations.root(spark, dir)
-    spark.read.parquet(s"$root/centroids")
+    Io.readParquet(spark, s"$root/centroids")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/$next/centroids")
-    spark.read.parquet(s"$root/codebooks")
+    Io.readParquet(spark, s"$root/codebooks")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/$next/codebooks")
     // params (the residual/opq flags) and the rotation travel with the
     // quantizers — codes in the rewritten shards were assigned under them
     for (rel <- Seq("params", "rotation")) {
       val p = new org.apache.hadoop.fs.Path(s"$root/$rel")
       if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-        spark.read.parquet(s"$root/$rel")
+        Io.readParquet(spark, s"$root/$rel")
           .coalesce(1).write.mode("overwrite").parquet(s"$dir/$next/$rel")
     }
-    val all = spark.read.parquet(s"$root/corpus")
+    val all = Io.readParquet(spark, s"$root/corpus")
     // the layout travels with the index: a point-layout index compacts
     // back into cell-sorted bounded files, a hive index into cell=<n>/
     // — the shared writeShardRows keeps the two recipes from drifting

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.io.Io
+
 /** Cross-JOB restart state for iterative operators (connected
   * components, PageRank).
   *
@@ -91,7 +93,7 @@ object Restart {
           "by a pre-marker build); resuming from the newest MARKED round")
     val rounds = marked.filter(_ <= atMost)
     rounds.maxOption.map(k =>
-      (k, spark.read.parquet(new Path(dir, s"round=$k").toString)))
+      (k, Io.readParquet(spark, new Path(dir, s"round=$k").toString)))
   }
 
   /** The round-`round` snapshot under `dir`, iff committed. Resume code
@@ -103,7 +105,7 @@ object Restart {
     val dst = new Path(dir, s"round=$round")
     val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(new Path(dst, CommitMarker)))
-      Some(spark.read.parquet(dst.toString))
+      Some(Io.readParquet(spark, dst.toString))
     else None
   }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorExpressions
+import graft.io.Io
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (`array<float>`).
@@ -668,7 +669,7 @@ object Similarity {
       s"shardId '$shardId' must be a non-'base' [A-Za-z0-9_-]+ token")
     val spark = shard.sparkSession
     val root = Generations.root(spark, dir)
-    val cent = spark.read.parquet(s"$root/centroids")
+    val cent = Io.readParquet(spark, s"$root/centroids")
       .orderBy("cell").collect()
       .map(r => r.getSeq[Double](1))
     writeIvfShard(shard, root, cent.toSeq, shardId, idCol, vecCol)
@@ -682,9 +683,9 @@ object Similarity {
     * identical (spec-asserted). */
   def compactIvfIndex(spark: SparkSession, dir: String, newDir: String): Unit = {
     val root = Generations.root(spark, dir)
-    spark.read.parquet(s"$root/centroids")
+    Io.readParquet(spark, s"$root/centroids")
       .coalesce(1).write.mode("overwrite").parquet(s"$newDir/centroids")
-    spark.read.parquet(s"$root/corpus").drop("shard")
+    Io.readParquet(spark, s"$root/corpus").drop("shard")
       .write.mode("overwrite").partitionBy("cell")
       .parquet(s"$newDir/corpus/shard=base")
   }
@@ -715,9 +716,9 @@ object Similarity {
     val next = Generations.nextGen(spark, dir,
       "use compactIvfIndex(dir, newDir) + a caller-side cutover for flat layouts")
     val root = Generations.root(spark, dir)
-    spark.read.parquet(s"$root/centroids")
+    Io.readParquet(spark, s"$root/centroids")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/$next/centroids")
-    val all = spark.read.parquet(s"$root/corpus")
+    val all = Io.readParquet(spark, s"$root/corpus")
     all.where(!col("shard").isin(keepShards: _*)).drop("shard")
       .write.mode("overwrite").partitionBy("cell")
       .parquet(s"$dir/$next/corpus/shard=base")
@@ -824,14 +825,14 @@ object Similarity {
     // wrong centroids — the same guard appendToImiPqIndex already gets
     // via Pq.collectCentroidTable
     def half(p: String): Array[Seq[Double]] =
-      Pq.collectCentroidTable(spark.read.parquet(s"$dir/$p")).map(_.toSeq)
+      Pq.collectCentroidTable(Io.readParquet(spark, s"$dir/$p")).map(_.toSeq)
     // the shard must land in the store's layout (persisted at build;
     // pre-params indexes are hive by construction)
     val plfPath = new org.apache.hadoop.fs.Path(s"$dir/params")
     val plf =
       if (plfPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
           .exists(plfPath))
-        spark.read.parquet(s"$dir/params")
+        Io.readParquet(spark, s"$dir/params")
           .select("point_layout_files").head().getInt(0)
       else 0
     writeImiShard(shard, dir, half("centroids_h1").toSeq,
@@ -883,9 +884,9 @@ object Similarity {
                         vecCol: String = "embedding",
                         excludeShards: Seq[String] = Nil): DataFrame = {
     val spark = probe.sparkSession
-    val c1 = spark.read.parquet(s"$dir/centroids_h1")
-    val c2 = spark.read.parquet(s"$dir/centroids_h2")
-    val assigned0 = spark.read.parquet(s"$dir/corpus")
+    val c1 = Io.readParquet(spark, s"$dir/centroids_h1")
+    val c2 = Io.readParquet(spark, s"$dir/centroids_h2")
+    val assigned0 = Io.readParquet(spark, s"$dir/corpus")
     val assigned =
       if (excludeShards.isEmpty) assigned0
       else assigned0.where(!col("shard").isin(excludeShards: _*))
@@ -920,9 +921,9 @@ object Similarity {
                      vecCol: String = "embedding",
                      excludeSelf: Boolean = true): DataFrame = {
     val spark = queries.sparkSession
-    val c1 = spark.read.parquet(s"$dir/centroids_h1")
-    val c2 = spark.read.parquet(s"$dir/centroids_h2")
-    val assigned = spark.read.parquet(s"$dir/corpus")
+    val c1 = Io.readParquet(spark, s"$dir/centroids_h1")
+    val c2 = Io.readParquet(spark, s"$dir/centroids_h2")
+    val assigned = Io.readParquet(spark, s"$dir/corpus")
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
     val probed = imiRoutedCells(q, c1, c2, nprobe)
     val joined = assigned.join(broadcast(probed), Seq("cell"))
@@ -996,8 +997,8 @@ object Similarity {
                      excludeSelf: Boolean = true): DataFrame = {
     val spark = queries.sparkSession
     val root = Generations.root(spark, dir)
-    val centroids = spark.read.parquet(s"$root/centroids")
-    val assigned = spark.read.parquet(s"$root/corpus")
+    val centroids = Io.readParquet(spark, s"$root/centroids")
+    val assigned = Io.readParquet(spark, s"$root/corpus")
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
     val wCell = Window.partitionBy("query_id").orderBy(asc("dist"), asc("cell"))
     val probed = q.crossJoin(broadcast(centroids))
@@ -1044,8 +1045,8 @@ object Similarity {
                                   excludeShards: Seq[String] = Nil): DataFrame = {
     val spark = probe.sparkSession
     val root = Generations.root(spark, dir)
-    val centroids = spark.read.parquet(s"$root/centroids")
-    val assigned0 = spark.read.parquet(s"$root/corpus")
+    val centroids = Io.readParquet(spark, s"$root/centroids")
+    val assigned0 = Io.readParquet(spark, s"$root/corpus")
     val assigned =
       if (excludeShards.isEmpty) assigned0
       else assigned0.where(!col("shard").isin(excludeShards: _*))
@@ -1216,8 +1217,8 @@ object Similarity {
   def semDedupLosersIndexed(batch: DataFrame, dir: String,
                             threshold: Double, idCol: String = "vec_id",
                             vecCol: String = "embedding"): DataFrame = {
-    val cent = batch.sparkSession.read
-      .parquet(s"${Generations.root(batch.sparkSession, dir)}/centroids")
+    val cent = Io.readParquet(batch.sparkSession,
+      s"${Generations.root(batch.sparkSession, dir)}/centroids")
       .orderBy("cell").collect().map(r => r.getSeq[Double](1))
     // materialized once, same as semDedup's own assignment: the
     // relation feeds both pair-join sides, and betting on ReuseExchange

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.io.Io
+
 /** Cross-dump URL index — the dump-over-dump form of the URL stage
   * (CCNet processes Common Crawl one dump at a time and drops a URL
   * in dump N if ANY earlier dump already fetched it; reference:
@@ -60,7 +62,7 @@ object UrlIndex {
   /** The indexed URL set (url_norm, shard) — shard is the partition
     * column, so per-shard reads prune. */
   def read(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(dir)
+    Io.readParquet(spark, dir)
 
   /** Dump N's URL verdict against every indexed earlier dump: rows
     * whose normalized URL is UNSEEN by the index, collapsed to the

@@ -2,6 +2,8 @@ package graft.sql
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.io.Io
+
 /** SQL-facing surface: registers the warehouse tables as temp views so
   * users can query with plain `spark.sql` — the reference's interaction
   * model (temp views + SQL, SURVEY.md §1.1) without its hidden
@@ -17,7 +19,7 @@ object GraftCatalog {
   def registerAll(spark: SparkSession, dir: String,
                   tables: Seq[String] = testdataTables): Unit =
     tables.foreach { t =>
-      spark.read.parquet(s"$dir/$t.parquet").createOrReplaceTempView(t)
+      Io.readParquet(spark, s"$dir/$t.parquet").createOrReplaceTempView(t)
     }
 
   /** Register + run one SQL statement. */

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
+import graft.io.Io
+
 /** Structured Streaming twin of graft.ops.Events.
   *
   * The reference pipeline is batch-only (SURVEY.md §2.12); its scaling
@@ -56,7 +58,7 @@ object EventsStream {
     // error mid-stream. The expected miss is the empty-dir
     // AnalysisException on a stream started before its source exists.
     val physical =
-      try spark.read.parquet(dir).schema
+      try Io.readParquet(spark, dir).schema
       catch {
         case scala.util.control.NonFatal(e) =>
           org.apache.log4j.Logger.getLogger(getClass)
@@ -189,7 +191,7 @@ object EventsStream {
                      compactedDir: String,
                      params: graft.ops.Curation.Params = graft.ops.Curation.Params()): Unit =
     graft.ops.Curation.nearDupAndQuality(
-        spark.read.parquet(sinkDir).drop("batch"), params)
+        Io.readParquet(spark, sinkDir).drop("batch"), params)
       .write.mode("overwrite").parquet(compactedDir)
 
   // ---- stream-stream join -------------------------------------------
@@ -385,7 +387,7 @@ object EventsStream {
       }
       val merged =
         if (fs.exists(cur)) {
-          val snap = spark.read.parquet(snapshotDir)
+          val snap = Io.readParquet(spark, snapshotDir)
           snap.join(latest.select(keys.map(col): _*), keys, "left_anti")
             .unionByName(latest.drop(seqCol, opCol))
             .join(deletes, keys, "left_anti")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
+import graft.io.Io
 import graft.ops.{LshIndex, Similarity}
 
 /** Streaming ingest dedup against a persisted [[graft.ops.LshIndex]] —
@@ -87,7 +88,7 @@ object IngestStream {
     survivors.write.mode("overwrite").parquet(s"$sinkDir/batch=$id")
     // index exactly what was committed (replay-stable even if the
     // source re-delivers the batch in different tasks)
-    LshIndex.append(spark.read.parquet(s"$sinkDir/batch=$id"), indexDir,
+    LshIndex.append(Io.readParquet(spark, s"$sinkDir/batch=$id"), indexDir,
       shardId = s"batch-$id", textCol = textCol)
   }
 
@@ -114,7 +115,7 @@ object IngestStream {
       .join(dupOfHistory, Seq("vec_id"), "left_anti")
       .join(demoted, Seq("vec_id"), "left_anti")
     survivors.write.mode("overwrite").parquet(s"$sinkDir/batch=$id")
-    Similarity.appendToIvfIndex(spark.read.parquet(s"$sinkDir/batch=$id"),
+    Similarity.appendToIvfIndex(Io.readParquet(spark, s"$sinkDir/batch=$id"),
       indexDir, shardId = s"batch-$id")
   }
 

@@ -24,4 +24,23 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.sparkContext.setCheckpointDir(dir)
     try body finally spark.sparkContext.setCheckpointDir(null)
   }
+
+  /** `body`'s result and the number of Spark jobs started while it ran
+    * (the listener bus is drained on both sides, so jobs of earlier
+    * work are not counted and none of `body`'s are missed). */
+  def withJobCount[T](body: => T): (T, Int) = {
+    import org.apache.spark.grafttest.ListenerBusHelper.waitUntilListenerBusEmpty
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    waitUntilListenerBusEmpty(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = body
+      waitUntilListenerBusEmpty(spark.sparkContext)
+      (out, jobs.get())
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }

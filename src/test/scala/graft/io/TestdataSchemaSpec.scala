@@ -41,6 +41,17 @@ class TestdataSchemaSpec extends SparkSpec {
     }
   }
 
+  test("Io.readParquet infers what spark.read.parquet infers on every table, once") {
+    for (table <- requiredCols.keys) {
+      val path = s"$dir/$table.parquet"
+      val read = Io.readParquet(spark, path)
+      assert(read.schema === spark.read.parquet(path).schema, table)
+      val (again, jobs) = withJobCount(Io.readParquet(spark, path))
+      assert(jobs === 0, s"$table: the second read ran a footer job")
+      assert(again.schema === read.schema, table)
+    }
+  }
+
   test("events.ts physical type is one the engine normalizes to epoch-nanos") {
     val ev = spark.read.parquet(s"$dir/events.parquet")
     val physical = ev.schema("ts").dataType

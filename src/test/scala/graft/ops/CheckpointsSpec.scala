@@ -1,16 +1,14 @@
 package graft.ops
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
-
-import scala.jdk.CollectionConverters._
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 
-import graft.SparkSpec
+import graft.{LibrarySources, SparkSpec}
 
 class CheckpointsSpec extends SparkSpec {
   import spark.implicits._
@@ -77,19 +75,12 @@ class CheckpointsSpec extends SparkSpec {
   }
 
   test("library code materializes only through Checkpoints.materialize") {
-    val root = Paths.get("src/main/scala/graft")
-    val dirs = Seq("ops", "streaming", "functions", "io", "parse", "etl",
-      "quality", "analytics", "sql").map(root.resolve)
-    val files: Seq[Path] = root.resolve("SparkEntry.scala") +:
-      dirs.flatMap(d => Files.walk(d).iterator().asScala
-        .filter(_.toString.endsWith(".scala")).toSeq)
-    assert(files.size > 50, s"scanned only ${files.size} files from ${root.toAbsolutePath}")
+    val files = LibrarySources.files
+    assert(files.size > 50,
+      s"scanned only ${files.size} files from ${LibrarySources.root.toAbsolutePath}")
     val banned = Seq("localCheckpoint(", ".checkpoint(", "setCheckpointDir")
-    val hits = for {
-      f <- files if f.getFileName.toString != "Checkpoints.scala"
-      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
-      b <- banned if line.contains(b)
-    } yield s"$f:${i + 1}: $b"
+    val hits = LibrarySources.lineHits(
+      files.filter(_.getFileName.toString != "Checkpoints.scala"), banned)
     assert(hits.isEmpty, hits.mkString("direct materialization outside Checkpoints:\n", "\n", ""))
   }
 }
