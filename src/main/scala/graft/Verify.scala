@@ -47,47 +47,9 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    // q29/q62 oracles embed trained centroids (data-dependent,
-    // deterministic for a given sf dir) — generated here, where the
-    // data is known
-    val oracles = SparkEntry.oracleSql +
-      ("q29_ivf_ann" -> SparkEntry.ivfOracleSql(spark, sfDir)) +
-      ("q62_semdedup" -> SparkEntry.semDedupOracleSql(spark, sfDir)) +
-      ("q82_pca_project" -> SparkEntry.pcaOracleSql(spark, sfDir)) +
-      ("q114_pq_ann" -> SparkEntry.pqOracleSql(spark, sfDir)) +
-      ("q115_pq_refine" -> SparkEntry.pqRefineOracleSql(spark, sfDir)) +
-      ("q118_ivfpq_probe" -> SparkEntry.ivfPqOracleSql(spark, sfDir)) +
-      ("q154_filtered_ann" -> SparkEntry.ivfPqFilteredOracleSql(spark, sfDir)) +
-      ("q122_ivfpq_residual" -> SparkEntry.ivfPqResidualOracleSql(spark, sfDir)) +
-      ("q124_ivfpq_res_refined" ->
-        SparkEntry.ivfPqResidualRefinedOracleSql(spark, sfDir)) +
-      ("q125_ivfpq_opq" -> SparkEntry.ivfPqOpqOracleSql(spark, sfDir)) +
-      // q127 is q124 through the point-serving path — results are
-      // identical by construction, so the oracle SQL is q124's
-      ("q127_ivfpq_point_refined" ->
-        SparkEntry.ivfPqResidualRefinedOracleSql(spark, sfDir)) +
-      ("q129_ivfpq_half_refined" ->
-        SparkEntry.ivfPqHalfRefinedOracleSql(spark, sfDir)) +
-      // q130 is q118 through the point-serving path — results are
-      // identical by construction, so the oracle SQL is q118's
-      ("q130_ivfpq_point_adc" -> SparkEntry.ivfPqOracleSql(spark, sfDir)) +
-      ("q138_imi_ann" -> SparkEntry.imiOracleSql(spark, sfDir)) +
-      ("q139_imi_pq_ann" -> SparkEntry.imiPqOracleSql(spark, sfDir)) +
-      // q140 is q139 through the point-serving path — results are
-      // identical by construction, so the oracle SQL is q139's
-      ("q140_imi_pq_point" -> SparkEntry.imiPqOracleSql(spark, sfDir)) +
-      ("q159_imi_filtered_ann" -> SparkEntry.imiPqFilteredOracleSql(spark, sfDir)) +
-      ("q141_imi_neardup" -> SparkEntry.imiNearDupOracleSql(spark, sfDir)) +
-      ("q142_imi_pq_residual" ->
-        SparkEntry.imiPqResidualOracleSql(spark, sfDir)) +
-      ("q143_imi_pq_opq" ->
-        SparkEntry.imiPqOpqResidualOracleSql(spark, sfDir)) +
-      // q148: routing fully derived in SQL (the q144 chains); only the
-      // sample-trained codebook cube embeds — generated here for it
-      ("q148_imi_pq_corpus_trained" ->
-        SparkEntry.imiPqCorpusTrainedOracleSql(spark, sfDir))
-    val json = oracles
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    // every oracle, the data-dependent ones generated here from sfDir
+    val json = (SparkEntry.oracleSql.keySet ++ SparkEntry.dataOracles.keySet).toSeq.sorted
+      .map(n => s"${q(n)}: ${q(SparkEntry.oracleFor(spark, n, sfDir))}").mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }
