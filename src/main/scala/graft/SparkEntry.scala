@@ -549,11 +549,8 @@ object SparkEntry {
       "q61_unigram_logprob" -> q { (s, dir) =>
         LangModel.unigramScore(t(s, dir, "documents"))
       },
-      // SemDedup: k-means-cell-bounded semantic dedup over embeddings
-      // declared on the direct path (the family default: the bench
-      // corpus is dup-light, where the digest collapse costs more than
-      // it saves); collapseExact is the dup-heavy scale knob, spec-
-      // asserted output-identical and measured 5× at the 100× replica
+      // SemDedup: k-means-cell-bounded semantic dedup over embeddings,
+      // the cell count scaled with the corpus (Similarity.semDedupNlist)
       "q62_semdedup" -> q { (s, dir) =>
         Similarity.semDedup(t(s, dir, "embeddings"))
       },

@@ -42,30 +42,17 @@ object LangModel {
     * exact integer ratio). Empty documents have no tokens and are absent,
     * as in every other token-derived relation here.
     *
-    * `collapseExact`: opt-in exact-text collapse (the
-    * [[graft.ops.Dedup.nearDuplicates]] move) for exact-dup-heavy
-    * corpora — the token explode and the per-doc score run once per
-    * distinct token stream, corpus counts weight each stream by its
-    * multiplicity, docs join their stream's score by one digest
-    * equi-join. Output-identical to the default (spec-asserted). The
-    * default stays direct because on a low-duplication corpus the
-    * digest pass plus two digest joins cost more than the explode they
-    * save (measured 0.63→3.97 s at sf0.1); on a 90%-exact-dup corpus
-    * the collapse wins — flip it when upstream exact dedup has NOT
-    * already run.
+    * Exact-duplicate-heavy input should go through
+    * [[graft.ops.Dedup.exactDuplicates]] first, as
+    * [[graft.ops.Curation.curate]] does: this op (like
+    * [[crossUnigramScore]] and [[naiveBayes]]) tokenizes every document
+    * it is given, so each duplicate costs a full token pass.
     *
-    * EAGER: building the DataFrame runs the jobs that materialize the
-    * per-doc term frequencies (the digest and per-stream relations with
-    * `collapseExact`) via [[Checkpoints.materialize]], so build it only
-    * to run it. */
+    * EAGER: building the DataFrame runs the job that materializes the
+    * per-doc term frequencies via [[Checkpoints.materialize]], so build
+    * it only to run it. */
   def unigramScore(docs: DataFrame, idCol: String = "doc_id",
-                   textCol: String = "text",
-                   collapseExact: Boolean = false): DataFrame =
-    if (collapseExact) unigramScoreCollapsed(docs, idCol, textCol)
-    else unigramScoreDirect(docs, idCol, textCol)
-
-  private def unigramScoreDirect(docs: DataFrame, idCol: String,
-                                 textCol: String): DataFrame = {
+                   textCol: String = "text"): DataFrame = {
     // tf feeds three consumers (corpus counts, token total, scoring
     // join) — structurally materialized (r18): the always-true-guard
     // canonicalization that was meant to make ReuseExchange serve all
@@ -91,48 +78,6 @@ object LangModel {
         expr("sum_micros div n_tokens").as("avg_nlp_micros"))
   }
 
-  /** Collapsed twin of [[unigramScoreDirect]]: only ids, digests, and
-    * per-stream token rows ever shuffle — corpus text is scanned (once
-    * for digests, once for the rep explode via a doc_id semi-join),
-    * never exchanged. */
-  private def unigramScoreCollapsed(docs: DataFrame, idCol: String,
-                                    textCol: String): DataFrame = {
-    // both corpus-sized relations materialize once (the naiveBayes
-    // treatment): the digest pass feeds the group aggregate and the
-    // final member join; the per-stream tf feeds the corpus counts,
-    // the total, and the scoring join — three consumers that would
-    // otherwise each re-run the token explode
-    val keyed = Checkpoints.materialize(docs.select(col(idCol),
-      Dedup.tokenStreamKey(col(textCol)).as("__tk")))
-    val reps = keyed.groupBy("__tk")
-      .agg(min(idCol).as("__rep"), count(lit(1)).cast("long").as("__n"))
-    val repDocs = docs.join(reps.select(col("__rep").as(idCol)),
-      Seq(idCol), "left_semi")
-    val gtf = Checkpoints.materialize(repDocs
-      .select(Dedup.tokenStreamKey(col(textCol)).as("__tk"),
-        explode(TextStats.tokens(col(textCol))).as("tok"))
-      .where(col("tok").isNotNull)
-      .groupBy(col("__tk"), col("tok"))
-      .agg(count(lit(1)).as("tf")))
-    // corpus counts weight each stream by its multiplicity — the
-    // trained LM is identical to the per-doc formulation
-    val wtf = gtf.join(reps.select("__tk", "__n"), "__tk")
-    val counts = wtf.where(col("tf") > 0).groupBy("tok")
-      .agg(sum(col("tf") * col("__n")).cast("long").as("cnt"))
-    val total = wtf.agg(sum(col("tf") * col("__n")).cast("long").as("total_tokens"))
-    val perStream = gtf.join(broadcast(counts), "tok")
-      .crossJoin(broadcast(total))
-      .withColumn("nlp_micros",
-        round((log(col("total_tokens").cast("double")) -
-          log(col("cnt").cast("double"))) * 1e6).cast("long"))
-      .groupBy(col("__tk"))
-      .agg(sum("tf").cast("long").as("n_tokens"),
-        sum(col("nlp_micros") * col("tf")).cast("long").as("sum_micros"))
-    keyed.join(perStream, "__tk")
-      .select(col(idCol), col("n_tokens"),
-        expr("sum_micros div n_tokens").as("avg_nlp_micros"))
-  }
-
   /** Cross-corpus unigram scoring: score `eval` documents under a
     * unigram LM trained on a DISJOINT `train` corpus — the held-out
     * flavor of [[unigramScore]], and the standard quality/novelty
@@ -150,47 +95,14 @@ object LangModel {
     * ReuseExchange to share the two subtrees re-ran the corpus explode
     * (measured: a third parquet scan in the plan). The vocabulary
     * broadcasts (token types, not occurrences) and the eval side is
-    * one scan + one per-doc aggregation.
-    *
-    * `collapseExact`: the family's exact-dup-heavy knob ([[unigramScore]],
-    * [[naiveBayes]]): BOTH sides' token explodes run once per distinct
-    * token stream — train counts weight each stream by its multiplicity
-    * (the trained LM is identical), eval docs join their stream's
-    * scores by one digest equi-join. Output-identical (spec-asserted).
-    * The trade is about DOCUMENT LENGTH, not just dup density: the
-    * digest pass itself reads every token, so it only pays for itself
-    * when the per-doc work it avoids (explode + grouped reduce over
-    * long documents) exceeds one hash pass — on a short-doc corpus the
-    * collapse measured slower than direct even at 99% dup density
-    * (~50-token docs: 1.4 s vs 5.3 s), matching [[unigramScore]]'s
-    * measured behavior on the same corpus. Flip it for long-document,
-    * dup-heavy corpora where upstream exact dedup has not already
-    * run. */
+    * one scan + one per-doc aggregation. */
   def crossUnigramScore(train: DataFrame, eval: DataFrame,
                         idCol: String = "doc_id",
-                        textCol: String = "text",
-                        collapseExact: Boolean = false): DataFrame = {
-    val trainTf =
-      if (collapseExact) {
-        val keyed = Checkpoints.materialize(train.select(col(idCol),
-          Dedup.tokenStreamKey(col(textCol)).as("__tk")))
-        val reps = keyed.groupBy("__tk")
-          .agg(min(idCol).as("__rep"), count(lit(1)).cast("long").as("__n"))
-        val repDocs = train.join(reps.select(col("__rep").as(idCol)),
-          Seq(idCol), "left_semi")
-        val gtf = repDocs
-          .select(Dedup.tokenStreamKey(col(textCol)).as("__tk"),
-            explode(TextStats.tokens(col(textCol))).as("tok"))
-          .where(col("tok").isNotNull)
-          .groupBy("__tk", "tok").agg(count(lit(1)).as("tf"))
-        Checkpoints.materialize(gtf.join(reps.select("__tk", "__n"), "__tk")
-          .groupBy("tok").agg(sum(col("tf") * col("__n")).cast("long").as("cnt")))
-      } else Checkpoints.materialize(train
-        .select(explode(TextStats.tokens(col(textCol))).as("tok"))
-        .groupBy("tok").agg(count(lit(1)).as("cnt")))
+                        textCol: String = "text"): DataFrame = {
+    val trainTf = Checkpoints.materialize(train
+      .select(explode(TextStats.tokens(col(textCol))).as("tok"))
+      .groupBy("tok").agg(count(lit(1)).as("cnt")))
     val total = trainTf.agg(sum("cnt").cast("long").as("total_tokens"))
-    if (collapseExact)
-      return crossScoreCollapsedEval(eval, trainTf, total, idCol, textCol)
     val evalTf = eval
       .select(col(idCol), explode(TextStats.tokens(col(textCol))).as("tok"))
       .groupBy(col(idCol), col("tok"))
@@ -206,41 +118,6 @@ object LangModel {
           .cast("long").as("n_oov"),
         sum(when(col("cnt").isNotNull, col("nlp_micros") * col("tf")))
           .cast("long").as("sum_micros"))
-      .select(col(idCol), col("n_tokens"), col("n_oov"),
-        expr("sum_micros div nullif(n_tokens - n_oov, 0)")
-          .as("avg_nlp_micros"))
-  }
-
-  /** [[crossUnigramScore]]'s collapsed eval side: scores are pure
-    * functions of the token stream, so they compute once per distinct
-    * stream (rep texts via a doc_id semi-join against the scan — raw
-    * text never shuffles) and members join by digest. */
-  private def crossScoreCollapsedEval(eval: DataFrame, trainTf: DataFrame,
-                                      total: DataFrame, idCol: String,
-                                      textCol: String): DataFrame = {
-    val keyed = Checkpoints.materialize(eval.select(col(idCol),
-      Dedup.tokenStreamKey(col(textCol)).as("__tk")))
-    val reps = keyed.groupBy("__tk").agg(min(idCol).as("__rep"))
-    val repDocs = eval.join(reps.select(col("__rep").as(idCol)),
-      Seq(idCol), "left_semi")
-    val gtf = repDocs
-      .select(Dedup.tokenStreamKey(col(textCol)).as("__tk"),
-        explode(TextStats.tokens(col(textCol))).as("tok"))
-      .where(col("tok").isNotNull)
-      .groupBy("__tk", "tok")
-      .agg(count(lit(1)).as("tf"))
-    val perStream = gtf.join(broadcast(trainTf), Seq("tok"), "left")
-      .crossJoin(broadcast(total))
-      .withColumn("nlp_micros",
-        round((log(col("total_tokens").cast("double")) -
-          log(col("cnt").cast("double"))) * 1e6).cast("long"))
-      .groupBy(col("__tk"))
-      .agg(sum("tf").cast("long").as("n_tokens"),
-        sum(when(col("cnt").isNull, col("tf")).otherwise(lit(0L)))
-          .cast("long").as("n_oov"),
-        sum(when(col("cnt").isNotNull, col("nlp_micros") * col("tf")))
-          .cast("long").as("sum_micros"))
-    keyed.join(perStream, "__tk")
       .select(col(idCol), col("n_tokens"), col("n_oov"),
         expr("sum_micros div nullif(n_tokens - n_oov, 0)")
           .as("avg_nlp_micros"))
@@ -308,7 +185,7 @@ object LangModel {
     * micro-nats, and every per-document aggregate after that is exact
     * integer arithmetic — order-independent under any partitioning.
     *
-    * Scale shape (the [[unigramScoreDirect]] recipe): ONE corpus
+    * Scale shape (the [[unigramScore]] recipe): ONE corpus
     * bigram pass — the per-doc (id, w1, w2, k) tf relation's exchange
     * feeds BOTH the corpus bigram counts (a fold of the same
     * aggregate) and the pair-key scoring join, so the corpus
@@ -507,27 +384,10 @@ object LangModel {
     * per-(doc, class) reduce fans out |classes|× with map-side
     * combine; the argmax is a SINGLE aggregate
     * min(struct(−score, class)) — max score, ties to the smaller
-    * class name, no self-join and no window sort.
-    *
-    * `collapseExact`: opt-in exact-text collapse for exact-dup-heavy
-    * corpora — tf, per-class score sums, and the argmax are all pure
-    * functions of the token stream, so they run once per distinct
-    * stream; corpus statistics weight each stream by its multiplicity
-    * (per-(stream, label) for class totals), and docs join their
-    * stream's verdict by one digest equi-join. Output-identical to the
-    * default (spec-asserted); same cost trade-off as
-    * [[unigramScore]]'s knob. */
+    * class name, no self-join and no window sort. */
   def naiveBayes(docs: DataFrame, labelCol: String = "source",
                  vocabK: Int = 10000, idCol: String = "doc_id",
-                 textCol: String = "text",
-                 collapseExact: Boolean = false): DataFrame =
-    if (collapseExact)
-      naiveBayesCollapsed(docs, labelCol, vocabK, idCol, textCol)
-    else naiveBayesDirect(docs, labelCol, vocabK, idCol, textCol)
-
-  private def naiveBayesDirect(docs: DataFrame, labelCol: String,
-                               vocabK: Int, idCol: String,
-                               textCol: String): DataFrame = {
+                 textCol: String = "text"): DataFrame = {
     // the one corpus-sized token pass, materialized once: vocabulary,
     // class totals, count matrix, and the scoring join all scan this
     val tf = Checkpoints.materialize(docs
@@ -579,79 +439,6 @@ object LangModel {
       .agg(min(struct((-col("score_micros")).as("neg"), col("cls").as("c"))).as("b"))
       .select(col(idCol), col("b.c").as("pred"),
         (-col("b.neg")).as("score_micros"))
-  }
-
-  /** Collapsed twin of [[naiveBayesDirect]] — only (id, digest[, label])
-    * tuples and per-stream token rows ever shuffle; rep texts come from
-    * a doc_id semi-join against the scan (AQE broadcasts the rep id set
-    * when it fits), so corpus text is scanned, never exchanged. */
-  private def naiveBayesCollapsed(docs: DataFrame, labelCol: String,
-                                  vocabK: Int, idCol: String,
-                                  textCol: String): DataFrame = {
-    val keyed = docs.select(col(idCol), col(labelCol).as("cls"),
-      Dedup.tokenStreamKey(col(textCol)).as("__tk"))
-    val reps = keyed.groupBy("__tk").agg(min(idCol).as("__rep"))
-    val repDocs = docs.join(reps.select(col("__rep").as(idCol)),
-      Seq(idCol), "left_semi")
-    val streams = repDocs.select(
-      Dedup.tokenStreamKey(col(textCol)).as("__tk"), col(textCol).as("__text"))
-    val clsWeights = keyed.groupBy("__tk", "cls")
-      .agg(count(lit(1)).cast("long").as("n"))
-    // per-stream term frequencies (the only token explode),
-    // materialized once — same structural sharing as the direct path
-    val gtf = Checkpoints.materialize(streams
-      .select(col("__tk"), explode(TextStats.tokens(col("__text"))).as("tok"))
-      .where(col("tok").isNotNull)
-      .groupBy("__tk", "tok")
-      .agg(count(lit(1)).cast("long").as("tf")))
-    val streamN = clsWeights.groupBy("__tk").agg(sum("n").cast("long").as("n_all"))
-    val vocab = gtf.join(streamN, "__tk")
-      .groupBy("tok").agg(sum(col("tf") * col("n_all")).cast("long").as("cnt"))
-      .orderBy(col("cnt").desc, col("tok")).limit(vocabK)
-      .select("tok")
-    val gtfv = gtf.join(broadcast(vocab), "tok")
-    // class stats: doc counts from ALL docs (token-free docs still carry
-    // prior mass), token totals from the vocab-restricted, class-weighted tf
-    val classes = docs.groupBy(col(labelCol).as("cls"))
-      .agg(count(lit(1)).cast("long").as("dc"))
-    val wtf = gtfv.join(clsWeights, "__tk")
-      .groupBy("cls", "tok").agg(sum(col("tf") * col("n")).cast("long").as("ctc"))
-    val totals = wtf.groupBy("cls").agg(sum("ctc").cast("long").as("tc"))
-    val vSize = vocab.agg(count(lit(1)).cast("long").as("v"))
-    // derived from the class counts — not a second corpus scan
-    val nDocs = classes.agg(sum("dc").cast("long").as("d_all"))
-    val clsStats = classes.join(totals, Seq("cls"), "left")
-      .na.fill(0L, Seq("tc"))
-      .crossJoin(broadcast(vSize)).crossJoin(broadcast(nDocs))
-      .withColumn("prior_micros",
-        round((log(col("dc").cast("double")) - log(col("d_all").cast("double"))) * 1e6)
-          .cast("long"))
-    // dense (vocab × class) matrix, exactly as the direct path
-    val matrix = vocab.crossJoin(clsStats.select("cls", "tc", "v"))
-      .join(wtf, Seq("cls", "tok"), "left")
-      .na.fill(0L, Seq("ctc"))
-      .withColumn("lp_micros",
-        round((log(col("ctc").cast("double") + 1) -
-          log((col("tc") + col("v")).cast("double"))) * 1e6).cast("long"))
-      .select("cls", "tok", "lp_micros")
-    val tokSum = gtfv.select(col("__tk"), col("tok"), col("tf"))
-      .join(broadcast(matrix), "tok")
-      .groupBy(col("__tk"), col("cls"))
-      .agg(sum(col("tf") * col("lp_micros")).cast("long").as("ts"))
-    // per-stream verdict: argmax over classes (ties to the smaller
-    // class name), token-free streams score by prior alone
-    val scored = streams.select(col("__tk"))
-      .crossJoin(broadcast(clsStats.select("cls", "prior_micros")))
-      .join(tokSum, Seq("__tk", "cls"), "left")
-      .withColumn("score_micros", col("prior_micros") + coalesce(col("ts"), lit(0L)))
-    // single-pass argmax, as the direct path
-    val verdict = scored.groupBy(col("__tk"))
-      .agg(min(struct((-col("score_micros")).as("neg"), col("cls").as("c"))).as("b"))
-      .select(col("__tk"), col("b.c").as("pred"),
-        (-col("b.neg")).as("score_micros"))
-    keyed.select(col(idCol), col("__tk"))
-      .join(verdict, "__tk")
-      .select(col(idCol), col("pred"), col("score_micros"))
   }
 
   /** One BPE merge iteration: corpus-weighted counts of adjacent

@@ -197,24 +197,18 @@ object Similarity {
     *
     * Scale: one equi-join on (query_id, neighbor_id) over two ≤ k·|Q|
     * relations — the evaluator costs nothing next to the pipelines it
-    * measures.
-    *
-    * `broadcastApprox` (default true) assumes a BOUNDED query set:
-    * approx is ≤ k·|Q| rows by construction, so for the harness's
-    * intended shape (thousands of queries) the broadcast is MBs. Fed
-    * corpus-scale |Q| (e.g. a self-recall sweep where every corpus row
-    * is a query), k·|Q| is corpus-sized — pass `broadcastApprox =
-    * false` to keep the shuffled equi-join and stay off the driver. */
-  def annRecall(truth: DataFrame, approx: DataFrame,
-                broadcastApprox: Boolean = true): DataFrame = {
+    * measures. The approx side always broadcasts, which assumes a
+    * BOUNDED query set: approx is ≤ k·|Q| rows by construction, so for
+    * the harness's intended shape (thousands of queries) the broadcast
+    * is MBs. */
+  def annRecall(truth: DataFrame, approx: DataFrame): DataFrame = {
     // approx ends in an aggregate+generate whose output size the
     // planner can't estimate — without the hint the bounded case fell
     // back to a sort-merge join of two tiny relations
     val hits = approx.select(col("query_id"), col("neighbor_id"),
       lit(1L).as("__hit"))
     truth.select(col("query_id"), col("neighbor_id"))
-      .join(if (broadcastApprox) broadcast(hits) else hits,
-        Seq("query_id", "neighbor_id"), "left")
+      .join(broadcast(hits), Seq("query_id", "neighbor_id"), "left")
       .groupBy("query_id")
       .agg(count(lit(1)).cast("long").as("n_true"),
         coalesce(sum("__hit"), lit(0L)).cast("long").as("n_hit"))
@@ -1186,13 +1180,10 @@ object Similarity {
     * count() job over the corpus before training. */
   def semDedup(corpus: DataFrame, threshold: Double = 0.4, nlist: Int = 0,
                idCol: String = "vec_id", vecCol: String = "embedding",
-               maxIter: Int = 5, maxTrain: Int = 4096,
-               collapseExact: Boolean = false): DataFrame = {
+               maxIter: Int = 5, maxTrain: Int = 4096): DataFrame = {
     val k = if (nlist > 0) nlist
             else semDedupNlist(corpus.count(), maxTrain = maxTrain)
     val cent = trainedCentroids(corpus, k, maxIter, maxTrain, idCol, vecCol)
-    if (collapseExact)
-      return semDedupCollapsed(corpus, threshold, cent, idCol, vecCol)
     // the cell assignment (corpus scan + a k·dim argmax per row) feeds
     // THREE consumers — both pair-join sides and the final keep
     // anti-join — so it materializes once (see [[Checkpoints]]) instead
@@ -1231,7 +1222,8 @@ object Similarity {
 
   /** In-cell cosine pair search + component closure over an `assigned`
     * (id, v, cell) relation; returns the non-representative members
-    * (doc_id ≠ component_id) — shared by both [[semDedup]] paths. */
+    * (doc_id ≠ component_id) — shared by [[semDedup]] and
+    * [[semDedupLosersIndexed]]. */
   private def cellPairLosers(assigned: DataFrame, idCol: String,
                              threshold: Double): DataFrame = {
     val a = assigned.select(col("cell"), col(idCol).as("doc_a"), col("v").as("va"))
@@ -1243,55 +1235,6 @@ object Similarity {
     Dedup.connectedComponents(pairs)
       .where(col("doc_id") =!= col("component_id"))
       .select("doc_id")
-  }
-
-  /** [[semDedup]]'s exact-duplicate collapse (`collapseExact = true`) —
-    * the embedding-domain version of the text family's knob: the
-    * quadratic-in-cell pair search and the component closure run over
-    * DISTINCT vectors only (byte-identical embeddings grouped by
-    * digest, rep = min id per group), then groups expand through the
-    * rep-level result. On a crawl-shaped corpus where most vectors are
-    * copies, the in-cell pair term drops from |corpus|²/cells to
-    * |distinct|²/cells.
-    *
-    * Output-identity argument (spec-asserted): centroids and nlist are
-    * trained on the FULL corpus exactly like the direct path, so every
-    * copy lands in its rep's cell; identical vectors form cos-1
-    * cliques, so a group's members sit in exactly its rep's component —
-    * group members lose to their rep precisely when cos(v, v) ≥
-    * threshold (true for nonzero vectors at any threshold ≤ 1; FALSE
-    * for zero vectors, whose cosine is defined as 0 — so identical
-    * zero-vector copies correctly all survive, as they do in the
-    * direct path), and a rep-level loser takes its whole group with
-    * it. */
-  private def semDedupCollapsed(corpus: DataFrame, threshold: Double,
-                                cent: Array[Array[Double]], idCol: String,
-                                vecCol: String): DataFrame = {
-    // null elements must stay distinguishable in the digest: concat_ws
-    // silently DROPS nulls, so [1,null,2] and [1,2] would collapse to
-    // one group and members would inherit a keep/drop fate the direct
-    // path (where cosine over a null element is null ⇒ not a dup pair)
-    // never assigns. Map each null to a sentinel no float cast can
-    // produce ("null") before joining.
-    val vkey = md5(to_binary(concat_ws(",",
-      expr(s"transform($vecCol, x -> coalesce(CAST(x AS STRING), 'null'))")),
-      lit("utf-8")))
-    val keyed = Checkpoints.materialize(corpus.select(col(idCol), vkey.as("__vk")))
-    val reps = keyed.groupBy("__vk").agg(min(idCol).as("__rep"))
-    val repVecs = corpus.join(reps.select(col("__rep").as(idCol)),
-      Seq(idCol), "left_semi")
-    val assigned = Checkpoints.materialize(repVecs.select(col(idCol).as("__rep"),
-      col(vecCol).as("v"),
-      VectorExpressions.nearest_cell(col(vecCol), cent.map(_.toSeq).toSeq).as("cell")))
-    val repLosers = cellPairLosers(assigned, "__rep", threshold)
-      .select(col("doc_id").as("__rep"))
-    val repMeta = assigned.select(col("__rep"), col("cell"),
-      (cosine(col("v"), col("v")) >= threshold).as("__selfq"))
-    keyed.join(reps, "__vk")
-      .join(repMeta, "__rep")
-      .join(repLosers, Seq("__rep"), "left_anti")   // a lost rep takes its group
-      .where(col(idCol) === col("__rep") || !col("__selfq"))
-      .select(col(idCol), col("cell").cast("long").as("cell"))
   }
 
   /** [[semDedup]]'s corpus-scaled cluster count: one cluster per

@@ -170,7 +170,8 @@ object Urls {
     *
     * `blocklist`: optional one-column (`domain`) registrable-domain
     * blocklist, applied FIRST — blocked rows never reach the dedup
-    * exchange and never consume cap slots ([[blocklistFilter]]).
+    * exchange and never consume cap slots ([[blocklistFilter]], in its
+    * broadcast form).
     * `capPerRegistrable`: cap at the eTLD+1 granularity
     * ([[registrableDomain]], RefinedWeb's actual budget — subdomain
     * farms share one cap) instead of per host; adds a
@@ -178,10 +179,9 @@ object Urls {
   def urlFront(df: DataFrame, urlCol: String, idCol: String = "doc_id",
                maxPerDomain: Int = 1000, salt: String = "cap",
                blocklist: Option[DataFrame] = None,
-               blocklistBroadcast: Boolean = true,
                capPerRegistrable: Boolean = false): DataFrame = {
     val gated = blocklist match {
-      case Some(b) => blocklistFilter(df, urlCol, b, blocklistBroadcast)
+      case Some(b) => blocklistFilter(df, urlCol, b)
       case None => df
     }
     // materialized ONCE: the two-phase cap reads its input twice (the
@@ -229,10 +229,8 @@ object Urls {
   def crawlFrontier(df: DataFrame, rules: DataFrame, blocklist: DataFrame,
                     hostRanks: DataFrame, urlCol: String = "url",
                     idCol: String = "doc_id", maxPerDomain: Int = 1000,
-                    salt: String = "cap",
-                    blocklistBroadcast: Boolean = true): DataFrame = {
-    val gated = Robots.robotsGate(
-      blocklistFilter(df, urlCol, blocklist, blocklistBroadcast),
+                    salt: String = "cap"): DataFrame = {
+    val gated = Robots.robotsGate(blocklistFilter(df, urlCol, blocklist),
       rules, urlCol)
     // materialized ONCE — the two-phase cap's two passes would
     // otherwise each re-run the blocklist→robots→dedup subtree (the

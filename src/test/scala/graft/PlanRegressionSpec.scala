@@ -78,10 +78,6 @@ class PlanRegressionSpec extends SparkSpec {
       "spanDedup" -> graft.ops.Dedup.spanDedup(docs),
       "naiveBayes" -> graft.ops.LangModel.naiveBayes(docs),
       "unigramScore" -> graft.ops.LangModel.unigramScore(docs),
-      "naiveBayes(collapseExact)" ->
-        graft.ops.LangModel.naiveBayes(docs, collapseExact = true),
-      "unigramScore(collapseExact)" ->
-        graft.ops.LangModel.unigramScore(docs, collapseExact = true),
       "setSimilarityJoin" ->
         graft.ops.SetSimilarity.setSimilarityJoin(docs, thresholdPct = 70),
       "containmentJoin" ->
@@ -108,22 +104,18 @@ class PlanRegressionSpec extends SparkSpec {
     // execution is needed — an earlier version paid a full NB run via
     // a noop write and then walked this same initial plan anyway.
     val docs = spark.read.parquet(s"$dir/documents.parquet")
-    for ((name, df) <- Seq(
-        "direct" -> graft.ops.LangModel.naiveBayes(docs),
-        "collapsed" -> graft.ops.LangModel.naiveBayes(docs, collapseExact = true))) {
-      var generates = 0
-      def walk(p: org.apache.spark.sql.execution.SparkPlan): Unit = p match {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          walk(a.executedPlan)
-        case g: org.apache.spark.sql.execution.GenerateExec =>
-          generates += 1; g.children.foreach(walk)
-        case other => other.children.foreach(walk)
-      }
-      walk(df.queryExecution.executedPlan)
-      assert(generates == 0,
-        s"naiveBayes($name): $generates inline token explode(s) — the tf " +
-          "pass is no longer structurally materialized")
+    var generates = 0
+    def walk(p: org.apache.spark.sql.execution.SparkPlan): Unit = p match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        walk(a.executedPlan)
+      case g: org.apache.spark.sql.execution.GenerateExec =>
+        generates += 1; g.children.foreach(walk)
+      case other => other.children.foreach(walk)
     }
+    walk(graft.ops.LangModel.naiveBayes(docs).queryExecution.executedPlan)
+    assert(generates == 0,
+      s"naiveBayes: $generates inline token explode(s) — the tf " +
+        "pass is no longer structurally materialized")
   }
 
   test("crossUnigramScore scans each corpus side exactly once") {

@@ -93,31 +93,6 @@ class LangModelSpec extends SparkSpec {
     assert(out(1L) === "a" && out(2L) === "a")
   }
 
-  test("collapseExact paths are row-identical to the direct formulations") {
-    // dup-heavy corpus: 6 copies of one text (split across labels — the
-    // collapsed class totals weight per-(stream, label)), 2 of another,
-    // a unique doc, an empty doc, and a cross-label exact pair
-    val rows =
-      (1L to 4L).map(i => (i, "alpha beta alpha", "a")) ++
-      (5L to 6L).map(i => (i, "alpha beta alpha", "b")) ++
-      Seq((7L, "gamma delta", "a"), (8L, "gamma delta", "b"),
-        (9L, "epsilon zeta eta", "b"), (10L, "", "a"))
-    val docs = rows.toDF("doc_id", "text", "source")
-    val uniDirect = LangModel.unigramScore(docs).orderBy("doc_id").collect()
-    val uniColl = LangModel.unigramScore(docs, collapseExact = true)
-      .orderBy("doc_id").collect()
-    assert(uniDirect.toSeq === uniColl.toSeq)
-    val nbDirect = LangModel.naiveBayes(docs).orderBy("doc_id").collect()
-    val nbColl = LangModel.naiveBayes(docs, collapseExact = true)
-      .orderBy("doc_id").collect()
-    assert(nbDirect.toSeq === nbColl.toSeq)
-    // vocabK cut must agree too (weighted vs raw counts rank identically)
-    val nbD1 = LangModel.naiveBayes(docs, vocabK = 2).orderBy("doc_id").collect()
-    val nbC1 = LangModel.naiveBayes(docs, vocabK = 2, collapseExact = true)
-      .orderBy("doc_id").collect()
-    assert(nbD1.toSeq === nbC1.toSeq)
-  }
-
   test("bigramInterpolatedScore: hand-computed micro-nats, short docs (0, null), repeated text scores lower") {
     import spark.implicits._
     val docs = Seq(
@@ -463,7 +438,10 @@ class LangModelSpec extends SparkSpec {
     val eval = Seq(
       (10L, "a b"),      // both in vocab
       (11L, "a zz"),     // one OOV token
-      (12L, "qq qq")     // fully OOV → null average
+      (12L, "qq qq"),    // fully OOV → null average
+      (13L, " a \t b  "),  // whitespace-split: 10's token stream
+      (14L, "A, b!"),    // case and punctuation stay: two OOV tokens
+      (15L, "")          // token-free → absent
     ).toDF("doc_id", "text")
     val got = LangModel.crossUnigramScore(train, eval).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2),
@@ -473,6 +451,9 @@ class LangModelSpec extends SparkSpec {
     assert(got(10L) === ((2L, 0L, Some((nlpA + nlpB) / 2))))
     assert(got(11L) === ((2L, 1L, Some(nlpA))))
     assert(got(12L) === ((2L, 2L, None)))
+    assert(got(13L) === got(10L))
+    assert(got(14L) === ((2L, 2L, None)))
+    assert(!got.contains(15L))
   }
 
   test("perplexityBuckets: value-threshold terciles; ties share a bucket; null scores surface as na") {
@@ -520,23 +501,5 @@ class LangModelSpec extends SparkSpec {
     assert((1L to 3L).forall(gb(_) == "head") &&
       (17L to 19L).forall(gb(_) == "tail"))
     assert((11L to 13L).forall(gb(_) == "head"))
-  }
-
-  test("crossUnigramScore collapsed eval is output-identical to direct") {
-    import spark.implicits._
-    val train = Seq((1L, "a a b c d"), (2L, "a b")).toDF("doc_id", "text")
-    val eval = Seq(
-      (10L, "a b"), (11L, "a b"),          // exact dups — one stream
-      (12L, "A, b!"),                       // same stream after normalize
-      (13L, "a zz"),                        // partial OOV
-      (14L, "qq qq"),                       // fully OOV
-      (15L, "")                             // token-free — absent both ways
-    ).toDF("doc_id", "text")
-    val direct = LangModel.crossUnigramScore(train, eval)
-      .orderBy("doc_id").collect().map(_.toSeq)
-    val collapsed = LangModel.crossUnigramScore(train, eval, collapseExact = true)
-      .orderBy("doc_id").collect().map(_.toSeq)
-    assert(direct.toSeq === collapsed.toSeq)
-    assert(direct.length === 5)   // 15 absent
   }
 }

@@ -524,48 +524,34 @@ class SimilaritySpec extends SparkSpec {
     assert(rec.values.forall { case (n, ppm) => n == 3L && ppm == 1000000L })
   }
 
-  test("semDedup collapseExact is output-identical to direct") {
-    // adversarial mix: identical copies (exact groups), near-dups
-    // ACROSS groups (rep-level edges must close transitively through
-    // copies), identical zero vectors (cosine 0 — copies must all
-    // survive), and a singleton
+  test("semDedup: zero-vector copies survive at t > 0, lose at t = 0") {
+    // cos(0, 0) is defined 0, so identical zero vectors are duplicates
+    // only at thresholds ≤ 0; both sit in cell 0 (nearest_cell breaks
+    // the all-zero tie to the lowest cell)
     val corpus = Seq(
-      (0L, Array(1.0f, 0.0f)),        // group A rep
+      (0L, Array(1.0f, 0.0f)),
       (1L, Array(1.0f, 0.0f)),        // exact copy of 0
       (7L, Array(1.0f, 0.0f)),        // exact copy of 0
-      (2L, Array(0.999f, 0.001f)),    // near-dup of A → same component
+      (2L, Array(0.999f, 0.001f)),    // near-dup of 0
       (3L, Array(0.999f, 0.001f)),    // exact copy of 2
-      (10L, Array(0.0f, 1.0f)),       // group B rep
+      (10L, Array(0.0f, 1.0f)),
       (11L, Array(0.0f, 1.0f)),       // exact copy of 10
       (30L, Array(0.0f, 0.0f)),       // zero vector
-      (31L, Array(0.0f, 0.0f)),       // identical zero — must survive too
+      (31L, Array(0.0f, 0.0f)),       // identical zero
       (20L, Array(-1.0f, 0.5f))       // singleton
     ).toDF("vec_id", "embedding")
-    for (t <- Seq(0.99, 0.4)) {
-      val direct = Similarity.semDedup(corpus, threshold = t, nlist = 2)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val collapsed = Similarity.semDedup(corpus, threshold = t, nlist = 2,
-          collapseExact = true)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(collapsed === direct, s"threshold $t")
-      assert(direct.map(_._1).intersect(Set(30L, 31L)) === Set(30L, 31L),
+    def kept(t: Double): Set[Long] =
+      Similarity.semDedup(corpus, threshold = t, nlist = 2)
+        .collect().map(_.getLong(0)).toSet
+    for (t <- Seq(0.99, 0.4))
+      assert(kept(t).intersect(Set(30L, 31L)) === Set(30L, 31L),
         s"zero vectors must all survive at threshold $t")
-    }
-    // and on the real corpus with operator defaults
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val d = Similarity.semDedup(emb).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val c = Similarity.semDedup(emb, collapseExact = true).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(c === d)
+    assert(!kept(0.0).contains(31L), "at t = 0 the zero copy is a duplicate")
   }
 
-  test("semDedup collapse keeps null-element vectors distinct from their null-dropped twins") {
-    // the digest must NOT collapse [1,null,2] with [1,2]: concat_ws
-    // silently drops null elements, so without the null sentinel both
-    // hash to "1.0,2.0" and members inherit a keep/drop fate the
-    // direct path never assigns (cosine reads a null slot as 0.0, so
-    // [1,null,2]·[1,2] ≈ 0.447 — NOT a duplicate at t=0.99).
+  test("semDedup: a null-element copy loses, its null-dropped twin survives") {
+    // cosine reads a null slot as 0.0: [1,null,2] matches its copy
+    // exactly, but [1,null,2]·[1,2] ≈ 0.447 — NOT a duplicate at 0.99.
     // maxTrain = 3 keeps the null-free low ids as the training sample
     // (trainedCentroids collects the sample driver-side and cannot
     // unbox null elements), matching how a crawl corpus trains on a
@@ -577,48 +563,11 @@ class SimilaritySpec extends SparkSpec {
       (10L, Seq[java.lang.Float](1.0f, null, 2.0f)),  // null-element vector
       (11L, Seq[java.lang.Float](1.0f, null, 2.0f)),  // identical copy — must lose to 10
       (12L, Seq[java.lang.Float](1.0f, 2.0f))         // null-DROPPED twin — must survive
-    ).map { case (id, v) => (id, v) }
+    )
     val corpus = rows.toDF("vec_id", "embedding")
-    for (t <- Seq(0.99, 0.4)) {
-      val direct = Similarity.semDedup(corpus, threshold = t, nlist = 2, maxTrain = 3)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val collapsed = Similarity.semDedup(corpus, threshold = t, nlist = 2, maxTrain = 3,
-          collapseExact = true)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(collapsed === direct, s"threshold $t")
-    }
-    // the discriminating regime: at 0.99 the twins are NOT duplicates
-    val kept = Similarity.semDedup(corpus, threshold = 0.99, nlist = 2, maxTrain = 3,
-        collapseExact = true)
+    val kept = Similarity.semDedup(corpus, threshold = 0.99, nlist = 2, maxTrain = 3)
       .collect().map(_.getLong(0)).toSet
     assert(kept.contains(10L) && kept.contains(12L) && !kept.contains(11L))
-  }
-
-  test("semDedup collapse matches direct on randomized duplicated corpora (seeded fuzz)") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(62)
-    for (trial <- 1 to 3) {
-      // ~15 base vectors (some zero), each duplicated 1-4×; coarse
-      // component values force near-dup collisions and exact ties
-      val base = Seq.fill(15)(
-        if (rnd.nextInt(6) == 0) Array.fill(4)(0.0f)
-        else Array.fill(4)((rnd.nextInt(3) - 1).toFloat))
-      var id = 0L
-      val rows = base.flatMap { v =>
-        Seq.fill(1 + rnd.nextInt(4)) { id += 1; (id, v) }
-      }
-      val corpus = rows.toDF("vec_id", "embedding")
-      // includes non-positive thresholds: cos(0,0) is defined 0, so at
-      // t <= 0 identical ZERO vectors DO qualify and must lose — the
-      // opposite of the positive-threshold zero-vector edge
-      val t = Seq(-0.1, 0.0, 0.3, 0.7, 0.99)(rnd.nextInt(5))
-      val direct = Similarity.semDedup(corpus, threshold = t, nlist = 2)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val collapsed = Similarity.semDedup(corpus, threshold = t, nlist = 2,
-          collapseExact = true)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(collapsed === direct, s"trial $trial threshold $t")
-    }
   }
 
   test("semDedupNlist scales with corpus size between its floor and cap") {
