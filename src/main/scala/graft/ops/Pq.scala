@@ -260,9 +260,9 @@ object Pq {
     * recall lost to quantization while still doing ~all its work over
     * code bytes: on the uniform synthetic fixture (the ANN worst case)
     * pure ADC@5 recall is ~0.22-0.36 and refine=4 lifts it to ~0.8+
-    * (PqProbe prints the curve; PqSpec pins the floor). When the
-    * shortlist saturates the corpus the result is EXACTLY
-    * [[Similarity.bruteForceTopK]] (spec-asserted), because the final
+    * (SCALE.md round-11 addendum 3 records the curve; PqSpec pins the
+    * floor). When the shortlist saturates the corpus the result is
+    * EXACTLY [[Similarity.bruteForceTopK]] (spec-asserted), because the final
     * ranking is exact cosine over a superset of the true top k.
     * Output is the cosine-ANN family schema
     * (query_id, rnk, neighbor_id, cos_sim·1e-4-rounded). */
@@ -324,9 +324,10 @@ object Pq {
     * v − centroid(cell(v)), and the codebooks train on the SAMPLE's
     * residuals — the codebooks then only cover the within-cell
     * displacement distribution instead of the whole space, the
-    * standard recall lever at small nprobe (PqProbe prints the
-    * measured delta vs raw encoding at equal nprobe). The serve-time
-    * cost shape is unchanged except the query LUT: it is computed per
+    * standard recall lever at small nprobe (SCALE.md's round-12
+    * addendum records the measured delta vs raw encoding at equal
+    * nprobe). The serve-time cost shape is unchanged except the query
+    * LUT: it is computed per
     * PROBED CELL from q − centroid (nprobe · m·ks doubles per query —
     * still broadcast-sized; see [[ivfPqTopKIndexed]]). The mode is
     * persisted in `dir/params` and every reader honors it; a dir
@@ -340,8 +341,8 @@ object Pq {
     * per encoded row and per query LUT; candidate-scan cost unchanged
     * (codes-only either way). Opt-in like residual: measured on the
     * synthetic fixtures it helps correlated/clustered corpora and is
-    * ~neutral on uniform ones (PqProbe prints the deltas; SCALE.md
-    * records them).
+    * ~neutral on uniform ones (SCALE.md's round-13 OPQ addendum records
+    * the deltas).
     *
     * Layout: `dir/centroids` (cell, centroid — the IVF router),
     * `dir/codebooks` (s, j, centroid — the PQ cube),
@@ -1290,9 +1291,10 @@ object Pq {
     * must reach back to the full-precision SOURCE relation (a second
     * storage system at serving time); this path serves shortlist
     * re-ranks entirely from the index at 2 bytes/dim, trading ~2⁻¹¹
-    * relative rounding on the corpus side — PqProbe measures the
-    * recall delta vs source-refine (≈0 on the synthetic fixtures; a
-    * half carries 11 significant bits, ADC codes carry 4).
+    * relative rounding on the corpus side — SCALE.md's round-14 fp16
+    * addendum records the recall delta vs source-refine (≈0 on the
+    * synthetic fixtures; a half carries 11 significant bits, ADC codes
+    * carry 4).
     * The ADC shortlist stage is byte-identical to
     * [[ivfPqTopKRefined]]'s (same index, same codes — spec-asserted
     * its scan stays codes-only: vec16 is pruned); only the fetch

@@ -132,8 +132,9 @@ object Sampling {
 
   /** Reference formulation: one row_number window per key. Identical
     * output; serializes each key through a single task's sort at scale —
-    * exists as the spec's equivalence oracle, the small-data path and
-    * CapProbe's naive arm (SCALE.md). */
+    * exists as the spec's equivalence oracle and the small-data path;
+    * its hot-task cost at a viral key is measured in SCALE.md's round-18
+    * addendum. */
   def capPerKeyNaive(df: DataFrame, key: Column, id: Column, maxPerKey: Int,
                      salt: String = "cap"): DataFrame = {
     require(maxPerKey > 0, s"maxPerKey ($maxPerKey) must be positive")

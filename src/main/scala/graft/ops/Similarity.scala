@@ -729,8 +729,8 @@ object Similarity {
   // the coarse quantizer is a PRODUCT of two half-space quantizers
   // with kPerHalf centroids each. Cell count = kPerHalf², per-row
   // assignment cost O(kPerHalf·d) instead of the flat O(nlist·d) —
-  // measured on the 1M×64 replica (PqProbe imi): at nlist=16384 the
-  // flat NearestCell scan costs 42 s where the two half-space
+  // measured on the 1M×64 replica (SCALE.md round-14 addendum 3): at
+  // nlist=16384 the flat NearestCell scan costs 42 s where the two half-space
   // NearestCells cost 0.4–0.6 s (111×), and the gap grows as √nlist.
   // This is the routing structure a 100 TB corpus needs once nlist
   // crosses ~10⁴ (nlist ~ √n wants ~10⁵ there), where the flat

@@ -124,6 +124,17 @@ class SparkEntrySpec extends SparkSpec {
     }
   }
 
+  test("entry counts sf0.001 orders per region, one row per region") {
+    val sf = "/root/testdata/sf0.001"
+    val out = SparkEntry.entry(spark).collect()
+    assert(out.length === 5)
+    val regions = spark.read.parquet(s"$sf/region.parquet")
+      .select("r_name").collect().map(_.getString(0)).sorted.toSeq
+    assert(out.map(_.getAs[String]("region_name")).toSeq === regions)
+    assert(out.map(_.getAs[Long]("order_cnt")).sum ===
+      spark.read.parquet(s"$sf/orders.parquet").count())
+  }
+
   test("every query has one oracle: static or data-dependent") {
     val static = SparkEntry.oracleSql.keySet
     val data = SparkEntry.dataOracles.keySet

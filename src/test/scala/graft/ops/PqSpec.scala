@@ -204,10 +204,10 @@ class PqSpec extends SparkSpec {
     val truth = Similarity.bruteForceTopK(q, em, k = 5)
     val recall = Similarity.annRecall(truth, approx)
       .agg(avg("recall_ppm")).head().getDouble(0)
-    // measured 0.26 on this fixture (PqProbe: uniform random unit
-    // vectors — the quantization worst case; real embedding corpora
-    // cluster). The floor pins against silent ranking/probing
-    // regressions, not against noise
+    // measured 0.26 on this fixture (SCALE.md round-11 addendum 3:
+    // uniform random unit vectors — the quantization worst case; real
+    // embedding corpora cluster). The floor pins against silent
+    // ranking/probing regressions, not against noise
     assert(recall > 150000, s"ivf-pq recall@5 collapsed: $recall ppm")
   }
 
