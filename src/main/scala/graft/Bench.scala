@@ -133,19 +133,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // static conf (builder-time only): the suite's two timed passes
-      // run ALL queries in pass 1 before ANY repeats in pass 2 — at the
-      // 100-entry default every pass-2 stage has been evicted and
-      // recompiles. Sizing lives in GraftSession.CodegenCacheEntries.
-      .config("spark.sql.codegen.cache.maxEntries", GraftSession.CodegenCacheEntries)
-      .getOrCreate()
+    val spark = GraftSession.builder("graft-bench").getOrCreate()
     GraftSession.tune(spark)
     // ERROR, not WARN: stray WARN lines interleaving with the final
     // metric line have already cost one round of bench history
@@ -273,29 +261,12 @@ object Bench {
           System.err.println(s"[bench] $name failed: ${e.getMessage}"); false
         }
       val t = (System.nanoTime() - t0) / 1e9
-      // between queries (untimed): drop the finished query's
-      // localCheckpoint blocks — iterative operators (PageRank, CC, BPE)
-      // persist their loop carriers, and 100+ queries of accumulated
+      // between queries (untimed): drop the finished query's cached,
+      // checkpointed and broadcast blocks — 100+ queries of accumulated
       // blocks shrink execution memory for everything measured after
-      // them (the round-3 q89 measurement-context gap). clearCache
-      // additionally drops any cached relations (InMemoryRelation) a
-      // query left behind — the r12 verdict's residue-bounding ask:
-      // ~4% landed on 119 untouched queries when five heavy queries
-      // joined the suite. Then let the ContextCleaner reap broadcast
-      // blocks.
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      // broadcast cleanup is ASYNC by default (ContextCleaner reaps a
-      // broadcast only after the driver GCs its handle and the reap
-      // queue drains) — measured r13: ~100 MB of broadcast blocks
-      // survived a full pass of unpersist+clearCache+gc. Drop them
-      // synchronously: every broadcast here is a per-plan exchange of
-      // a finished query (no operator holds a cross-query handle —
-      // audited), so between queries the drop is safe and makes each
-      // query's storage pool independent of its predecessors.
-      org.apache.spark.graftbridge.BlockResidue
-        .dropAllBroadcastBlocks(spark.sparkContext)
+      // them (the round-3 q89 measurement-context gap, the r12 residue
+      // verdict, the r13 broadcast residue)
+      GraftSession.dropQueryState(spark)
       System.gc()
       (ok, t)
     }

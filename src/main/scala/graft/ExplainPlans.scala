@@ -4,7 +4,8 @@ package graft
   * pushdown / broadcast / codegen spans (run via dev/run.sh). */
 object ExplainPlans {
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.local("explain")
+    val spark = GraftSession.builder("explain").getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val names = if (args.length > 1) args.drop(1).toSet else
       Set("q02_revenue_filter", "q03_orders_by_segment", "q07_top5_nations_monthly",

@@ -11,8 +11,8 @@ import graft.functions.{AggExpressions, EntityExpressions, TextExpressions, Vect
   * expressions as SQL functions so the `spark.sql` surface can call them
   * (`SELECT cosine_similarity(a.embedding, b.embedding) ...`).
   *
-  * Use either at session build time:
-  * {{{ SparkSession.builder().withExtensions(new GraftExtensions) }}}
+  * Use either at session build time
+  * (`GraftSession.builder(...).withExtensions(new GraftExtensions)`)
   * or on an existing session via [[GraftExtensions.register]] (the path
   * GraftSession.tune takes, since the driver owns session creation).
   */

@@ -2,7 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Central SparkSession factory for the graft engine.
+/** The graft engine's one SparkSession factory: Bench, Verify, perfbench,
+  * the specs and every dev main build their session with [[builder]], so
+  * they all plan under the same confs.
   *
   * Design notes (scale-first):
   *  - `spark.sql.ansi.enabled=false`: the reference pipeline relies on
@@ -15,6 +17,9 @@ import org.apache.spark.sql.SparkSession
   *  - shuffle partitions sized to cores locally; on a real cluster this is
   *    superseded by AQE's coalescing from
   *    `spark.sql.adaptive.coalescePartitions.initialPartitionNum`.
+  *  - `spark.sql.autoBroadcastJoinThreshold` stays at Spark's 10 MB
+  *    default: a join is planned as a broadcast only when its estimate
+  *    says so, and AQE still switches to one when runtime sizes allow.
   */
 object GraftSession {
   def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
@@ -25,10 +30,8 @@ object GraftSession {
     * re-run query finds its compiled classes evicted and recompiles
     * (bench pass 2 runs AFTER all of pass 1 — every stage recompiled;
     * measured 28% of the full suite). 2000 covers the suite twice
-    * over; the single source of truth for every session builder —
-    * Bench builds its own driver-contract session and must size the
-    * cache identically or it re-measures the regression this fixed. */
-  val CodegenCacheEntries = "2000"
+    * over. */
+  private val CodegenCacheEntries = "2000"
 
   def builder(appName: String, cores: Int = cpus): SparkSession.Builder =
     SparkSession.builder()
@@ -40,7 +43,6 @@ object GraftSession {
       .config("spark.sql.ansi.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64 * 1024 * 1024).toString)
       // events.parquet carries TIMESTAMP(NANOS) which Spark's parquet
       // reader rejects; read as epoch-nanos LongType instead.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -54,17 +56,12 @@ object GraftSession {
       // see CodegenCacheEntries
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries)
 
-  def local(appName: String = "graft"): SparkSession = {
-    val s = builder(appName).getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
   /** Apply graft-required configs to an externally-created session (e.g.
-    * the driver-owned session in Verify/Bench). Only runtime-settable
-    * confs. Idempotent and cheap on repeat calls: re-setting confs and
-    * re-registering functions on every query invalidates analyzer/plan
-    * caches (~0.2s per call measured), so tune once per session. */
+    * one its caller hands to `SparkEntry.entry`). Only runtime-settable
+    * confs. Idempotent and cheap on repeat calls:
+    * re-setting confs and re-registering functions on every query
+    * invalidates analyzer/plan caches (~0.2s per call measured), so tune
+    * once per session. */
   private val TunedMarker = "spark.graft.tuned"
 
   def tune(spark: SparkSession): SparkSession = {
@@ -77,5 +74,23 @@ object GraftSession {
       spark.conf.set(TunedMarker, "true")
     }
     spark
+  }
+
+  /** Drop what a finished query left in the session, so the next one
+    * starts on a clean block manager: cached relations
+    * (`InMemoryRelation`), every persistent RDD (the localCheckpoint
+    * blocks of iterative carriers — PageRank, CC, BPE — and shared
+    * prefix/gram relations) and every broadcast block. Broadcast cleanup
+    * is otherwise async (the ContextCleaner reaps a broadcast only after
+    * the driver GCs its handle; ~100 MB survived a full bench pass of
+    * unpersist + clearCache + gc), so the blocks are dropped
+    * synchronously. Only legal between queries: no operator holds a
+    * cached frame or broadcast handle across queries. */
+  def dropQueryState(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = false))
+    org.apache.spark.graftbridge.BlockResidue
+      .dropAllBroadcastBlocks(spark.sparkContext)
   }
 }

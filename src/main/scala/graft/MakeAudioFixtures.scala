@@ -4,8 +4,6 @@ import java.io.ByteArrayOutputStream
 
 import javax.sound.sampled.{AudioFileFormat, AudioFormat, AudioInputStream, AudioSystem}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.functions.AudioExpressions
 
 /** Dev tool: (re)generate the golden audio fixture at
@@ -79,8 +77,7 @@ object MakeAudioFixtures {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.builder("graft-audio-fixtures", cores = 4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     rows().toDF().coalesce(1)

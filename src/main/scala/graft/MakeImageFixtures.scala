@@ -5,8 +5,6 @@ import java.io.ByteArrayOutputStream
 
 import javax.imageio.ImageIO
 
-import org.apache.spark.sql.SparkSession
-
 import graft.functions.ImageExpressions
 
 /** Dev tool: (re)generate the golden image fixture at
@@ -88,8 +86,7 @@ object MakeImageFixtures {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.builder("graft-image-fixtures", cores = 4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     rows().toDF().coalesce(1)

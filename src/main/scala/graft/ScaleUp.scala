@@ -93,7 +93,8 @@ object ScaleUp {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.local("scale-up")
+    val spark = GraftSession.builder("scale-up").getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
     val ok = 100000000L   // order-key stride
     val ck = 10000000L    // cust-key stride
     if (args.headOption.contains("vecs")) {

@@ -149,7 +149,7 @@ object LshIndex {
     * experiment pointed to. Layout-only: same schema, same rows;
     * every existing reader works unchanged (batch probes just don't
     * benefit — thousands of uniform probe hashes touch every row
-    * group, see [[nearDuplicates]]'s maxPushedBandHashes doc). */
+    * group, see [[pointNearDuplicates]]'s fallback). */
   private def rangeSorted(rel: DataFrame, key: String,
                           sortedFiles: Int): DataFrame =
     rel.repartitionByRange(sortedFiles, col(key)).sortWithinPartitions(key)
@@ -478,50 +478,26 @@ object LshIndex {
     * own survivors as `batch-<id>`, and probing without excluding that
     * shard would find the batch duplicating ITSELF and drop every row.
     *
-    * `pushBandFilter = true` is the POINT-PROBE serving path ("is this
-    * one document a duplicate of 10M indexed streams?"): the probe's
-    * distinct band hashes are collected (bounded by the probe's size —
-    * a one-doc probe has numHashes/rowsPerBand of them) and pushed as
-    * a `band_hash IN (...)` parquet filter on the index bands scan.
-    * Over a range-sorted bands layout ([[build]]'s
-    * `pointLayout = true`) the parquet reader then skips every
-    * row group whose min/max cannot contain a probed hash — the scan
-    * reads a few row groups instead of the corpus-sized relation. The
-    * filter is implied by the join, so results are identical
-    * (spec-asserted); if the probe carries more than
-    * `maxPushedBandHashes` distinct hashes the pushdown is skipped —
-    * beyond `spark.sql.parquet.pushdown.inFilterThreshold` (default
-    * 10) Spark pushes only a [min,max] range, which is vacuous for
-    * uniform hashes, and a BATCH probe's thousands of uniform hashes
-    * touch every row group anyway (the r13 SCALE.md measurement) —
-    * the full-scan band join is already the right plan there. */
+    * The point-probe serving path ("is this one document a duplicate
+    * of 10M indexed streams?") is [[pointNearDuplicates]], which pushes
+    * the probe's band hashes into the bands scan and falls back to this
+    * plan for batch probes: a batch's thousands of uniform hashes touch
+    * every row group anyway (the r13 SCALE.md measurement), so the
+    * full-scan band join is the right plan there. */
   def nearDuplicates(probe: DataFrame, dir: String, threshold: Double = 0.5,
                      textCol: String = "text",
-                     excludeShards: Seq[String] = Nil,
-                     pushBandFilter: Boolean = false,
-                     maxPushedBandHashes: Int = 10): DataFrame = {
+                     excludeShards: Seq[String] = Nil): DataFrame = {
     val spark = probe.sparkSession
     val root = Generations.root(spark, dir)
     val p = params(spark, dir)
     def shardFilter(df: DataFrame): DataFrame =
       if (excludeShards.isEmpty) df
       else df.where(!col("shard").isin(excludeShards: _*))
-    val xBands0 = shardFilter(Io.readParquet(spark, s"$root/bands"))
+    val xBands = shardFilter(Io.readParquet(spark, s"$root/bands"))
     val xSh = shardFilter(Io.readParquet(spark, s"$root/shingles"))
     val xMembers = shardFilter(Io.readParquet(spark, s"$root/members"))
     val (mProbe, repProbe) = collapsed(probe, textCol)
     val qBands = bandsOf(repProbe, textCol, p)
-    val xBands =
-      if (!pushBandFilter) xBands0
-      else {
-        // one extra probe-sized job (collapse + sign the probe twice —
-        // point probes are the use case, so this is ~free); cap + 1 so
-        // an over-cap probe is detected without collecting everything
-        val hashes = qBands.select("band_hash").distinct()
-          .limit(maxPushedBandHashes + 1).collect().map(_.getString(0))
-        if (hashes.length > maxPushedBandHashes) xBands0
-        else xBands0.where(pushedIsin(col("band_hash"), hashes.toSeq))
-      }
     val cand = qBands.alias("q")
       .join(xBands.alias("x"),
         col("q.band_id") === col("x.band_id") &&

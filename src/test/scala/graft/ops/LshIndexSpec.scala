@@ -1,6 +1,11 @@
 package graft.ops
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.grafttest.ListenerBusHelper.waitUntilListenerBusEmpty
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.SparkSpec
 
@@ -175,23 +180,31 @@ class LshIndexSpec extends SparkSpec {
     assert(asSet(LshIndex.nearDuplicates(probe, dir, threshold = 0.3)) ===
       asSet(Dedup.crossNearDuplicates(probe, corpus,
         shingleSize = 2, threshold = 0.3)))
-    // ONE-doc probe (the point-lookup shape): pushed filter must not
+    // ONE-doc probe (the point-lookup shape): the point path must not
     // change results, and the In predicate must reach the parquet scan
+    // of the bands relation. That scan runs in pointNearDuplicates'
+    // collected phase 1, not in the returned plan, so it is captured
+    // from the session's executed queries.
     val one = probe.where(col("doc_id") === 100L)
-    val pushed = LshIndex.nearDuplicates(one, dir, threshold = 0.3,
-      pushBandFilter = true)
-    assert(asSet(pushed) ===
-      asSet(LshIndex.nearDuplicates(one, dir, threshold = 0.3)))
-    val scans = pushed.queryExecution.executedPlan.toString.linesIterator
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+          durationNs: Long): Unit = plans.add(qe.executedPlan.toString)
+      override def onFailure(funcName: String, qe: QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val pointed = try {
+      val out = asSet(LshIndex.pointNearDuplicates(one, dir, threshold = 0.3))
+      waitUntilListenerBusEmpty(spark.sparkContext)
+      out
+    } finally spark.listenerManager.unregister(listener)
+    assert(pointed === asSet(LshIndex.nearDuplicates(one, dir, threshold = 0.3)))
+    val scans = plans.asScala.flatMap(_.linesIterator)
       .filter(l => l.contains("Scan parquet") && l.contains("bands"))
       .mkString("\n")
     assert(scans.contains("PushedFilters: [In(band_hash"),
       s"no pushed In(band_hash) on the bands scan:\n$scans")
-    // over-cap probe (the whole batch): pushdown silently skipped,
-    // results identical — the full-scan band join is the right plan
-    assert(asSet(LshIndex.nearDuplicates(probe, dir, threshold = 0.3,
-        pushBandFilter = true, maxPushedBandHashes = 2)) ===
-      asSet(LshIndex.nearDuplicates(probe, dir, threshold = 0.3)))
   }
 
   test("sorted compaction: results identical; sorted layout survives the rewrite") {
@@ -206,8 +219,8 @@ class LshIndexSpec extends SparkSpec {
       sortedFiles = 2)
     assert(asSet(LshIndex.nearDuplicates(probe, sortedDir,
       threshold = 0.3)) === before)
-    assert(asSet(LshIndex.nearDuplicates(probe.where(col("doc_id") === 100L),
-        sortedDir, threshold = 0.3, pushBandFilter = true)) ===
+    assert(asSet(LshIndex.pointNearDuplicates(probe.where(col("doc_id") === 100L),
+        sortedDir, threshold = 0.3)) ===
       before.filter(_._1 == 100L))
   }
 
