@@ -2,21 +2,22 @@ package graft.ops
 
 import org.apache.spark.sql.SparkSession
 
-/** The generation-pointer protocol shared by the serving indexes
-  * ([[LshIndex]], [[Similarity]]'s IVF index): relations live under
-  * `dir/gen-<n>`, a one-line `dir/CURRENT` names the live generation,
-  * and an in-place compaction writes generation n+1 then atomically
-  * swaps the pointer — the previous generation stays on disk for
-  * in-flight readers. Flat (non-versioned) directories resolve to
-  * themselves, so every index function serves both layouts.
+/** The one on-disk layout of the serving indexes ([[LshIndex]],
+  * [[Similarity]]'s IVF and IMI indexes, [[Pq]]'s PQ, IVF-PQ and IMI-PQ
+  * indexes): relations live under `dir/gen-<n>`, and a one-line
+  * `dir/CURRENT` names the live generation. Every build and every
+  * in-place compaction writes through [[writeNext]]: generation n+1
+  * (`gen-0` in a fresh dir) is written in full, then the pointer swaps
+  * atomically — the previous generation stays on disk for in-flight
+  * readers. Every reader and appender resolves [[root]] once.
   *
   * The swap is a small-file create + delete + rename; during the brief
   * window with no `CURRENT`, [[root]] serves the newest COMPLETE
   * generation — [[setCurrent]] drops a `_GRAFT_GEN_COMPLETE` marker
   * into the generation before touching the pointer (the
   * [[Restart]] `_GRAFT_COMMITTED` convention), so a reader in the gap
-  * merely sees the compaction a moment early, and a generation a
-  * compaction crashed mid-write (no marker yet) is never served even
+  * merely sees the new generation a moment early, and a generation a
+  * writer crashed mid-write (no marker yet) is never served even
   * if a second crash also lost `CURRENT`. Generations from builds
   * predating the marker carry none; with no marked generation the
   * fallback is the newest generation (their writers always completed
@@ -29,7 +30,7 @@ import org.apache.spark.sql.SparkSession
   * (or operator) re-runs [[setCurrent]] with the generation it was
   * swapping to — the marker is already in place and the swap is
   * idempotent. */
-private[ops] object Generations {
+private[graft] object Generations {
   val CurrentFile = "CURRENT"
   val CompleteMarker = "_GRAFT_GEN_COMPLETE"
   private val GenRe = "^gen-(\\d+)$".r
@@ -49,13 +50,8 @@ private[ops] object Generations {
       })
   }
 
-  def isVersioned(spark: SparkSession, dir: String): Boolean = {
-    val (fs, _) = fsOf(spark, dir)
-    numbers(spark, dir).nonEmpty ||
-      fs.exists(new org.apache.hadoop.fs.Path(dir, CurrentFile))
-  }
-
-  /** The directory actually holding the live relations. */
+  /** The directory holding the live relations; fails on a dir that
+    * holds no generation. */
   def root(spark: SparkSession, dir: String): String = {
     val (fs, _) = fsOf(spark, dir)
     val cur = new org.apache.hadoop.fs.Path(dir, CurrentFile)
@@ -65,11 +61,13 @@ private[ops] object Generations {
                  finally in.close()
       s"$dir/$name"
     } else numbers(spark, dir) match {
-      case Nil  => dir
+      case Nil  =>
+        sys.error(s"Generations: $dir holds no index generation " +
+          s"(no $CurrentFile, no gen-<n>)")
       case gens =>
         // no CURRENT (the swap gap, or a writer crash inside it):
         // prefer the newest generation whose writer finished it —
-        // an unmarked newer generation is a compaction that crashed
+        // an unmarked newer generation is a write that crashed
         // mid-write and must not be served. No marked generation at
         // all = a pre-marker layout; newest is then correct (see the
         // object doc).
@@ -98,12 +96,14 @@ private[ops] object Generations {
       sys.error(s"Generations: CURRENT swap rename failed for $dir -> $gen")
   }
 
-  /** The next generation name for an in-place compaction; refuses flat
-    * layouts (their compaction contract is the caller-side cutover). */
-  def nextGen(spark: SparkSession, dir: String, flatAdvice: String): String = {
-    require(isVersioned(spark, dir),
-      s"in-place compaction needs a versioned index; $dir has no " +
-        s"generations — $flatAdvice")
-    s"gen-${numbers(spark, dir).max + 1}"
+  /** Write generation n+1 (`gen-0` in a fresh or empty dir) through
+    * `write`, which gets the generation's directory, then make it
+    * live with [[setCurrent]]. Builds and in-place compactions both
+    * land here; a crashed write leaves an unmarked generation that is
+    * never served, and the next write skips past it. */
+  def writeNext(spark: SparkSession, dir: String)(write: String => Unit): Unit = {
+    val gen = s"gen-${(numbers(spark, dir) :+ -1).max + 1}"
+    write(s"$dir/$gen")
+    setCurrent(spark, dir, gen)
   }
 }

@@ -23,16 +23,21 @@ import graft.io.Io
   * 100× dup-density replica a per-doc index probed at 4.01 s/probe vs
   * 4.61 one-shot — the collapse is what restores the serving win).
   *
-  *  - `dir/members`  — (doc_id, rep): every doc's representative (the
+  * The relations live in the live generation `dir/gen-<n>`
+  * ([[Generations]]):
+  *
+  *  - `members`  — (doc_id, rep): every doc's representative (the
   *    min doc_id of its token-stream group);
-  *  - `dir/bands`    — (rep, band_id, band_hash): LSH bucket keys, one
+  *  - `bands`    — (rep, band_id, band_hash): LSH bucket keys, one
   *    set per DISTINCT stream;
-  *  - `dir/shingles` — (rep, sh): the 64-bit shingle-hash sets exact
+  *  - `shingles` — (rep, sh): the 64-bit shingle-hash sets exact
   *    Jaccard verification needs (longs, never strings — the
   *    [[Dedup.jaccardVerify]] reasoning);
-  *  - `dir/meta`     — one row of LSH parameters, validated on every
+  *  - `meta`     — one row of LSH parameters, validated on every
   *    probe/append so an index can never be served with mismatched
-  *    hashing (silently-zero recall otherwise).
+  *    hashing (silently-zero recall otherwise), plus the base
+  *    relations' sorted-file count (0 = unsorted) so compaction keeps
+  *    the build's layout.
   *
   * Each ingest unit owns a `shard=<id>` partition subdirectory (the
   * build is `shard=base`), so appends are per-shard OVERWRITES —
@@ -62,36 +67,18 @@ object LshIndex {
   /** LSH parameters pinned at build time. */
   final case class Params(numHashes: Int, rowsPerBand: Int, shingleSize: Int)
 
-  // ---- generations ---------------------------------------------------
-  //
-  // Two layouts are served transparently:
-  //  - FLAT (what [[build]] writes): relations directly under `dir` —
-  //    the one-corpus, compact-by-cutover shape; [[compact]] writes a
-  //    new flat dir and the caller swaps pointers.
-  //  - VERSIONED (what [[buildVersioned]] writes): relations under
-  //    `dir/gen-<n>` with a one-line `dir/CURRENT` naming the live
-  //    generation. The pointer swap lives IN the engine, which is what
-  //    lets a long-running ingest stream compact itself mid-flight
-  //    ([[compactInPlace]], `ingestDedupStream(compactEvery)`).
-  //
-  // Every read/append resolves through [[Generations.root]]; flat dirs resolve
-  // to themselves, so all flat-layout behavior is unchanged.
-
-  /** [[build]] into a VERSIONED layout: relations land in `dir/gen-0`
-    * and `dir/CURRENT` points at it. Required for [[compactInPlace]];
-    * everything else (append/probe/verdicts) works identically on
-    * either layout. */
-  def buildVersioned(corpus: DataFrame, dir: String, textCol: String = "text",
-                     numHashes: Int = 8, rowsPerBand: Int = 2,
-                     shingleSize: Int = 3): Unit = {
-    build(corpus, s"$dir/gen-0", textCol, numHashes, rowsPerBand, shingleSize)
-    Generations.setCurrent(corpus.sparkSession, dir, "gen-0")
-  }
-
-  /** In-place compaction for a VERSIONED index: write the compacted
-    * relations as generation n+1, then atomically swap `CURRENT`. The
+  /** Compact an index that has accreted many append shards: write the
+    * relations as generation n+1 with every shard folded into `base`,
+    * then atomically swap `CURRENT` ([[Generations.writeNext]]). The
     * previous generation stays on disk for in-flight readers (and is
-    * the operator's to reap).
+    * the operator's to reap). A year of daily batches is ~365 shard
+    * directories per relation, and at object-store scale the listing
+    * fan-out eventually dominates probe startup. Compaction is a
+    * straight row rewrite (reps are already per-shard, and cross-shard
+    * duplicate reps are benign by the shard contract), so probe
+    * results are identical (spec-asserted). The base relations keep
+    * the build's layout: a `pointLayout` index is rewritten
+    * range-sorted into the same file count (read from `meta`).
     *
     * `keepShards`: shard ids copied through AS THEIR OWN SHARD instead
     * of folding into `base`. The load-bearing use is the streaming
@@ -102,30 +89,23 @@ object LshIndex {
     * older than the in-flight one need no such protection — Structured
     * Streaming replays at most the current batch. */
   def compactInPlace(spark: SparkSession, dir: String,
-                     keepShards: Seq[String] = Nil,
-                     pointLayout: Boolean = false,
-                     sortedFiles: Int = 64): Unit = {
-    val next = Generations.nextGen(spark, dir,
-      "use compact(dir, newDir) + a caller-side cutover for flat layouts")
+                     keepShards: Seq[String] = Nil): Unit = {
     val root = Generations.root(spark, dir)
-    writeMeta(spark, s"$dir/$next", params(spark, dir))
-    def rewrite(rel: String): Unit = {
-      val all = Io.readParquet(spark, s"$root/$rel")
-      val base = all.where(!col("shard").isin(keepShards: _*)).drop("shard")
-      val (df, opts) =
-        if (pointLayout)
-          (rangeSorted(base, PointLayoutKeys(rel), sortedFiles),
-            Map("parquet.block.size" -> PointLayoutBlockBytes))
-        else (base, Map.empty[String, String])
-      df.write.options(opts).mode("overwrite")
-        .parquet(s"$dir/$next/$rel/shard=base")
-      keepShards.foreach { ks =>
-        all.where(col("shard") === ks).drop("shard")
-          .write.mode("overwrite").parquet(s"$dir/$next/$rel/shard=$ks")
+    val p = params(spark, dir)
+    val files = readSortedFiles(spark, root)
+    Generations.writeNext(spark, dir) { gen =>
+      writeMeta(spark, gen, p, files)
+      def rewrite(rel: String): Unit = {
+        val all = Io.readParquet(spark, s"$root/$rel")
+        writeRel(all.where(!col("shard").isin(keepShards: _*)).drop("shard"),
+          rel, s"$gen/$rel/shard=base", files)
+        keepShards.foreach { ks =>
+          writeRel(all.where(col("shard") === ks).drop("shard"),
+            rel, s"$gen/$rel/shard=$ks", 0)
+        }
       }
+      rewrite("members"); rewrite("bands"); rewrite("shingles")
     }
-    rewrite("members"); rewrite("bands"); rewrite("shingles")
-    Generations.setCurrent(spark, dir, next)
   }
 
   private def bandsOf(repDocs: DataFrame, textCol: String, p: Params): DataFrame =
@@ -180,31 +160,39 @@ object LshIndex {
     (members, repDocs)
   }
 
-  private def writeShard(docs: DataFrame, dir: String, textCol: String,
+  /** Write one serve relation; `sortedFiles` > 0 writes it
+    * [[rangeSorted]] into that many files with point-layout row
+    * groups, 0 writes it as it comes. */
+  private def writeRel(df: DataFrame, rel: String, path: String,
+                       sortedFiles: Int): Unit =
+    if (sortedFiles > 0)
+      rangeSorted(df, PointLayoutKeys(rel), sortedFiles).write
+        .option("parquet.block.size", PointLayoutBlockBytes)
+        .mode("overwrite").parquet(path)
+    else df.write.mode("overwrite").parquet(path)
+
+  private def writeShard(docs: DataFrame, root: String, textCol: String,
                          p: Params, shardId: String,
-                         pointLayout: Boolean = false,
-                         sortedFiles: Int = 64): Unit = {
+                         sortedFiles: Int = 0): Unit = {
     val (members, repDocs) = collapsed(docs, textCol)
-    def write(rel: String, df: DataFrame): Unit = {
-      val (out, opts) =
-        if (pointLayout)
-          (rangeSorted(df, PointLayoutKeys(rel), sortedFiles),
-            Map("parquet.block.size" -> PointLayoutBlockBytes))
-        else (df, Map.empty[String, String])
-      out.write.options(opts).mode("overwrite")
-        .parquet(s"$dir/$rel/shard=$shardId")
-    }
+    def write(rel: String, df: DataFrame): Unit =
+      writeRel(df, rel, s"$root/$rel/shard=$shardId", sortedFiles)
     write("members", members.select(col("doc_id"), col("__rep").as("rep")))
     write("bands", bandsOf(repDocs, textCol, p))
     write("shingles", shinglesOf(repDocs, textCol, p))
   }
 
-  private def writeMeta(spark: SparkSession, dir: String, p: Params): Unit = {
+  private def writeMeta(spark: SparkSession, root: String, p: Params,
+                        sortedFiles: Int): Unit = {
     import spark.implicits._
-    Seq((p.numHashes, p.rowsPerBand, p.shingleSize))
-      .toDF("num_hashes", "rows_per_band", "shingle_size")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
+    Seq((p.numHashes, p.rowsPerBand, p.shingleSize, sortedFiles))
+      .toDF("num_hashes", "rows_per_band", "shingle_size", "sorted_files")
+      .coalesce(1).write.mode("overwrite").parquet(s"$root/meta")
   }
+
+  /** The base relations' sorted-file count (0 = unsorted). */
+  private def readSortedFiles(spark: SparkSession, root: String): Int =
+    Io.readParquet(spark, s"$root/meta").select("sorted_files").head().getInt(0)
 
   /** The parameters an index was built with. */
   def params(spark: SparkSession, dir: String): Params = {
@@ -214,20 +202,26 @@ object LshIndex {
   }
 
   /** Build the index: one collapse pass over the corpus writing the
-    * three derived relations (as `shard=base`) plus the parameter row.
+    * three derived relations (as `shard=base`) plus the parameter row
+    * into the next generation of `dir` (`gen-0` in a fresh dir; a
+    * rebuild into a live dir swaps to a new generation and leaves the
+    * old one on disk).
     * `pointLayout = true` writes each base relation range-sorted by
     * its point-lookup key ([[rangeSorted]]: bands by band_hash,
     * shingles/members by rep) — the point-probe serving layout;
-    * appended shards stay unsorted until the next point-layout
-    * compaction (a point probe still prunes the base, which
-    * dominates). */
+    * appended shards stay unsorted until the next
+    * [[compactInPlace]], which re-sorts them into the base (a point
+    * probe still prunes the base, which dominates). */
   def build(corpus: DataFrame, dir: String, textCol: String = "text",
             numHashes: Int = 8, rowsPerBand: Int = 2,
             shingleSize: Int = 3, pointLayout: Boolean = false,
             sortedFiles: Int = 64): Unit = {
     val p = Params(numHashes, rowsPerBand, shingleSize)
-    writeMeta(corpus.sparkSession, dir, p)
-    writeShard(corpus, dir, textCol, p, "base", pointLayout, sortedFiles)
+    val files = if (pointLayout) sortedFiles else 0
+    Generations.writeNext(corpus.sparkSession, dir) { gen =>
+      writeMeta(corpus.sparkSession, gen, p, files)
+      writeShard(corpus, gen, textCol, p, "base", files)
+    }
   }
 
   /** Append a new corpus shard — the daily-ingest maintenance step.
@@ -423,40 +417,6 @@ object LshIndex {
       .join(xMembers.select(col("doc_id").as("index_doc_id"),
         col("rep").as("__rx")), "__rx")
       .select(col("doc_id"), col("index_doc_id"), col("jaccard"))
-  }
-
-  /** Compact an index that has accreted many append shards into a
-    * fresh single-shard index at `newDir` — the maintenance pass for
-    * long-running ingest: a year of daily batches is ~365 shard
-    * directories per relation, and at object-store scale the listing
-    * fan-out (and per-shard small files) eventually dominates probe
-    * startup. Compaction is a straight row rewrite (reps are already
-    * per-shard, and cross-shard duplicate reps are benign by the shard
-    * contract), so probe results over `newDir` are identical
-    * (spec-asserted).
-    *
-    * Deliberately NOT in-place: an in-place rewrite has a crash window
-    * where both the old shards and the compacted copy exist and every
-    * affected pair is emitted twice. Writing a fresh dir leaves the
-    * live index untouched until the caller's own atomic pointer swap
-    * (the standard index-versioning move); the old dir is then the
-    * caller's to reap. */
-  def compact(spark: SparkSession, dir: String, newDir: String,
-              pointLayout: Boolean = false,
-              sortedFiles: Int = 64): Unit = {
-    writeMeta(spark, newDir, params(spark, dir))
-    val root = Generations.root(spark, dir)
-    def rewrite(rel: String): Unit = {
-      val base = Io.readParquet(spark, s"$root/$rel").drop("shard")
-      val (df, opts) =
-        if (pointLayout)
-          (rangeSorted(base, PointLayoutKeys(rel), sortedFiles),
-            Map("parquet.block.size" -> PointLayoutBlockBytes))
-        else (base, Map.empty[String, String])
-      df.write.options(opts).mode("overwrite")
-        .parquet(s"$newDir/$rel/shard=base")
-    }
-    rewrite("members"); rewrite("bands"); rewrite("shingles")
   }
 
   /** Probe: every (probe doc, index doc) near-duplicate pair at or above

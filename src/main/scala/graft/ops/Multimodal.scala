@@ -7,22 +7,21 @@ import graft.functions.ImageExpressions
 
 /** Multimodal-column plumbing: images/audio/video ride through the engine
   * as opaque `binary` payloads with typed metadata; decode/feature steps
-  * run per-partition in batches.
+  * are scan-local expressions.
   *
   * Two decode tiers:
   *  - REAL decode on public JDK APIs (no native deps): images via
-  *    javax.imageio + Graphics2D ([[imageFeaturesExpr]] /
-  *    [[decodeImageFeatures]] / [[resize]], golden-fixture q110) and
-  *    audio via javax.sound.sampled ([[audioFeaturesExpr]] /
-  *    [[decodeAudioFeatures]], golden-fixture q111). At 100 TB the
-  *    decode stage is
-  *    partition-parallel with no shuffle: features attach to rows in
-  *    place, and the mapPartitions shape is where a heavier JNI/FFI
-  *    codec (video, audio) would slot in with per-partition init.
-  *  - The opaque-payload tier ([[withPayload]] + [[fakeDecode]]):
-  *    deterministic pseudo-features over ARBITRARY binary — the schema/
-  *    batching smoke path for payloads that are not images at all
-  *    (q25 runs it over text-derived bytes corpus-wide).
+  *    javax.imageio + Graphics2D ([[imageFeaturesExpr]] / [[resize]],
+  *    golden-fixture q110) and audio via javax.sound.sampled
+  *    ([[audioFeaturesExpr]], golden-fixture q111). At 100 TB the
+  *    decode stage is partition-parallel with no shuffle: features
+  *    attach to rows in place. [[resize]]'s mapPartitions shape is
+  *    where a heavier JNI/FFI codec (video, audio) would slot in with
+  *    per-partition init.
+  *  - The opaque-payload tier ([[withPayload]] + [[decodeFeaturesExpr]]):
+  *    deterministic pseudo-features over ARBITRARY binary — the schema
+  *    smoke path for payloads that are not images at all (q25 runs it
+  *    over text-derived bytes corpus-wide).
   */
 object Multimodal {
 
@@ -31,10 +30,6 @@ object Multimodal {
     * with the SAME JDK decoder the engine runs — so the DuckDB oracle
     * can read expectations no SQL engine could compute itself. */
   val ImageFixture = "/root/repo/fixtures/images.parquet"
-
-  final case class ImageFeatures(doc_id: Long, media_type: String,
-                                 n_bytes: Long, width: Int, height: Int,
-                                 channels: Int, pixel_md5: String)
 
   /** Expression-path real decode: one scan, decode in place, null-row
     * for undecodable payloads (dropped here — a corrupt object must
@@ -51,28 +46,8 @@ object Multimodal {
         col("d.channels").cast("long").as("channels"),
         col("d.pixel_md5").as("pixel_md5"))
 
-  /** mapPartitions twin of [[imageFeaturesExpr]] — the per-partition
-    * batch boundary a native decoder needs (amortized codec init).
-    * Output rows are identical (spec-asserted). */
-  def decodeImageFeatures(media: DataFrame): Dataset[ImageFeatures] = {
-    implicit val enc = Encoders.product[ImageFeatures]
-    media.select(col("doc_id"), col("payload"), col("media_type"))
-      .as[MediaRow](Encoders.product[MediaRow]).mapPartitions { rows =>
-        // per-partition init of a heavier codec would go here
-        rows.flatMap { r =>
-          ImageExpressions.decodeImage(r.payload).map { case (w, h, c, m) =>
-            ImageFeatures(r.doc_id, r.media_type, r.payload.length.toLong,
-              w, h, c, m)
-          }
-        }
-      }
-  }
-
   final case class MediaRow(doc_id: Long, payload: Array[Byte],
                             media_type: String)
-  final case class MediaFeatures(doc_id: Long, media_type: String,
-                                 n_bytes: Int, width: Int, height: Int,
-                                 checksum: String)
 
   /** Synthesize a binary payload column from text (stand-in for real image
     * bytes; the engine treats it as opaque either way). */
@@ -82,24 +57,10 @@ object Multimodal {
       to_binary(col(textCol), lit("utf-8")).as("payload"),
       concat(lit("image/fake-"), col("doc_id") % 3).as("media_type"))
 
-  /** STUB decoder: deterministic pseudo-dimensions + md5 checksum. A real
-    * implementation calls the codec here, batch-per-partition. */
-  def fakeDecode(bytes: Array[Byte]): (Int, Int, String) = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val hex = md.digest(bytes).map("%02x".format(_)).mkString
-    val n = bytes.length
-    (n % 640, (n * 7) % 480, hex)
-  }
-
   /** Golden audio fixture (checked in): deterministic WAV bytes + the
     * expected decode results, both from graft.MakeAudioFixtures with
     * the SAME javax.sound.sampled stack the engine runs. */
   val AudioFixture = "/root/repo/fixtures/audio.parquet"
-
-  final case class AudioFeatures(doc_id: Long, media_type: String,
-                                 n_bytes: Long, sample_rate: Long,
-                                 channels: Long, bits: Long,
-                                 n_frames: Long, pcm_md5: String)
 
   /** Expression-path real audio decode — [[imageFeaturesExpr]]'s
     * pattern on the second modality; undecodable payloads drop. */
@@ -116,21 +77,6 @@ object Multimodal {
         col("d.n_frames").as("n_frames"),
         col("d.pcm_md5").as("pcm_md5"))
 
-  /** mapPartitions twin of [[audioFeaturesExpr]] (spec-asserted equal). */
-  def decodeAudioFeatures(media: DataFrame): Dataset[AudioFeatures] = {
-    implicit val enc = Encoders.product[AudioFeatures]
-    media.select(col("doc_id"), col("payload"), col("media_type"))
-      .as[MediaRow](Encoders.product[MediaRow]).mapPartitions { rows =>
-        rows.flatMap { r =>
-          graft.functions.AudioExpressions.decodeAudio(r.payload).map {
-            case (sr, ch, b, fr, m) =>
-              AudioFeatures(r.doc_id, r.media_type, r.payload.length.toLong,
-                sr.toLong, ch.toLong, b.toLong, fr, m)
-          }
-        }
-      }
-  }
-
   final case class ResizedMedia(doc_id: Long, media_type: String,
                                 width: Int, height: Int,
                                 thumbnail: Array[Byte])
@@ -139,8 +85,8 @@ object Multimodal {
     * PNG-re-encoded thumbnail bytes ([[ImageExpressions.resizeToPng]]).
     * Undecodable payloads are dropped, same null semantics as the
     * decode paths; output bytes are deterministic (software raster,
-    * spec-asserted). Same per-partition batch boundary as
-    * [[decodeImageFeatures]] — scan-local, no shuffle. */
+    * spec-asserted). A per-partition batch boundary (the place a
+    * native codec's init would go) — scan-local, no shuffle. */
   def resize(media: DataFrame, targetW: Int, targetH: Int): Dataset[ResizedMedia] = {
     implicit val enc = Encoders.product[ResizedMedia]
     media.select(col("doc_id"), col("payload"), col("media_type"))
@@ -150,19 +96,6 @@ object Multimodal {
             ResizedMedia(r.doc_id, r.media_type, targetW, targetH, png))
         }
       }
-  }
-
-  /** Per-partition batch "decode": the mapPartitions boundary a native
-    * decoder needs (amortized codec init per partition, not per row). */
-  def decodeFeatures(media: DataFrame): Dataset[MediaFeatures] = {
-    implicit val enc = Encoders.product[MediaFeatures]
-    media.as[MediaRow](Encoders.product[MediaRow]).mapPartitions { rows =>
-      // per-partition init of a real decoder would go here
-      rows.map { r =>
-        val (w, h, sum) = fakeDecode(r.payload)
-        MediaFeatures(r.doc_id, r.media_type, r.payload.length, w, h, sum)
-      }
-    }
   }
 
   /** Frame sampling: treat the payload as a sequence of fixed-size
@@ -182,8 +115,9 @@ object Multimodal {
         md5(to_binary(col("frame"), lit("utf-8"))).as("frame_md5"))
   }
 
-  /** Expression-only twin of decodeFeatures (same output, pure Catalyst —
-    * used by the oracle-checked query; proves the two paths agree). */
+  /** Deterministic pseudo-features over an opaque payload: byte count,
+    * pseudo-dimensions (n % 640, 7n % 480) and md5 checksum, pure
+    * Catalyst — the oracle-checked q25 path. */
   def decodeFeaturesExpr(media: DataFrame): DataFrame =
     media.select(
       col("doc_id"), col("media_type"),

@@ -200,8 +200,9 @@ object Pq {
       excludeSelf = excludeSelf)
   }
 
-  /** Train-once / serve-many PQ index: `dir/codebooks` (s, j, centroid)
-    * and `dir/codes` (id, codes) — the raw vectors are NOT persisted;
+  /** Train-once / serve-many PQ index: `codebooks` (s, j, centroid)
+    * and `codes` (id, codes) in the next generation of `dir`
+    * ([[Generations]]) — the raw vectors are NOT persisted;
     * the index is the m-codes-per-vector relation PQ exists to serve
     * from. Codebook doubles round-trip parquet exactly, so
     * [[pqTopKIndexed]] is bit-identical to [[topK]] with the same
@@ -211,25 +212,28 @@ object Pq {
                    idCol: String = "vec_id",
                    vecCol: String = "embedding"): Unit = {
     val cb = trainCodebooks(corpus, m, ks, maxIter, maxTrain, idCol, vecCol)
-    writeCodebooks(corpus.sparkSession, cb, dir)
-    widthGuarded(corpus, vecCol, cb).select(col(idCol).as("id"),
-        PqExpressions.pq_encode_bytes(col(vecCol), asSeq(cb)).as("codes"))
-      .write.mode("overwrite").parquet(s"$dir/codes/shard=base")
+    Generations.writeNext(corpus.sparkSession, dir) { gen =>
+      writeCodebooks(corpus.sparkSession, cb, gen)
+      widthGuarded(corpus, vecCol, cb).select(col(idCol).as("id"),
+          PqExpressions.pq_encode_bytes(col(vecCol), asSeq(cb)).as("codes"))
+        .write.mode("overwrite").parquet(s"$gen/codes/shard=base")
+    }
   }
 
   private def writeCodebooks(spark: SparkSession,
                              cb: Array[Array[Array[Double]]],
-                             dir: String): Unit = {
+                             gen: String): Unit = {
     import spark.implicits._
     cb.zipWithIndex.flatMap { case (book, s) =>
       book.zipWithIndex.map { case (c, j) => (s, j, c.toSeq) }
     }.toSeq.toDF("s", "j", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/codebooks")
+      .coalesce(1).write.mode("overwrite").parquet(s"$gen/codebooks")
   }
 
-  /** Read a persisted codebook cube back as exact doubles. */
-  def readCodebooks(spark: SparkSession, dir: String): Array[Array[Array[Double]]] = {
-    val rows = Io.readParquet(spark, s"$dir/codebooks")
+  /** Read a generation's persisted codebook cube back as exact doubles. */
+  private[ops] def readCodebooks(spark: SparkSession,
+                                 root: String): Array[Array[Array[Double]]] = {
+    val rows = Io.readParquet(spark, s"$root/codebooks")
       .orderBy("s", "j").collect()
     val m = rows.map(_.getInt(0)).max + 1
     Array.tabulate(m) { s =>
@@ -330,8 +334,7 @@ object Pq {
     * LUT: it is computed per
     * PROBED CELL from q − centroid (nprobe · m·ks doubles per query —
     * still broadcast-sized; see [[ivfPqTopKIndexed]]). The mode is
-    * persisted in `dir/params` and every reader honors it; a dir
-    * without params (pre-residual builds) serves as raw.
+    * persisted in `params` and every reader honors it.
     *
     * `opq = true` additionally trains an orthogonal rotation of the
     * encode space ([[trainOpq]] — faiss's `OPQ..` prefix) and encodes
@@ -344,11 +347,12 @@ object Pq {
     * ~neutral on uniform ones (SCALE.md's round-13 OPQ addendum records
     * the deltas).
     *
-    * Layout: `dir/centroids` (cell, centroid — the IVF router),
-    * `dir/codebooks` (s, j, centroid — the PQ cube),
-    * `dir/params` (m, ks, residual, opq),
-    * `dir/rotation` (r, vec — the OPQ matrix, present iff opq),
-    * `dir/corpus/shard=<id>/cell=<n>/` (id, codes) with the same
+    * Layout, in the next generation of `dir` ([[Generations]]):
+    * `centroids` (cell, centroid — the IVF router),
+    * `codebooks` (s, j, centroid — the PQ cube),
+    * `params` (m, ks, residual, opq, refine_half, point layout),
+    * `rotation` (r, vec — the OPQ matrix, present iff opq),
+    * `corpus/shard=<id>/cell=<n>/` (id, codes) with the same
     * per-shard overwrite/replay contract as [[Similarity
     * .buildIvfIndex]]. */
   def buildIvfPqIndex(corpus: DataFrame, dir: String, m: Int, ks: Int = 16,
@@ -388,15 +392,17 @@ object Pq {
       else (None, trainCodebooksFromSample(cbTrain, m, ks, maxIter))
     val spark = corpus.sparkSession
     import spark.implicits._
-    cent.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("cell", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids")
-    writeCodebooks(spark, cb, dir)
-    rot.foreach(writeRotation(spark, _, dir))
-    writeParams(spark, dir, m, cb(0).length, residual, opq, refineHalf,
-      pointLayout, pointLayoutFiles)
-    writeIvfPqShard(corpus, dir, cent, cb, "base", idCol, vecCol, residual,
-      rot, refineHalf, if (pointLayout) pointLayoutFiles else 0)
+    Generations.writeNext(spark, dir) { gen =>
+      cent.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
+        .toDF("cell", "centroid")
+        .coalesce(1).write.mode("overwrite").parquet(s"$gen/centroids")
+      writeCodebooks(spark, cb, gen)
+      rot.foreach(writeRotation(spark, _, gen))
+      writeParams(spark, gen, m, cb(0).length, residual, opq, refineHalf,
+        pointLayout, pointLayoutFiles)
+      writeIvfPqShard(corpus, gen, cent, cb, "base", idCol, vecCol, residual,
+        rot, refineHalf, if (pointLayout) pointLayoutFiles else 0)
+    }
   }
 
   /** The residual-trained codebook cube [[buildIvfPqIndex]] trains
@@ -529,11 +535,11 @@ object Pq {
         cent), m, ks, maxIter)
 
   private def writeRotation(spark: SparkSession, r: Array[Array[Double]],
-                            dir: String): Unit = {
+                            gen: String): Unit = {
     import spark.implicits._
     r.zipWithIndex.map { case (row, i) => (i, row.toSeq) }.toSeq
       .toDF("r", "vec")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/rotation")
+      .coalesce(1).write.mode("overwrite").parquet(s"$gen/rotation")
   }
 
   /** The persisted OPQ rotation, if this index has one. By-name
@@ -557,12 +563,10 @@ object Pq {
     }
   }
 
-  /** `dir/params` (m, ks, residual, opq, refine_half): the sizing/mode
-    * facts a reader must not have to guess. Absent file = a pre-params
-    * build: raw encoding (the only mode that existed then); absent
-    * `opq`/`refine_half` column = a pre-that-feature artifact (no
-    * rotation / no stored refine vectors). */
-  private def writeParams(spark: SparkSession, dir: String,
+  /** `params` (m, ks, residual, opq, refine_half, point_layout,
+    * point_layout_files): the sizing/mode facts a reader must not have
+    * to guess. Every IVF-PQ and IMI-PQ build writes it. */
+  private def writeParams(spark: SparkSession, gen: String,
                           m: Int, ks: Int, residual: Boolean,
                           opq: Boolean = false,
                           refineHalf: Boolean = false,
@@ -572,7 +576,7 @@ object Pq {
     Seq((m, ks, residual, opq, refineHalf, pointLayout, pointLayoutFiles))
       .toDF("m", "ks", "residual", "opq", "refine_half",
         "point_layout", "point_layout_files")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/params")
+      .coalesce(1).write.mode("overwrite").parquet(s"$gen/params")
   }
 
   /** Collect the persisted (cell, centroid) router relation into a
@@ -593,29 +597,13 @@ object Pq {
     rows.map(_.getSeq[Double](1).toArray)
   }
 
-  private[ops] def readResidualFlag(spark: SparkSession, root: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$root/params")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p) &&
-      Io.readParquet(spark, s"$root/params").select("residual")
-        .head().getBoolean(0)
-  }
+  private[ops] def readResidualFlag(spark: SparkSession, root: String): Boolean =
+    readBoolParam(spark, root, "residual")
 
-  /** Read one optional boolean params column, false when the params
-    * file or the column predates the feature — the convention every
-    * mode flag here follows (a pre-feature artifact serves without the
-    * feature, never errors). */
+  /** One boolean mode flag from the generation's `params`. */
   private def readBoolParam(spark: SparkSession, root: String,
-                            colName: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$root/params")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) false
-    else {
-      val params = Io.readParquet(spark, s"$root/params")
-      params.columns.contains(colName) &&
-        params.select(colName).head().getBoolean(0)
-    }
-  }
+                            colName: String): Boolean =
+    Io.readParquet(spark, s"$root/params").select(colName).head().getBoolean(0)
 
   /** Whether this index stores [[graft.functions.VectorExpressions
     * .Fp16Pack]]ed refine vectors beside its codes. */
@@ -625,10 +613,11 @@ object Pq {
   /** Whether this index's corpus shards are cell-sorted bounded files
     * (the point-serving layout) instead of `cell=<n>/` hive
     * partitions; (flag, files-per-shard). */
-  private[ops] def readPointLayout(spark: SparkSession, root: String): (Boolean, Int) =
-    if (!readBoolParam(spark, root, "point_layout")) (false, 0)
-    else (true, Io.readParquet(spark, s"$root/params")
-      .select("point_layout_files").head().getInt(0))
+  private[ops] def readPointLayout(spark: SparkSession, root: String): (Boolean, Int) = {
+    val r = Io.readParquet(spark, s"$root/params")
+      .select("point_layout", "point_layout_files").head()
+    (r.getBoolean(0), r.getInt(1))
+  }
 
   /** Append a shard to a [[buildIvfPqIndex]] directory under the frozen
     * centroids AND frozen codebooks — one scan-local NearestCell +
@@ -657,7 +646,7 @@ object Pq {
     * rotated ([[graft.functions.VectorExpressions.Rotate]], the OPQ
     * space). The subtraction/rotation compose under the byte encode —
     * still a single projection, no shuffle, no second pass. */
-  private def writeIvfPqShard(vectors: DataFrame, dir: String,
+  private def writeIvfPqShard(vectors: DataFrame, root: String,
                               cent: Array[Array[Double]],
                               cb: Array[Array[Array[Double]]],
                               shardId: String,
@@ -690,7 +679,7 @@ object Pq {
          Seq(graft.functions.VectorExpressions.fp16_pack(col(vecCol)).as("vec16"))
        else Nil)
     writeShardRows(widthGuarded(vectors, vecCol, cb).select(cols: _*),
-      s"$dir/corpus/shard=$shardId", pointLayoutFiles)
+      s"$root/corpus/shard=$shardId", pointLayoutFiles)
   }
 
   /** The ONE corpus-shard writer (build, append, and compaction all
@@ -910,11 +899,6 @@ object Pq {
       excludeSelf)
   }
 
-  /** [[buildIvfPqIndex]] into the VERSIONED layout ([[Generations]]
-    * protocol, the [[Similarity.buildIvfIndexVersioned]] twin):
-    * relations under `dir/gen-0`, the CURRENT pointer naming it.
-    * Required for [[compactIvfPqIndexInPlace]]; every read/append
-    * above serves either layout via [[Generations.root]]. */
   /** Build a Multi-D-ADC index (Babenko & Lempitsky CVPR'12 §5):
     * [[buildIvfPqIndex]]'s bytes-at-rest — m-byte PQ codes, never a
     * float — routed by [[Similarity.buildImiIndex]]'s PRODUCT coarse
@@ -922,8 +906,9 @@ object Pq {
     * O(kPerHalf·d) assignment per corpus row; the 121×-measured
     * routing-wall fix (SCALE.md r14 addendum 3) applied to the code
     * family, which is where a 100 TB corpus actually serves from.
-    * Layout: `centroids_h1`/`_h2` + `codebooks` + `params` +
-    * `corpus/shard=base` with cell = c1·kPerHalf + c2; the hive write
+    * Layout (in the next generation of `dir`): `centroids_h1`/`_h2` +
+    * `codebooks` + `params` + `corpus/shard=base` with
+    * cell = c1·kPerHalf + c2; the hive write
     * repartitions by cell (one file per cell — kPerHalf² dirs where
     * flat nlist was dozens); `pointLayout = true` writes cell-sorted
     * bounded files instead (the addendum-2 treatment, the right form
@@ -980,19 +965,21 @@ object Pq {
       else (None, trainCodebooksFromSample(cbTrain, m, ks, maxIter))
     val spark = corpus.sparkSession
     import spark.implicits._
-    def writeHalf(c: Array[Array[Double]], p: String): Unit =
-      c.toSeq.zipWithIndex.map { case (v, i) => (i, v.toSeq) }
-        .toDF("cell", "centroid")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/$p")
-    writeHalf(c1, "centroids_h1")
-    writeHalf(c2, "centroids_h2")
-    writeCodebooks(spark, cb, dir)
-    rot.foreach(writeRotation(spark, _, dir))
-    writeParams(spark, dir, m, cb(0).length, residual = residual,
-      opq = opq, refineHalf = false, pointLayout = pointLayout,
-      pointLayoutFiles = pointLayoutFiles)
-    writeImiPqShard(corpus, dir, c1, c2, cb, "base", idCol, vecCol,
-      residual, rot, if (pointLayout) pointLayoutFiles else 0)
+    Generations.writeNext(spark, dir) { gen =>
+      def writeHalf(c: Array[Array[Double]], p: String): Unit =
+        c.toSeq.zipWithIndex.map { case (v, i) => (i, v.toSeq) }
+          .toDF("cell", "centroid")
+          .coalesce(1).write.mode("overwrite").parquet(s"$gen/$p")
+      writeHalf(c1, "centroids_h1")
+      writeHalf(c2, "centroids_h2")
+      writeCodebooks(spark, cb, gen)
+      rot.foreach(writeRotation(spark, _, gen))
+      writeParams(spark, gen, m, cb(0).length, residual = residual,
+        opq = opq, refineHalf = false, pointLayout = pointLayout,
+        pointLayoutFiles = pointLayoutFiles)
+      writeImiPqShard(corpus, gen, c1, c2, cb, "base", idCol, vecCol,
+        residual, rot, if (pointLayout) pointLayoutFiles else 0)
+    }
   }
 
   /** Append a shard to a [[buildImiPqIndex]] directory under the
@@ -1009,12 +996,13 @@ object Pq {
       shardId.forall(c => c.isLetterOrDigit || c == '-' || c == '_'),
       s"shardId '$shardId' must be a non-'base' [A-Za-z0-9_-]+ token")
     val spark = shard.sparkSession
+    val root = Generations.root(spark, dir)
     def half(p: String) =
-      collectCentroidTable(Io.readParquet(spark, s"$dir/$p"))
-    val (pl, plFiles) = readPointLayout(spark, dir)
-    writeImiPqShard(shard, dir, half("centroids_h1"), half("centroids_h2"),
-      readCodebooks(spark, dir), shardId, idCol, vecCol,
-      readResidualFlag(spark, dir), readRotation(spark, dir),
+      collectCentroidTable(Io.readParquet(spark, s"$root/$p"))
+    val (pl, plFiles) = readPointLayout(spark, root)
+    writeImiPqShard(shard, root, half("centroids_h1"), half("centroids_h2"),
+      readCodebooks(spark, root), shardId, idCol, vecCol,
+      readResidualFlag(spark, root), readRotation(spark, root),
       if (pl) plFiles else 0)
   }
 
@@ -1023,7 +1011,7 @@ object Pq {
     * half-space NearestCells, codes from the (optionally decomposed
     * residual, optionally rotated) encode input — a single scan-local
     * projection either way. */
-  private def writeImiPqShard(vectors: DataFrame, dir: String,
+  private def writeImiPqShard(vectors: DataFrame, root: String,
                               c1: Array[Array[Double]],
                               c2: Array[Array[Double]],
                               cb: Array[Array[Array[Double]]],
@@ -1056,7 +1044,7 @@ object Pq {
       (cell1 * kk + cell2).as("cell"))
     writeShardRows(
       if (pointLayoutFiles > 0) rows else rows.repartition(col("cell")),
-      s"$dir/corpus/shard=$shardId", pointLayoutFiles)
+      s"$root/corpus/shard=$shardId", pointLayoutFiles)
   }
 
   /** Sample residuals under the PRODUCT router, driver-side — the
@@ -1130,15 +1118,16 @@ object Pq {
                 excludeSelf: Boolean = true,
                 filter: Option[DataFrame] = None): DataFrame = {
     val spark = queries.sparkSession
-    val cb = readCodebooks(spark, dir)
-    val c1 = Io.readParquet(spark, s"$dir/centroids_h1")
-    val c2 = Io.readParquet(spark, s"$dir/centroids_h2")
+    val root = Generations.root(spark, dir)
+    val cb = readCodebooks(spark, root)
+    val c1 = Io.readParquet(spark, s"$root/centroids_h1")
+    val c2 = Io.readParquet(spark, s"$root/centroids_h2")
     val q = widthGuarded(queries.select(col(idCol).as("query_id"),
       col(vecCol).as("qv")), "qv", cb)
     val probed = Similarity.imiRoutedCells(q, c1, c2, nprobe)
-    val corpus = shardFiltered(spark, dir, excludeShards)
-    adcOverCells(spark, dir, cb, c1, q, probed, corpus, k, excludeSelf,
-      residualOrigin = imiResidualOrigin(spark, dir, c1, c2),
+    val corpus = shardFiltered(spark, root, excludeShards)
+    adcOverCells(spark, root, cb, c1, q, probed, corpus, k, excludeSelf,
+      residualOrigin = imiResidualOrigin(spark, root, c1, c2),
       filterIds = filter)
   }
 
@@ -1147,10 +1136,10 @@ object Pq {
     * q2 − c2(cell mod K)) over the two kPerHalf-row half tables —
     * never the kPerHalf²-row product table. None when the index is
     * raw (adcOverCells ignores the origin there anyway). */
-  private def imiResidualOrigin(spark: SparkSession, dir: String,
+  private def imiResidualOrigin(spark: SparkSession, root: String,
                                 c1: DataFrame,
                                 c2: DataFrame): Option[Column] = {
-    if (!readResidualFlag(spark, dir)) return None
+    if (!readResidualFlag(spark, root)) return None
     val c1seq = collectCentroidTable(c1).map(_.toSeq).toSeq
     val c2seq = collectCentroidTable(c2).map(_.toSeq).toSeq
     val kk = c1seq.length
@@ -1181,9 +1170,10 @@ object Pq {
                      excludeSelf: Boolean = true,
                      maxProbedPairs: Int = 1024): DataFrame = {
     val spark = queries.sparkSession
-    val cb = readCodebooks(spark, dir)
-    val c1 = Io.readParquet(spark, s"$dir/centroids_h1")
-    val c2 = Io.readParquet(spark, s"$dir/centroids_h2")
+    val root = Generations.root(spark, dir)
+    val cb = readCodebooks(spark, root)
+    val c1 = Io.readParquet(spark, s"$root/centroids_h1")
+    val c2 = Io.readParquet(spark, s"$root/centroids_h2")
     val q = widthGuarded(queries.select(col(idCol).as("query_id"),
       col(vecCol).as("qv")), "qv", cb)
     val routing = Similarity.imiRoutedCells(q, c1, c2, nprobe)
@@ -1197,27 +1187,10 @@ object Pq {
     val probedCells = litRouting.join(broadcast(q), Seq("query_id"))
       .select(col("query_id"), col("qv"), col("cell"))
     val cells = pairs.map(_.getInt(1): Any).distinct.toSeq
-    val corpus = shardFiltered(spark, dir, excludeShards)
+    val corpus = shardFiltered(spark, root, excludeShards)
       .where(Pushdown.pushedIsin(col("cell"), cells))
-    adcOverCells(spark, dir, cb, c1, q, probedCells, corpus, k, excludeSelf,
-      residualOrigin = imiResidualOrigin(spark, dir, c1, c2))
-  }
-
-  def buildIvfPqIndexVersioned(corpus: DataFrame, dir: String, m: Int,
-                               ks: Int = 16, nlist: Int = 0,
-                               maxIter: Int = 5, maxTrain: Int = 4096,
-                               idCol: String = "vec_id",
-                               vecCol: String = "embedding",
-                               corpusSize: Long = 0L,
-                               residual: Boolean = false,
-                               opq: Boolean = false,
-                               refineHalf: Boolean = false,
-                               pointLayout: Boolean = false,
-                               pointLayoutFiles: Int = 64): Unit = {
-    buildIvfPqIndex(corpus, s"$dir/gen-0", m, ks, nlist, maxIter, maxTrain,
-      idCol, vecCol, corpusSize, residual, opq, refineHalf,
-      pointLayout, pointLayoutFiles)
-    Generations.setCurrent(corpus.sparkSession, dir, "gen-0")
+    adcOverCells(spark, root, cb, c1, q, probedCells, corpus, k, excludeSelf,
+      residualOrigin = imiResidualOrigin(spark, root, c1, c2))
   }
 
   /** In-place IVF-PQ compaction — [[Similarity.compactIvfIndexInPlace]]
@@ -1231,34 +1204,30 @@ object Pq {
     * (spec-asserted). */
   def compactIvfPqIndexInPlace(spark: SparkSession, dir: String,
                                keepShards: Seq[String] = Nil): Unit = {
-    val next = Generations.nextGen(spark, dir,
-      "build with buildIvfPqIndexVersioned for in-place compaction")
     val root = Generations.root(spark, dir)
-    Io.readParquet(spark, s"$root/centroids")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/$next/centroids")
-    Io.readParquet(spark, s"$root/codebooks")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/$next/codebooks")
-    // params (the residual/opq flags) and the rotation travel with the
-    // quantizers — codes in the rewritten shards were assigned under them
-    for (rel <- Seq("params", "rotation")) {
-      val p = new org.apache.hadoop.fs.Path(s"$root/$rel")
-      if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-        Io.readParquet(spark, s"$root/$rel")
-          .coalesce(1).write.mode("overwrite").parquet(s"$dir/$next/$rel")
-    }
-    val all = Io.readParquet(spark, s"$root/corpus")
     // the layout travels with the index: a point-layout index compacts
     // back into cell-sorted bounded files, a hive index into cell=<n>/
     // — the shared writeShardRows keeps the two recipes from drifting
     val (pl, plFiles) = readPointLayout(spark, root)
     val files = if (pl) plFiles else 0
-    writeShardRows(all.where(!col("shard").isin(keepShards: _*)).drop("shard"),
-      s"$dir/$next/corpus/shard=base", files)
-    keepShards.foreach { ks =>
-      writeShardRows(all.where(col("shard") === ks).drop("shard"),
-        s"$dir/$next/corpus/shard=$ks", files)
+    Generations.writeNext(spark, dir) { gen =>
+      // params (the residual/opq flags) and the rotation travel with the
+      // quantizers — codes in the rewritten shards were assigned under
+      // them; the rotation exists only when the build set opq
+      val rels = Seq("centroids", "codebooks", "params") ++
+        readRotation(spark, root).map(_ => "rotation")
+      rels.foreach { rel =>
+        Io.readParquet(spark, s"$root/$rel")
+          .coalesce(1).write.mode("overwrite").parquet(s"$gen/$rel")
+      }
+      val all = Io.readParquet(spark, s"$root/corpus")
+      writeShardRows(all.where(!col("shard").isin(keepShards: _*)).drop("shard"),
+        s"$gen/corpus/shard=base", files)
+      keepShards.foreach { ks =>
+        writeShardRows(all.where(col("shard") === ks).drop("shard"),
+          s"$gen/corpus/shard=$ks", files)
+      }
     }
-    Generations.setCurrent(spark, dir, next)
   }
 
   /** [[ivfPqTopKIndexed]] + the [[topKRefined]] refine stage: the

@@ -600,8 +600,9 @@ object Similarity {
     * the index build is the one corpus-sized job, run once per corpus
     * version; each batch after it touches only the probed cells.
     *
-    * Layout: `dir/centroids` (cell, centroid) — nlist rows — and
-    * `dir/corpus` written `partitionBy(cell)`. Hive-partitioning on the
+    * Layout (in the next generation `dir/gen-<n>`, [[Generations]]):
+    * `centroids` (cell, centroid) — nlist rows — and
+    * `corpus` written `partitionBy(cell)`. Hive-partitioning on the
     * cell id (rather than bucketing) is deliberate: the serving join
     * broadcasts the tiny probed set, so there is no shuffle for
     * bucketing to save, while partition PRUNING means a batch reads
@@ -635,10 +636,12 @@ object Similarity {
     }
     val spark = corpus.sparkSession
     import spark.implicits._
-    cent.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("cell", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids")
-    writeIvfShard(corpus, dir, cent.map(_.toSeq).toSeq, "base", idCol, vecCol)
+    Generations.writeNext(spark, dir) { gen =>
+      cent.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
+        .toDF("cell", "centroid")
+        .coalesce(1).write.mode("overwrite").parquet(s"$gen/centroids")
+      writeIvfShard(corpus, gen, cent.map(_.toSeq).toSeq, "base", idCol, vecCol)
+    }
   }
 
   /** Append a vector shard to a [[buildIvfIndex]] directory — the
@@ -669,59 +672,29 @@ object Similarity {
     writeIvfShard(shard, root, cent.toSeq, shardId, idCol, vecCol)
   }
 
-  /** Compact an appended-many-times IVF index into a fresh
-    * single-shard index at `newDir` — [[LshIndex.compact]]'s twin,
-    * with the same versioned-cutover protocol (never in-place; the
-    * caller's pointer swap is the atomic step, the old dir is theirs
-    * to reap). Centroids copy verbatim, so served results are
-    * identical (spec-asserted). */
-  def compactIvfIndex(spark: SparkSession, dir: String, newDir: String): Unit = {
-    val root = Generations.root(spark, dir)
-    Io.readParquet(spark, s"$root/centroids")
-      .coalesce(1).write.mode("overwrite").parquet(s"$newDir/centroids")
-    Io.readParquet(spark, s"$root/corpus").drop("shard")
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$newDir/corpus/shard=base")
-  }
-
-  /** [[buildIvfIndex]] into the VERSIONED layout ([[LshIndex
-    * .buildVersioned]]'s twin): relations under `dir/gen-0`, the
-    * `CURRENT` pointer naming it. Required for
-    * [[compactIvfIndexInPlace]]; all reads/appends serve either
-    * layout. */
-  def buildIvfIndexVersioned(corpus: DataFrame, dir: String, nlist: Int = 0,
-                             maxIter: Int = 5, maxTrain: Int = 4096,
-                             idCol: String = "vec_id",
-                             vecCol: String = "embedding",
-                             corpusSize: Long = 0L): Unit = {
-    buildIvfIndex(corpus, s"$dir/gen-0", nlist, maxIter, maxTrain,
-      idCol, vecCol, corpusSize)
-    Generations.setCurrent(corpus.sparkSession, dir, "gen-0")
-  }
-
-  /** In-place IVF compaction — [[LshIndex.compactInPlace]]'s twin,
-    * same generation protocol and the same `keepShards` replay
-    * contract for the streaming cadence (the in-flight batch's shard
-    * survives under its own id so a post-compaction replay can still
-    * exclude its own rows). Centroids copy verbatim; served results
-    * are identical. */
+  /** In-place IVF compaction — [[LshIndex.compactInPlace]]'s twin:
+    * accreted append shards rewrite into one `shard=base` under the
+    * next generation, with the same `keepShards` replay contract for
+    * the streaming cadence (the in-flight batch's shard survives under
+    * its own id so a post-compaction replay can still exclude its own
+    * rows). Centroids copy verbatim; served results are identical
+    * (spec-asserted). */
   def compactIvfIndexInPlace(spark: SparkSession, dir: String,
                              keepShards: Seq[String] = Nil): Unit = {
-    val next = Generations.nextGen(spark, dir,
-      "use compactIvfIndex(dir, newDir) + a caller-side cutover for flat layouts")
     val root = Generations.root(spark, dir)
-    Io.readParquet(spark, s"$root/centroids")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/$next/centroids")
-    val all = Io.readParquet(spark, s"$root/corpus")
-    all.where(!col("shard").isin(keepShards: _*)).drop("shard")
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$dir/$next/corpus/shard=base")
-    keepShards.foreach { ks =>
-      all.where(col("shard") === ks).drop("shard")
+    Generations.writeNext(spark, dir) { gen =>
+      Io.readParquet(spark, s"$root/centroids")
+        .coalesce(1).write.mode("overwrite").parquet(s"$gen/centroids")
+      val all = Io.readParquet(spark, s"$root/corpus")
+      all.where(!col("shard").isin(keepShards: _*)).drop("shard")
         .write.mode("overwrite").partitionBy("cell")
-        .parquet(s"$dir/$next/corpus/shard=$ks")
+        .parquet(s"$gen/corpus/shard=base")
+      keepShards.foreach { ks =>
+        all.where(col("shard") === ks).drop("shard")
+          .write.mode("overwrite").partitionBy("cell")
+          .parquet(s"$gen/corpus/shard=$ks")
+      }
     }
-    Generations.setCurrent(spark, dir, next)
   }
 
   // ------------------------------------------------------------------
@@ -784,20 +757,22 @@ object Similarity {
         s"got ${c1.length} and ${c2.length}")
     val spark = corpus.sparkSession
     import spark.implicits._
-    c1.toSeq.zipWithIndex.map { case (c, i) => (i, c.toSeq) }
-      .toDF("cell", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids_h1")
-    c2.toSeq.zipWithIndex.map { case (c, i) => (i, c.toSeq) }
-      .toDF("cell", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids_h2")
-    // the layout is a property of the STORE (appends must match it —
-    // a mixed corpus dir would read cell as a partition column in one
-    // shard and a data column in another), so it persists in params
-    Seq(Tuple1(if (pointLayout) pointLayoutFiles else 0))
-      .toDF("point_layout_files")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/params")
-    writeImiShard(corpus, dir, c1.map(_.toSeq).toSeq, c2.map(_.toSeq).toSeq,
-      "base", idCol, vecCol, if (pointLayout) pointLayoutFiles else 0)
+    Generations.writeNext(spark, dir) { gen =>
+      c1.toSeq.zipWithIndex.map { case (c, i) => (i, c.toSeq) }
+        .toDF("cell", "centroid")
+        .coalesce(1).write.mode("overwrite").parquet(s"$gen/centroids_h1")
+      c2.toSeq.zipWithIndex.map { case (c, i) => (i, c.toSeq) }
+        .toDF("cell", "centroid")
+        .coalesce(1).write.mode("overwrite").parquet(s"$gen/centroids_h2")
+      // the layout is a property of the STORE (appends must match it —
+      // a mixed corpus dir would read cell as a partition column in one
+      // shard and a data column in another), so it persists in params
+      Seq(Tuple1(if (pointLayout) pointLayoutFiles else 0))
+        .toDF("point_layout_files")
+        .coalesce(1).write.mode("overwrite").parquet(s"$gen/params")
+      writeImiShard(corpus, gen, c1.map(_.toSeq).toSeq, c2.map(_.toSeq).toSeq,
+        "base", idCol, vecCol, if (pointLayout) pointLayoutFiles else 0)
+    }
   }
 
   /** Append a vector shard to a [[buildImiIndex]] directory — the
@@ -813,27 +788,22 @@ object Similarity {
       shardId.forall(c => c.isLetterOrDigit || c == '-' || c == '_'),
       s"shardId '$shardId' must be a non-'base' [A-Za-z0-9_-]+ token")
     val spark = shard.sparkSession
+    val root = Generations.root(spark, dir)
     // read through the dense-numbering check (r14 advice): writeImiShard
     // indexes these arrays BY cell id, so a sparse or renumbered
     // centroid relation must refuse loudly, not assign against the
     // wrong centroids — the same guard appendToImiPqIndex already gets
     // via Pq.collectCentroidTable
     def half(p: String): Array[Seq[Double]] =
-      Pq.collectCentroidTable(Io.readParquet(spark, s"$dir/$p")).map(_.toSeq)
-    // the shard must land in the store's layout (persisted at build;
-    // pre-params indexes are hive by construction)
-    val plfPath = new org.apache.hadoop.fs.Path(s"$dir/params")
-    val plf =
-      if (plfPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .exists(plfPath))
-        Io.readParquet(spark, s"$dir/params")
-          .select("point_layout_files").head().getInt(0)
-      else 0
-    writeImiShard(shard, dir, half("centroids_h1").toSeq,
+      Pq.collectCentroidTable(Io.readParquet(spark, s"$root/$p")).map(_.toSeq)
+    // the shard must land in the store's layout (persisted at build)
+    val plf = Io.readParquet(spark, s"$root/params")
+      .select("point_layout_files").head().getInt(0)
+    writeImiShard(shard, root, half("centroids_h1").toSeq,
       half("centroids_h2").toSeq, shardId, idCol, vecCol, plf)
   }
 
-  private def writeImiShard(vectors: DataFrame, dir: String,
+  private def writeImiShard(vectors: DataFrame, root: String,
                             c1: Seq[Seq[Double]], c2: Seq[Seq[Double]],
                             shardId: String, idCol: String,
                             vecCol: String, pointLayoutFiles: Int): Unit = {
@@ -846,7 +816,7 @@ object Similarity {
           expr(s"slice($vecCol, 1, $h)"), c1) * kk +
         VectorExpressions.nearest_cell(
           expr(s"slice($vecCol, ${h + 1}, ${d - h})"), c2)).as("cell"))
-    val path = s"$dir/corpus/shard=$shardId"
+    val path = s"$root/corpus/shard=$shardId"
     // pointLayoutFiles > 0 = cell-sorted rows in a BOUNDED file count
     // (the Pq.writeShardRows treatment — the layout for kPerHalf²
     // past ~16k cells, where even one-file-per-cell is a file-count
@@ -878,9 +848,10 @@ object Similarity {
                         vecCol: String = "embedding",
                         excludeShards: Seq[String] = Nil): DataFrame = {
     val spark = probe.sparkSession
-    val c1 = Io.readParquet(spark, s"$dir/centroids_h1")
-    val c2 = Io.readParquet(spark, s"$dir/centroids_h2")
-    val assigned0 = Io.readParquet(spark, s"$dir/corpus")
+    val root = Generations.root(spark, dir)
+    val c1 = Io.readParquet(spark, s"$root/centroids_h1")
+    val c2 = Io.readParquet(spark, s"$root/centroids_h2")
+    val assigned0 = Io.readParquet(spark, s"$root/corpus")
     val assigned =
       if (excludeShards.isEmpty) assigned0
       else assigned0.where(!col("shard").isin(excludeShards: _*))
@@ -915,9 +886,10 @@ object Similarity {
                      vecCol: String = "embedding",
                      excludeSelf: Boolean = true): DataFrame = {
     val spark = queries.sparkSession
-    val c1 = Io.readParquet(spark, s"$dir/centroids_h1")
-    val c2 = Io.readParquet(spark, s"$dir/centroids_h2")
-    val assigned = Io.readParquet(spark, s"$dir/corpus")
+    val root = Generations.root(spark, dir)
+    val c1 = Io.readParquet(spark, s"$root/centroids_h1")
+    val c2 = Io.readParquet(spark, s"$root/centroids_h2")
+    val assigned = Io.readParquet(spark, s"$root/corpus")
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
     val probed = imiRoutedCells(q, c1, c2, nprobe)
     val joined = assigned.join(broadcast(probed), Seq("cell"))
@@ -962,13 +934,13 @@ object Similarity {
       .select("query_id", "qv", "cell")
   }
 
-  private def writeIvfShard(vectors: DataFrame, dir: String,
+  private def writeIvfShard(vectors: DataFrame, root: String,
                             cent: Seq[Seq[Double]], shardId: String,
                             idCol: String, vecCol: String): Unit =
     vectors.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
         VectorExpressions.nearest_cell(col(vecCol), cent).as("cell"))
       .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$dir/corpus/shard=$shardId")
+      .parquet(s"$root/corpus/shard=$shardId")
 
   /** Serve top-k ANN from a [[buildIvfIndex]] directory: probe the
     * nprobe closest cells per query against the persisted centroids,

@@ -50,8 +50,8 @@ object IngestStream {
 
   /** `compactEvery` (0 = never): every k-th batch, fold the index's
     * accreted shards into a fresh generation via
-    * [[LshIndex.compactInPlace]] — requires an index built with
-    * [[LshIndex.buildVersioned]]. The in-flight batch's shard is kept
+    * [[LshIndex.compactInPlace]], over any [[LshIndex.build]] index.
+    * The in-flight batch's shard is kept
     * under its own id (`keepShards`) so a post-compaction replay can
     * still exclude its own rows; older batches are committed by the
     * streaming checkpoint and never replayed, so folding them is

@@ -23,13 +23,16 @@ class GenerationsSpec extends SparkSpec {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, false)
   }
 
-  test("root follows CURRENT; flat dirs resolve to themselves") {
+  test("root follows CURRENT; a dir with no generation is refused") {
     val dir = tmpDir("graft-gen")
     writeGen(dir, 0); writeGen(dir, 1)
     Generations.setCurrent(spark, dir, "gen-0")
     assert(Generations.root(spark, dir) == s"$dir/gen-0")
+    // relations written straight into the dir are not an index
     val flat = tmpDir("graft-gen-flat")
-    assert(Generations.root(spark, flat) == flat)
+    Seq((0, "flat")).toDF("id", "v").write.parquet(s"$flat/rel")
+    val e = intercept[RuntimeException] { Generations.root(spark, flat) }
+    assert(e.getMessage.contains(flat))
   }
 
   test("no CURRENT: fallback serves the newest COMPLETE generation, " +
@@ -75,7 +78,7 @@ class GenerationsSpec extends SparkSpec {
     val probe = Seq((100L, "the quick brown fox jumps over the lazy dog"))
       .toDF("doc_id", "text")
     val dir = tmpDir("graft-gen-lsh")
-    LshIndex.buildVersioned(corpus, dir, shingleSize = 2)
+    LshIndex.build(corpus, dir, shingleSize = 2)
     val withCurrent = LshIndex.nearDuplicates(probe, dir, threshold = 0.3)
       .collect().toSet
     deleteCurrent(dir)
@@ -83,5 +86,25 @@ class GenerationsSpec extends SparkSpec {
       .collect().toSet
     assert(withCurrent == withoutCurrent && withCurrent.nonEmpty,
       "the complete newest generation must serve identically in the gap")
+  }
+
+  test("a second build into a live index dir serves the new generation and keeps the old one") {
+    val corpus = Seq((0L, "the quick brown fox jumps over the lazy dog"))
+      .toDF("doc_id", "text")
+    val rebuilt = Seq((1L, "pack my box with five dozen liquor jugs today"))
+      .toDF("doc_id", "text")
+    val probe = Seq((100L, "pack my box with five dozen liquor jugs today"))
+      .toDF("doc_id", "text")
+    val dir = tmpDir("graft-gen-rebuild")
+    LshIndex.build(corpus, dir, shingleSize = 2)
+    assert(LshIndex.nearDuplicates(probe, dir, threshold = 0.3).isEmpty)
+    LshIndex.build(rebuilt, dir, shingleSize = 2)
+    assert(Generations.root(spark, dir) == s"$dir/gen-1")
+    assert(LshIndex.nearDuplicates(probe, dir, threshold = 0.3)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq === Seq((100L, 1L)))
+    // the previous generation is still on disk, untouched, for
+    // in-flight readers
+    assert(spark.read.parquet(s"$dir/gen-0/members")
+      .collect().map(_.getAs[Long]("doc_id")).toSeq === Seq(0L))
   }
 }

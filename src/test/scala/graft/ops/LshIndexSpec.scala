@@ -92,17 +92,20 @@ class LshIndexSpec extends SparkSpec {
     LshIndex.build(half1, dir, shingleSize = 2)
     LshIndex.append(half2, dir, shardId = "day-1")
     val before = asSet(LshIndex.nearDuplicates(probe, dir, threshold = 0.3))
-    val newDir = tmpDir("graft-lsh-compacted")
-    LshIndex.compact(spark, dir, newDir)
-    assert(asSet(LshIndex.nearDuplicates(probe, newDir, threshold = 0.3))
-      === before)
-    assert(spark.read.parquet(s"$newDir/bands")
-      .select("shard").distinct().collect().map(_.getString(0)).toSeq
-      === Seq("base"))
-    assert(LshIndex.params(spark, newDir) === LshIndex.params(spark, dir))
-    // the live index was never touched — versioned cutover, not in-place
+    val params = LshIndex.params(spark, dir)
+    LshIndex.compactInPlace(spark, dir)
     assert(asSet(LshIndex.nearDuplicates(probe, dir, threshold = 0.3))
       === before)
+    assert(Generations.root(spark, dir) === s"$dir/gen-1")
+    assert(spark.read.parquet(s"$dir/gen-1/bands")
+      .select("shard").distinct().collect().map(_.getString(0)).toSeq
+      === Seq("base"))
+    assert(LshIndex.params(spark, dir) === params)
+    // the previous generation was never touched: it still holds both
+    // shards for in-flight readers
+    assert(spark.read.parquet(s"$dir/gen-0/bands")
+      .select("shard").distinct().collect().map(_.getString(0)).toSet
+      === Set("base", "day-1"))
   }
 
   test("versioned layout: build/append/probe identical to flat; compactInPlace swaps atomically") {
@@ -112,7 +115,7 @@ class LshIndexSpec extends SparkSpec {
     LshIndex.build(half1, flat, shingleSize = 2)
     LshIndex.append(half2, flat, shardId = "day-1")
     val vdir = tmpDir("graft-lsh-versioned")
-    LshIndex.buildVersioned(half1, vdir, shingleSize = 2)
+    LshIndex.build(half1, vdir, shingleSize = 2)
     LshIndex.append(half2, vdir, shardId = "day-1")
     val want = asSet(LshIndex.nearDuplicates(probe, flat, threshold = 0.3))
     assert(asSet(LshIndex.nearDuplicates(probe, vdir, threshold = 0.3)) === want)
@@ -132,8 +135,6 @@ class LshIndexSpec extends SparkSpec {
     assert(spark.read.parquet(s"$vdir/gen-2/bands")
       .select("shard").distinct().collect().map(_.getString(0)).toSeq
       === Seq("base"))
-    // flat layouts refuse in-place compaction loudly
-    intercept[RuntimeException] { LshIndex.compactInPlace(spark, flat) }
   }
 
   test("ingestVerdicts equals the two-operator formulation, verdict for verdict") {
@@ -211,17 +212,38 @@ class LshIndexSpec extends SparkSpec {
     val dir = tmpDir("graft-lsh-sortcomp")
     val (half1, half2) =
       (corpus.where(col("doc_id") < 3), corpus.where(col("doc_id") >= 3))
-    LshIndex.build(half1, dir, shingleSize = 2)
+    // point-layout build; the appended shard lands unsorted
+    LshIndex.build(half1, dir, shingleSize = 2, pointLayout = true,
+      sortedFiles = 2)
     LshIndex.append(half2, dir, shardId = "day-1")
     val before = asSet(LshIndex.nearDuplicates(probe, dir, threshold = 0.3))
-    val sortedDir = tmpDir("graft-lsh-sortcomp-out")
-    LshIndex.compact(spark, dir, sortedDir, pointLayout = true,
-      sortedFiles = 2)
-    assert(asSet(LshIndex.nearDuplicates(probe, sortedDir,
+    LshIndex.compactInPlace(spark, dir)
+    assert(Generations.root(spark, dir) === s"$dir/gen-1")
+    assert(asSet(LshIndex.nearDuplicates(probe, dir,
       threshold = 0.3)) === before)
     assert(asSet(LshIndex.pointNearDuplicates(probe.where(col("doc_id") === 100L),
-        sortedDir, threshold = 0.3)) ===
+        dir, threshold = 0.3)) ===
       before.filter(_._1 == 100L))
+    // the compacted base is range-sorted again: each file of each
+    // relation covers a key range disjoint from every other file's
+    def disjoint[T](rel: String, key: String)(implicit ord: Ordering[T]): Unit = {
+      val files = new java.io.File(s"$dir/gen-1/$rel/shard=base").listFiles()
+        .filter(_.getName.endsWith(".parquet")).map(_.getPath).toSeq
+      assert(files.nonEmpty && files.size <= 2, s"$rel: ${files.size} files")
+      val ranges = files.map { f =>
+        val r = spark.read.parquet(f).agg(min(col(key)), max(col(key))).head()
+        (r.getAs[T](0), r.getAs[T](1))
+      }.sortBy(_._1)
+      ranges.zip(ranges.drop(1)).foreach { case ((_, hi), (lo, _)) =>
+        assert(ord.lt(hi, lo), s"$rel files overlap: $ranges")
+      }
+    }
+    disjoint[String]("bands", "band_hash")
+    disjoint[Long]("shingles", "rep")
+    disjoint[Long]("members", "rep")
+    assert(new java.io.File(s"$dir/gen-1/bands/shard=base").listFiles()
+      .count(_.getName.endsWith(".parquet")) === 2,
+      "bands must span both sorted files, or disjointness is vacuous")
   }
 
   test("pointNearDuplicates: bit-identical to the batch path on every probe shape; point filters reach all three scans") {

@@ -30,15 +30,11 @@ class MultimodalSpec extends SparkSpec {
       .toDF("doc_id", "payload", "media_type")
   }
 
-  test("real decode: expression and mapPartitions twins agree; corrupt rows dropped") {
+  test("real decode: expression path matches the generator; corrupt rows dropped") {
     val viaExpr = Multimodal.imageFeaturesExpr(images)
       .collect().map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("n_bytes"),
         r.getAs[Long]("width"), r.getAs[Long]("height"),
         r.getAs[Long]("channels"), r.getAs[String]("pixel_md5"))).toSet
-    val viaPartitions = Multimodal.decodeImageFeatures(images)
-      .collect().map(f => (f.doc_id, f.n_bytes, f.width.toLong,
-        f.height.toLong, f.channels.toLong, f.pixel_md5)).toSet
-    assert(viaExpr === viaPartitions)
     // the 48 valid images decode; the 2 corrupt payloads (doc_id 1000+)
     // drop without failing the job
     assert(viaExpr.size === 48)
@@ -65,7 +61,7 @@ class MultimodalSpec extends SparkSpec {
     assert((w, h, c) === (16, 12, 3))
   }
 
-  test("real audio decode: twins agree; format metadata exact; corrupt rows dropped") {
+  test("real audio decode: matches the generator; format metadata exact; corrupt rows dropped") {
     import graft.MakeAudioFixtures
     val clips = MakeAudioFixtures.rows()
       .map(r => (r.doc_id, r.payload, r.media_type))
@@ -75,10 +71,6 @@ class MultimodalSpec extends SparkSpec {
         r.getAs[Long]("sample_rate"), r.getAs[Long]("channels"),
         r.getAs[Long]("bits"), r.getAs[Long]("n_frames"),
         r.getAs[String]("pcm_md5"))).toSet
-    val viaPartitions = Multimodal.decodeAudioFeatures(clips)
-      .collect().map(f => (f.doc_id, f.n_bytes, f.sample_rate, f.channels,
-        f.bits, f.n_frames, f.pcm_md5)).toSet
-    assert(viaExpr === viaPartitions)
     assert(viaExpr.size === 24 && !viaExpr.exists(_._1 >= 1000L))
     // decode reproduces the generator's expectations exactly — incl.
     // the synthesis parameters it can cross-check (rate/channels/frames)
@@ -100,15 +92,12 @@ class MultimodalSpec extends SparkSpec {
     assert(!frames.exists(_._1 == 2L))   // empty doc yields no frames
   }
 
-  test("mapPartitions decode path agrees with the expression path") {
+  test("opaque-payload features: byte count and width wrap-around") {
     val media = Multimodal.withPayload(docs)
-    val viaPartitions = Multimodal.decodeFeatures(media)
-      .collect().map(f => (f.doc_id, f.n_bytes, f.width, f.height, f.checksum)).toSet
     val viaExpr = Multimodal.decodeFeaturesExpr(media)
       .collect().map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("n_bytes").toInt,
         r.getAs[Long]("width").toInt, r.getAs[Long]("height").toInt,
         r.getAs[String]("checksum"))).toSet
-    assert(viaPartitions === viaExpr)
     val wide = viaExpr.find(_._1 == 1L).get
     assert(wide._2 === 700)
     assert(wide._3 === 60)     // 700 % 640

@@ -12,6 +12,9 @@ class PqSpec extends SparkSpec {
   private lazy val em =
     spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
 
+  /** The live generation of an index dir. */
+  private def live(dir: String) = Generations.root(spark, dir)
+
   private def rows(df: DataFrame) = df.collect()
     .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("rnk"),
       r.getAs[Long]("neighbor_id"), r.getAs[Double]("adc_dist"))).toSet
@@ -128,7 +131,7 @@ class PqSpec extends SparkSpec {
     val served = Pq.pqTopKIndexed(q, dir, k = 3)
     assert(rows(served) === rows(Pq.topK(q, em, k = 3, m = 8, ks = 8)))
     // the persisted codes relation has no float vectors to read
-    assert(spark.read.parquet(s"$dir/codes").columns.sorted
+    assert(spark.read.parquet(s"${live(dir)}/codes").columns.sorted
       === Array("codes", "id", "shard"))
   }
 
@@ -222,7 +225,7 @@ class PqSpec extends SparkSpec {
     // appended vectors compete: full probe over the union must equal
     // a from-scratch flat ranking under the SAME (base-trained)
     // codebooks — encode the union with the frozen cube and rank
-    val cb = Pq.readCodebooks(spark, dir)
+    val cb = Pq.readCodebooks(spark, live(dir))
     val ks = cb(0).length
     val lut = broadcast(q.select(col("vec_id").as("query_id"),
       PqExpressions.pq_lut(col("embedding"),
@@ -254,26 +257,20 @@ class PqSpec extends SparkSpec {
   test("versioned ivf-pq: serve equals flat; in-place compaction keeps the replay shard") {
     val (base, shard) =
       (em.where(col("vec_id") < 400), em.where(col("vec_id") >= 400))
-    val flat = java.nio.file.Files.createTempDirectory("graft-ivfpq-f").toString
-    val ver = java.nio.file.Files.createTempDirectory("graft-ivfpq-v").toString
-    Pq.buildIvfPqIndex(em, flat, m = 8, ks = 8, nlist = 4)
-    Pq.buildIvfPqIndexVersioned(em, ver, m = 8, ks = 8, nlist = 4)
     val q = em.where(col("vec_id") < 5)
-    val flatRows = rows(Pq.ivfPqTopKIndexed(q, flat, k = 3, nprobe = 4))
-    assert(rows(Pq.ivfPqTopKIndexed(q, ver, k = 3, nprobe = 4)) === flatRows)
-    // rebuild versioned over base only, append a shard, compact keeping it
-    val ver2 = java.nio.file.Files.createTempDirectory("graft-ivfpq-v2").toString
-    Pq.buildIvfPqIndexVersioned(base, ver2, m = 8, ks = 8, nlist = 4)
-    Pq.appendToIvfPqIndex(shard, ver2, shardId = "b7")
-    val before = rows(Pq.ivfPqTopKIndexed(q, ver2, k = 3, nprobe = 4))
-    Pq.compactIvfPqIndexInPlace(spark, ver2, keepShards = Seq("b7"))
-    assert(rows(Pq.ivfPqTopKIndexed(q, ver2, k = 3, nprobe = 4)) === before)
+    // build over base only, append a shard, compact keeping it
+    val dir = java.nio.file.Files.createTempDirectory("graft-ivfpq-v").toString
+    Pq.buildIvfPqIndex(base, dir, m = 8, ks = 8, nlist = 4)
+    Pq.appendToIvfPqIndex(shard, dir, shardId = "b7")
+    val before = rows(Pq.ivfPqTopKIndexed(q, dir, k = 3, nprobe = 4))
+    Pq.compactIvfPqIndexInPlace(spark, dir, keepShards = Seq("b7"))
+    assert(rows(Pq.ivfPqTopKIndexed(q, dir, k = 3, nprobe = 4)) === before)
     // the kept shard survives under its own id for replay exclusion
-    val shards = spark.read
-      .parquet(s"${Generations.root(spark, ver2)}/corpus")
+    assert(live(dir) === s"$dir/gen-1")
+    val shards = spark.read.parquet(s"${live(dir)}/corpus")
       .select("shard").distinct().collect().map(_.getString(0)).toSet
     assert(shards === Set("base", "b7"))
-    assert(rows(Pq.ivfPqTopKIndexed(q, ver2, k = 3, nprobe = 4,
+    assert(rows(Pq.ivfPqTopKIndexed(q, dir, k = 3, nprobe = 4,
         excludeShards = Seq("b7"))).nonEmpty)
   }
 
@@ -363,7 +360,7 @@ class PqSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-ivfpq-halfv").toString
     val base = em.where(col("vec_id") % 2 === 0)
     val inc = em.where(col("vec_id") % 2 === 1)
-    Pq.buildIvfPqIndexVersioned(base, dir, m = 8, ks = 8, nlist = 4,
+    Pq.buildIvfPqIndex(base, dir, m = 8, ks = 8, nlist = 4,
       residual = true, refineHalf = true)
     // append inherits the refine-half mode from params: appended rows
     // carry vec16 and serve through the half re-rank
@@ -419,12 +416,12 @@ class PqSpec extends SparkSpec {
     * assigned/probed cell's centroid, per-(query, cell) LUTs, ADC over
     * residual codes — the same independent-arithmetic check the q122
     * oracle runs in DuckDB. */
-  private def residualReference(dir: String, queryIds: Seq[Long],
+  private def residualReference(root: String, queryIds: Seq[Long],
                                 k: Int, nprobe: Int): Set[(Long, Long, Long, Double)] = {
-    val cent = spark.read.parquet(s"$dir/centroids").orderBy("cell")
+    val cent = spark.read.parquet(s"$root/centroids").orderBy("cell")
       .collect().map(_.getSeq[Double](1).toArray)
     val norms = cent.map(c => math.sqrt(c.map(x => x * x).sum))
-    val cb = Pq.readCodebooks(spark, dir)
+    val cb = Pq.readCodebooks(spark, root)
     val m = cb.length; val ds = cb(0)(0).length; val ks = cb(0).length
     val vecs = em.select(col("vec_id"),
         col("embedding").cast("array<double>")).collect()
@@ -487,7 +484,7 @@ class PqSpec extends SparkSpec {
     Pq.buildIvfPqIndex(em, dir, m = 8, ks = 8, nlist = 4, residual = true)
     val q = em.where(col("vec_id") < 5)
     val served = Pq.ivfPqTopKIndexed(q, dir, k = 3, nprobe = 2)
-    assert(rows(served) === residualReference(dir, 0L until 5L, k = 3, nprobe = 2))
+    assert(rows(served) === residualReference(live(dir), 0L until 5L, k = 3, nprobe = 2))
     val plan = served.queryExecution.executedPlan.toString
     // the candidate side never re-encodes/re-assigns; the residual
     // work (CellResidual under PqLut) lives ONLY on the tiny query side
@@ -560,11 +557,11 @@ class PqSpec extends SparkSpec {
     assert(rows.forall(r => math.abs(r.getAs[Double]("cos_sim")) <= 1.0))
   }
 
-  test("residual flag survives append + in-place compaction; absent params serve raw") {
+  test("residual flag survives append + in-place compaction") {
     val dir = java.nio.file.Files.createTempDirectory("graft-ivfpq-resv").toString
     val (base, shard) =
       (em.where(col("vec_id") < 400), em.where(col("vec_id") >= 400))
-    Pq.buildIvfPqIndexVersioned(base, dir, m = 8, ks = 8, nlist = 4,
+    Pq.buildIvfPqIndex(base, dir, m = 8, ks = 8, nlist = 4,
       residual = true)
     Pq.appendToIvfPqIndex(shard, dir, shardId = "day-1")
     val q = em.where(col("vec_id") < 5)
@@ -572,21 +569,13 @@ class PqSpec extends SparkSpec {
     // the appended rows must rank exactly as the driver re-derivation
     // says (i.e. the shard was RESIDUAL-encoded under the frozen
     // quantizers, not raw-encoded)
-    assert(before === residualReference(Generations.root(spark, dir),
+    assert(before === residualReference(live(dir),
       0L until 5L, k = 3, nprobe = 4))
     // replay idempotent; compaction carries params to the new gen
     Pq.appendToIvfPqIndex(shard, dir, shardId = "day-1")
     assert(rows(Pq.ivfPqTopKIndexed(q, dir, k = 3, nprobe = 4)) === before)
     Pq.compactIvfPqIndexInPlace(spark, dir, keepShards = Seq("day-1"))
     assert(rows(Pq.ivfPqTopKIndexed(q, dir, k = 3, nprobe = 4)) === before)
-    // a pre-params dir serves as raw: strip params from a raw build
-    // and results are unchanged
-    val legacy = java.nio.file.Files.createTempDirectory("graft-ivfpq-leg").toString
-    Pq.buildIvfPqIndex(em, legacy, m = 8, ks = 8, nlist = 4)
-    val withParams = rows(Pq.ivfPqTopKIndexed(q, legacy, k = 3, nprobe = 2))
-    val pp = new org.apache.hadoop.fs.Path(s"$legacy/params")
-    pp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(pp, true)
-    assert(rows(Pq.ivfPqTopKIndexed(q, legacy, k = 3, nprobe = 2)) === withParams)
   }
 
   /** [[residualReference]] extended with the OPQ rotation: codes from
@@ -595,9 +584,9 @@ class PqSpec extends SparkSpec {
     * rotation is read back from the index dir (exact doubles) and
     * applied with an ascending-d multiply-accumulate, matching
     * [[graft.functions.VectorExpressions.Rotate]] bit-for-bit. */
-  private def opqResidualReference(dir: String, queryIds: Seq[Long],
+  private def opqResidualReference(root: String, queryIds: Seq[Long],
                                    k: Int, nprobe: Int): Set[(Long, Long, Long, Double)] = {
-    val rot = Pq.readRotation(spark, dir).get
+    val rot = Pq.readRotation(spark, root).get
     def rotate(v: Array[Double]): Array[Double] = {
       val out = new Array[Double](rot.length)
       var r = 0
@@ -608,10 +597,10 @@ class PqSpec extends SparkSpec {
       }
       out
     }
-    val cent = spark.read.parquet(s"$dir/centroids").orderBy("cell")
+    val cent = spark.read.parquet(s"$root/centroids").orderBy("cell")
       .collect().map(_.getSeq[Double](1).toArray)
     val norms = cent.map(c => math.sqrt(c.map(x => x * x).sum))
-    val cb = Pq.readCodebooks(spark, dir)
+    val cb = Pq.readCodebooks(spark, root)
     val m = cb.length; val ds = cb(0)(0).length; val ks = cb(0).length
     val vecs = em.select(col("vec_id"),
         col("embedding").cast("array<double>")).collect()
@@ -667,15 +656,15 @@ class PqSpec extends SparkSpec {
 
   test("opq ivf-pq: driver re-derivation matches; codes-only scan; artifacts survive append+compaction") {
     val dir = java.nio.file.Files.createTempDirectory("graft-ivfpq-opq").toString
-    Pq.buildIvfPqIndexVersioned(em, dir, m = 8, ks = 8, nlist = 4,
+    Pq.buildIvfPqIndex(em, dir, m = 8, ks = 8, nlist = 4,
       residual = true, opq = true)
     val q = em.where(col("vec_id") < 5)
     val served = Pq.ivfPqTopKIndexed(q, dir, k = 3, nprobe = 2)
-    val expect = opqResidualReference(Generations.root(spark, dir),
+    val expect = opqResidualReference(live(dir),
       0L until 5L, k = 3, nprobe = 2)
     assert(rows(served) === expect)
     // rotation is REAL (not identity) and orthogonal to ~1e-9
-    val rot = Pq.readRotation(spark, Generations.root(spark, dir)).get
+    val rot = Pq.readRotation(spark, live(dir)).get
     assert(rot.zipWithIndex.exists { case (row, i) =>
       row.zipWithIndex.exists { case (x, j) =>
         math.abs(x - (if (i == j) 1.0 else 0.0)) > 1e-6 } },
@@ -703,7 +692,7 @@ class PqSpec extends SparkSpec {
     val withShard = rows(Pq.ivfPqTopKIndexed(q, dir, k = 3, nprobe = 4))
     Pq.compactIvfPqIndexInPlace(spark, dir, keepShards = Seq("day-1"))
     assert(rows(Pq.ivfPqTopKIndexed(q, dir, k = 3, nprobe = 4)) === withShard)
-    assert(Pq.readRotation(spark, Generations.root(spark, dir)).isDefined,
+    assert(Pq.readRotation(spark, live(dir)).isDefined,
       "compaction dropped the rotation relation")
   }
 
@@ -791,7 +780,7 @@ class PqSpec extends SparkSpec {
     assert(rows(Pq.ivfPqTopKIndexed(q, hiveRes, k = 3, nprobe = 2)) === batch)
     // bounded file count: ≤ pointLayoutFiles parquet files, no cell=
     // directory fan-out
-    val shardDir = new java.io.File(s"$dirPt/corpus/shard=base")
+    val shardDir = new java.io.File(s"${live(dirPt)}/corpus/shard=base")
     val files = shardDir.listFiles().filter(_.getName.endsWith(".parquet"))
     assert(files.nonEmpty && files.length <= 8,
       s"expected ≤8 cell-sorted files, found ${files.length}")
@@ -844,7 +833,7 @@ class PqSpec extends SparkSpec {
             expr(s"slice(embedding, ${h + 1}, $h)"),
             c2.map(_.toSeq).toSeq)).as("cell"))
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val stored = spark.read.parquet(s"$dir/corpus")
+    val stored = spark.read.parquet(s"${live(dir)}/corpus")
       .select("neighbor_id", "cell").collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(stored === viaExpr)
@@ -875,7 +864,7 @@ class PqSpec extends SparkSpec {
     val tdir = java.nio.file.Files.createTempDirectory("graft-imipq-tc").toString
     Pq.buildImiPqIndex(em, tdir, m = 8, ks = 8, kPerHalf = 3,
       trainedCent = Some(tc))
-    def persisted(p: String) = spark.read.parquet(s"$tdir/$p")
+    def persisted(p: String) = spark.read.parquet(s"${live(tdir)}/$p")
       .orderBy("cell").collect().map(_.getSeq[Double](1).toSeq).toSeq
     assert(persisted("centroids_h1") === tc._1.map(_.toSeq).toSeq)
     assert(persisted("centroids_h2") === tc._2.map(_.toSeq).toSeq)
@@ -896,7 +885,7 @@ class PqSpec extends SparkSpec {
     Pq.buildImiPqIndex(em, rdir, m = 8, ks = 8, kPerHalf = 3,
       trainedCent = Some(tc), residual = true, opq = true,
       pointLayout = true, pointLayoutFiles = 8)
-    assert(spark.read.parquet(s"$rdir/centroids_h1")
+    assert(spark.read.parquet(s"${live(rdir)}/centroids_h1")
       .orderBy("cell").collect().map(_.getSeq[Double](1).toSeq).toSeq
       === tc._1.map(_.toSeq).toSeq)
     val batchR = Pq.imiPqTopK(q, rdir, k = 3, nprobe = 2)
@@ -917,7 +906,7 @@ class PqSpec extends SparkSpec {
     val batch = rows(Pq.imiPqTopK(q, dirPt, k = 3, nprobe = 2))
     assert(rows(Pq.imiPqTopKPoint(q, dirPt, k = 3, nprobe = 2)) === batch)
     // bounded file count, no cell= fan-out on the point layout
-    val shardDir = new java.io.File(s"$dirPt/corpus/shard=base")
+    val shardDir = new java.io.File(s"${live(dirPt)}/corpus/shard=base")
     val files = shardDir.listFiles().filter(_.getName.endsWith(".parquet"))
     assert(files.nonEmpty && files.length <= 8)
     assert(!shardDir.listFiles().exists(_.getName.startsWith("cell=")))
@@ -953,12 +942,12 @@ class PqSpec extends SparkSpec {
     // same kPerHalf, different quantized space)
     val rawDir = java.nio.file.Files.createTempDirectory("graft-imipq-raw").toString
     Pq.buildImiPqIndex(em, rawDir, m = 8, ks = 8, kPerHalf = 3)
-    def codes(d: String) = spark.read.parquet(s"$d/corpus")
+    def codes(d: String) = spark.read.parquet(s"${live(d)}/corpus")
       .select("neighbor_id", "codes").collect()
       .map(r => r.getLong(0) -> r.getAs[Array[Byte]](1).toSeq).toMap
     assert(codes(dir) !== codes(rawDir))
     // cells are routing, not encoding: identical across the two modes
-    def cells(d: String) = spark.read.parquet(s"$d/corpus")
+    def cells(d: String) = spark.read.parquet(s"${live(d)}/corpus")
       .select("neighbor_id", "cell").collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(cells(dir) === cells(rawDir))
@@ -969,7 +958,7 @@ class PqSpec extends SparkSpec {
     val opqDir = java.nio.file.Files.createTempDirectory("graft-imipq-opq").toString
     Pq.buildImiPqIndex(em, opqDir, m = 8, ks = 8, kPerHalf = 3,
       residual = true, opq = true)
-    assert(new java.io.File(s"$opqDir/rotation").exists())
+    assert(new java.io.File(s"${live(opqDir)}/rotation").exists())
     assert(codes(opqDir) !== codes(dir))
     assert(cells(opqDir) === cells(dir))
     val ob = rows(Pq.imiPqTopK(q, opqDir, k = 3, nprobe = 2))
@@ -987,7 +976,7 @@ class PqSpec extends SparkSpec {
     val got = Pq.imiPqTopK(q, dir, k = 3, nprobe = 9)
     // appended vectors compete: a full probe over the union must equal
     // a from-scratch flat ranking under the SAME (base-trained) cube
-    val cb = Pq.readCodebooks(spark, dir)
+    val cb = Pq.readCodebooks(spark, live(dir))
     val ks = cb(0).length
     val lut = broadcast(q.select(col("vec_id").as("query_id"),
       PqExpressions.pq_lut(col("embedding"),

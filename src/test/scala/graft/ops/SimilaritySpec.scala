@@ -110,22 +110,24 @@ class SimilaritySpec extends SparkSpec {
     // appended rows live in their own shard partitions; replaying the
     // same shard id replaces them instead of duplicating
     val spark2 = base.sparkSession
-    val counts = () => spark2.read.parquet(s"$dir/corpus")
+    val counts = () => spark2.read.parquet(s"${Generations.root(spark2, dir)}/corpus")
       .groupBy("shard").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     val first = counts()
     assert(first === Map("base" -> 64L, "day-1" -> 32L))
     Similarity.appendToIvfIndex(shard, dir, shardId = "day-1")   // replay
     assert(counts() === first)
-    // compaction: one shard afterward, served results identical, live
-    // index untouched (versioned cutover)
-    val newDir = java.nio.file.Files.createTempDirectory("graft-ivf-compact").toString
-    Similarity.compactIvfIndex(spark2, dir, newDir)
-    assert(rows(Similarity.ivfTopKIndexed(q, newDir, k = 3, nprobe = 4)) ===
-      rows(Similarity.ivfTopKIndexed(q, dir, k = 3, nprobe = 4)))
-    assert(spark2.read.parquet(s"$newDir/corpus")
+    // compaction: one shard in the next generation, served results
+    // identical, the previous generation untouched
+    val served = rows(Similarity.ivfTopKIndexed(q, dir, k = 3, nprobe = 4))
+    Similarity.compactIvfIndexInPlace(spark2, dir)
+    assert(rows(Similarity.ivfTopKIndexed(q, dir, k = 3, nprobe = 4)) === served)
+    assert(spark2.read.parquet(s"$dir/gen-1/corpus")
       .select("shard").distinct().collect().map(_.getString(0)).toSeq
       === Seq("base"))
+    assert(spark2.read.parquet(s"$dir/gen-0/corpus")
+      .groupBy("shard").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap === first)
   }
 
   test("versioned ivf index: serve equals flat; in-place compaction keeps the replay shard") {
@@ -138,7 +140,7 @@ class SimilaritySpec extends SparkSpec {
     Similarity.buildIvfIndex(base, flat, nlist = 4)
     Similarity.appendToIvfIndex(shard, flat, shardId = "batch-0")
     val vdir = java.nio.file.Files.createTempDirectory("graft-ivf-gen").toString
-    Similarity.buildIvfIndexVersioned(base, vdir, nlist = 4)
+    Similarity.buildIvfIndex(base, vdir, nlist = 4)
     Similarity.appendToIvfIndex(shard, vdir, shardId = "batch-0")
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("rnk"),
@@ -152,10 +154,6 @@ class SimilaritySpec extends SparkSpec {
     assert(spark.read.parquet(s"$vdir/gen-1/corpus")
       .select("shard").distinct().collect().map(_.getString(0)).toSet
       === Set("base", "batch-0"))
-    // flat layouts refuse in-place compaction loudly
-    intercept[IllegalArgumentException] {
-      Similarity.compactIvfIndexInPlace(spark, flat)
-    }
   }
 
   test("cosineNearDuplicatesIndexed at nprobe=nlist equals the brute cross pair listing") {
@@ -238,7 +236,7 @@ class SimilaritySpec extends SparkSpec {
     // them verbatim and serves (full probe == brute force)
     val dir = java.nio.file.Files.createTempDirectory("graft-kmeans-ivf").toString
     Similarity.buildIvfIndex(corpus, dir, trainedCent = Some(got))
-    val persisted = spark.read.parquet(s"$dir/centroids")
+    val persisted = spark.read.parquet(s"${Generations.root(spark, dir)}/centroids")
       .orderBy("cell").collect().map(_.getSeq[Double](1).toSeq)
     assert(persisted.toSeq === got.map(_.toSeq).toSeq)
     val q = corpus.where(col("vec_id") < 4)
@@ -288,7 +286,7 @@ class SimilaritySpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-imi-kmeans").toString
     Similarity.buildImiIndex(corpus, dir, kPerHalf = 5,
       trainedCent = Some((c1, c2)))
-    def persisted(p: String) = spark.read.parquet(s"$dir/$p")
+    def persisted(p: String) = spark.read.parquet(s"${Generations.root(spark, dir)}/$p")
       .orderBy("cell").collect().map(_.getSeq[Double](1).toSeq).toSeq
     assert(persisted("centroids_h1") === c1.map(_.toSeq).toSeq)
     assert(persisted("centroids_h2") === c2.map(_.toSeq).toSeq)
@@ -685,13 +683,13 @@ class SimilaritySpec extends SparkSpec {
           graft.functions.VectorExpressions.nearest_cell(
             expr("slice(embedding, 5, 4)"), c2.map(_.toSeq).toSeq)).as("cell"))
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val stored = spark.read.parquet(s"$dir/corpus")
+    val stored = spark.read.parquet(s"${Generations.root(spark, dir)}/corpus")
       .select("neighbor_id", "cell").collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(stored === viaExpr)
     // bounded write: the cell-keyed repartition leaves one file per cell
     stored.values.toSet.foreach { (c: Int) =>
-      val files = new java.io.File(s"$dir/corpus/shard=base/cell=$c")
+      val files = new java.io.File(s"${Generations.root(spark, dir)}/corpus/shard=base/cell=$c")
         .listFiles().count(_.getName.endsWith(".parquet"))
       assert(files === 1, s"cell $c has $files files, want 1")
     }
@@ -731,7 +729,7 @@ class SimilaritySpec extends SparkSpec {
     val probedRef = expectedProbe.toDF("query_id", "cell")
       .join(em.select(col("vec_id").as("query_id"),
         col("embedding").as("qv")), Seq("query_id"))
-    val refServed = spark.read.parquet(s"$dir/corpus")
+    val refServed = spark.read.parquet(s"${Generations.root(spark, dir)}/corpus")
       .join(broadcast(probedRef), Seq("cell"))
       .where(col("query_id") =!= col("neighbor_id"))
       .withColumn("cos_sim", Similarity.cosine(col("qv"), col("cv")))
@@ -804,7 +802,7 @@ class SimilaritySpec extends SparkSpec {
       kPerHalf = 3, pointLayout = true, pointLayoutFiles = 4)
     Similarity.appendToImiIndex(em2.where(col("vec_id") >= 64), pdir, "day-1")
     Seq("base", "day-1").foreach { s =>
-      val sd = new java.io.File(s"$pdir/corpus/shard=$s")
+      val sd = new java.io.File(s"${Generations.root(spark, pdir)}/corpus/shard=$s")
       assert(!sd.listFiles().exists(_.getName.startsWith("cell=")),
         s"shard $s must not hive-partition under pointLayout")
       assert(sd.listFiles().count(_.getName.endsWith(".parquet")) <= 4)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.SparkSpec
-import graft.ops.{LshIndex, Similarity}
+import graft.ops.{Generations, LshIndex, Similarity}
 
 /** Streaming ingest dedup against a persisted LSH index: history dups
   * drop, within-batch dups keep their component minimum, survivors are
@@ -51,7 +51,7 @@ class IngestStreamSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(survivors === Map(11L -> 0, 13L -> 0, 21L -> 1))
     // the index now holds base + both batches' survivors as shards
-    val shards = spark.read.parquet(s"$idxDir/bands")
+    val shards = spark.read.parquet(s"${Generations.root(spark, idxDir)}/bands")
       .select("shard").distinct().collect().map(_.getString(0)).toSet
     assert(shards === Set("base", "batch-0", "batch-1"))
     // and serves them: a fresh probe of novel3's copy is a dup now
@@ -78,7 +78,7 @@ class IngestStreamSpec extends SparkSpec {
     val base = Files.createTempDirectory("graft-ingest-compact").toString
     val (idxDir, srcDir, sinkDir, ckDir) =
       (s"$base/idx", s"$base/src", s"$base/sink", s"$base/ck")
-    LshIndex.buildVersioned(docsDf(Seq((1L, baseText))), idxDir, shingleSize = 2)
+    LshIndex.build(docsDf(Seq((1L, baseText))), idxDir, shingleSize = 2)
     docsDf(Seq((10L, baseText), (11L, novel1), (12L, novel1), (13L, novel2)))
       .coalesce(1).write.parquet(s"$srcDir/a")
     docsDf(Seq((20L, novel1), (21L, novel3)))
@@ -108,6 +108,33 @@ class IngestStreamSpec extends SparkSpec {
       .select("doc_id").collect().map(_.getLong(0)).toSet === Set(21L))
   }
 
+  test("compactEvery = 2 over a plain build: CURRENT advances, survivors unchanged") {
+    val base = Files.createTempDirectory("graft-ingest-compact2").toString
+    val (idxDir, srcDir, sinkDir, ckDir) =
+      (s"$base/idx", s"$base/src", s"$base/sink", s"$base/ck")
+    LshIndex.build(docsDf(Seq((1L, baseText))), idxDir, shingleSize = 2)
+    docsDf(Seq((10L, baseText), (11L, novel1), (12L, novel1), (13L, novel2)))
+      .coalesce(1).write.parquet(s"$srcDir/a")
+    docsDf(Seq((20L, novel1), (21L, novel3)))
+      .coalesce(1).write.parquet(s"$srcDir/b")
+    val q = IngestStream.ingestDedupStream(
+        EventsStream.readDocuments(spark, s"$srcDir/*", maxFilesPerTrigger = Some(1)),
+        idxDir, sinkDir, threshold = 0.5, compactEvery = 2)
+      .option("checkpointLocation", ckDir)
+      .trigger(Trigger.AvailableNow()).start()
+    assert(q.awaitTermination(600000), "stream did not finish within 10 min")
+    assert(spark.read.parquet(sinkDir)
+      .select("doc_id", "batch").collect()
+      .map(r => r.getLong(0) -> r.getInt(1)).toMap ===
+      Map(11L -> 0, 13L -> 0, 21L -> 1))
+    // one compaction, after batch 1: batch 0 folded into base, the
+    // in-flight batch kept under its own id
+    assert(Generations.root(spark, idxDir) === s"$idxDir/gen-1")
+    assert(spark.read.parquet(s"$idxDir/gen-1/bands")
+      .select("shard").distinct().collect().map(_.getString(0)).toSet ===
+      Set("base", "batch-1"))
+  }
+
   test("embedding ingest: history semantic dups drop, batch dups keep min, survivors feed the index") {
     val base = Files.createTempDirectory("graft-emb-ingest").toString
     val (idxDir, sinkDir) = (s"$base/idx", s"$base/sink")
@@ -133,7 +160,7 @@ class IngestStreamSpec extends SparkSpec {
       .select("vec_id", "batch").collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(survivors === Map(11L -> 0, 13L -> 0, 21L -> 1))
-    val shards = spark.read.parquet(s"$idxDir/corpus")
+    val shards = spark.read.parquet(s"${Generations.root(spark, idxDir)}/corpus")
       .select("shard").distinct().collect().map(_.getString(0)).toSet
     assert(shards === Set("base", "batch-0", "batch-1"))
     // replay of batch 1 is idempotent (own shard excluded from history)
@@ -230,8 +257,8 @@ class IngestStreamSpec extends SparkSpec {
     def state() = (
       spark.read.parquet(sinkDir).select("doc_id").collect()
         .map(_.getLong(0)).toSet,
-      spark.read.parquet(s"$idxDir/bands").count(),
-      spark.read.parquet(s"$idxDir/shingles").count())
+      spark.read.parquet(s"${Generations.root(spark, idxDir)}/bands").count(),
+      spark.read.parquet(s"${Generations.root(spark, idxDir)}/shingles").count())
     val first = state()
     IngestStream.ingestBatch(batch, 7L, idxDir, sinkDir)   // the replay
     assert(state() === first)
