@@ -5,6 +5,7 @@ import java.io.ByteArrayOutputStream
 import javax.sound.sampled.{AudioFileFormat, AudioFormat, AudioInputStream, AudioSystem}
 
 import graft.functions.AudioExpressions
+import graft.ops.Multimodal
 
 /** Dev tool: (re)generate the golden audio fixture at
   * `fixtures/audio.parquet` — deterministic synthetic WAV bytes PLUS
@@ -21,7 +22,6 @@ import graft.functions.AudioExpressions
   * payloads (truncated container, non-audio bytes) with NULL
   * expectations, exercising drop-don't-fail end to end. */
 object MakeAudioFixtures {
-  val OutPath = "/root/repo/fixtures/audio.parquet"
   val NumClips = 24
 
   def synthWav(i: Int): Array[Byte] = {
@@ -81,11 +81,11 @@ object MakeAudioFixtures {
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     rows().toDF().coalesce(1)
-      .write.mode("overwrite").parquet(OutPath)
-    val dir = new java.io.File(OutPath)
+      .write.mode("overwrite").parquet(Multimodal.AudioFixture)
+    val dir = new java.io.File(Multimodal.AudioFixture)
     dir.listFiles().filter(f => f.getName == "_SUCCESS" || f.getName.endsWith(".crc"))
       .foreach(_.delete())
-    println(s"wrote ${rows().size} rows to $OutPath: " +
+    println(s"wrote ${rows().size} rows to ${Multimodal.AudioFixture}: " +
       dir.listFiles().map(_.getName).mkString(", "))
     spark.stop()
   }

@@ -6,6 +6,7 @@ import java.io.ByteArrayOutputStream
 import javax.imageio.ImageIO
 
 import graft.functions.ImageExpressions
+import graft.ops.Multimodal
 
 /** Dev tool: (re)generate the golden image fixture at
   * `fixtures/images.parquet` — deterministic synthetic PNG/JPEG bytes
@@ -29,7 +30,6 @@ import graft.functions.ImageExpressions
   * NULL — exercising the decode paths' drop-don't-fail contract end
   * to end. */
 object MakeImageFixtures {
-  val OutPath = "/root/repo/fixtures/images.parquet"
   val NumImages = 48
 
   def synthImage(i: Int): BufferedImage = {
@@ -90,13 +90,13 @@ object MakeImageFixtures {
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     rows().toDF().coalesce(1)
-      .write.mode("overwrite").parquet(OutPath)
+      .write.mode("overwrite").parquet(Multimodal.ImageFixture)
     // keep the fixture dir clean for version control: the data file is
     // the artifact, the write-protocol droppings are not
-    val dir = new java.io.File(OutPath)
+    val dir = new java.io.File(Multimodal.ImageFixture)
     dir.listFiles().filter(f => f.getName == "_SUCCESS" || f.getName.endsWith(".crc"))
       .foreach(_.delete())
-    println(s"wrote ${rows().size} rows to $OutPath: " +
+    println(s"wrote ${rows().size} rows to ${Multimodal.ImageFixture}: " +
       dir.listFiles().map(_.getName).mkString(", "))
     spark.stop()
   }

@@ -190,8 +190,9 @@ object SparkEntry {
       s"$d/wet"
     }
 
-  /** q150's fixture: the q145 planted HTML pages as the WET records'
-    * payloads — a raw-crawl segment whose pages need real extraction. */
+  /** q150/q153/q155/q158's fixture: the q145 planted HTML pages as the
+    * WET records' payloads — a raw-crawl segment whose pages need real
+    * extraction. */
   private def wetHtmlFixtureFor(s: SparkSession, dir: String): String =
     buildOnce(s, "wet-html", dir, "documents") { d =>
       Warc.writeWet(t(s, dir, "documents").select(col("doc_id"), plantedHtml.as("text")),
@@ -199,76 +200,40 @@ object SparkEntry {
       s"$d/wet"
     }
 
-  /** q165's fixture: the q150 planted-HTML WET corpus written WITH
-    * Content-Length headers — the exact-framing ingest front's input. */
-  private def wetHtmlExactFixtureFor(s: SparkSession, dir: String): String =
-    buildOnce(s, "wet-html-exact", dir, "documents") { d =>
-      Warc.writeWetExact(t(s, dir, "documents").select(col("doc_id"), plantedHtml.as("text")),
-        s"$d/wet")
-      s"$d/wet"
-    }
-
-  /** q151's fixture: the q145 planted HTML pages as the BODIES of raw
-    * WARC `response` records (HTTP status line + headers + blank line
-    * + markup) — a from-scratch crawl segment, one stage earlier than
-    * the q150 WET form. */
-  private def warcRespFixtureFor(s: SparkSession, dir: String): String =
-    buildOnce(s, "warc-resp", dir, "documents") { d =>
-      Warc.writeWarcResponses(
-        t(s, dir, "documents").select(col("doc_id"), plantedHtml.as("html")), s"$d/warc")
-      s"$d/warc"
-    }
-
-  /** The framing-audit fixtures' payloads: docs with `doc_id % 7 == 0`
-    * get the WET record marker PLANTED inside `body`, so the framing
-    * contract's failure mode (the fragment row) actually fires and the
-    * audit relation counts it. The oracle re-derives the expected
-    * counts from the documents table, which relies on the fixture texts
-    * being otherwise marker-free (the same q149 invariant). */
-  private val FragTail = "INJECTED FRAGMENT TAIL"
+  /** The planted-marker fixtures' payloads: docs with `doc_id % 7 == 0`
+    * get the WET record marker PLANTED inside `body`, so the readers
+    * must carry it verbatim inside the payload. The oracles re-derive
+    * every payload from the documents table. */
+  private val MarkerTail = "INJECTED FRAGMENT TAIL"
   private def withPlantedMarker(body: Column): Column =
-    when(col("doc_id") % 7 === 0, concat(body, lit("\n" + Warc.Marker + "\n" + FragTail)))
+    when(col("doc_id") % 7 === 0, concat(body, lit("\n" + Warc.Marker + "\n" + MarkerTail)))
       .otherwise(body)
 
-  /** q152's framing-audit fixture: the planted-marker corpus as WET. */
-  private def wetFragFixtureFor(s: SparkSession, dir: String): String =
-    buildOnce(s, "wet-frag", dir, "documents") { d =>
+  /** q160/q170's fixture: the planted-marker corpus as WET. */
+  private def wetMarkerFixtureFor(s: SparkSession, dir: String): String =
+    buildOnce(s, "wet-marker", dir, "documents") { d =>
       Warc.writeWet(t(s, dir, "documents")
         .select(col("doc_id"), withPlantedMarker(col("text")).as("text")), s"$d/wet")
       s"$d/wet"
     }
 
-  /** q160's fixture: the q152 planted-marker corpus written WITH
-    * Content-Length headers ([[Warc.writeWetExact]]) — the same
-    * adversarial payloads that fragment under marker framing, framed
-    * exactly. */
-  private def wetExactFixtureFor(s: SparkSession, dir: String): String =
-    buildOnce(s, "wet-exact", dir, "documents") { d =>
-      Warc.writeWetExact(t(s, dir, "documents")
-        .select(col("doc_id"), withPlantedMarker(col("text")).as("text")), s"$d/wet")
-      s"$d/wet"
-    }
-
-  /** q164's fixture: the q151 planted pages written as
-    * Content-Length-framed WARC `response` records
-    * ([[Warc.writeWarcResponsesExact]]), with the record marker planted
-    * INSIDE the HTML body of `doc_id % 7 == 0` — the bodies that
-    * fragment under marker framing round-trip verbatim through the
-    * exact reader. */
-  private def warcRespExactFixtureFor(s: SparkSession, dir: String): String =
-    buildOnce(s, "warc-resp-exact", dir, "documents") { d =>
-      Warc.writeWarcResponsesExact(t(s, dir, "documents")
+  /** q164's fixture: the q151 planted pages written as WARC
+    * `response` records, with the record marker planted INSIDE the
+    * HTML body of `doc_id % 7 == 0` — the bodies round-trip verbatim. */
+  private def warcRespMarkerFixtureFor(s: SparkSession, dir: String): String =
+    buildOnce(s, "warc-resp-marker", dir, "documents") { d =>
+      Warc.writeWarcResponses(t(s, dir, "documents")
         .select(col("doc_id"), withPlantedMarker(plantedHtml).as("html")), s"$d/warc")
       s"$d/warc"
     }
 
-  /** q157's fixture: the q151 planted pages (marker-free) as
-    * Content-Length-framed `response` records, so the raw-WARC entry
-    * of the composed chain rides the byte-exact framing end to end
-    * (the marker-framed [[warcRespFixtureFor]] stays q151's input). */
-  private def warcRespExactCleanFixtureFor(s: SparkSession, dir: String): String =
-    buildOnce(s, "warc-resp-exact-clean", dir, "documents") { d =>
-      Warc.writeWarcResponsesExact(
+  /** q151/q157's fixture: the q145 planted pages (marker-free) as the
+    * BODIES of raw WARC `response` records (HTTP status line + headers
+    * + blank line + markup) — a from-scratch crawl segment, one stage
+    * earlier than the q150 WET form. */
+  private def warcRespFixtureFor(s: SparkSession, dir: String): String =
+    buildOnce(s, "warc-resp", dir, "documents") { d =>
+      Warc.writeWarcResponses(
         t(s, dir, "documents").select(col("doc_id"), plantedHtml.as("html")), s"$d/warc")
       s"$d/warc"
     }
@@ -1302,10 +1267,11 @@ object SparkEntry {
       // WET crawl-format round-trip: the documents table written as a
       // WET file set (one conversion record per doc + a warcinfo
       // header record), read back through the splittable
-      // lineSep-framed reader — the file format a real Common-Crawl
-      // pipeline starts from. The oracle derives the expected records
-      // from the documents table directly (the planting is exactly
-      // invertible), so the hash compare proves the parse
+      // Content-Length-framed reader — the file format a real
+      // Common-Crawl pipeline starts from. The oracle derives the
+      // expected records from the documents table directly (the
+      // planting is exactly invertible), so the hash compare proves
+      // the parse
       "q149_wet_roundtrip" -> q { (s, dir) =>
         graft.ops.Warc.readWet(s, wetFixtureFor(s, dir))
           .where(col("wtype") === "conversion")
@@ -1317,8 +1283,7 @@ object SparkEntry {
       // file → records → text, the first three stages a Common-Crawl
       // user runs, composed. Oracle = the q145 extraction chain over
       // the same planted pages (the WET round-trip is identity on
-      // payloads; extraction's line filter is invariant to the
-      // record-padding newlines)
+      // payloads)
       "q150_wet_extract" -> q { (s, dir) =>
         graft.ops.Warc.readWet(s, wetHtmlFixtureFor(s, dir))
           .where(col("wtype") === "conversion")
@@ -1327,25 +1292,14 @@ object SparkEntry {
       },
       // the from-scratch crawl start: raw WARC response records (HTTP
       // status line + headers + blank line + HTML body), split at the
-      // SECOND blank line by the reader, body fed to extraction — one
-      // stage earlier than q150's WET form. Oracle = the q145 chain
-      // plus the deterministic HTTP columns the fixture writer plants
+      // HTTP message's blank line by the reader, body fed to
+      // extraction — one stage earlier than q150's WET form. Oracle =
+      // the q145 chain plus the deterministic HTTP columns the fixture
+      // writer plants
       "q151_warc_responses" -> q { (s, dir) =>
         graft.ops.Warc.readWarcResponses(s, warcRespFixtureFor(s, dir))
           .select(col("uri"), col("http_status"), col("content_type"),
             graft.ops.Extract.mainText(col("body")).as("main_text"))
-      },
-      // the framing contract made operational: a fixture with the WET
-      // marker PLANTED inside payloads (doc_id % 7 == 0) audited by
-      // Warc.wetAudit — fragment count and severed chars, the relation
-      // callers gate a segment set on before consuming it. Summed over
-      // files (the fixture is one file; src_file paths are
-      // nondeterministic temp dirs, so the oracle compares totals)
-      "q152_wet_fragment_audit" -> q { (s, dir) =>
-        graft.ops.Warc.wetAudit(s, wetFragFixtureFor(s, dir))
-          .agg(sum("n_records").cast("long").as("n_records"),
-            sum("n_fragments").cast("long").as("n_fragments"),
-            sum("fragment_chars").cast("long").as("fragment_chars"))
       },
       // the URL stage a crawl runs BEFORE reading any content (CCNet
       // dedups by URL across dumps, RefinedWeb caps pages per domain):
@@ -1422,25 +1376,21 @@ object SparkEntry {
             "url", maxPerDomain = 20, capPerRegistrable = true)
           .select("doc_id", "registrable_domain", "domain", "url_norm")
       },
-      // byte-exact Content-Length framing (the custom splittable
-      // InputFormat): the SAME planted-marker corpus that q152 audits
-      // as fragmented under marker framing round-trips VERBATIM here —
-      // the oracle derives every payload (including the embedded
-      // marker) straight from documents
+      // Content-Length framing (the custom splittable InputFormat):
+      // payloads with the record marker PLANTED inside (doc_id % 7)
+      // round-trip VERBATIM — the oracle derives every payload
+      // (including the embedded marker) straight from documents
       "q160_wet_exact_framing" -> q { (s, dir) =>
-        graft.ops.Warc.readWetExact(s, wetExactFixtureFor(s, dir))
+        graft.ops.Warc.readWet(s, wetMarkerFixtureFor(s, dir))
           .where(col("wtype") === "conversion")
           .select(col("uri"), col("payload"))
       },
-      // raw-WARC response records through the SAME byte-exact framing
-      // (q151's reader rides the marker contract; this one rides
-      // io.WarcInputFormat): HTML bodies with the record marker
-      // PLANTED inside (doc_id % 7) come back verbatim, HTTP status
+      // raw-WARC response records with the record marker PLANTED
+      // inside the HTML bodies (doc_id % 7) come back verbatim, HTTP status
       // and content-type parsed off the message head — the oracle
       // derives every body (marker included) straight from documents
       "q164_warc_responses_exact" -> q { (s, dir) =>
-        graft.ops.Warc.readWarcResponsesExact(s,
-            warcRespExactFixtureFor(s, dir))
+        graft.ops.Warc.readWarcResponses(s, warcRespMarkerFixtureFor(s, dir))
           .select(col("uri"), col("http_status"), col("content_type"),
             col("body"))
       },
@@ -1467,15 +1417,6 @@ object SparkEntry {
       // streaming path is transitively oracle-checked)
       "q155_crawl_ingest_backfill" -> q { (s, dir) =>
         graft.streaming.CrawlIngest.batchTwin(s, wetHtmlFixtureFor(s, dir))
-      },
-      // the BYTE-EXACT streaming front end's per-batch computation as
-      // its batch-backfill form (extractStreamExact's twin —
-      // CrawlIngestSpec proves the binaryFile-source stream ≡ this
-      // twin on marker-bearing and gzipped segments): same planted
-      // pages under Content-Length framing, same oracle as q155
-      "q165_crawl_ingest_exact" -> q { (s, dir) =>
-        graft.streaming.CrawlIngest.batchTwinExact(s,
-          wetHtmlExactFixtureFor(s, dir))
       },
       // the crawl's OUTBOUND half: WARC `request` records (ISO-28500
       // pairs every response with its request) — request line parsed
@@ -1638,14 +1579,14 @@ object SparkEntry {
             docs.select(col("doc_id"), html.as("html")), srcCol = "doc_id")
           .select(col("doc_id"), col("href"), col("anchor_text"))
       },
-      // the exact-framing monitoring twin of q152's fragment audit:
-      // exact framing cannot fragment, so the gate relation is the
-      // per-file INVENTORY (record counts by type + payload volume) —
-      // run over the q160 planted-marker fixture and re-derived from
-      // documents (marker tails included in the payload volume). One
-      // fixture file → totals compared, as q152
+      // the segment-set monitoring relation: the per-file INVENTORY
+      // (record counts by type + payload volume) — run over the q160
+      // planted-marker fixture and re-derived from documents (marker
+      // tails included in the payload volume). One fixture file (its
+      // src_file path is a nondeterministic temp dir) → totals
+      // compared
       "q170_warc_inventory" -> q { (s, dir) =>
-        graft.ops.Warc.warcInventory(s, wetExactFixtureFor(s, dir))
+        graft.ops.Warc.warcInventory(s, wetMarkerFixtureFor(s, dir))
           .agg(sum("n_records").cast("long").as("n_records"),
             sum("n_conversion").cast("long").as("n_conversion"),
             sum("n_response").cast("long").as("n_response"),
@@ -1735,13 +1676,11 @@ object SparkEntry {
       },
       // q153 entered from the RAW-WARC front: response records
       // (HTTP-status/content-type gated, the real crawl rule) → body →
-      // the same composed curation, over the BYTE-EXACT Content-Length
-      // framing (io.WarcInputFormat) end to end. Fixture plants the
-      // same pages, so the oracle is the SAME generator — proof the
-      // two crawl entry formats converge to one corpus
+      // the same composed curation. Fixture plants the same pages, so
+      // the oracle is the SAME generator — proof the two crawl entry
+      // formats converge to one corpus
       "q157_warc_crawl_curate" -> q { (s, dir) =>
-        val pages = graft.ops.Warc
-          .readWarcResponsesExact(s, warcRespExactCleanFixtureFor(s, dir))
+        val pages = graft.ops.Warc.readWarcResponses(s, warcRespFixtureFor(s, dir))
           .where(col("http_status") === 200 &&
             col("content_type").startsWith("text/html"))
           .select(regexp_extract(col("uri"), "([0-9]+)$", 1)
@@ -2591,8 +2530,7 @@ object SparkEntry {
       $iters"""
   }
 
-  /** The crawl-ingest twin oracle (q155 lineSep / q165 exact — one
-    * generator, both fronts): extraction over the WET payloads
+  /** The crawl-ingest twin oracle (q155): extraction over the WET payloads
     * (identity on the planted pages), the q15 stats generator over
     * the extracted relation, the quality gate, text joined back.
     * doc_id is the record URI (the stream's natural key). */
@@ -4643,14 +4581,11 @@ object SparkEntry {
       duckImiCorpusTrainedSql(kPerHalf = 4, iters = 2, nprobe = 4, k = 5),
     // q149: the WET round-trip — expected records derived straight
     // from documents (writeWet's headers are deterministic; the
-    // reader CRLF-normalizes then strips the record's trailing
-    // newline padding — BOTH mirrored here, so a fixture text that
-    // ever grows \r\n sequences keeps the hashes aligned instead of
-    // silently diverging on CR)
+    // reader returns each payload verbatim)
     "q149_wet_roundtrip" -> """
       SELECT 'http://example.com/doc/' || CAST(doc_id AS VARCHAR) AS uri,
         '2026-08-16T00:00:00Z' AS warc_date,
-        rtrim(replace(text, chr(13) || chr(10), chr(10)), chr(10)) AS payload
+        text AS payload
       FROM documents""",
     // q150: WET file → records → extraction, composed — the q145
     // chain over the same planted pages, plus the record URI
@@ -4666,20 +4601,6 @@ object SparkEntry {
         CAST(200 AS INT) AS http_status,
         'text/html; charset=UTF-8' AS content_type,
         ${duckExtractExpr(DuckPlantedHtml)} AS main_text
-      FROM documents""",
-    // q152: the framing audit re-derived from documents. Pieces per
-    // single-file fixture: 1 warcinfo + one conversion record per doc
-    // + one fragment per planted doc (doc_id % 7 = 0). A fragment's
-    // chars = leading newline + the injected tail + the record's
-    // trailing newline + the text sink's row separator (= len + 3);
-    // relies on the fixture texts being otherwise marker-free (the
-    // q149 invariant).
-    "q152_wet_fragment_audit" -> s"""
-      SELECT CAST(1 + count(*)
-          + count(*) FILTER (WHERE doc_id % 7 = 0) AS BIGINT) AS n_records,
-        CAST(count(*) FILTER (WHERE doc_id % 7 = 0) AS BIGINT) AS n_fragments,
-        CAST(count(*) FILTER (WHERE doc_id % 7 = 0)
-          * (length('$FragTail') + 3) AS BIGINT) AS fragment_chars
       FROM documents""",
     // q153: the flagship composed chain — extraction, segment dedup,
     // curation, and perplexity bucketing all from the SAME factored
@@ -4699,12 +4620,6 @@ object SparkEntry {
     // joined back. doc_id here is the record URI (the stream's natural
     // key)
     "q155_crawl_ingest_backfill" -> duckCrawlIngestSql,
-    // q165: the EXACT-framing front end's batch twin — the identical
-    // computation over Content-Length-framed segments (payload parse
-    // is identity on the planted pages), so the oracle IS the q155
-    // oracle; CrawlIngestSpec proves exact stream ≡ this twin, so the
-    // byte-exact streaming path is transitively oracle-checked
-    "q165_crawl_ingest_exact" -> duckCrawlIngestSql,
     // q156: per-language perplexity buckets — the bp/ts generators
     // joined, the bucket generator PARTITIONED by lang_pred
     "q156_ppl_buckets_by_lang" -> s"""
@@ -4795,16 +4710,15 @@ object SparkEntry {
           ORDER BY (md5_number_lower('cap|' || CAST(doc_id AS VARCHAR))
                     & 9223372036854775807) % 1000000, doc_id) AS rn
         FROM k) WHERE rn <= 20""",
-    // q160: byte-exact Content-Length framing — every payload verbatim
-    // from documents, INCLUDING the planted in-payload marker that
-    // fragments under the q152 marker framing
+    // q160: Content-Length framing — every payload verbatim from
+    // documents, INCLUDING the planted in-payload marker
     "q160_wet_exact_framing" -> s"""
       SELECT 'http://example.com/doc/' || CAST(doc_id AS VARCHAR) AS uri,
         CASE WHEN doc_id % 7 = 0
-             THEN text || chr(10) || 'WARC/1.0' || chr(10) || '$FragTail'
+             THEN text || chr(10) || 'WARC/1.0' || chr(10) || '$MarkerTail'
              ELSE text END AS payload
       FROM documents""",
-    // q164: exact-framed response records — status/content-type are
+    // q164: response records — status/content-type are
     // the deterministic fixture constants, the body is the planted
     // page (PLUS the embedded marker for doc_id % 7) verbatim
     "q164_warc_responses_exact" -> s"""
@@ -4813,7 +4727,7 @@ object SparkEntry {
         'text/html; charset=UTF-8' AS content_type,
         CASE WHEN doc_id % 7 = 0
              THEN $DuckPlantedHtml || chr(10) || 'WARC/1.0' ||
-               chr(10) || '$FragTail'
+               chr(10) || '$MarkerTail'
              ELSE $DuckPlantedHtml END AS body
       FROM documents""",
     // q166: request records — every column from the fixture arithmetic
@@ -4836,7 +4750,7 @@ object SparkEntry {
           WHEN 'fetchTimeMs' THEN CAST(doc_id % 1000 AS VARCHAR)
           WHEN 'charset' THEN 'UTF-8'
           ELSE 'en' END AS v)""",
-    // q170: the exact-segment inventory — counts and payload volume
+    // q170: the segment inventory — counts and payload volume
     // (marker tails included) straight from documents, plus the one
     // warcinfo record the fixture writer leads with
     "q170_warc_inventory" -> s"""
@@ -4845,7 +4759,7 @@ object SparkEntry {
         CAST(0 AS BIGINT) AS n_response,
         CAST(1 AS BIGINT) AS n_other,
         CAST(sum(length(CASE WHEN doc_id % 7 = 0
-            THEN text || chr(10) || 'WARC/1.0' || chr(10) || '$FragTail'
+            THEN text || chr(10) || 'WARC/1.0' || chr(10) || '$MarkerTail'
             ELSE text END)) + length('software: graft') AS BIGINT)
           AS payload_chars
       FROM documents""",

@@ -9,12 +9,10 @@ import org.apache.hadoop.mapreduce.{InputSplit, JobContext, RecordReader, TaskAt
 import org.apache.hadoop.mapreduce.lib.input.{FileInputFormat, FileSplit}
 
 /** Content-Length-honoring WARC record framing as a SPLITTABLE Hadoop
-  * InputFormat — the byte-exact reader the ISO-28500 format actually
-  * specifies, closing the one honest limitation of the engine's
-  * lineSep marker framing (`ops.Warc` scaladoc): a payload that
-  * CONTAINS the record marker fragments under marker framing (q152's
-  * audit counts it), while this reader skips exactly
-  * `Content-Length` payload bytes and can never split inside one.
+  * InputFormat — the ISO-28500 framing, and the one every `ops.Warc`
+  * reader goes through: the reader skips exactly `Content-Length`
+  * payload bytes, so it can never split inside a payload, whatever the
+  * payload contains (the record marker included).
   *
   * Record = version line (`WARC/x.y`) + header lines + blank line +
   * exactly Content-Length payload bytes (+ separator newlines). The
@@ -57,6 +55,10 @@ object WarcInputFormat {
 
   private[io] val MaxHeaderBytes = 64 * 1024
   private[io] val MaxHeaderLines = 256
+
+  /** Readers initialized and not yet closed in this JVM — the close
+    * contract's observable. */
+  private[io] val openReaders = new java.util.concurrent.atomic.AtomicInteger
 }
 
 class WarcRecordReader extends RecordReader[LongWritable, Text] {
@@ -64,6 +66,7 @@ class WarcRecordReader extends RecordReader[LongWritable, Text] {
 
   private var fsin: FSDataInputStream = _
   private var stream: InputStream = _ // decompressed stream when compressed
+  private var file = "" // named in the refusal message
   private var seekable = false
   private var start = 0L
   private var end = 0L
@@ -81,14 +84,14 @@ class WarcRecordReader extends RecordReader[LongWritable, Text] {
   private var done = false
 
   /** Standalone SEQUENTIAL initialization over an already-open byte
-    * stream — the streaming exact reader's entry
-    * ([[graft.ops.Warc.readWetExactStream]] feeds each whole segment
-    * file through here): the identical parser, caps, and
-    * refuse-loudly contract as the compressed (non-seekable) file
-    * path, so batch and streaming framing are single-sourced. The
-    * caller owns the stream's lifecycle (close() also closes it). */
-  def initializeSequential(in: InputStream): Unit = {
-    stream = in
+    * stream of the file `name` — the streaming reader's entry
+    * ([[graft.ops.Warc.readWetStream]] feeds each whole segment file
+    * through here): the identical parser, caps, and refuse-loudly
+    * contract as the compressed (non-seekable) file path, so batch and
+    * streaming framing are single-sourced. The caller owns the stream's
+    * lifecycle (close() also closes it). */
+  def initializeSequential(in: InputStream, name: String): Unit = {
+    opened(in, name)
     seekable = false
     start = 0L
     end = Long.MaxValue
@@ -96,24 +99,30 @@ class WarcRecordReader extends RecordReader[LongWritable, Text] {
     fileLen = 0L
   }
 
+  private def opened(in: InputStream, name: String): Unit = {
+    stream = in
+    file = name
+    openReaders.incrementAndGet()
+  }
+
   override def initialize(genericSplit: InputSplit,
                           context: TaskAttemptContext): Unit = {
     val split = genericSplit.asInstanceOf[FileSplit]
     val conf = context.getConfiguration
-    val file = split.getPath
-    val fs = file.getFileSystem(conf)
-    fileLen = fs.getFileStatus(file).getLen
-    fsin = fs.open(file)
-    val codec = new CompressionCodecFactory(conf).getCodec(file)
+    val path = split.getPath
+    val fs = path.getFileSystem(conf)
+    fileLen = fs.getFileStatus(path).getLen
+    fsin = fs.open(path)
+    val codec = new CompressionCodecFactory(conf).getCodec(path)
     if (codec != null) {
       // compressed: whole-stream single split, sequential only
-      stream = codec.createInputStream(fsin)
+      opened(codec.createInputStream(fsin), path.toString)
       seekable = false
       start = 0L
       end = Long.MaxValue
       pos = 0L
     } else {
-      stream = fsin
+      opened(fsin, path.toString)
       seekable = true
       start = split.getStart
       end = start + split.getLength
@@ -300,9 +309,10 @@ class WarcRecordReader extends RecordReader[LongWritable, Text] {
     val header = tryParseHeader()
     if (header == null)
       throw new IOException(
-        s"malformed WARC record at offset $recStart (synced stream) — " +
-          "refusing to guess; use ops.Warc.readWet marker framing to " +
-          "surface fragments instead")
+        s"malformed WARC record in $file at offset $recStart: a record " +
+          "needs a well-formed header block (version line, `Name: value` " +
+          "lines, blank line) with a Content-Length header; refusing " +
+          "to guess")
     emit(recStart, header)
     true
   }
@@ -331,5 +341,6 @@ class WarcRecordReader extends RecordReader[LongWritable, Text] {
   override def close(): Unit = if (stream != null) {
     stream.close()
     stream = null
+    openReaders.decrementAndGet()
   }
 }

@@ -28,8 +28,10 @@ object Multimodal {
   /** Golden image fixture (checked in): deterministic PNG/JPEG bytes +
     * the expected decode results, both produced by graft.MakeImageFixtures
     * with the SAME JDK decoder the engine runs — so the DuckDB oracle
-    * can read expectations no SQL engine could compute itself. */
-  val ImageFixture = "/root/repo/fixtures/images.parquet"
+    * can read expectations no SQL engine could compute itself. The
+    * fixture paths resolve against the JVM's working directory, the
+    * checkout root under `dev/run.sh`, sbt and the forked test JVM. */
+  val ImageFixture = new java.io.File("fixtures/images.parquet").getAbsolutePath
 
   /** Expression-path real decode: one scan, decode in place, null-row
     * for undecodable payloads (dropped here — a corrupt object must
@@ -60,7 +62,7 @@ object Multimodal {
   /** Golden audio fixture (checked in): deterministic WAV bytes + the
     * expected decode results, both from graft.MakeAudioFixtures with
     * the SAME javax.sound.sampled stack the engine runs. */
-  val AudioFixture = "/root/repo/fixtures/audio.parquet"
+  val AudioFixture = new java.io.File("fixtures/audio.parquet").getAbsolutePath
 
   /** Expression-path real audio decode — [[imageFeaturesExpr]]'s
     * pattern on the second modality; undecodable payloads drop. */

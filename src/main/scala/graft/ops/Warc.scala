@@ -1,165 +1,55 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** WET (WARC extracted-text) source reader — the file format a real
-  * crawl actually lands in: a Common-Crawl WET segment is a
-  * concatenation of records, each `WARC/1.0` + header lines + blank
-  * line + text payload. This reader turns a WET file set into a
-  * records relation `(wtype, uri, warc_date, payload)` so the rest of
+/** WARC/WET source readers and writers — the file format a real crawl
+  * actually lands in: a segment is a concatenation of ISO-28500
+  * records, each `WARC/1.0` + header lines + blank line + exactly
+  * `Content-Length` payload bytes. The readers turn a segment set into
+  * relations (`(wtype, uri, warc_date, payload)` for WET, typed
+  * projections for response/request/metadata records) so the rest of
   * the pipeline (extraction for raw WARC, language-ID/quality/dedup
   * for WET) starts from the bytes a crawl delivers.
   *
-  * Scale design: framing rides Spark's native custom line separator
-  * (`spark.read.option("lineSep", marker)`) — Hadoop's
-  * LineRecordReader splits on the marker AT THE READER, handling
-  * records that straddle HDFS block boundaries the same way plain
-  * line reading does, so the scan parallelizes like any text source
-  * (no whole-file reads, no driver-side splitting). Header fields
-  * parse with anchored multiline regexes; the payload is everything
-  * after the first blank line, CRLF-normalized, trailing record
-  * padding stripped.
-  *
-  * Framing contract (documented limitation): records are delimited by
-  * the raw marker OCCURRENCE, not by Content-Length — the streaming
-  * framing a splittable text reader can honor. A payload that itself
-  * contains the marker string would split there; the tail fragment
-  * surfaces as a row with `wtype = ''` and `uri = ''` (no header
-  * block), which callers filter or audit — the same visibility rule
-  * as the engine's other refuse-or-surface contracts. Real WET
-  * conversion payloads are tag-stripped text in which `WARC/1.0`
-  * essentially never occurs; byte-exact Content-Length framing needs
-  * a custom binary InputFormat, deliberately out of scope. */
+  * Framing: every reader frames records by Content-Length through the
+  * splittable [[graft.io.WarcInputFormat]] (the batch readers) or the
+  * same [[graft.io.WarcRecordReader]] over whole arriving files (the
+  * stream). Payloads come back VERBATIM — no CRLF normalization, no
+  * padding strip — and may contain anything, the record marker
+  * included. A record without a well-formed header block carrying
+  * Content-Length is refused with its file and offset, never guessed
+  * at. Every writer emits Content-Length, so its files read back. */
 object Warc {
 
   val Marker = "WARC/1.0"
 
   /** Read a WET file set into one row per record. `wtype` is the
-    * WARC-Type header (`warcinfo`, `conversion`, …); fragment rows
-    * (see framing contract) carry empty `wtype`/`uri`. Gzipped
-    * segments (`.wet.gz`, the Common-Crawl shape) decompress
-    * transparently via the text source's codec inference — each gzip
-    * file is ONE split, so parallelism is per-file, which matches the
-    * crawl's many-small-segments layout (spec-asserted). */
+    * WARC-Type header (`warcinfo`, `conversion`, …); header lines may
+    * use CRLF (the Common-Crawl dialect), the payload is verbatim.
+    * Splittable on uncompressed files (resync validates a full header
+    * block before believing a marker, so payload bytes that merely
+    * look like one are skipped); gzipped segments (`.wet.gz`, the
+    * Common-Crawl shape) are one split per file, which matches the
+    * crawl's many-small-segments layout. */
   def readWet(spark: SparkSession, path: String): DataFrame =
-    parseWetRecords(spark.read.option("lineSep", Marker).text(path))
+    recordProjection(readRecords(spark, path))
 
-  /** Streaming twin of [[readWet]]: the same lineSep framing and the
-    * SAME record projection over Structured Streaming's file source —
-    * a crawl delivers segment files continuously, and this is the
-    * arrival side of that pipeline (new files are discovered per
-    * micro-batch; records within a file parse exactly as the batch
-    * reader parses them, single-sourced via [[parseWetRecords]]).
-    * Compose with [[graft.ops.Extract.mainText]] and a quality gate
-    * for the full streaming front end (CrawlIngestSpec drives it
-    * against the batch twin). */
-  def readWetStream(spark: SparkSession, path: String): DataFrame =
-    parseWetRecords(spark.readStream.option("lineSep", Marker).text(path))
-
-  /** The record projection shared by the batch and streaming readers:
-    * CRLF-normalize, drop per-file preamble splits, parse the header
-    * fields, cut the payload at the first blank line. ONE definition
-    * so batch and stream can never diverge. */
-  private def parseWetRecords(raw: DataFrame): DataFrame = {
-    // per-file preamble before the first marker is an empty split
-    val recs = raw.where(length(trim(col("value"))) > 0)
-      .select(regexp_replace(col("value"), "\r\n", "\n").as("v"))
-    val header = substring_index(col("v"), "\n\n", 1)
-    recs.select(
-        regexp_extract(header, "(?m)^WARC-Type:\\s*(\\S+)", 1).as("wtype"),
-        regexp_extract(header, "(?m)^WARC-Target-URI:\\s*(\\S+)", 1).as("uri"),
-        regexp_extract(header, "(?m)^WARC-Date:\\s*(\\S+)", 1).as("warc_date"),
-        when(instr(col("v"), "\n\n") > 0,
-          regexp_replace(
-            col("v").substr(instr(col("v"), "\n\n") + lit(2),
-              length(col("v"))),
-            "\n+$", ""))
-          .otherwise(lit("")).as("payload"))
-  }
-
-  /** Read raw WARC `response` records — the format a from-scratch
-    * crawl actually starts at, one step EARLIER than WET: each record
-    * is WARC headers + blank line + an HTTP response (status line +
-    * HTTP headers + blank line + body, usually HTML). Same splittable
-    * `lineSep` framing and framing contract as [[readWet]]; the
-    * payload splits once more at the SECOND blank line into the HTTP
-    * header block and the body. Non-`response` records (warcinfo,
-    * request, metadata — and framing fragments, which have no header
-    * block) are filtered here; audit them via [[wetAudit]], which
-    * reads the same framing without the type filter.
-    *
-    * Columns: `uri`, `warc_date`, `http_status` (int, null when the
-    * status line is absent/malformed), `content_type` (the HTTP
-    * Content-Type header, case-insensitive match, '' when absent),
-    * `body` (CRLF-normalized, record padding stripped — feed it to
-    * [[graft.ops.Extract.mainText]]). */
-  def readWarcResponses(spark: SparkSession, path: String): DataFrame = {
-    val raw = spark.read.option("lineSep", Marker).text(path)
-    val recs = raw.where(length(trim(col("value"))) > 0)
-      .select(regexp_replace(col("value"), "\r\n", "\n").as("v"))
-    val parts = recs
-      .withColumn("warc_hdr", substring_index(col("v"), "\n\n", 1))
-      .withColumn("rest",
-        when(instr(col("v"), "\n\n") > 0,
-          col("v").substr(instr(col("v"), "\n\n") + lit(2), length(col("v"))))
-          .otherwise(lit("")))
-      .withColumn("http_hdr", substring_index(col("rest"), "\n\n", 1))
-      .withColumn("body",
-        when(instr(col("rest"), "\n\n") > 0,
-          regexp_replace(
-            col("rest").substr(instr(col("rest"), "\n\n") + lit(2),
-              length(col("rest"))),
-            "\n+$", ""))
-          .otherwise(lit("")))
-    parts
-      .where(regexp_extract(col("warc_hdr"),
-        "(?m)^WARC-Type:\\s*(\\S+)", 1) === "response")
-      .select(
-        regexp_extract(col("warc_hdr"),
-          "(?m)^WARC-Target-URI:\\s*(\\S+)", 1).as("uri"),
-        regexp_extract(col("warc_hdr"),
-          "(?m)^WARC-Date:\\s*(\\S+)", 1).as("warc_date"),
-        regexp_extract(col("http_hdr"),
-          "^HTTP/[0-9.]+\\s+([0-9]{3})", 1).cast("int").as("http_status"),
-        regexp_extract(col("http_hdr"),
-          "(?mi)^content-type:\\s*([^\\n]+)", 1).as("content_type"),
-        col("body"))
-  }
-
-  /** Byte-EXACT WET reader over the Content-Length-honoring
-    * splittable [[graft.io.WarcInputFormat]] — the ISO-28500 framing
-    * the marker-based [[readWet]] approximates. The difference is the
-    * framing contract: a payload that CONTAINS the record marker
-    * fragments under [[readWet]] (surfaced rows, counted by
-    * [[wetAudit]]) but round-trips VERBATIM here, because the reader
-    * skips exactly Content-Length payload bytes (q160 proves it on
-    * the planted-marker fixture that q152 audits as fragmented).
-    * Payload bytes are verbatim — no CRLF normalization, no trailing
-    * padding strip: exactness is the point. Splittable on
-    * uncompressed files (resync validates a full header block before
-    * believing a marker, so payload bytes that merely look like one
-    * are skipped); gzip segments are per-file splits as everywhere
-    * else. Requires Content-Length headers (the WARC spec makes them
-    * mandatory; [[writeWetExact]] writes them). */
-  def readWetExact(spark: SparkSession, path: String): DataFrame =
-    exactRecordProjection(readExactRecords(spark, path))
-
-  /** Streaming twin of [[readWetExact]] — byte-exact Content-Length
-    * framing over Structured Streaming. A custom DSv2 streaming
-    * source around [[graft.io.WarcInputFormat]] would re-implement
-    * Spark's file discovery, offset log, and exactly-once bookkeeping;
-    * instead the stream rides the built-in `binaryFile` file source:
-    * each discovered segment file arrives WHOLE and parses through
-    * the SAME [[graft.io.WarcRecordReader]] sequential path the batch
-    * reader uses for gzip members (framing single-sourced — stream
-    * and batch can never diverge), `.gz` decompressed by extension.
-    * Whole-file batching is not a compromise here: in the crawl's
-    * many-small-segments layout the FILE is the arrival unit, and a
-    * gzip segment is one split in the batch reader anyway; per-task
-    * memory is one segment (~100 MB at the Common-Crawl shape). Same
-    * record projection as [[readWetExact]]. */
-  def readWetExactStream(spark: SparkSession, path: String): DataFrame = {
+  /** Streaming twin of [[readWet]] over Structured Streaming. A custom
+    * DSv2 streaming source around [[graft.io.WarcInputFormat]] would
+    * re-implement Spark's file discovery, offset log, and exactly-once
+    * bookkeeping; instead the stream rides the built-in `binaryFile`
+    * file source: each discovered segment file arrives WHOLE and
+    * parses through the SAME [[graft.io.WarcRecordReader]] sequential
+    * path the batch reader uses for gzip members (framing
+    * single-sourced — stream and batch can never diverge), `.gz`
+    * decompressed by extension. In the crawl's many-small-segments
+    * layout the FILE is the arrival unit, and a gzip segment is one
+    * split in the batch reader anyway; per-task memory is one segment
+    * (~100 MB at the Common-Crawl shape). Compose with
+    * [[graft.ops.Extract.mainText]] and a quality gate for the full
+    * streaming front end ([[graft.streaming.CrawlIngest]]). */
+  def readWetStream(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.types._
     // binaryFile's schema is FIXED by the source; streaming sources
@@ -180,7 +70,7 @@ object Warc {
           if (p.endsWith(".gz")) new java.util.zip.GZIPInputStream(base)
           else base
         val rr = new graft.io.WarcRecordReader
-        rr.initializeSequential(in)
+        rr.initializeSequential(in, p)
         // close the reader (and its gzip Inflater's native buffer) the
         // moment the last record is consumed, and again at task end for
         // a consumer that stops early (a LIMIT) — leaving it to GC
@@ -203,19 +93,47 @@ object Warc {
           }
         }
       }.toDF("v")
-    exactRecordProjection(recs)
+    recordProjection(recs)
   }
 
-  /** Raw-WARC `request` records over the byte-exact framing — the
-    * crawl's OUTBOUND half (ISO-28500 pairs each response with the
-    * request that elicited it; `WARC-Concurrent-To` links them):
-    * the payload is an HTTP request message whose REQUEST LINE is
-    * `method target protocol`, parsed here into columns; the header
-    * block after it stays available to the caller via the verbatim
-    * message in `http_headers` (everything after the request line up
-    * to the blank line). Bodies are rare on crawl requests and are
-    * surfaced verbatim when present. Columns: (uri, warc_date,
-    * http_method, target, protocol, http_headers, body). */
+  /** Read raw WARC `response` records — the format a from-scratch
+    * crawl actually starts at, one step EARLIER than WET: each record
+    * is WARC headers + blank line + an HTTP response (status line +
+    * HTTP headers + blank line + body, usually HTML). An HTTP body may
+    * contain ANYTHING, the record marker included, and comes back
+    * VERBATIM. The HTTP message splits at its FIRST blank line (real
+    * HTTP uses CRLF; a fixture may use LF — the EARLIER of `\r\n\r\n`
+    * and `\n\n` wins) into the status/header block and the body.
+    * Non-`response` records (warcinfo, request, metadata) are filtered
+    * here.
+    *
+    * Columns: `uri`, `warc_date`, `http_status` (int, null when the
+    * status line is absent/malformed), `content_type` (the HTTP
+    * Content-Type header, case-insensitive match, '' when absent),
+    * `body` (feed it to [[graft.ops.Extract.mainText]]). */
+  def readWarcResponses(spark: SparkSession, path: String): DataFrame = {
+    val parts = httpMessageParts(spark, path, "response")
+    parts.select(
+      col("uri"), col("warc_date"),
+      regexp_extract(col("head"),
+        "^HTTP/[0-9.]+\\s+([0-9]{3})", 1).cast("int").as("http_status"),
+      regexp_extract(col("head"),
+        "(?mi)^content-type:\\s*([^\\r\\n]+)", 1).as("content_type"),
+      when(col("sepAt") > 0,
+        col("p").substr(col("sepAt") + col("sepLen"), length(col("p"))))
+        .otherwise(lit("")).as("body"))
+  }
+
+  /** Raw-WARC `request` records — the crawl's OUTBOUND half
+    * (ISO-28500 pairs each response with the request that elicited it;
+    * `WARC-Concurrent-To` links them): the payload is an HTTP request
+    * message whose REQUEST LINE is `method target protocol`, parsed
+    * here into columns; the header block after it stays available to
+    * the caller via the verbatim message in `http_headers` (everything
+    * after the request line up to the blank line). Bodies are rare on
+    * crawl requests and are surfaced verbatim when present. Columns:
+    * (uri, warc_date, http_method, target, protocol, http_headers,
+    * body). */
   def readWarcRequests(spark: SparkSession, path: String): DataFrame = {
     val parts = httpMessageParts(spark, path, "request")
     parts.select(
@@ -237,29 +155,17 @@ object Warc {
         .otherwise(lit("")).as("body"))
   }
 
-  /** Raw-WARC `metadata` records over the byte-exact framing — the
-    * per-fetch sidecar (Common Crawl records fetch timing, detected
-    * charset/language here): the payload is `key: value` lines,
-    * EXPLODED to one row per pair (the SQL-friendly shape — a map
-    * column would defeat pushdown and the oracle compare). Lines
-    * without a colon are surfaced with a null key and the raw line as
-    * the value — refuse-or-surface, never silently dropped. Columns:
-    * (uri, warc_date, key, value). */
-  def readWarcMetadata(spark: SparkSession, path: String): DataFrame = {
-    val recs = readExactRecords(spark, path)
-    val warcHdr = substring_index(col("v"), "\n\n", 1)
-    val payload = when(instr(col("v"), "\n\n") > 0,
-      col("v").substr(instr(col("v"), "\n\n") + lit(2), length(col("v"))))
-      .otherwise(lit(""))
-    recs
-      .where(regexp_extract(warcHdr,
-        "(?m)^WARC-Type:\\s*(\\S+)", 1) === "metadata")
-      .select(
-        regexp_extract(warcHdr,
-          "(?m)^WARC-Target-URI:\\s*(\\S+)", 1).as("uri"),
-        regexp_extract(warcHdr,
-          "(?m)^WARC-Date:\\s*(\\S+)", 1).as("warc_date"),
-        explode(split(regexp_replace(payload, "\r", ""), "\n")).as("line"))
+  /** Raw-WARC `metadata` records — the per-fetch sidecar (Common Crawl
+    * records fetch timing, detected charset/language here): the
+    * payload is `key: value` lines, EXPLODED to one row per pair (the
+    * SQL-friendly shape — a map column would defeat pushdown and the
+    * oracle compare). Lines without a colon are surfaced with a null
+    * key and the raw line as the value — refuse-or-surface, never
+    * silently dropped. Columns: (uri, warc_date, key, value). */
+  def readWarcMetadata(spark: SparkSession, path: String): DataFrame =
+    typedRecords(spark, path, "metadata")
+      .select(col("uri"), col("warc_date"),
+        explode(split(regexp_replace(col("p"), "\r", ""), "\n")).as("line"))
       .where(length(trim(col("line"))) > 0)
       .select(col("uri"), col("warc_date"),
         when(instr(col("line"), ":") > 0,
@@ -269,100 +175,9 @@ object Warc {
           ltrim(col("line").substr(instr(col("line"), ":") + lit(1),
             length(col("line")))))
           .otherwise(col("line")).as("value"))
-  }
 
-  /** Fixture twin for [[readWarcRequests]]: one deterministic GET per
-    * document (target = the URI's path), Content-Length-framed. */
-  def writeWarcRequests(docs: DataFrame, path: String,
-                        uriPrefix: String = "http://example.com/doc/",
-                        idCol: String = "doc_id",
-                        singleFile: Boolean = true): Unit = {
-    val infoBody = "software: graft"
-    val infoRec = s"$Marker\nWARC-Type: warcinfo\n" +
-      s"Content-Length: ${infoBody.getBytes("UTF-8").length}\n\n$infoBody\n"
-    val host = uriPrefix.replaceFirst("^[a-z]+://", "")
-      .takeWhile(_ != '/')
-    val pathPrefix = uriPrefix.replaceFirst("^[a-z]+://[^/]*", "")
-    val msg = concat(
-      lit(s"GET $pathPrefix"), col(idCol).cast("string"),
-      lit(s" HTTP/1.1\nHost: $host\nUser-Agent: graft-crawler\n\n"))
-    val recs = docs.select(concat(
-      lit(s"$Marker\nWARC-Type: request\nWARC-Target-URI: $uriPrefix"),
-      col(idCol).cast("string"),
-      lit("\nWARC-Date: 2026-08-16T00:00:00Z\nContent-Length: "),
-      octet_length(msg).cast("string"),
-      lit("\n\n"), msg).as("value"))
-    writeRecords(recs, infoRec, path, singleFile)
-  }
-
-  /** Fixture twin for [[readWarcMetadata]]: deterministic per-fetch
-    * key/value pairs, Content-Length-framed. */
-  def writeWarcMetadata(docs: DataFrame, path: String,
-                        uriPrefix: String = "http://example.com/doc/",
-                        idCol: String = "doc_id",
-                        singleFile: Boolean = true): Unit = {
-    val infoBody = "software: graft"
-    val infoRec = s"$Marker\nWARC-Type: warcinfo\n" +
-      s"Content-Length: ${infoBody.getBytes("UTF-8").length}\n\n$infoBody\n"
-    val msg = concat(
-      lit("fetchTimeMs: "), (col(idCol) % 1000).cast("string"),
-      lit("\ncharset: UTF-8\nlanguages-cld2: en"))
-    val recs = docs.select(concat(
-      lit(s"$Marker\nWARC-Type: metadata\nWARC-Target-URI: $uriPrefix"),
-      col(idCol).cast("string"),
-      lit("\nWARC-Date: 2026-08-16T00:00:00Z\nContent-Length: "),
-      octet_length(msg).cast("string"),
-      lit("\n\n"), msg).as("value"))
-    writeRecords(recs, infoRec, path, singleFile)
-  }
-
-  /** The exact readers' shared projection over the emitted record
-    * shape (header block + `\n\n` + verbatim payload). */
-  private def exactRecordProjection(recs: DataFrame): DataFrame = {
-    val header = substring_index(col("v"), "\n\n", 1)
-    recs.select(
-      regexp_extract(header, "(?m)^WARC-Type:\\s*(\\S+)", 1).as("wtype"),
-      regexp_extract(header, "(?m)^WARC-Target-URI:\\s*(\\S+)", 1).as("uri"),
-      regexp_extract(header, "(?m)^WARC-Date:\\s*(\\S+)", 1).as("warc_date"),
-      when(instr(col("v"), "\n\n") > 0,
-        col("v").substr(instr(col("v"), "\n\n") + lit(2), length(col("v"))))
-        .otherwise(lit("")).as("payload"))
-  }
-
-  /** One row (`v`) per Content-Length-framed record: the WARC header
-    * block (CRs stripped, no blank lines) + `\n\n` + the VERBATIM
-    * payload — [[graft.io.WarcInputFormat]]'s emitted shape, shared by
-    * [[readWetExact]] and [[readWarcResponsesExact]]. The first `\n\n`
-    * in `v` is therefore always the header/payload boundary, whatever
-    * the payload contains. */
-  private def readExactRecords(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    exactRecordsWithFile(spark, path).map(_._2).toDF("v")
-  }
-
-  /** (src_file, record) pairs off the exact reader — the split's path
-    * recovered via mapPartitionsWithInputSplit (the RDD-level
-    * equivalent of `input_file_name()`, which only exists for
-    * DataSource scans). */
-  private def exactRecordsWithFile(spark: SparkSession,
-                                   path: String): org.apache.spark.rdd.RDD[(String, String)] = {
-    import org.apache.hadoop.io.{LongWritable, Text}
-    import org.apache.hadoop.mapreduce.lib.input.FileSplit
-    spark.sparkContext.newAPIHadoopFile(
-        path, classOf[graft.io.WarcInputFormat],
-        classOf[LongWritable], classOf[Text],
-        spark.sparkContext.hadoopConfiguration)
-      .asInstanceOf[org.apache.spark.rdd.NewHadoopRDD[LongWritable, Text]]
-      .mapPartitionsWithInputSplit { (split, it) =>
-        val file = split.asInstanceOf[FileSplit].getPath.toString
-        it.map { case (_, t) => (file, t.toString) }
-      }
-  }
-
-  /** [[wetAudit]]'s byte-exact sibling — the monitoring relation for a
-    * Content-Length-framed segment set: exact framing cannot fragment
-    * (that is its point), so the audit here is the INVENTORY a crawl
-    * gate watches instead — per file: total records, per-record-type
+  /** Per-file INVENTORY of a segment set — the monitoring relation a
+    * crawl gate watches: per file, total records, per-record-type
     * counts (conversion/response/other), and total payload characters.
     * A file whose counts drift from the manifest (or a type showing up
     * where none should) gates the set before the pipeline consumes it.
@@ -371,7 +186,7 @@ object Warc {
     * payload_chars). */
   def warcInventory(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
-    val recs = exactRecordsWithFile(spark, path).toDF("src_file", "v")
+    val recs = recordsWithFile(spark, path).toDF("src_file", "v")
     val header = substring_index(col("v"), "\n\n", 1)
     val wtype = regexp_extract(header, "(?m)^WARC-Type:\\s*(\\S+)", 1)
     val payloadLen = when(instr(col("v"), "\n\n") > 0,
@@ -390,52 +205,65 @@ object Warc {
         sum(col("plen")).as("payload_chars"))
   }
 
-  /** [[readWarcResponses]]'s byte-EXACT twin over the Content-Length
-    * framing ([[graft.io.WarcInputFormat]]) — the raw-WARC entry point
-    * with the same exactness contract as [[readWetExact]]: an HTTP
-    * body may contain ANYTHING, including the record marker that
-    * fragments under the lineSep framing (q164 proves it on
-    * marker-bearing bodies), and comes back VERBATIM — no CRLF
-    * normalization, no padding strip. The HTTP message splits at its
-    * FIRST blank line (real HTTP uses CRLF; a fixture may use LF — the
-    * EARLIER of `\r\n\r\n` and `\n\n` wins) into the status/header
-    * block and the body. Columns as [[readWarcResponses]]:
-    * (uri, warc_date, http_status, content_type, body). */
-  def readWarcResponsesExact(spark: SparkSession, path: String): DataFrame = {
-    val parts = httpMessageParts(spark, path, "response")
-    parts.select(
-      col("uri"), col("warc_date"),
-      regexp_extract(col("head"),
-        "^HTTP/[0-9.]+\\s+([0-9]{3})", 1).cast("int").as("http_status"),
-      regexp_extract(col("head"),
-        "(?mi)^content-type:\\s*([^\\r\\n]+)", 1).as("content_type"),
-      when(col("sepAt") > 0,
-        col("p").substr(col("sepAt") + col("sepLen"), length(col("p"))))
-        .otherwise(lit("")).as("body"))
+  /** The readers' shared projection over the emitted record shape
+    * (header block + `\n\n` + verbatim payload). */
+  private def recordProjection(recs: DataFrame): DataFrame = {
+    val header = substring_index(col("v"), "\n\n", 1)
+    recs.select(
+      regexp_extract(header, "(?m)^WARC-Type:\\s*(\\S+)", 1).as("wtype"),
+      regexp_extract(header, "(?m)^WARC-Target-URI:\\s*(\\S+)", 1).as("uri"),
+      regexp_extract(header, "(?m)^WARC-Date:\\s*(\\S+)", 1).as("warc_date"),
+      when(instr(col("v"), "\n\n") > 0,
+        col("v").substr(instr(col("v"), "\n\n") + lit(2), length(col("v"))))
+        .otherwise(lit("")).as("payload"))
   }
 
-  /** The wtype-filtered exact records with the HTTP message split
-    * located — (uri, warc_date, p, sepAt, sepLen, head), shared by
-    * the response and request projections. `head` is the message up
-    * to its first blank line; the EARLIER of the CRLF and LF
-    * separators wins (an LF blank line inside a CRLF body — or vice
-    * versa — must not steal the split). */
+  /** One row (`v`) per record: the WARC header block (CRs stripped, no
+    * blank lines) + `\n\n` + the VERBATIM payload —
+    * [[graft.io.WarcInputFormat]]'s emitted shape. The first `\n\n` in
+    * `v` is therefore always the header/payload boundary, whatever the
+    * payload contains. */
+  private def readRecords(spark: SparkSession, path: String): DataFrame = {
+    import spark.implicits._
+    recordsWithFile(spark, path).map(_._2).toDF("v")
+  }
+
+  /** (src_file, record) pairs off the reader — the split's path
+    * recovered via mapPartitionsWithInputSplit (the RDD-level
+    * equivalent of `input_file_name()`, which only exists for
+    * DataSource scans). */
+  private def recordsWithFile(spark: SparkSession,
+                              path: String): org.apache.spark.rdd.RDD[(String, String)] = {
+    import org.apache.hadoop.io.{LongWritable, Text}
+    import org.apache.hadoop.mapreduce.lib.input.FileSplit
+    spark.sparkContext.newAPIHadoopFile(
+        path, classOf[graft.io.WarcInputFormat],
+        classOf[LongWritable], classOf[Text],
+        spark.sparkContext.hadoopConfiguration)
+      .asInstanceOf[org.apache.spark.rdd.NewHadoopRDD[LongWritable, Text]]
+      .mapPartitionsWithInputSplit { (split, it) =>
+        val file = split.asInstanceOf[FileSplit].getPath.toString
+        it.map { case (_, t) => (file, t.toString) }
+      }
+  }
+
+  /** The records of one WARC-Type — (uri, warc_date, p) with `p` the
+    * verbatim payload. */
+  private def typedRecords(spark: SparkSession, path: String,
+                           wtype: String): DataFrame =
+    recordProjection(readRecords(spark, path))
+      .where(col("wtype") === wtype)
+      .select(col("uri"), col("warc_date"), col("payload").as("p"))
+
+  /** [[typedRecords]] with the HTTP message split located —
+    * (uri, warc_date, p, sepAt, sepLen, head), shared by the response
+    * and request projections. `head` is the message up to its first
+    * blank line; the EARLIER of the CRLF and LF separators wins (an LF
+    * blank line inside a CRLF body — or vice versa — must not steal
+    * the split). */
   private def httpMessageParts(spark: SparkSession, path: String,
-                               wtype: String): DataFrame = {
-    val recs = readExactRecords(spark, path)
-    val warcHdr = substring_index(col("v"), "\n\n", 1)
-    val payload = when(instr(col("v"), "\n\n") > 0,
-      col("v").substr(instr(col("v"), "\n\n") + lit(2), length(col("v"))))
-      .otherwise(lit(""))
-    recs
-      .where(regexp_extract(warcHdr,
-        "(?m)^WARC-Type:\\s*(\\S+)", 1) === wtype)
-      .select(
-        regexp_extract(warcHdr,
-          "(?m)^WARC-Target-URI:\\s*(\\S+)", 1).as("uri"),
-        regexp_extract(warcHdr,
-          "(?m)^WARC-Date:\\s*(\\S+)", 1).as("warc_date"),
-        payload.as("p"))
+                               wtype: String): DataFrame =
+    typedRecords(spark, path, wtype)
       .withColumn("pCrlf", instr(col("p"), "\r\n\r\n"))
       .withColumn("pLf", instr(col("p"), "\n\n"))
       .withColumn("crlfFirst",
@@ -447,63 +275,96 @@ object Warc {
       .withColumn("head",
         when(col("sepAt") > 0, col("p").substr(lit(1), col("sepAt") - 1))
           .otherwise(col("p")))
-  }
 
-  /** [[writeWet]]'s spec-exact twin: records carry Content-Length
-    * (UTF-8 octet length of the payload), so [[readWetExact]] can
-    * frame them byte-exactly — payloads may contain ANYTHING,
-    * including the record marker. Same `singleFile` contract. */
-  def writeWetExact(docs: DataFrame, path: String,
-                    uriPrefix: String = "http://example.com/doc/",
-                    idCol: String = "doc_id", textCol: String = "text",
-                    singleFile: Boolean = true): Unit = {
-    val infoBody = "software: graft"
-    val infoRec = s"$Marker\nWARC-Type: warcinfo\n" +
-      s"Content-Length: ${infoBody.getBytes("UTF-8").length}\n\n$infoBody\n"
-    val recs = docs.select(concat(
-      lit(s"$Marker\nWARC-Type: conversion\nWARC-Target-URI: $uriPrefix"),
-      col(idCol).cast("string"),
-      lit("\nWARC-Date: 2026-08-16T00:00:00Z\nContent-Length: "),
-      octet_length(col(textCol)).cast("string"),
-      lit("\n\n"), col(textCol)).as("value"))
-    writeRecords(recs, infoRec, path, singleFile)
-  }
+  /** Write a corpus as a WET file set — the round-trip twin of
+    * [[readWet]]: one `conversion` record per document, its
+    * Content-Length the UTF-8 octet length of the payload, plus a
+    * leading `warcinfo` record per file. Deterministic headers so the
+    * round-trip is exactly invertible; payloads may contain ANYTHING,
+    * the record marker included.
+    *
+    * Scale contract: `singleFile = true` (the default, and what the
+    * memoized fixtures use) coalesces to ONE task and ONE output file —
+    * a fixture/export-a-sample path, NOT the 100 TB export path. For a
+    * real export set `singleFile = false`: each input partition writes
+    * its own WET file with its own leading `warcinfo` record (the
+    * Common-Crawl many-segments layout), so the write parallelizes like
+    * any text sink and every file is independently [[readWet]]-
+    * parseable. Empty partitions emit nothing (no warcinfo-only
+    * files). */
+  def writeWet(docs: DataFrame, path: String,
+               uriPrefix: String = "http://example.com/doc/",
+               idCol: String = "doc_id", textCol: String = "text",
+               singleFile: Boolean = true): Unit =
+    writeRecords(docs, "conversion", uriPrefix, idCol, col(textCol), path,
+      singleFile)
 
-  /** [[writeWarcResponses]]'s spec-exact twin (and [[writeWetExact]]'s
-    * response-record sibling): each record's Content-Length is the
-    * UTF-8 octet length of the WHOLE HTTP message (status line +
-    * headers + blank line + body), so [[readWarcResponsesExact]]
-    * frames it byte-exactly — bodies may contain ANYTHING, including
-    * the record marker. Same `singleFile` contract. */
-  def writeWarcResponsesExact(docs: DataFrame, path: String,
-                              uriPrefix: String = "http://example.com/doc/",
-                              idCol: String = "doc_id",
-                              htmlCol: String = "html",
-                              singleFile: Boolean = true): Unit = {
-    val infoBody = "software: graft"
-    val infoRec = s"$Marker\nWARC-Type: warcinfo\n" +
-      s"Content-Length: ${infoBody.getBytes("UTF-8").length}\n\n$infoBody\n"
+  /** Write a corpus as raw WARC `response` records — [[writeWet]]'s
+    * sibling one stage earlier in the crawl: each document's markup
+    * becomes the body of a deterministic HTTP 200 response (status
+    * line + Content-Type + blank line + body), Content-Length the
+    * UTF-8 octet length of the WHOLE HTTP message, so
+    * [[readWarcResponses]] → [[graft.ops.Extract.mainText]] exercises
+    * the real from-scratch chain. Same `singleFile` contract as
+    * [[writeWet]]. */
+  def writeWarcResponses(docs: DataFrame, path: String,
+                         uriPrefix: String = "http://example.com/doc/",
+                         idCol: String = "doc_id", htmlCol: String = "html",
+                         singleFile: Boolean = true): Unit = {
     val httpHead = "HTTP/1.1 200 OK\nContent-Type: text/html; " +
       "charset=UTF-8\nServer: graft-fixture\n\n"
-    val recs = docs.select(concat(
-      lit(s"$Marker\nWARC-Type: response\nWARC-Target-URI: $uriPrefix"),
-      col(idCol).cast("string"),
-      lit("\nWARC-Date: 2026-08-16T00:00:00Z\nContent-Length: "),
-      (octet_length(col(htmlCol))
-        + lit(httpHead.getBytes("UTF-8").length)).cast("string"),
-      lit("\n\n" + httpHead), col(htmlCol)).as("value"))
-    writeRecords(recs, infoRec, path, singleFile)
+    writeRecords(docs, "response", uriPrefix, idCol,
+      concat(lit(httpHead), col(htmlCol)), path, singleFile)
   }
 
-  /** The shared record-sink tail: `singleFile = true` (fixtures)
-    * coalesces to one task and one file; `false` (the real export
-    * path) writes one file per input partition, each with its own
-    * leading `infoRec` so every file is independently parseable, empty
-    * partitions emitting nothing. */
-  private def writeRecords(recs: DataFrame, infoRec: String, path: String,
-                           singleFile: Boolean): Unit = {
-    val spark = recs.sparkSession
+  /** Fixture twin for [[readWarcRequests]]: one deterministic GET per
+    * document (target = the URI's path). */
+  def writeWarcRequests(docs: DataFrame, path: String,
+                        uriPrefix: String = "http://example.com/doc/",
+                        idCol: String = "doc_id",
+                        singleFile: Boolean = true): Unit = {
+    val host = uriPrefix.replaceFirst("^[a-z]+://", "")
+      .takeWhile(_ != '/')
+    val pathPrefix = uriPrefix.replaceFirst("^[a-z]+://[^/]*", "")
+    val msg = concat(
+      lit(s"GET $pathPrefix"), col(idCol).cast("string"),
+      lit(s" HTTP/1.1\nHost: $host\nUser-Agent: graft-crawler\n\n"))
+    writeRecords(docs, "request", uriPrefix, idCol, msg, path, singleFile)
+  }
+
+  /** Fixture twin for [[readWarcMetadata]]: deterministic per-fetch
+    * key/value pairs. */
+  def writeWarcMetadata(docs: DataFrame, path: String,
+                        uriPrefix: String = "http://example.com/doc/",
+                        idCol: String = "doc_id",
+                        singleFile: Boolean = true): Unit = {
+    val msg = concat(
+      lit("fetchTimeMs: "), (col(idCol) % 1000).cast("string"),
+      lit("\ncharset: UTF-8\nlanguages-cld2: en"))
+    writeRecords(docs, "metadata", uriPrefix, idCol, msg, path, singleFile)
+  }
+
+  /** The shared record sink: one `wtype` record per document whose
+    * payload is `payload`, framed by its UTF-8 octet length, behind a
+    * `warcinfo` record. `singleFile = true` (fixtures) coalesces to one
+    * task and one file; `false` (the real export path) writes one file
+    * per input partition, each with its own leading warcinfo so every
+    * file is independently parseable, empty partitions emitting
+    * nothing. */
+  private def writeRecords(docs: DataFrame, wtype: String, uriPrefix: String,
+                           idCol: String, payload: Column,
+                           path: String, singleFile: Boolean): Unit = {
+    val spark = docs.sparkSession
     import spark.implicits._
+    val infoBody = "software: graft"
+    val infoRec = s"$Marker\nWARC-Type: warcinfo\n" +
+      s"Content-Length: ${infoBody.getBytes("UTF-8").length}\n\n$infoBody\n"
+    val recs = docs.select(concat(
+      lit(s"$Marker\nWARC-Type: $wtype\nWARC-Target-URI: $uriPrefix"),
+      col(idCol).cast("string"),
+      lit("\nWARC-Date: 2026-08-16T00:00:00Z\nContent-Length: "),
+      octet_length(payload).cast("string"),
+      lit("\n\n"), payload).as("value"))
     val out =
       if (singleFile)
         Seq(infoRec).toDF("value").unionByName(recs).coalesce(1)
@@ -512,84 +373,5 @@ object Warc {
           if (it.hasNext) Iterator(infoRec) ++ it else Iterator.empty
         }.toDF("value")
     out.write.mode("overwrite").text(path)
-  }
-
-  /** Per-file audit relation for the marker-occurrence framing
-    * contract (scaladoc above): fragments — payload pieces split off
-    * by an in-payload marker — surface as rows with NO header block,
-    * and this relation makes that contract operational: callers gate
-    * a segment file set on `n_fragments = 0` (or a rate threshold)
-    * BEFORE the pipeline consumes it, instead of discovering empty-
-    * `wtype` rows downstream. One row per file:
-    * `(src_file, n_records, n_fragments, fragment_chars)` where
-    * `n_records` counts every surfaced piece (warcinfo + records +
-    * fragments) and `fragment_chars` is the total character count of
-    * fragment pieces — the payload volume the framing severed. */
-  def wetAudit(spark: SparkSession, path: String): DataFrame = {
-    val raw = spark.read.option("lineSep", Marker).text(path)
-      .select(input_file_name().as("src_file"), col("value"))
-    val recs = raw.where(length(trim(col("value"))) > 0)
-      .select(col("src_file"),
-        regexp_replace(col("value"), "\r\n", "\n").as("v"))
-    val wtype = regexp_extract(substring_index(col("v"), "\n\n", 1),
-      "(?m)^WARC-Type:\\s*(\\S+)", 1)
-    recs
-      .select(col("src_file"), (wtype === "").as("is_fragment"),
-        length(col("v")).cast("long").as("chars"))
-      .groupBy("src_file")
-      .agg(count(lit(1)).as("n_records"),
-        sum(when(col("is_fragment"), 1L).otherwise(0L)).as("n_fragments"),
-        sum(when(col("is_fragment"), col("chars")).otherwise(0L))
-          .as("fragment_chars"))
-  }
-
-  /** Write a corpus as a WET file set — the round-trip twin of
-    * [[readWet]] (and the q149 fixture writer): one `conversion`
-    * record per document plus a leading `warcinfo` record per file.
-    * Deterministic headers so the round-trip is exactly invertible.
-    *
-    * Scale contract: `singleFile = true` (the default, and what the
-    * memoized q149/q150 fixtures use) coalesces to ONE task and ONE
-    * output file — a fixture/export-a-sample path, NOT the 100 TB
-    * export path. For a real export set `singleFile = false`: each
-    * input partition writes its own WET file with its own leading
-    * `warcinfo` record (the Common-Crawl many-segments layout), so
-    * the write parallelizes like any text sink and the per-file
-    * `warcinfo` preamble keeps every file independently [[readWet]]-
-    * parseable. Empty partitions emit nothing (no warcinfo-only
-    * files). */
-  def writeWet(docs: DataFrame, path: String,
-               uriPrefix: String = "http://example.com/doc/",
-               idCol: String = "doc_id", textCol: String = "text",
-               singleFile: Boolean = true): Unit = {
-    val infoRec = s"$Marker\nWARC-Type: warcinfo\n\nsoftware: graft\n"
-    val recs = docs.select(concat(
-      lit(s"$Marker\nWARC-Type: conversion\nWARC-Target-URI: $uriPrefix"),
-      col(idCol).cast("string"),
-      lit("\nWARC-Date: 2026-08-16T00:00:00Z\n\n"),
-      col(textCol), lit("\n")).as("value"))
-    writeRecords(recs, infoRec, path, singleFile)
-  }
-
-  /** Write a corpus as raw WARC `response` records — [[writeWet]]'s
-    * sibling one stage earlier in the crawl: each document's markup
-    * becomes the body of a deterministic HTTP 200 response (status
-    * line + Content-Type + blank line + body), so
-    * [[readWarcResponses]] → [[graft.ops.Extract.mainText]] exercises
-    * the real from-scratch chain. Same `singleFile` contract as
-    * [[writeWet]]. */
-  def writeWarcResponses(docs: DataFrame, path: String,
-                         uriPrefix: String = "http://example.com/doc/",
-                         idCol: String = "doc_id", htmlCol: String = "html",
-                         singleFile: Boolean = true): Unit = {
-    val infoRec = s"$Marker\nWARC-Type: warcinfo\n\nsoftware: graft\n"
-    val recs = docs.select(concat(
-      lit(s"$Marker\nWARC-Type: response\nWARC-Target-URI: $uriPrefix"),
-      col(idCol).cast("string"),
-      lit("\nWARC-Date: 2026-08-16T00:00:00Z\n\n" +
-        "HTTP/1.1 200 OK\nContent-Type: text/html; charset=UTF-8\n" +
-        "Server: graft-fixture\n\n"),
-      col(htmlCol), lit("\n")).as("value"))
-    writeRecords(recs, infoRec, path, singleFile)
   }
 }

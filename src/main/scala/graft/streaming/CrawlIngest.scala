@@ -9,11 +9,12 @@ import graft.ops.{Checkpoints, Extract, TextStats, Warc}
 /** The streaming crawl front end: WET segment files land in a
   * directory continuously (the shape a live crawl actually delivers —
   * many segment files over days, not one batch), and each micro-batch
-  * discovers the new files, parses records through the SAME projection
-  * as the batch reader ([[graft.ops.Warc.readWetStream]] /
-  * `parseWetRecords` — single-sourced, so stream and batch can never
-  * diverge), extracts main text, quality-gates, and commits survivors
-  * to `sinkDir/batch=<id>`.
+  * discovers the new files, parses records through the SAME
+  * Content-Length framing as the batch reader
+  * ([[graft.ops.Warc.readWetStream]] — whole arriving segment files
+  * through the batch reader's WarcRecordReader, so stream and batch can
+  * never diverge), extracts main text, quality-gates, and commits
+  * survivors to `sinkDir/batch=<id>`.
   *
   * Exactly-once: foreachBatch replays a failed batch under the SAME
   * batchId, and the write overwrites its own batch-keyed directory —
@@ -21,39 +22,23 @@ import graft.ops.{Checkpoints, Extract, TextStats, Warc}
   * chain, [[IngestStream.ingestDedupStream]] for continuous dedup of
   * the extracted docs) reads the sink as an ordinary parquet corpus.
   *
-  * Scale shape: everything here is scan-local — framing rides the
-  * splittable lineSep reader (or, for [[extractStreamExact]], the
-  * byte-exact WarcRecordReader over whole arriving segment files),
-  * extraction and stats are per-row projections — so a micro-batch
-  * costs (batch bytes) / (extraction MB/s); there is no state store
-  * and no shuffle except statsFor's generator barrier. The stream
-  * keeps up as long as segment arrival rate stays under the
-  * extraction throughput (SCALE.md r16 addendum 0: ~180 MB/s on
-  * local[32]). */
+  * Scale shape: everything here is scan-local — framing is per
+  * arriving segment file, extraction and stats are per-row
+  * projections — so a micro-batch costs (batch bytes) / (extraction
+  * MB/s); there is no state store and no shuffle except statsFor's
+  * generator barrier. The stream keeps up as long as segment arrival
+  * rate stays under the extraction throughput (SCALE.md r16 addendum
+  * 0: ~180 MB/s on local[32]). */
 object CrawlIngest {
 
   /** Start-ready writer: WET records → extraction → quality gate →
-    * batch-keyed parquet. Caller sets trigger/checkpoint and starts. */
+    * batch-keyed parquet; payloads may contain anything, the record
+    * marker included. Caller sets trigger/checkpoint and starts;
+    * [[batchTwin]] is its backfill twin. */
   def extractStream(spark: SparkSession, segmentDir: String,
                     sinkDir: String,
                     minQuality: Double = 0.7): DataStreamWriter[Row] = {
     val recs = Warc.readWetStream(spark, segmentDir)
-      .where(col("wtype") === "conversion")
-    val fn: (Dataset[Row], Long) => Unit = (batch, id) =>
-      extractBatch(batch.toDF(), id, sinkDir, minQuality)
-    recs.writeStream.foreachBatch(fn)
-  }
-
-  /** [[extractStream]] over BYTE-EXACT Content-Length framing
-    * ([[graft.ops.Warc.readWetExactStream]] — whole segment files per
-    * arrival, parsed by the same WarcRecordReader as the batch exact
-    * reader): the ingest front for segment sets whose payloads may
-    * contain the record marker. Same per-batch computation, same
-    * replay contract; [[batchTwinExact]] is its backfill twin. */
-  def extractStreamExact(spark: SparkSession, segmentDir: String,
-                         sinkDir: String,
-                         minQuality: Double = 0.7): DataStreamWriter[Row] = {
-    val recs = Warc.readWetExactStream(spark, segmentDir)
       .where(col("wtype") === "conversion")
     val fn: (Dataset[Row], Long) => Unit = (batch, id) =>
       extractBatch(batch.toDF(), id, sinkDir, minQuality)
@@ -75,15 +60,6 @@ object CrawlIngest {
   def batchTwin(spark: SparkSession, segmentDir: String,
                 minQuality: Double = 0.7): DataFrame =
     extractGate(Warc.readWet(spark, segmentDir)
-      .where(col("wtype") === "conversion"), minQuality)
-
-  /** [[batchTwin]] over the byte-exact batch reader — what
-    * [[extractStreamExact]]'s sink must union up to (CrawlIngestSpec
-    * asserts it on marker-bearing payloads that would fragment under
-    * the lineSep framing). */
-  def batchTwinExact(spark: SparkSession, segmentDir: String,
-                     minQuality: Double = 0.7): DataFrame =
-    extractGate(Warc.readWetExact(spark, segmentDir)
       .where(col("wtype") === "conversion"), minQuality)
 
   /** The shared per-records computation: extraction → quality gate,

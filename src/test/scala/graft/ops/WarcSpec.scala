@@ -12,52 +12,56 @@ class WarcSpec extends SparkSpec {
   private def writeFile(dir: String, name: String, content: String): Unit =
     Files.write(Paths.get(dir, name), content.getBytes("UTF-8"))
 
-  test("readWet: records parse fields and payload; warcinfo and CRLF dialects; fragments surface") {
+  /** One record: version line, `headers`, Content-Length of the UTF-8
+    * payload, blank line, payload, record separator — `eol` picks the
+    * header dialect. */
+  private def rec(headers: Seq[String], payload: String,
+                  eol: String = "\n"): String =
+    (("WARC/1.0" +: headers :+
+      s"Content-Length: ${payload.getBytes("UTF-8").length}") :+ "")
+      .map(_ + eol).mkString + payload + eol + eol
+
+  test("readWet: records parse fields and payload; warcinfo, CRLF header dialect, non-ASCII header values") {
     val dir = Files.createTempDirectory("graft-wet-spec").toString
     val wet =
-      "WARC/1.0\nWARC-Type: warcinfo\n\nsoftware: graft\n\n" +
-        "WARC/1.0\nWARC-Type: conversion\n" +
-        "WARC-Target-URI: http://a.example/x\n" +
-        "WARC-Date: 2026-08-16T00:00:00Z\n\n" +
-        "first page text\nwith a second line\n\n" +
-        // CRLF dialect (real Common-Crawl WET uses \r\n)
-        "WARC/1.0\r\nWARC-Type: conversion\r\n" +
-        "WARC-Target-URI: http://b.example/y\r\n" +
-        "WARC-Date: 2026-08-16T01:00:00Z\r\n\r\n" +
-        "crlf payload line\r\n"
+      rec(Seq("WARC-Type: warcinfo"), "software: graft") +
+        rec(Seq("WARC-Type: conversion",
+          "WARC-Target-URI: http://a.example/x",
+          "WARC-Date: 2026-08-16T00:00:00Z"),
+          "first page text\nwith a second line") +
+        // CRLF header dialect (real Common-Crawl WET uses \r\n); the
+        // payload's own bytes come back verbatim
+        rec(Seq("WARC-Type: conversion",
+          "WARC-Target-URI: http://b.example/y",
+          "WARC-Date: 2026-08-16T01:00:00Z"),
+          "crlf payload line\r\nsecond", eol = "\r\n") +
+        // ISO-28500 allows UTF-8 header values; the reader accumulates
+        // header bytes as Latin-1 and re-encodes Latin-1 (a byte-identity
+        // round trip), so the record's one UTF-8 decode recovers them
+        rec(Seq("WARC-Type: conversion",
+          "WARC-Target-URI: http://exämple.com/döc/7",
+          "WARC-Date: 2026-08-16T02:00:00Z"), "payload text")
     writeFile(dir, "seg.wet", wet)
     val got = Warc.readWet(spark, dir).orderBy("uri").collect()
       .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3)))
-    assert(got.length === 3)
-    assert(got(0) === ("warcinfo", "", "", "software: graft"))
-    assert(got(1) ===
+    assert(got.toSeq === Seq(
+      ("warcinfo", "", "", "software: graft"),
       ("conversion", "http://a.example/x", "2026-08-16T00:00:00Z",
-        "first page text\nwith a second line"))
-    assert(got(2) ===
+        "first page text\nwith a second line"),
       ("conversion", "http://b.example/y", "2026-08-16T01:00:00Z",
-        "crlf payload line"))
-    // a payload containing the marker mis-splits BY CONTRACT: the tail
-    // surfaces as a fragment row with empty wtype/uri — visible, never
-    // silently merged
-    val dir2 = Files.createTempDirectory("graft-wet-frag").toString
-    writeFile(dir2, "frag.wet",
-      "WARC/1.0\nWARC-Type: conversion\nWARC-Target-URI: http://c.example/z\n\n" +
-        "text mentioning WARC/1.0 inline\n")
-    val rows2 = Warc.readWet(spark, dir2).collect()
-    assert(rows2.length === 2)
-    assert(rows2.count(_.getString(0) === "") === 1)
+        "crlf payload line\r\nsecond"),
+      ("conversion", "http://exämple.com/döc/7", "2026-08-16T02:00:00Z",
+        "payload text")))
   }
 
   test("readWet: gzipped segments parse transparently (.wet.gz, the Common-Crawl shape)") {
-    // real Common-Crawl WET segments ship as .wet.gz; Spark's text
-    // source decompresses gzip by codec inference from the extension.
-    // Scale note (scaladoc'd): a gzip file is ONE split — parallelism
-    // is per-file, which matches the crawl's many-segments layout.
+    // real Common-Crawl WET segments ship as .wet.gz; a gzip file is
+    // ONE split — parallelism is per-file, which matches the crawl's
+    // many-segments layout
     val dir = Files.createTempDirectory("graft-wet-gz").toString
-    val content =
-      "WARC/1.0\nWARC-Type: conversion\n" +
-        "WARC-Target-URI: http://gz.example/a\n" +
-        "WARC-Date: 2026-08-16T02:00:00Z\n\ngz payload text here\n"
+    val content = rec(Seq("WARC-Type: conversion",
+      "WARC-Target-URI: http://gz.example/a",
+      "WARC-Date: 2026-08-16T02:00:00Z"), "gz payload text here")
     val out = new java.util.zip.GZIPOutputStream(
       java.nio.file.Files.newOutputStream(Paths.get(dir, "seg.wet.gz")))
     out.write(content.getBytes("UTF-8")); out.close()
@@ -73,15 +77,16 @@ class WarcSpec extends SparkSpec {
       (1L, "multi\nline\n\ndocument"),
       (2L, "")).toDF("doc_id", "text")
     val dir = Files.createTempDirectory("graft-wet-rt").toString
-    Warc.writeWet(docs, s"$dir/wet")
+    // a non-ASCII URI prefix: header values round-trip byte-exactly too
+    Warc.writeWet(docs, s"$dir/wet", uriPrefix = "http://exämple.com/döc/")
     val back = Warc.readWet(spark, s"$dir/wet")
       .where(col("wtype") === "conversion")
       .select(col("uri"), col("payload")).collect()
       .map(r => (r.getString(0), r.getString(1))).toSet
     assert(back === Set(
-      ("http://example.com/doc/0", "alpha beta gamma"),
-      ("http://example.com/doc/1", "multi\nline\n\ndocument"),
-      ("http://example.com/doc/2", "")))
+      ("http://exämple.com/döc/0", "alpha beta gamma"),
+      ("http://exämple.com/döc/1", "multi\nline\n\ndocument"),
+      ("http://exämple.com/döc/2", "")))
     // the warcinfo header record is present exactly once
     assert(Warc.readWet(spark, s"$dir/wet")
       .where(col("wtype") === "warcinfo").count() === 1)
@@ -117,25 +122,29 @@ class WarcSpec extends SparkSpec {
   test("readWarcResponses: HTTP header split at the second blank line; status/content-type parse; non-responses filtered") {
     val dir = Files.createTempDirectory("graft-warc-resp-spec").toString
     val warc =
-      "WARC/1.0\nWARC-Type: warcinfo\n\nsoftware: graft\n\n" +
-        "WARC/1.0\nWARC-Type: response\n" +
-        "WARC-Target-URI: http://a.example/page\n" +
-        "WARC-Date: 2026-08-16T00:00:00Z\n\n" +
-        "HTTP/1.1 200 OK\ncontent-type: text/html; charset=UTF-8\n" +
-        "Server: test\n\n" +
-        "<html><body><p>body with a blank\n\nline inside it</p></body></html>\n\n" +
+      rec(Seq("WARC-Type: warcinfo"), "software: graft") +
+        rec(Seq("WARC-Type: response",
+          "WARC-Target-URI: http://a.example/page",
+          "WARC-Date: 2026-08-16T00:00:00Z"),
+          "HTTP/1.1 200 OK\ncontent-type: text/html; charset=UTF-8\n" +
+            "Server: test\n\n" +
+            "<html><body><p>body with a blank\n\nline inside it</p></body></html>") +
         // a request record (filtered), CRLF dialect
-        "WARC/1.0\r\nWARC-Type: request\r\n" +
-        "WARC-Target-URI: http://a.example/page\r\n\r\n" +
-        "GET /page HTTP/1.1\r\nHost: a.example\r\n\r\n" +
+        rec(Seq("WARC-Type: request", "WARC-Target-URI: http://a.example/page"),
+          "GET /page HTTP/1.1\r\nHost: a.example\r\n\r\n", eol = "\r\n") +
         // a response with a missing/malformed status line
-        "WARC/1.0\nWARC-Type: response\n" +
-        "WARC-Target-URI: http://b.example/broken\n" +
-        "WARC-Date: 2026-08-16T01:00:00Z\n\n" +
-        "not a status line\n\nbroken body text\n"
+        rec(Seq("WARC-Type: response",
+          "WARC-Target-URI: http://b.example/broken",
+          "WARC-Date: 2026-08-16T01:00:00Z"),
+          "not a status line\n\nbroken body text") +
+        // the real HTTP dialect: the \r\n\r\n separator wins over a
+        // LATER \n\n inside the body; header values come back CR-free
+        rec(Seq("WARC-Type: response", "WARC-Target-URI: http://c.example/z"),
+          "HTTP/1.1 404 Not Found\r\nContent-Type: text/plain\r\n" +
+            "\r\nbody line\n\nwith an LF blank line")
     writeFile(dir, "seg.warc", warc)
     val got = Warc.readWarcResponses(spark, dir).orderBy("uri").collect()
-    assert(got.length === 2)
+    assert(got.length === 3)
     val a = got(0)
     assert(a.getString(0) === "http://a.example/page")
     assert(a.getInt(2) === 200)
@@ -148,44 +157,65 @@ class WarcSpec extends SparkSpec {
     assert(b.getString(0) === "http://b.example/broken")
     assert(b.isNullAt(2)) // malformed status line → null, surfaced not guessed
     assert(b.getString(4) === "broken body text")
+    val c = got(2)
+    assert((c.getString(0), c.getInt(2), c.getString(3), c.getString(4)) ===
+      ("http://c.example/z", 404, "text/plain", "body line\n\nwith an LF blank line"))
   }
 
   test("writeWarcResponses -> readWarcResponses -> extract composes the from-scratch chain") {
+    // the third body carries the record marker AND an LF blank line —
+    // it comes back verbatim
+    val bait = "<p>first</p>\nWARC/1.0\nWARC-Type: fake\n\nafter a blank line"
     val docs = Seq(
       (0L, "<html><body><p>first document body prose here</p></body></html>"),
-      (1L, "<html><body><p>second document body prose here</p></body></html>"))
+      (1L, "<html><body><p>second document body prose here</p></body></html>"),
+      (2L, bait))
       .toDF("doc_id", "html")
     val dir = Files.createTempDirectory("graft-warc-resp-rt").toString
     Warc.writeWarcResponses(docs, s"$dir/warc")
-    val got = Warc.readWarcResponses(spark, s"$dir/warc")
+    val back = Warc.readWarcResponses(spark, s"$dir/warc")
+    val got = back
+      .where(col("uri") =!= "http://example.com/doc/2")
       .select(col("uri"), col("http_status"),
         Extract.mainText(col("body")).as("t"))
       .orderBy("uri").collect()
     assert(got.map(r => (r.getString(0), r.getInt(1), r.getString(2))).toSeq === Seq(
       ("http://example.com/doc/0", 200, "first document body prose here"),
       ("http://example.com/doc/1", 200, "second document body prose here")))
+    val b = back.where(col("uri") === "http://example.com/doc/2").collect()
+      .map(r => (r.getInt(2), r.getString(3), r.getString(4)))
+    assert(b.toSeq === Seq((200, "text/html; charset=UTF-8", bait)))
   }
 
-  test("readWetExact: Content-Length framing returns marker-bearing payloads verbatim; splits resync correctly") {
+  test("readWet: Content-Length framing returns marker-bearing payloads verbatim; splits resync correctly") {
     val docs = (0L until 200L).map { i =>
-      val body =
-        if (i % 5 == 0)
-          // adversarial payloads: a bare marker line, and a FAKE
-          // header block without Content-Length — both must ride
-          // inside the payload untouched (resync validation skips the
-          // fake: no Content-Length header)
-          s"doc $i first line\nWARC/1.0\nWARC-Type: fake\n\nnot a record\nWARC/1.0\ntail of $i"
-        else s"plain document number $i\nwith a second line"
+      val body = i % 5 match {
+        // adversarial payloads: a bare marker line, and a FAKE header
+        // block without Content-Length — both must ride inside the
+        // payload untouched (resync validation skips the fake: no
+        // Content-Length header)
+        case 0 => s"doc $i first line\nWARC/1.0\nWARC-Type: fake\n\nnot a record\nWARC/1.0\ntail of $i"
+        // a COMPLETE header block is the documented resync
+        // false-positive limit — but one whose Content-Length is >18
+        // digits (Long overflow) or Unicode digits (isDigit-true,
+        // toLong-false) must fail VALIDATION and move the scan on, not
+        // kill the task with NumberFormatException
+        case 1 => s"doc $i\nWARC/1.0\nWARC-Type: fake\n" +
+          "Content-Length: 99999999999999999999999\n\nnot a record, doc " + i
+        case 2 => s"doc $i\nWARC/1.0\nWARC-Type: fake\n" +
+          "Content-Length: ٧٨٩\n\nnot a record either, doc " + i
+        case _ => s"plain document number $i\nwith a second line"
+      }
       (i, body)
     }.toDF("doc_id", "text")
     val dir = Files.createTempDirectory("graft-wet-exact-spec").toString
-    Warc.writeWetExact(docs, s"$dir/wet")
+    Warc.writeWet(docs, s"$dir/wet")
     def readAll(maxSplit: Option[Long]) = {
       val conf = spark.sparkContext.hadoopConfiguration
       val prev = conf.get("mapreduce.input.fileinputformat.split.maxsize")
       maxSplit.foreach(m =>
         conf.setLong("mapreduce.input.fileinputformat.split.maxsize", m))
-      try Warc.readWetExact(spark, s"$dir/wet")
+      try Warc.readWet(spark, s"$dir/wet")
         .where(col("wtype") === "conversion")
         .select("uri", "payload").collect()
         .map(r => (r.getString(0), r.getString(1))).toSet
@@ -200,10 +230,11 @@ class WarcSpec extends SparkSpec {
       .toSet
     // single split: everything verbatim, embedded markers included
     assert(readAll(None) === want)
-    // 4 KB max splits: dozens of splits, most starting mid-record or
+    // 2-4 KB max splits: dozens of splits, most starting mid-record or
     // mid-payload — resync + the [start, end) ownership rule must
     // yield EXACTLY the same record set, no duplicates, no losses
     assert(readAll(Some(4096L)) === want)
+    assert(readAll(Some(2048L)) === want)
     // a gzipped exact segment reads sequentially (single split)
     val dir2 = Files.createTempDirectory("graft-wet-exact-gz").toString
     val raw = new java.io.File(s"$dir/wet").listFiles()
@@ -212,102 +243,11 @@ class WarcSpec extends SparkSpec {
       java.nio.file.Files.newOutputStream(
         java.nio.file.Paths.get(dir2, "seg.warc.gz")))
     out.write(java.nio.file.Files.readAllBytes(raw.toPath)); out.close()
-    val gz = Warc.readWetExact(spark, dir2)
+    val gz = Warc.readWet(spark, dir2)
       .where(col("wtype") === "conversion")
       .select("uri", "payload").collect()
       .map(r => (r.getString(0), r.getString(1))).toSet
     assert(gz === want)
-    // the CONTRAST with marker framing, on the same bytes: readWet
-    // fragments every embedded-marker payload (surfaced, not silent)
-    val fragged = Warc.readWet(spark, s"$dir/wet")
-    assert(fragged.where(col("wtype") === "").count() > 0)
-  }
-
-  test("readWarcResponsesExact: Content-Length framing; CRLF and LF HTTP dialects; marker-bearing bodies verbatim") {
-    // round-trip through the write twin: bodies carry the record
-    // marker AND an LF blank line — fragmentation bait under marker
-    // framing, verbatim here
-    val docs = Seq(
-      (0L, "<p>first</p>\nWARC/1.0\nWARC-Type: fake\n\nafter a blank line"),
-      (1L, "<p>plain</p>")).toDF("doc_id", "html")
-    val dir = Files.createTempDirectory("graft-warc-resp-exact").toString
-    Warc.writeWarcResponsesExact(docs, s"$dir/warc")
-    val got = Warc.readWarcResponsesExact(spark, s"$dir/warc")
-      .orderBy("uri").collect()
-      .map(r => (r.getString(0), r.getInt(2), r.getString(3), r.getString(4)))
-    assert(got.toSeq === Seq(
-      ("http://example.com/doc/0", 200, "text/html; charset=UTF-8",
-        "<p>first</p>\nWARC/1.0\nWARC-Type: fake\n\nafter a blank line"),
-      ("http://example.com/doc/1", 200, "text/html; charset=UTF-8",
-        "<p>plain</p>")))
-    // a handwritten CRLF record (real HTTP dialect): the \r\n\r\n
-    // separator wins over a LATER \n\n inside the body; header values
-    // come back CR-free; the body keeps its own bytes
-    val dir2 = Files.createTempDirectory("graft-warc-resp-crlf").toString
-    val http = "HTTP/1.1 404 Not Found\r\nContent-Type: text/plain\r\n" +
-      "\r\nbody line\n\nwith an LF blank line"
-    val rec = s"WARC/1.0\nWARC-Type: response\n" +
-      s"WARC-Target-URI: http://c.example/z\n" +
-      s"Content-Length: ${http.getBytes("UTF-8").length}\n\n$http\n"
-    writeFile(dir2, "seg.warc", rec)
-    val crlf = Warc.readWarcResponsesExact(spark, dir2).collect()
-    assert(crlf.length === 1)
-    assert(crlf(0).getString(0) === "http://c.example/z")
-    assert(crlf(0).getInt(2) === 404)
-    assert(crlf(0).getString(3) === "text/plain")
-    assert(crlf(0).getString(4) === "body line\n\nwith an LF blank line")
-  }
-
-  test("readWetExact: resync rejects fake headers with overflowing or Unicode-digit Content-Length instead of crashing") {
-    // a payload embedding a COMPLETE header block is the documented
-    // resync false-positive limit — but a block whose Content-Length
-    // is >18 digits (Long overflow) or Unicode digits (isDigit-true,
-    // toLong-false) must fail VALIDATION and move the scan on, not
-    // kill the task with NumberFormatException
-    val docs = (0L until 60L).map { i =>
-      val body = i % 3 match {
-        case 0 => s"doc $i\nWARC/1.0\nWARC-Type: fake\n" +
-          "Content-Length: 99999999999999999999999\n\nnot a record, doc " + i
-        case 1 => s"doc $i\nWARC/1.0\nWARC-Type: fake\n" +
-          "Content-Length: ٧٨٩\n\nnot a record either, doc " + i
-        case _ => s"plain document $i\nsecond line"
-      }
-      (i, body)
-    }.toDF("doc_id", "text")
-    val dir = Files.createTempDirectory("graft-wet-exact-adv").toString
-    Warc.writeWetExact(docs, s"$dir/wet")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val prev = conf.get("mapreduce.input.fileinputformat.split.maxsize")
-    conf.setLong("mapreduce.input.fileinputformat.split.maxsize", 2048L)
-    try {
-      val got = Warc.readWetExact(spark, s"$dir/wet")
-        .where(col("wtype") === "conversion")
-        .select("uri", "payload").collect()
-        .map(r => (r.getString(0), r.getString(1))).toSet
-      val want = docs.collect()
-        .map(r => (s"http://example.com/doc/${r.getLong(0)}", r.getString(1)))
-        .toSet
-      assert(got === want)
-    } finally {
-      if (prev == null)
-        conf.unset("mapreduce.input.fileinputformat.split.maxsize")
-      else conf.set("mapreduce.input.fileinputformat.split.maxsize", prev)
-    }
-  }
-
-  test("readWetExact: non-ASCII header values round-trip byte-exactly (UTF-8 WARC-Target-URI)") {
-    // ISO-28500 allows UTF-8 header values; the reader accumulates
-    // header bytes as Latin-1 and re-encodes Latin-1 (a byte-identity
-    // round trip), so the record's one UTF-8 decode recovers them
-    val docs = Seq((7L, "payload text")).toDF("doc_id", "text")
-    val dir = Files.createTempDirectory("graft-wet-exact-utf8").toString
-    Warc.writeWetExact(docs, s"$dir/wet",
-      uriPrefix = "http://exämple.com/döc/")
-    val got = Warc.readWetExact(spark, s"$dir/wet")
-      .where(col("wtype") === "conversion")
-      .select("uri", "payload").collect()
-    assert(got.map(r => (r.getString(0), r.getString(1))).toSeq ===
-      Seq(("http://exämple.com/döc/7", "payload text")))
   }
 
   test("readWarcRequests / readWarcMetadata: outbound half and per-fetch sidecar parse; malformed metadata lines surface") {
@@ -362,7 +302,7 @@ class WarcSpec extends SparkSpec {
       (Some("goodKey"), "v")))
   }
 
-  test("readWetExact: seeded fuzz — adversarial payloads round-trip verbatim at many split sizes") {
+  test("readWet: seeded fuzz — adversarial payloads round-trip verbatim at many split sizes") {
     // random concatenations of the resync-hostile pieces: bare
     // markers, fake header blocks WITHOUT a valid Content-Length
     // (missing, overflowing, non-ASCII digits), CRLF runs, non-ASCII
@@ -383,7 +323,7 @@ class WarcSpec extends SparkSpec {
       (i, (1 to n).map(_ => pieces(rnd.nextInt(pieces.length))).mkString)
     }.toDF("doc_id", "text")
     val dir = Files.createTempDirectory("graft-wet-exact-fuzz").toString
-    Warc.writeWetExact(docs, s"$dir/wet")
+    Warc.writeWet(docs, s"$dir/wet")
     val want = docs.collect()
       .map(r => (s"http://example.com/doc/${r.getLong(0)}", r.getString(1)))
       .toSet
@@ -398,7 +338,7 @@ class WarcSpec extends SparkSpec {
           case None => conf.unset(
             "mapreduce.input.fileinputformat.split.maxsize")
         }
-        val got = Warc.readWetExact(spark, s"$dir/wet")
+        val got = Warc.readWet(spark, s"$dir/wet")
           .where(col("wtype") === "conversion")
           .select("uri", "payload").collect()
           .map(r => (r.getString(0), r.getString(1))).toSet
@@ -409,27 +349,5 @@ class WarcSpec extends SparkSpec {
         conf.unset("mapreduce.input.fileinputformat.split.maxsize")
       else conf.set("mapreduce.input.fileinputformat.split.maxsize", prev)
     }
-  }
-
-  test("wetAudit: planted in-payload markers surface as counted fragments; clean sets audit zero") {
-    val docs = Seq(
-      (0L, "clean document text"),
-      (1L, "payload that mentions WARC/1.0\nsevered tail after the marker"),
-      (2L, "another clean one")).toDF("doc_id", "text")
-    val dir = Files.createTempDirectory("graft-wet-audit").toString
-    Warc.writeWet(docs, s"$dir/wet")
-    val audit = Warc.wetAudit(spark, s"$dir/wet").collect()
-    assert(audit.length === 1)
-    val r = audit(0)
-    // 1 warcinfo + 3 conversion + 1 fragment
-    assert(r.getLong(1) === 5L)
-    assert(r.getLong(2) === 1L)
-    // the severed piece: "\nsevered tail after the marker" + record \n + row \n
-    assert(r.getLong(3) === ("\nsevered tail after the marker".length + 2).toLong)
-    // a marker-free corpus audits clean
-    val dir2 = Files.createTempDirectory("graft-wet-audit-clean").toString
-    Warc.writeWet(docs.where(col("doc_id") =!= 1), s"$dir2/wet")
-    val r2 = Warc.wetAudit(spark, s"$dir2/wet").collect()(0)
-    assert(r2.getLong(2) === 0L && r2.getLong(3) === 0L)
   }
 }

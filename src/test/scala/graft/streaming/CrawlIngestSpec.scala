@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -22,11 +23,20 @@ class CrawlIngestSpec extends SparkSpec {
       ("of the streaming crawl ingest pipeline " * 8) +
       "caf&eacute; &#8217;quoted&#8217;</p></body></html>"
 
+  // even pages EMBED the record marker in their payload — Content-Length
+  // framing ingests them whole; the page body keeps enough prose to
+  // pass the gate
+  private def advPage(i: Long): String =
+    page(i) + (if (i % 2 == 0) s"\n${Warc.Marker}\nsevered tail bait\n" else "")
+
   private def writeSegment(dir: String, ids: Range): Unit = {
-    val docs = ids.map(i => (i.toLong, page(i.toLong))).toDF("doc_id", "text")
+    val docs = ids.map(i => (i.toLong, advPage(i.toLong))).toDF("doc_id", "text")
     Warc.writeWet(docs, s"$dir/seg-${ids.head}",
       uriPrefix = "http://crawl.example/p/")
   }
+
+  private def rows(df: DataFrame): Seq[Seq[Any]] =
+    df.orderBy("doc_id").collect().map(_.toSeq).toSeq
 
   test("streaming extract+gate equals the batch twin across arriving segments; replay is idempotent") {
     val segRoot = Files.createTempDirectory("crawl-segs").toString
@@ -43,20 +53,31 @@ class CrawlIngestSpec extends SparkSpec {
     }
     runAvailable()
     val after1 = spark.read.parquet(sink).drop("batch")
-    val twin1 = CrawlIngest.batchTwin(spark, glob)
-    assert(after1.orderBy("doc_id").collect().map(_.toSeq).toSeq ===
-      twin1.orderBy("doc_id").collect().map(_.toSeq).toSeq)
-    assert(after1.count() > 0)
+    assert(rows(after1) === rows(CrawlIngest.batchTwin(spark, glob)))
+    assert(after1.count() === 6)
 
     // a second segment arrives → exactly the new docs appear, and the
     // union still equals the twin over ALL files
     writeSegment(segRoot, 6 until 10)
     runAvailable()
     val after2 = spark.read.parquet(sink).drop("batch")
-    val twin2 = CrawlIngest.batchTwin(spark, glob)
-    assert(after2.orderBy("doc_id").collect().map(_.toSeq).toSeq ===
-      twin2.orderBy("doc_id").collect().map(_.toSeq).toSeq)
-    assert(after2.count() === after1.count() + 4)
+    assert(rows(after2) === rows(CrawlIngest.batchTwin(spark, glob)))
+    assert(after2.count() === 10)
+
+    // a gzipped segment arrives (the Common-Crawl shape) — the stream
+    // decompresses by extension and parses through the same reader
+    val gzDir = new java.io.File(s"$segRoot/seg-gz"); gzDir.mkdirs()
+    val tmp = Files.createTempDirectory("crawl-tmp").toString
+    writeSegment(tmp, 10 until 14)
+    val rawSeg = new java.io.File(s"$tmp/seg-10").listFiles()
+      .filter(_.getName.startsWith("part-")).head
+    val out = new java.util.zip.GZIPOutputStream(
+      Files.newOutputStream(java.nio.file.Paths.get(gzDir.toString, "seg.warc.gz")))
+    out.write(Files.readAllBytes(rawSeg.toPath)); out.close()
+    runAvailable()
+    val after3 = spark.read.parquet(sink).drop("batch")
+    assert(rows(after3) === rows(CrawlIngest.batchTwin(spark, glob)))
+    assert(after3.count() === 14)
 
     // replaying a batch id overwrites its own batch directory — same
     // rows after a double run, never duplicates (the exactly-once
@@ -65,11 +86,9 @@ class CrawlIngestSpec extends SparkSpec {
     val recs = Warc.readWet(spark, s"$segRoot/seg-6")
       .where(col("wtype") === "conversion")
     CrawlIngest.extractBatch(recs, 0L, sink2)
-    val once = spark.read.parquet(sink2)
-      .orderBy("doc_id").collect().map(_.toSeq).toSeq
+    val once = rows(spark.read.parquet(sink2))
     CrawlIngest.extractBatch(recs, 0L, sink2)
-    val twice = spark.read.parquet(sink2)
-      .orderBy("doc_id").collect().map(_.toSeq).toSeq
+    val twice = rows(spark.read.parquet(sink2))
     assert(once === twice && once.nonEmpty)
 
     // the gate is real: a script-only page never reaches the sink
@@ -78,56 +97,5 @@ class CrawlIngestSpec extends SparkSpec {
       .toDF("doc_id", "text"), s"$gateRoot/seg-99",
       uriPrefix = "http://crawl.example/p/")
     assert(CrawlIngest.batchTwin(spark, s"$gateRoot/*").count() === 0)
-  }
-
-  test("exact-framing stream equals its batch twin on marker-bearing segments, arrivals and gzip included") {
-    // payloads that EMBED the record marker — they fragment under the
-    // lineSep framing, so only the byte-exact front ingests them
-    // whole; the page body keeps enough prose to pass the gate
-    def advPage(i: Long): String =
-      page(i) + (if (i % 2 == 0) s"\n${Warc.Marker}\nsevered tail bait\n" else "")
-    val segRoot = Files.createTempDirectory("crawlx-segs").toString
-    val sink = Files.createTempDirectory("crawlx-sink").toString
-    val ckpt = Files.createTempDirectory("crawlx-ckpt").toString
-    def writeExactSegment(ids: Range): Unit =
-      Warc.writeWetExact(
-        ids.map(i => (i.toLong, advPage(i.toLong))).toDF("doc_id", "text"),
-        s"$segRoot/seg-${ids.head}", uriPrefix = "http://crawl.example/p/")
-    writeExactSegment(0 until 6)
-    val glob = s"$segRoot/*"
-    def runAvailable(): Unit = {
-      val q = CrawlIngest.extractStreamExact(spark, glob, sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      assert(q.awaitTermination(600000), "stream did not finish")
-    }
-    runAvailable()
-    val after1 = spark.read.parquet(sink).drop("batch")
-    val twin1 = CrawlIngest.batchTwinExact(spark, glob)
-    assert(after1.orderBy("doc_id").collect().map(_.toSeq).toSeq ===
-      twin1.orderBy("doc_id").collect().map(_.toSeq).toSeq)
-    assert(after1.count() === 6)
-    // a gzipped segment arrives (the Common-Crawl shape) — the stream
-    // decompresses by extension and parses through the same reader
-    val gzDir = new java.io.File(s"$segRoot/seg-gz"); gzDir.mkdirs()
-    val docs2 = (6 until 10).map(i => (i.toLong, advPage(i.toLong)))
-      .toDF("doc_id", "text")
-    val tmp = Files.createTempDirectory("crawlx-tmp").toString
-    Warc.writeWetExact(docs2, s"$tmp/w", uriPrefix = "http://crawl.example/p/")
-    val rawSeg = new java.io.File(s"$tmp/w").listFiles()
-      .filter(_.getName.startsWith("part-")).head
-    val out = new java.util.zip.GZIPOutputStream(
-      Files.newOutputStream(java.nio.file.Paths.get(gzDir.toString, "seg.warc.gz")))
-    out.write(Files.readAllBytes(rawSeg.toPath)); out.close()
-    runAvailable()
-    val after2 = spark.read.parquet(sink).drop("batch")
-    val twin2 = CrawlIngest.batchTwinExact(spark, glob)
-    assert(after2.orderBy("doc_id").collect().map(_.toSeq).toSeq ===
-      twin2.orderBy("doc_id").collect().map(_.toSeq).toSeq)
-    assert(after2.count() === 10)
-    // the marker-bearing tails really are inside the ingested text's
-    // source payloads: the lineSep twin on the same files would
-    // fragment (counted), the exact twin never does
-    assert(Warc.readWet(spark, glob).where(col("wtype") === "").count() > 0)
   }
 }
