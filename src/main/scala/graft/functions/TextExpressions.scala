@@ -255,6 +255,158 @@ object TextExpressions {
   def md5_lower64(text: Column): Column =
     ColumnBridge.column(Md5Lower64(ColumnBridge.expression(text)))
 
+  /** tokens array → one `(pos, tok, h)` struct per token position, `h`
+    * the 16 md5 bytes of the `k` tokens starting at `pos` joined with
+    * `' '` (null past the last full gram). The gram identity is the
+    * hex digest `md5(concat_ws(' ', slice(ts, pos + 1, k)))` in raw
+    * bytes — concat_ws's null skipping included — and DuckDB's
+    * `md5(array_to_string(ts[g+1:g+k], ' '))`. One digest per position
+    * straight off the token bytes: no per-position slice, joined
+    * string or hex string. */
+  case class SpanGrams(child: Expression, k: Int)
+      extends UnaryExpression with CodegenFallback {
+    import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+    import org.apache.spark.sql.types.{BinaryType, IntegerType, StructField, StructType}
+    override def dataType: DataType = ArrayType(StructType(Seq(
+      StructField("pos", IntegerType, nullable = false),
+      StructField("tok", StringType,
+        nullable = child.dataType.asInstanceOf[ArrayType].containsNull),
+      StructField("h", BinaryType, nullable = true))), containsNull = false)
+    override def nullIntolerant: Boolean = true
+
+    override def nullSafeEval(input: Any): Any = {
+      val tokens = input.asInstanceOf[ArrayData]
+      val n = tokens.numElements()
+      // own byte copies: the output rows outlive the input buffer
+      val bytes = new Array[Array[Byte]](n)
+      var t = 0
+      while (t < n) {
+        if (!tokens.isNullAt(t)) bytes(t) = tokens.getUTF8String(t).getBytes
+        t += 1
+      }
+      val md = MessageDigest.getInstance("MD5")
+      val out = new Array[Any](n)
+      var i = 0
+      while (i < n) {
+        var h: Array[Byte] = null
+        if (i + k <= n) {
+          var first = true
+          var j = i
+          while (j < i + k) {
+            if (bytes(j) != null) {
+              if (!first) md.update(' '.toByte)
+              md.update(bytes(j))
+              first = false
+            }
+            j += 1
+          }
+          h = md.digest()
+        }
+        val tok = if (bytes(i) == null) null else UTF8String.fromBytes(bytes(i))
+        out(i) = new GenericInternalRow(Array[Any](i, tok, h))
+        i += 1
+      }
+      new GenericArrayData(out)
+    }
+
+    override protected def withNewChildInternal(c: Expression): Expression =
+      copy(child = c)
+  }
+
+  def span_grams(tokens: Column, k: Int): Column =
+    ColumnBridge.column(SpanGrams(ColumnBridge.expression(tokens), k))
+
+  /** A stream's `collect_list(struct(pos, tok, flag))` → `(clean_text,
+    * kept_tokens, removed_tokens)`: entries are sorted by `pos` (ties
+    * by `tok`, nulls first, as array_sort orders the structs), entry j
+    * is removed iff a flagged entry (flag true; null is unflagged)
+    * starts among the `k` entries ending at j — the ROWS window
+    * `max(flag) OVER (ORDER BY pos ROWS BETWEEN k-1 PRECEDING AND
+    * CURRENT ROW)`, which over dense positions is "a flagged gram
+    * starts in [j−k+1, j]". `clean_text` joins the kept tokens in `pos`
+    * order with `sep`, skipping null tokens as concat_ws does ("" when
+    * nothing is kept); a null token still counts as kept. One sort and
+    * one pass, no window and no HOF. */
+  case class SpanCover(child: Expression, k: Int, sep: String)
+      extends UnaryExpression with CodegenFallback {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+    import org.apache.spark.sql.types.{BooleanType, IntegerType, LongType, StructField, StructType}
+    override def dataType: DataType = StructType(Seq(
+      StructField("clean_text", StringType, nullable = false),
+      StructField("kept_tokens", LongType, nullable = false),
+      StructField("removed_tokens", LongType, nullable = false)))
+    override def nullIntolerant: Boolean = true
+
+    // fields are read by ordinal, so the entry layout is checked here
+    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+      case ArrayType(StructType(Array(
+          StructField(_, IntegerType, _, _), StructField(_, StringType, _, _),
+          StructField(_, BooleanType, _, _))), _) =>
+        TypeCheckResult.TypeCheckSuccess
+      case other => TypeCheckResult.TypeCheckFailure(
+        "span_cover requires array<struct<pos:int, tok:string, flag:boolean>>, " +
+          s"got ${other.simpleString}")
+    }
+
+    @transient private lazy val sepUtf8 = UTF8String.fromString(sep)
+
+    override def nullSafeEval(input: Any): Any = {
+      val es = input.asInstanceOf[ArrayData]
+      val n = es.numElements()
+      // (pos, index) packed into one long: a primitive sort by pos
+      val order = new Array[Long](n)
+      var m = 0
+      var i = 0
+      while (i < n) {
+        if (!es.isNullAt(i)) {
+          order(m) = (es.getStruct(i, 3).getInt(0).toLong << 32) | i
+          m += 1
+        }
+        i += 1
+      }
+      java.util.Arrays.sort(order, 0, m)
+      // equal positions (a grouped null key collects several docs) take
+      // array_sort's struct order: by token
+      def tok(o: Long) = es.getStruct((o & 0xffffffffL).toInt, 3).getUTF8String(1)
+      var s = 0
+      while (s < m) {
+        var e = s + 1
+        while (e < m && (order(e) >> 32) == (order(s) >> 32)) e += 1
+        if (e - s > 1) {
+          val run = order.slice(s, e).sortWith { (a, b) =>
+            val (ta, tb) = (tok(a), tok(b))
+            tb != null && (ta == null || ta.compareTo(tb) < 0)
+          }
+          System.arraycopy(run, 0, order, s, e - s)
+        }
+        s = e
+      }
+      val kept = new Array[UTF8String](m)
+      var nk = 0
+      var keptN = 0L
+      var lastFlag = -k // rank of the latest flagged entry
+      var r = 0
+      while (r < m) {
+        val e = es.getStruct((order(r) & 0xffffffffL).toInt, 3)
+        if (!e.isNullAt(2) && e.getBoolean(2)) lastFlag = r
+        if (r - lastFlag >= k) {
+          keptN += 1
+          if (!e.isNullAt(1)) { kept(nk) = e.getUTF8String(1); nk += 1 }
+        }
+        r += 1
+      }
+      InternalRow(UTF8String.concatWs(sepUtf8, kept.take(nk): _*),
+        keptN, m - keptN)
+    }
+
+    override protected def withNewChildInternal(c: Expression): Expression =
+      copy(child = c)
+  }
+
+  def span_cover(entries: Column, k: Int, sep: String): Column =
+    ColumnBridge.column(SpanCover(ColumnBridge.expression(entries), k, sep))
+
   /** One pass over the token array producing every token-derived stat the
     * text-quality pipeline needs: counts, stopword hits, total length,
     * and per-language marker hits. Replaces five separate interpreted

@@ -714,21 +714,25 @@ object Dedup {
     *
     * Output: (doc_id, clean_text, kept_tokens, removed_tokens); docs
     * with no tokens are absent (the token-derived-relation convention).
+    * `doc_id` is a key of `docs`.
     *
-    * Scale shape: gram hashes are computed scan-local on the token
-    * array (one md5 per position) BEFORE the explode; the duplicate-
-    * hash relation reduces by digest-keyed groupBy (min≠max doc_id ⇔
-    * cross-doc, no countDistinct); the flag join is digest-keyed (AQE
-    * broadcasts it when duplication is sparse); span membership is a
-    * dense ROWS window over positions — token j is covered iff a
-    * flagged gram starts in [j-k+1, j] — so interval union costs one
-    * per-doc-partitioned window, not a self-join; the final reassembly
-    * reuses the window's doc_id exchange. */
+    * Scale shape: gram digests come from one native pass over the token
+    * array ([[graft.functions.TextExpressions.SpanGrams]], one md5 per
+    * position) BEFORE the explode; the duplicate-digest relation
+    * reduces by digest-keyed groupBy (min≠max stream ⇔ cross-doc, no
+    * countDistinct); the flag join is digest-keyed (AQE broadcasts it
+    * when duplication is sparse); span membership and reassembly are one
+    * native sort-and-scan per stream
+    * ([[graft.functions.TextExpressions.SpanCover]]) over the
+    * stream's collected positions — token j is covered iff a flagged
+    * gram starts in [j-k+1, j] — so interval union costs one
+    * stream-keyed aggregate, not a window or a self-join. */
   def spanDedup(docs: DataFrame, k: Int = 5,
                 textCol: String = "text"): DataFrame = {
+    import graft.functions.TextExpressions.{span_cover, span_grams}
     require(k >= 2, s"spanDedup: k ($k) must be >= 2")
     // exact-text collapse (see nearDuplicates): the gram explode, the
-    // cover window, and the reassembly are pure functions of the token
+    // cover, and the reassembly are pure functions of the token
     // stream, so they run once per distinct stream. "Appears in >= 2
     // distinct documents" becomes "appears in >= 2 distinct streams, OR
     // in a stream with >= 2 copies" — exact copies of a doc duplicate
@@ -738,51 +742,40 @@ object Dedup {
     // rows, one corpus text pass instead of two
     val keyed = Checkpoints.materialize(
       docs.select(col("doc_id"), tokenStreamKey(col(textCol)).as("__tk")))
-    val reps = keyed.groupBy("__tk").agg(min("doc_id").as("__rep"),
-      count(lit(1)).cast("long").as("__n"))
-    val streamN = reps.select(col("__tk"), col("__n"))
-    val repDocs = docs.join(reps.select(col("__rep").as("doc_id")),
-      Seq("doc_id"), "left_semi")
+    // one row per stream, keyed by its rep (the min doc_id): joining
+    // the corpus on it is at once the rep filter and the source of the
+    // stream key and copy count, with no second digest pass over the
+    // rep texts
+    val reps = keyed.groupBy("__tk").agg(min("doc_id").as("doc_id"),
+      count(lit(1)).as("__n"))
     // materialized once (the q106 exploded-relation move): the gram
-    // relation feeds BOTH the duplicate-hash aggregate and the flag
+    // relation feeds BOTH the duplicate-digest aggregate and the flag
     // join below, and rebuilding it means re-running one md5 per token
     // position over the whole corpus. Disk-backed blocks of
-    // (key, pos, tok, 16-byte digest) per token — the same volume the
-    // two consumers each shuffle anyway.
-    val pt = Checkpoints.materialize(repDocs
-      .select(tokenStreamKey(col(textCol)).as("__tk"),
-        TextStats.tokens(col(textCol)).as("ts"))
+    // (key, count, pos, tok, 16-byte digest) per token — the same
+    // volume the two consumers each shuffle anyway.
+    val pt = Checkpoints.materialize(docs.select(col("doc_id"), col(textCol))
+      .join(reps, "doc_id")
+      .select(col("__tk"), col("__n"), TextStats.tokens(col(textCol)).as("ts"))
       .where(size(col("ts")) > 0)
-      // multi-copy streams only (∝ dup fraction); AQE picks the strategy
-      .join(streamN.where(col("__n") >= 2).withColumnRenamed("__n", "__n2"),
-        Seq("__tk"), "left")
-      .select(col("__tk"), coalesce(col("__n2"), lit(1L)).as("__n"), explode(expr(
-        s"""transform(ts, (x, i) -> struct(i AS pos, x AS tok,
-            CASE WHEN i + $k <= size(ts)
-                 THEN md5(to_binary(concat_ws(' ', slice(ts, i + 1, $k)), 'utf-8'))
-            END AS h))""")).as("p"))
+      .select(col("__tk"), col("__n"), explode(span_grams(col("ts"), k)).as("p"))
       .select(col("__tk"), col("__n"), col("p.pos"), col("p.tok"), col("p.h")))
     val dup = pt.where(col("h").isNotNull)
       .groupBy("h").agg(min("__tk").as("mn"), max("__tk").as("mx"),
         max("__n").as("mxn"))
       .where(col("mn") =!= col("mx") || col("mxn") >= 2)
-      .select(col("h"), lit(1).as("flag"))
-    val cover = org.apache.spark.sql.expressions.Window
-      .partitionBy("__tk").orderBy("pos")
-      .rowsBetween(-(k - 1).toLong, 0L)
+      .select(col("h"), lit(true).as("flag"))
     val perStream = pt.join(dup, Seq("h"), "left")
-      .withColumn("rm", max(coalesce(col("flag"), lit(0))).over(cover))
       .groupBy("__tk")
-      .agg(
-        concat_ws(" ", expr(
-          """transform(array_sort(collect_list(
-               CASE WHEN rm = 0 THEN struct(pos, tok) END)), s -> s.tok)"""))
-          .as("clean_text"),
-        sum(when(col("rm") === 0, 1).otherwise(0)).cast("long").as("kept_tokens"),
-        sum(when(col("rm") === 1, 1).otherwise(0)).cast("long").as("removed_tokens"))
-    keyed.select(col("doc_id"), col("__tk"))
-      .join(perStream, "__tk")
-      .select("doc_id", "clean_text", "kept_tokens", "removed_tokens")
+      // a flagged entry's own token is always covered, so its text is
+      // not collected
+      .agg(span_cover(collect_list(struct(col("pos"),
+          when(col("flag").isNull, col("tok")).as("tok"), col("flag"))),
+        k, " ").as("c"))
+    keyed.join(perStream, "__tk")
+      .select(col("doc_id"), col("c.clean_text").as("clean_text"),
+        col("c.kept_tokens").as("kept_tokens"),
+        col("c.removed_tokens").as("removed_tokens"))
   }
 
   /** 16-bit SimHash over the token multiset, using the first 4 hex chars
@@ -834,9 +827,11 @@ object Dedup {
     * digest (NOT a broadcast — on a web crawl the duplicated-segment set
     * is itself huge, ~30% of all text, so AQE decides; pass a high
     * minDocFreq for boilerplate-only removal if you want a broadcastable
-    * right side). Reassembly is one shuffle keyed on doc_id with the
-    * boilerplate flag folded into the aggregate (collect_list skips the
-    * NULLed-out duplicate rows), so no second pass over the corpus.
+    * right side). Reassembly is one shuffle keyed on doc_id: each doc's
+    * (seg_pos, segment, flag) entries are collected — a flagged entry
+    * without its text — and [[graft.functions.TextExpressions.SpanCover]]
+    * at k = 1 drops the flagged ones and joins the rest in order, so no
+    * second pass over the corpus.
     *
     * The exploded segment relation feeds BOTH the doc-frequency
     * aggregate and the flag join — it is structurally materialized
@@ -868,15 +863,18 @@ object Dedup {
           .groupBy("h").agg(count(lit(1)).as("df"))
           .where(col("df") >= minDocFreq)
           .select(col("h"), lit(true).as("dup"))
+    // a segment is its own one-entry span: span_cover at k = 1 drops
+    // exactly the flagged segments and joins the rest in seg_pos order.
+    // A flagged entry's own text is never kept, so it is not collected.
     seg.join(common, Seq("h"), "left")
       .groupBy(col(idCol))
-      .agg(
-        concat_ws(delim.getOrElse(" "), expr(
-          """transform(
-               array_sort(collect_list(CASE WHEN dup IS NULL THEN struct(seg_pos, segment) END)),
-               s -> s.segment)""")).as("clean_text"),
-        count(when(col("dup").isNull, 1)).as("kept_segments"),
-        count(col("dup")).as("removed_segments"))
+      .agg(graft.functions.TextExpressions.span_cover(
+        collect_list(struct(col("seg_pos"),
+          when(col("dup").isNull, col("segment")).as("segment"), col("dup"))),
+        1, delim.getOrElse(" ")).as("c"))
+      .select(col(idCol), col("c.clean_text").as("clean_text"),
+        col("c.kept_tokens").as("kept_segments"),
+        col("c.removed_tokens").as("removed_segments"))
   }
 
   /** Fuzzy canonical-name pairs (entity resolution): Levenshtein-close

@@ -9,7 +9,8 @@ import org.apache.spark.sql.SparkSession
   * in-place compaction writes through [[writeNext]]: generation n+1
   * (`gen-0` in a fresh dir) is written in full, then the pointer swaps
   * atomically — the previous generation stays on disk for in-flight
-  * readers. Every reader and appender resolves [[root]] once.
+  * readers, and older ones are deleted. Every reader and appender
+  * resolves [[root]] once.
   *
   * The swap is a small-file create + delete + rename; during the brief
   * window with no `CURRENT`, [[root]] serves the newest COMPLETE
@@ -100,10 +101,23 @@ private[graft] object Generations {
     * `write`, which gets the generation's directory, then make it
     * live with [[setCurrent]]. Builds and in-place compactions both
     * land here; a crashed write leaves an unmarked generation that is
-    * never served, and the next write skips past it. */
+    * never served, and the next write skips past it.
+    *
+    * After the swap, every older generation is deleted except the one
+    * that was live before it: a reader that resolved [[root]] before
+    * this write still finishes, and the dir holds at most two
+    * generations (one full index copy per compaction would otherwise
+    * pile up). A reader that resolved [[root]] two writes ago has lost
+    * its generation — the single-writer, short-read contract. */
   def writeNext(spark: SparkSession, dir: String)(write: String => Unit): Unit = {
-    val gen = s"gen-${(numbers(spark, dir) :+ -1).max + 1}"
+    val old = numbers(spark, dir)
+    val previous = if (old.isEmpty) None
+                   else Some(root(spark, dir).stripPrefix(s"$dir/"))
+    val gen = s"gen-${(old :+ -1).max + 1}"
     write(s"$dir/$gen")
     setCurrent(spark, dir, gen)
+    val (fs, _) = fsOf(spark, dir)
+    old.map(n => s"gen-$n").filterNot(previous.contains)
+      .foreach(g => fs.delete(new org.apache.hadoop.fs.Path(dir, g), true))
   }
 }

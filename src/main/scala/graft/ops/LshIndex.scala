@@ -70,8 +70,8 @@ object LshIndex {
   /** Compact an index that has accreted many append shards: write the
     * relations as generation n+1 with every shard folded into `base`,
     * then atomically swap `CURRENT` ([[Generations.writeNext]]). The
-    * previous generation stays on disk for in-flight readers (and is
-    * the operator's to reap). A year of daily batches is ~365 shard
+    * previous generation stays on disk for in-flight readers; older
+    * ones are deleted. A year of daily batches is ~365 shard
     * directories per relation, and at object-store scale the listing
     * fan-out eventually dominates probe startup. Compaction is a
     * straight row rewrite (reps are already per-shard, and cross-shard

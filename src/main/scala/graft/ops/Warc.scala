@@ -186,14 +186,8 @@ object Warc {
     * payload_chars). */
   def warcInventory(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
-    val recs = recordsWithFile(spark, path).toDF("src_file", "v")
-    val header = substring_index(col("v"), "\n\n", 1)
-    val wtype = regexp_extract(header, "(?m)^WARC-Type:\\s*(\\S+)", 1)
-    val payloadLen = when(instr(col("v"), "\n\n") > 0,
-      length(col("v")) - instr(col("v"), "\n\n") - lit(1))
-      .otherwise(lit(0L)).cast("long")
-    recs
-      .select(col("src_file"), wtype.as("wtype"), payloadLen.as("plen"))
+    recordProjection(recordsWithFile(spark, path).toDF("src_file", "v"),
+        col("src_file"))
       .groupBy("src_file")
       .agg(count(lit(1)).as("n_records"),
         sum(when(col("wtype") === "conversion", 1L).otherwise(0L))
@@ -202,20 +196,21 @@ object Warc {
           .as("n_response"),
         sum(when(col("wtype") === "conversion" ||
           col("wtype") === "response", 0L).otherwise(1L)).as("n_other"),
-        sum(col("plen")).as("payload_chars"))
+        sum(length(col("payload"))).as("payload_chars"))
   }
 
   /** The readers' shared projection over the emitted record shape
-    * (header block + `\n\n` + verbatim payload). */
-  private def recordProjection(recs: DataFrame): DataFrame = {
+    * (header block + `\n\n` + verbatim payload); `keep` columns of
+    * `recs` ride along in front. */
+  private def recordProjection(recs: DataFrame, keep: Column*): DataFrame = {
     val header = substring_index(col("v"), "\n\n", 1)
-    recs.select(
+    recs.select(keep ++ Seq(
       regexp_extract(header, "(?m)^WARC-Type:\\s*(\\S+)", 1).as("wtype"),
       regexp_extract(header, "(?m)^WARC-Target-URI:\\s*(\\S+)", 1).as("uri"),
       regexp_extract(header, "(?m)^WARC-Date:\\s*(\\S+)", 1).as("warc_date"),
       when(instr(col("v"), "\n\n") > 0,
         col("v").substr(instr(col("v"), "\n\n") + lit(2), length(col("v"))))
-        .otherwise(lit("")).as("payload"))
+        .otherwise(lit("")).as("payload")): _*)
   }
 
   /** One row (`v`) per record: the WARC header block (CRs stripped, no

@@ -118,6 +118,45 @@ class PlanRegressionSpec extends SparkSpec {
         "pass is no longer structurally materialized")
   }
 
+  test("spanDedup plans no window and no interpreted array lambda") {
+    // the span kernels' contract: gram digests (SpanGrams) and the
+    // cover + reassembly (SpanCover) are one native pass each, so no
+    // plan of the operator holds a Window, an ArrayTransform lambda or
+    // an ArraySort. Static on the final plan; the materialized gram
+    // pass is read off the eager materializations the construction runs
+    // anyway (an edit that re-inlines the per-position lambda there
+    // fails too).
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.grafttest.ListenerBusHelper.waitUntilListenerBusEmpty
+    import org.apache.spark.sql.catalyst.expressions.{ArraySort, ArrayTransform}
+    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Window}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val built = new java.util.concurrent.ConcurrentLinkedQueue[LogicalPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+          durationNs: Long): Unit = built.add(qe.optimizedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val df = try {
+      val d = graft.ops.Dedup.spanDedup(docs)
+      waitUntilListenerBusEmpty(spark.sparkContext)
+      d
+    } finally spark.listenerManager.unregister(listener)
+    assert(built.size >= 2, s"expected the two materializations, saw ${built.size}")
+    for (p <- built.asScala.toSeq :+ df.queryExecution.optimizedPlan) {
+      assert(p.collect { case w: Window => w }.isEmpty, s"spanDedup plans a Window:\n$p")
+      val hofs = p.flatMap(_.expressions).filter(_.exists {
+        case _: ArrayTransform | _: ArraySort => true
+        case _ => false
+      })
+      assert(hofs.isEmpty, s"spanDedup plans an interpreted array HOF: $hofs")
+    }
+  }
+
   test("crossUnigramScore scans each corpus side exactly once") {
     // round-9 contract: the train-side (tok, cnt) relation is
     // structurally materialized at construction, so its parquet

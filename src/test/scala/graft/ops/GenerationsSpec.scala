@@ -107,4 +107,52 @@ class GenerationsSpec extends SparkSpec {
     assert(spark.read.parquet(s"$dir/gen-0/members")
       .collect().map(_.getAs[Long]("doc_id")).toSeq === Seq(0L))
   }
+
+  test("N writes leave at most two generations; a reader on the previous root still finishes") {
+    val dir = tmpDir("graft-gen-reap")
+    def write(n: Int): Unit = Generations.writeNext(spark, dir) { g =>
+      Seq((n, s"gen$n")).toDF("id", "v").write.parquet(s"$g/rel")
+    }
+    write(0)
+    for (n <- 1 to 5) {
+      // a reader resolves the live root, then a write swaps it out
+      val inFlight = spark.read.parquet(s"${Generations.root(spark, dir)}/rel")
+      write(n)
+      assert(inFlight.collect().map(_.getInt(0)).toSeq === Seq(n - 1))
+      assert(Generations.numbers(spark, dir).sorted === Seq(n - 1, n))
+      assert(Generations.root(spark, dir) == s"$dir/gen-$n")
+    }
+  }
+
+  test("a crashed generation is reaped by the next write, the live one kept") {
+    val dir = tmpDir("graft-gen-reap-crash")
+    writeGen(dir, 0)
+    Generations.setCurrent(spark, dir, "gen-0")
+    writeGen(dir, 1) // a write that crashed before its swap
+    Generations.writeNext(spark, dir)(g =>
+      Seq((2, "gen2")).toDF("id", "v").write.parquet(s"$g/rel"))
+    assert(Generations.numbers(spark, dir).sorted === Seq(0, 2))
+    assert(Generations.root(spark, dir) == s"$dir/gen-2")
+  }
+
+  test("LSH compactions keep two generations and serve in-flight probes") {
+    val corpus = Seq((0L, "the quick brown fox jumps over the lazy dog"),
+      (1L, "pack my box with five dozen liquor jugs today"))
+      .toDF("doc_id", "text")
+    val probe = Seq((100L, "the quick brown fox jumps over the lazy dog"))
+      .toDF("doc_id", "text")
+    val dir = tmpDir("graft-gen-lsh-reap")
+    LshIndex.build(corpus, dir, shingleSize = 2)
+    def served(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val want = served(LshIndex.nearDuplicates(probe, dir, threshold = 0.3))
+    assert(want === Set((100L, 0L)))
+    for (n <- 1 to 3) {
+      val inFlight = LshIndex.nearDuplicates(probe, dir, threshold = 0.3)
+      LshIndex.compactInPlace(spark, dir)
+      assert(served(inFlight) === want, s"in-flight probe across compaction $n")
+      assert(Generations.numbers(spark, dir).sorted === Seq(n - 1, n))
+    }
+    assert(served(LshIndex.nearDuplicates(probe, dir, threshold = 0.3)) === want)
+  }
 }

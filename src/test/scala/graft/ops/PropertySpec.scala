@@ -219,6 +219,94 @@ class PropertySpec extends SparkSpec {
     assert(got === expect)
   }
 
+  test("span_grams equals the interpreted slice/concat_ws/md5 lambda on random docs") {
+    import graft.functions.TextExpressions.span_grams
+    val rnd = new scala.util.Random(16L)
+    // multi-byte UTF-8 tokens (2-, 3- and 4-byte code points) beside ASCII
+    val vocab = Vector("aa", "b", "é", "日本", "🙂x", "ünï")
+    val docs = (0L until 60L).map { i =>
+      (i, Seq.fill(rnd.nextInt(9))(vocab(rnd.nextInt(vocab.size))))
+    } :+ ((60L, Seq.empty[String]))
+    val df = docs.toDF("doc_id", "ts")
+    for (k <- Seq(2, 3, 5)) {
+      val native = transform(span_grams(col("ts"), k),
+        e => struct(e("pos"), e("tok"), lower(hex(e("h")))))
+      val interpreted = expr(
+        s"""transform(ts, (x, i) -> struct(i AS pos, x AS tok,
+            CASE WHEN i + $k <= size(ts)
+                 THEN md5(to_binary(concat_ws(' ', slice(ts, i + 1, $k)), 'utf-8'))
+            END AS h))""")
+      val rows = df.select(col("doc_id"), native.as("n"), interpreted.as("i"))
+        .collect()
+      assert(rows.length === docs.size)
+      rows.foreach { r =>
+        assert(r.getSeq[Any](1) === r.getSeq[Any](2), s"doc ${r.getLong(0)}, k $k")
+      }
+      // docs shorter than k carry no digest at all; empty docs no entry
+      val short = docs.filter(_._2.size < k).map(_._1).toSet
+      rows.filter(r => short(r.getLong(0))).foreach { r =>
+        val es = r.getSeq[org.apache.spark.sql.Row](1)
+        assert(es.size === docs(r.getLong(0).toInt)._2.size)
+        assert(es.forall(_.isNullAt(2)))
+      }
+    }
+  }
+
+  test("span_cover equals the ROWS-window cover and reassembly on random flag patterns") {
+    import graft.functions.TextExpressions.span_cover
+    val rnd = new scala.util.Random(61L)
+    val vocab = Vector("aa", "bb", "é", "日本")
+    // (stream, entries) with dense positions in shuffled (collect) order;
+    // flags true / false / null, and the odd null token
+    val streams = (0L until 80L).map { s =>
+      val n = 1 + rnd.nextInt(12)
+      s -> rnd.shuffle((0 until n).map { p =>
+        (p, if (rnd.nextInt(10) == 0) null else vocab(rnd.nextInt(vocab.size)),
+          rnd.nextInt(4) match {
+            case 0 => java.lang.Boolean.TRUE
+            case 1 => java.lang.Boolean.FALSE
+            case _ => null
+          })
+      })
+    }
+    val entries = streams.toDF("s", "es")
+    val flat = entries.select(col("s"), explode(col("es")).as("e"))
+      .select(col("s"), col("e._1").as("pos"), col("e._2").as("tok"),
+        col("e._3").as("flag"))
+    for (k <- Seq(1, 2, 3, 5)) {
+      val cover = org.apache.spark.sql.expressions.Window
+        .partitionBy("s").orderBy("pos").rowsBetween(-(k - 1).toLong, 0L)
+      val window = flat
+        .withColumn("rm", max(when(col("flag"), 1).otherwise(0)).over(cover))
+        .groupBy("s")
+        .agg(
+          concat_ws(" ", expr(
+            """transform(array_sort(collect_list(
+                 CASE WHEN rm = 0 THEN struct(pos, tok) END)), x -> x.tok)"""))
+            .as("clean_text"),
+          sum(when(col("rm") === 0, 1).otherwise(0)).cast("long").as("kept_tokens"),
+          sum(when(col("rm") === 1, 1).otherwise(0)).cast("long").as("removed_tokens"))
+        .collect().map(r => r.getLong(0) -> (r.getString(1), r.getLong(2), r.getLong(3)))
+        .toMap
+      val native = entries.select(col("s"), span_cover(col("es"), k, " ").as("c"))
+        .collect().map { r =>
+          val c = r.getStruct(1)
+          r.getLong(0) -> (c.getString(0), c.getLong(1), c.getLong(2))
+        }.toMap
+      assert(native === window, s"k $k")
+    }
+    // an empty entry list keeps nothing and removes nothing
+    val empty = Seq((0L, Seq.empty[(Int, String, java.lang.Boolean)])).toDF("s", "es")
+      .select(span_cover(col("es"), 3, " ").as("c")).head().getStruct(0)
+    assert((empty.getString(0), empty.getLong(1), empty.getLong(2)) === (("", 0L, 0L)))
+    // equal positions (segmentDedup's grouped null ids) order by token,
+    // as array_sort orders the (pos, tok) structs
+    val ties = Seq((0L, Seq[(Int, String, java.lang.Boolean)]((1, "zz", null),
+        (0, "b", null), (1, "aa", null), (0, null, null), (0, "a", null))))
+      .toDF("s", "es").select(span_cover(col("es"), 1, "|").as("c")).head().getStruct(0)
+    assert((ties.getString(0), ties.getLong(1)) === (("a|b|aa|zz", 5L)))
+  }
+
   test("Rotate expression matches an in-memory matrix-vector product on random inputs") {
     val rnd = new scala.util.Random(20260815L)
     val d = 12
